@@ -700,82 +700,9 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BIGRAM_LAMBDA = 0.75  # Jelinek-Mercer interpolation weight on the bigram MLE
-
-
-def quality_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated bigram language-model quality score — the next
-    fidelity step above :func:`quality_unigram_nll` toward the CCNet /
-    RedPajama KenLM filter: per-document mean negative log probability
-    of each token transition under a Jelinek-Mercer-smoothed bigram LM
-    (Chen & Goodman 1996), p(cur|prev) = λ·c(prev,cur)/c(prev) +
-    (1-λ)·c(cur)/N with λ=0.75. A doc of fluent transitions scores low;
-    shuffled or template text that unigram statistics cannot separate
-    (same words, scrambled order) scores high — exactly the signal the
-    unigram key misses. Only transitions are scored (the first token
-    has no history), so single-token docs are absent from the output.
-
-    Scale shape: bigram formation happens INSIDE the token-array
-    expression (slice + arrays_zip, pure JVM) — no self-join, no
-    per-doc window sort, zero extra shuffle to build transitions. Raw
-    transition postings never shuffle corpus-wide: they pre-aggregate
-    per (doc, prev, cur) first (map-side combinable), the corpus
-    bigram table derives from that reduced frame, and the per-doc
-    re-aggregation combines map-side again. The UNIGRAM table stays
-    broadcast under the r9 size gate (the quality_unigram_nll
-    argument, now with the shuffle-join fallback at web-scale type
-    counts) but
-    the BIGRAM table deliberately does NOT — distinct bigrams grow
-    ~O(corpus^0.7) toward |V|² and blow the executor at 100 TB — so
-    the dbg↔cb join is a shuffle join on the (prev, cur) key, where
-    AQE's skew-join splits the Zipf-hot transitions ("of the") whose
-    per-doc pre-aggregation has already collapsed repeats.
-    Determinism: the per-transition NLL is rounded to 6 dp and summed
-    as exact integer micro-units weighted by the transition
-    multiplicity — the quality_unigram_nll discipline, bit-stable on
-    1000 executors at long-sum speed."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks"))
-    cu = (
-        base.select(F.explode("toks").alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt_u"))
-    )
-    tot = cu.agg(F.sum("cnt_u").alias("total"))
-    pairs = _ngrams_from(base, 2, ["prev", "cur"], with_doc=True)
-    # dbg feeds BOTH the probe side and the corpus bigram table, and
-    # the differently-keyed downstream aggs de-canonicalize the
-    # subtrees, so the explode + per-doc agg DO execute twice — but
-    # persisting dbg here was MEASURED SLOWER at ×100 (56.6 s vs
-    # 44.4 s idle): materializing ~corpus-token-count string-pair rows
-    # to memory/disk costs more than recomputing a codegen explode.
-    # The _exploded_shingles persist discipline pays off for SHARED
-    # SHINGLE tables consumed by 3+ keys; a two-consumer diamond of
-    # cheap expression work keeps the recompute.
-    dbg = pairs.groupBy("doc_id", "prev", "cur").agg(F.count(F.lit(1)).alias("m"))
-    cb = dbg.groupBy("prev", "cur").agg(F.sum("m").alias("cnt_b"))
-    cu_prev = cu.select(F.col("term").alias("prev"), F.col("cnt_u").alias("cnt_prev"))
-    cu_cur = cu.select(F.col("term").alias("cur"), F.col("cnt_u").alias("cnt_cur"))
-    p = F.lit(BIGRAM_LAMBDA) * (
-        F.col("cnt_b").cast("double") / F.col("cnt_prev")
-    ) + F.lit(1.0 - BIGRAM_LAMBDA) * (F.col("cnt_cur").cast("double") / F.col("total"))
-    micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    scored = (
-        dbg.join(cb, ["prev", "cur"])
-        .join(broadcast_if_bounded(cu_prev), "prev")
-        .join(broadcast_if_bounded(cu_cur), "cur")
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", "m", micro.alias("micro"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.sum("m").cast("int").alias("n_bigrams"),
-        stable_round(
-            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
-            / F.sum("m"),
-            4,
-        ).alias("bigram_nll"),
-    )
-
-
+TRIGRAM_LAMBDA = 0.7  # JM weight on the trigram MLE (λ₂ stays BIGRAM_LAMBDA)
+FOURGRAM_LAMBDA = 0.65  # JM weight on the 4-gram MLE (λ₃/λ₂ stay TRIGRAM/BIGRAM_LAMBDA)
+FIVEGRAM_LAMBDA = 0.6  # JM weight on the 5-gram MLE (lower orders keep their λs)
 KN_D = 0.75  # Kneser-Ney absolute discount (the Chen & Goodman default)
 
 
@@ -799,6 +726,166 @@ def _ngrams_from(base: DataFrame, k: int, names: list[str],
     ).select(*cols, *[F.col(f"g.{names[j]}").alias(names[j]) for j in range(k)])
 
 
+def _jm_rung(
+    spark: SparkSession, sf_dir: str, order: int, count_alias: str,
+    nll_alias: str,
+) -> DataFrame:
+    """One Jelinek-Mercer rung of the given order — the SINGLE
+    implementation behind quality_bigram_nll (2) / trigram (3) / 4gram
+    (4) / 5gram (5), the JM twin of :func:`_kn_rung`. Recursive
+    interpolation (Chen & Goodman 1996, eq. 5), innermost out:
+
+        p₁ = c(wₙ)/N
+        p_k = λ_k·c(wₙ₋ₖ₊₁..wₙ)/c(wₙ₋ₖ₊₁..wₙ₋₁) + (1−λ_k)·p_{k−1}
+
+    with λ_k the per-order constants above. Every count comes from
+    the FULL corpus k-gram table (the standard estimator; the
+    end-of-doc deficiency — a doc's last (k−1)-gram never opens a
+    k-gram — is the usual benign normalization slack, deterministic in
+    both engines). Docs with fewer than ``order`` tokens have no
+    transition and are absent.
+
+    Scale shape: n-gram formation stays inside the token-array
+    expression (:func:`_ngrams_from` — slices + arrays_zip, pure JVM,
+    no self-join, no window). The top-order postings pre-aggregate per
+    (doc, gram) first (``dq``, map-side combinable) and the top count
+    table derives from that reduced frame. Each middle order m is ONE
+    count table joined twice — as the order-(m+1) context denominator
+    on W[order−m−1 : order−1], then as the order-m numerator on
+    W[order−m:] — by shuffle joins on its n-gram key: distinct n-grams
+    grow toward |V|ᵐ at 100 TB, so they never broadcast, and AQE's
+    skew join splits the Zipf-hot keys. The vocabulary-bounded unigram
+    table joins twice (denominator on W[−2], numerator on W[−1])
+    through the ``broadcast_if_bounded`` size gate, with the
+    shuffle-join fallback at web-scale type counts; the corpus total
+    is a 1-row broadcast. Per-transition NLL is rounded to 6 dp and
+    summed as exact integer micro-units × multiplicity — the
+    quality_unigram_nll discipline, bit-stable on 1000 executors at
+    long-sum speed."""
+    W = [f"w{i}" for i in range(1, order + 1)]
+    lam = {2: BIGRAM_LAMBDA, 3: TRIGRAM_LAMBDA, 4: FOURGRAM_LAMBDA, 5: FIVEGRAM_LAMBDA}
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.select("doc_id", _toks().alias("toks"))
+    cu = (
+        base.select(F.explode("toks").alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    tot = cu.agg(F.sum("cnt").alias("total"))
+    # dq feeds BOTH the probe side and the top count table, so the
+    # explode + per-doc agg execute twice — but persisting it was
+    # MEASURED SLOWER at ×100 on the bigram rung (56.6 s vs 44.4 s
+    # idle): materializing ~corpus-token-count string tuples costs more
+    # than recomputing a codegen explode.
+    dq = (
+        _ngrams_from(base, order, W, with_doc=True)
+        .groupBy("doc_id", *W)
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+    scored = dq.join(dq.groupBy(*W).agg(F.sum("m").alias(f"num_{order}")), W)
+    for m in range(order - 1, 1, -1):
+        # g-named, so toDF always aliases: a no-op rename onto W[:m]
+        # would give the two joins' broadcasts different canonical
+        # plans, and AQE would stop reusing one for the other
+        G = [f"g{i}" for i in range(1, m + 1)]
+        cm = _ngrams_from(base, m, G).groupBy(*G).agg(F.count(F.lit(1)).alias("cnt"))
+        ctx, tail = W[order - m - 1:order - 1], W[order - m:]
+        scored = scored.join(cm.toDF(*ctx, f"den_{m + 1}"), ctx).join(
+            cm.toDF(*tail, f"num_{m}"), tail
+        )
+    p = F.col("num_1").cast("double") / F.col("total")
+    for k in range(2, order + 1):
+        p = F.lit(lam[k]) * (
+            F.col(f"num_{k}").cast("double") / F.col(f"den_{k}")
+        ) + F.lit(1.0 - lam[k]) * p
+    micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
+    scored = (
+        scored.join(broadcast_if_bounded(cu.toDF(W[-2], "den_2")), W[-2])
+        .join(broadcast_if_bounded(cu.toDF(W[-1], "num_1")), W[-1])
+        .crossJoin(F.broadcast(tot))
+        .select("doc_id", "m", micro.alias("micro"))
+    )
+    return scored.groupBy("doc_id").agg(
+        F.sum("m").cast("int").alias(count_alias),
+        stable_round(
+            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
+            / F.sum("m"),
+            4,
+        ).alias(nll_alias),
+    )
+
+
+def quality_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpolated bigram language-model quality score — the next
+    fidelity step above :func:`quality_unigram_nll` toward the CCNet /
+    RedPajama KenLM filter: per-document mean negative log probability
+    of each token transition under a Jelinek-Mercer-smoothed bigram LM
+    (Chen & Goodman 1996), p(cur|prev) = λ·c(prev,cur)/c(prev) +
+    (1-λ)·c(cur)/N with λ=0.75. A doc of fluent transitions scores low;
+    shuffled or template text that unigram statistics cannot separate
+    (same words, scrambled order) scores high — exactly the signal the
+    unigram key misses. Only transitions are scored (the first token
+    has no history), so single-token docs are absent from the output.
+
+    Implementation: the shared :func:`_jm_rung` at order 2 — the
+    bigram table rides a shuffle join on (prev, cur) (distinct bigrams
+    grow ~O(corpus^0.7) toward |V|²), both unigram probes broadcast
+    under the size gate."""
+    return _jm_rung(spark, sf_dir, 2, "n_bigrams", "bigram_nll")
+
+
+def quality_trigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursively interpolated TRIGRAM LM quality score (r7 verdict
+    item 5) — the next fidelity rung toward CCNet's 5-gram KenLM
+    above :func:`quality_bigram_nll`: per-document mean negative log
+    probability of each trigram transition under Jelinek-Mercer
+    recursive interpolation (Chen & Goodman 1996, eq. 5):
+
+        p(w₃|w₁w₂) = λ₃·c(w₁w₂w₃)/c(w₁w₂)
+                   + (1−λ₃)·[λ₂·c(w₂w₃)/c(w₂) + (1−λ₂)·c(w₃)/N]
+
+    The trigram term catches what the bigram rung can't: locally
+    plausible word pairs chained into implausible triples (template
+    splices, shuffled clauses). Docs with <3 tokens have no trigram
+    and are absent, exactly as the bigram key omits single-token docs.
+
+    Implementation: the shared :func:`_jm_rung` at order 3."""
+    return _jm_rung(spark, sf_dir, 3, "n_trigrams", "trigram_nll")
+
+
+def quality_4gram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursively interpolated 4-GRAM LM quality score (r9, r8
+    verdict item 7): per-document mean NLL of each 4-gram transition
+    under Jelinek-Mercer recursive interpolation (Chen & Goodman 1996,
+    eq. 5, one order up from `quality_trigram_nll`):
+
+        p(w₄|w₁w₂w₃) = λ₄·c(w₁w₂w₃w₄)/c(w₁w₂w₃) + (1−λ₄)·p₃(w₄|w₂w₃)
+
+    with p₃/p₂ exactly the trigram key's recursion. CCNet's
+    production scorer is a 5-gram KenLM; this is the 4th of its five
+    rungs. Docs with <4 tokens have no 4-gram and are absent.
+
+    Implementation: the shared :func:`_jm_rung` at order 4."""
+    return _jm_rung(spark, sf_dir, 4, "n_4grams", "fourgram_nll")
+
+
+def quality_5gram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursively interpolated 5-GRAM LM quality score (r9) — the
+    LADDER'S LAST RUNG: CCNet/RedPajama's production perplexity
+    filter is a 5-gram KenLM, and this key reaches that model order
+    with the same recursion every rung uses (Chen & Goodman 1996,
+    eq. 5, through the 4-gram/trigram/bigram/unigram estimates below
+    it). What remains between this and KenLM itself is the smoothing
+    flavor — interpolated Kneser-Ney at every order, which is
+    :func:`quality_kn5_nll`.
+
+    Implementation: the shared :func:`_jm_rung` at order 5 — the
+    five-count-table join tree is exactly what DuckDB's oracle pays
+    superlinearly for (the trigram rung measured 0.11×, the 4-gram
+    rung 0.35× at ×20)."""
+    return _jm_rung(spark, sf_dir, 5, "n_5grams", "fivegram_nll")
+
+
 def _kn_rung(
     spark: SparkSession, sf_dir: str, order: int, count_alias: str,
     nll_alias: str,
@@ -813,14 +900,18 @@ def _kn_rung(
     first-token extensions), the distinct-predecessor unigram at the
     bottom.
 
-    Scale shape (the kn3 argument at every order): the top table and
-    every multi-token-keyed statistic ride shuffle joins on their
-    n-gram keys (they grow toward |V|ⁿ — never broadcast); every
-    SINGLE-token-keyed statistic is a size-gated broadcast
-    (``broadcast_if_bounded``); the scalar type count is a 1-row
-    broadcast. Per-doc pre-agg collapses Zipf-hot repeats map-side;
-    per-transition NLL in exact integer micro-units × multiplicity,
-    the family discipline.
+    Scale shape (every order): the top table and every
+    multi-token-keyed statistic stay on their n-gram keys (they grow
+    toward |V|ⁿ — never broadcast); every SINGLE-token-keyed statistic
+    is a size-gated broadcast (``broadcast_if_bounded``); the scalar
+    type count is a 1-row broadcast. From order 3 up, one persisted,
+    null-padded top-order count table feeds every lower-order count as
+    a rollup, and the top-order context / predecessor statistics are
+    windows over it (changes 1-4 below). There is no per-doc
+    pre-aggregate: the raw occurrence stream joins the annotated gram
+    table once on the gram key and aggregates per doc (change 3).
+    Per-transition NLL in exact integer micro-units, the family
+    discipline.
 
     r13 (guide §2.3 "aggregate before you shuffle" / §2.4): every
     middle-order `mid` statistic is DERIVED from its `pred` table —
@@ -1120,17 +1211,18 @@ def quality_kn_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct bigram types. Docs with <2 tokens have no transition and
     are absent (the family contract).
 
-    Scale shape — STRICTLY LIGHTER than the JM bigram key: transitions
-    form inside the token-array expression; per-doc (doc, prev, cur)
-    pre-agg collapses map-side; the corpus bigram table derives from
-    the reduced frame; and because all four KN statistics are keyed by
-    a SINGLE token (context totals / successor counts by prev,
-    continuation counts by cur, one scalar type count) they are
-    single-token-keyed SIZE-GATED broadcasts (r9: broadcast on any
-    measured tier, co-partitioned shuffle join past the 64 MB
-    estimate) — the only corpus-scale shuffle join left
-    is dtg ⋈ cb on the bigram key. Determinism: per-transition NLL in
-    exact integer micro-units × multiplicity, the family discipline.
+    Scale shape: transitions form inside the token-array expression;
+    the corpus bigram table aggregates the transition stream directly
+    (map-side partial aggregation collapses the Zipf-hot repeats); and
+    because all four KN statistics are keyed by a SINGLE token
+    (context totals / successor counts by prev, continuation counts by
+    cur, one scalar type count) they are SIZE-GATED broadcasts (r9:
+    broadcast on any measured tier, co-partitioned shuffle join past
+    the 64 MB estimate) — the only corpus-scale multi-token join left
+    is the raw transition stream ⋈ the annotated bigram table on the
+    bigram key, followed by the per-doc aggregate. Determinism:
+    per-transition NLL in exact integer micro-units, the family
+    discipline.
 
     Implementation: the shared :func:`_kn_rung` at order 2 (r10 —
     every KN order is the one builder; this rung IS the recursion's
@@ -1158,322 +1250,21 @@ def quality_kn3_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     table itself (exact normalization — no end-of-doc slack at all
     in this key). Every statistic is an exact integer count.
 
-    Scale shape — the KN-bigram argument one order up: the trigram
-    and (w₁,w₂)/(w₂,w₃)-keyed statistics ride shuffle joins on their
-    n-gram keys (they grow toward |V|ⁿ); every SINGLE-token-keyed
-    statistic (middle-token normalizers, continuation counts, the
-    scalar type count) broadcasts. Per-doc pre-agg collapses the
-    Zipf-hot transitions map-side; micro-unit exact sums, the family
-    discipline.
+    Scale shape — the KN-bigram argument one order up, on the padded
+    form: one persisted, null-padded trigram count table,
+    hash-partitioned by its w₂ pivot, yields the bigram type table as
+    a rollup; the context totals, successor counts and middle-order
+    predecessor / normalizer counts are windows over the distinct
+    trigram table that read that layout without an exchange; the
+    continuation counts (by w₃) and the scalar type count broadcast.
+    The raw trigram occurrence stream joins the annotated trigram
+    table once on (w₁,w₂,w₃) and aggregates per doc; micro-unit exact
+    sums, the family discipline.
 
     Implementation: the shared :func:`_kn_rung` at order 3 (r10 — the
     middle-order machinery this rung introduced in r9 now lives in
     the one builder every order runs)."""
     return _kn_rung(spark, sf_dir, 3, "n_trigrams", "kn3_nll")
-
-
-TRIGRAM_LAMBDA = 0.7  # JM weight on the trigram MLE (λ₂ stays BIGRAM_LAMBDA)
-
-
-def quality_trigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursively interpolated TRIGRAM LM quality score (r7 verdict
-    item 5) — the next fidelity rung toward CCNet's 5-gram KenLM
-    above :func:`quality_bigram_nll`: per-document mean negative log
-    probability of each trigram transition under Jelinek-Mercer
-    recursive interpolation (Chen & Goodman 1996, eq. 5):
-
-        p(w₃|w₁w₂) = λ₃·c(w₁w₂w₃)/c(w₁w₂)
-                   + (1−λ₃)·[λ₂·c(w₂w₃)/c(w₂) + (1−λ₂)·c(w₃)/N]
-
-    The trigram term catches what the bigram rung can't: locally
-    plausible word pairs chained into implausible triples (template
-    splices, shuffled clauses). Context counts c(w₁w₂) come from the
-    FULL corpus bigram table (the standard estimator; the end-of-doc
-    deficiency — a doc's last bigram never opens a trigram — is the
-    usual benign normalization slack, deterministic in both engines).
-    Docs with <3 tokens have no trigram and are absent, exactly as
-    the bigram key omits single-token docs.
-
-    Scale shape — the bigram key's architecture EXTENDED one order,
-    which is precisely what it was built to show: n-gram formation
-    stays inside the token-array expression (three slices +
-    arrays_zip, pure JVM — no self-join, no window); raw postings
-    pre-aggregate per (doc, w₁, w₂, w₃) map-side; the UNIGRAM table
-    broadcasts under the r9 size gate; the BIGRAM and TRIGRAM tables
-    deliberately do NOT (distinct n-grams grow toward |V|ⁿ at 100 TB)
-    — both ride shuffle joins on their n-gram keys, where per-doc
-    pre-aggregation has already collapsed the Zipf-hot repeats and
-    AQE skew-join splits the rest. Per-transition NLL is rounded to
-    6 dp and carried as exact integer micro-units × multiplicity (the
-    family discipline), so the per-doc sum is an order-free long sum.
-    Measured ×20/×100: see PERF.md r8 scale row."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks"))
-    cu = (
-        base.select(F.explode("toks").alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt_u"))
-    )
-    tot = cu.agg(F.sum("cnt_u").alias("total"))
-    tris = _ngrams_from(base, 3, ["w1", "w2", "w3"], with_doc=True)
-    # per-doc pre-agg first (map-side combinable) — the corpus trigram
-    # table derives from the reduced frame, the bigram-key diamond
-    # note applies verbatim (recompute beats persisting string tuples)
-    dtg = tris.groupBy("doc_id", "w1", "w2", "w3").agg(F.count(F.lit(1)).alias("m"))
-    ct = dtg.groupBy("w1", "w2", "w3").agg(F.sum("m").alias("cnt_t"))
-    pairs = _ngrams_from(base, 2, ["prev", "cur"])
-    cb = pairs.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cnt_b"))
-    ctx = cb.select(
-        F.col("prev").alias("w1"), F.col("cur").alias("w2"),
-        F.col("cnt_b").alias("cnt_ctx"),
-    )
-    b23 = cb.select(
-        F.col("prev").alias("w2"), F.col("cur").alias("w3"),
-        F.col("cnt_b").alias("cnt_b23"),
-    )
-    cu_w2 = cu.select(F.col("term").alias("w2"), F.col("cnt_u").alias("cnt_w2"))
-    cu_w3 = cu.select(F.col("term").alias("w3"), F.col("cnt_u").alias("cnt_w3"))
-    p = F.lit(TRIGRAM_LAMBDA) * (
-        F.col("cnt_t").cast("double") / F.col("cnt_ctx")
-    ) + F.lit(1.0 - TRIGRAM_LAMBDA) * (
-        F.lit(BIGRAM_LAMBDA) * (F.col("cnt_b23").cast("double") / F.col("cnt_w2"))
-        + F.lit(1.0 - BIGRAM_LAMBDA)
-        * (F.col("cnt_w3").cast("double") / F.col("total"))
-    )
-    micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    scored = (
-        dtg.join(ct, ["w1", "w2", "w3"])
-        .join(ctx, ["w1", "w2"])
-        .join(b23, ["w2", "w3"])
-        .join(broadcast_if_bounded(cu_w2), "w2")
-        .join(broadcast_if_bounded(cu_w3), "w3")
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", "m", micro.alias("micro"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.sum("m").cast("int").alias("n_trigrams"),
-        stable_round(
-            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
-            / F.sum("m"),
-            4,
-        ).alias("trigram_nll"),
-    )
-
-
-FOURGRAM_LAMBDA = 0.65  # JM weight on the 4-gram MLE (λ₃/λ₂ stay TRIGRAM/BIGRAM_LAMBDA)
-
-
-def quality_4gram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursively interpolated 4-GRAM LM quality score (r9, r8
-    verdict item 7 — the rung that makes the ladder's "extends
-    unchanged" claim MEASURED): per-document mean NLL of each 4-gram
-    transition under Jelinek-Mercer recursive interpolation (Chen &
-    Goodman 1996, eq. 5, one order up from `quality_trigram_nll`):
-
-        p(w₄|w₁w₂w₃) = λ₄·c(w₁w₂w₃w₄)/c(w₁w₂w₃) + (1−λ₄)·p₃(w₄|w₂w₃)
-
-    with p₃/p₂ exactly the trigram key's recursion. CCNet's
-    production scorer is a 5-gram KenLM; this is the 4th of its five
-    rungs, built by the ladder's template: one more slice in the
-    n-gram zip, one more corpus table, one more shuffle join on the
-    n-gram key.
-
-    Scale shape — the trigram docstring's argument, verbatim one
-    order up: n-gram formation stays inside the token-array
-    expression (four slices + arrays_zip, pure JVM); raw postings
-    pre-aggregate per (doc, w₁..w₄) map-side; the UNIGRAM table
-    broadcasts under the r9 size gate; bigram/trigram/4-gram tables ride
-    shuffle joins on their n-gram keys (distinct n-grams grow toward
-    |V|ⁿ at 100 TB — never broadcast), per-doc pre-aggregation
-    collapsing the Zipf-hot repeats and AQE splitting the rest.
-    Per-transition NLL → exact integer micro-units × multiplicity
-    (the family discipline); docs with <4 tokens have no 4-gram and
-    are absent. Slice lengths carry the greatest(n-3, 0) guard (the
-    r8 advice crash class)."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks"))
-    cu = (
-        base.select(F.explode("toks").alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt_u"))
-    )
-    tot = cu.agg(F.sum("cnt_u").alias("total"))
-    quads = _ngrams_from(base, 4, ["w1", "w2", "w3", "w4"], with_doc=True)
-    dqg = quads.groupBy("doc_id", "w1", "w2", "w3", "w4").agg(
-        F.count(F.lit(1)).alias("m")
-    )
-    c4 = dqg.groupBy("w1", "w2", "w3", "w4").agg(F.sum("m").alias("cnt_q"))
-    tris = _ngrams_from(base, 3, ["a", "b", "c"])
-    ct3 = tris.groupBy("a", "b", "c").agg(F.count(F.lit(1)).alias("cnt_t"))
-    pairs = _ngrams_from(base, 2, ["prev", "cur"])
-    cb = pairs.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cnt_b"))
-    ctx3 = ct3.select(
-        F.col("a").alias("w1"), F.col("b").alias("w2"), F.col("c").alias("w3"),
-        F.col("cnt_t").alias("cnt_ctx3"),
-    )
-    t234 = ct3.select(
-        F.col("a").alias("w2"), F.col("b").alias("w3"), F.col("c").alias("w4"),
-        F.col("cnt_t").alias("cnt_t234"),
-    )
-    b23 = cb.select(
-        F.col("prev").alias("w2"), F.col("cur").alias("w3"),
-        F.col("cnt_b").alias("cnt_b23"),
-    )
-    b34 = cb.select(
-        F.col("prev").alias("w3"), F.col("cur").alias("w4"),
-        F.col("cnt_b").alias("cnt_b34"),
-    )
-    cu_w3 = cu.select(F.col("term").alias("w3"), F.col("cnt_u").alias("cnt_w3"))
-    cu_w4 = cu.select(F.col("term").alias("w4"), F.col("cnt_u").alias("cnt_w4"))
-    p = F.lit(FOURGRAM_LAMBDA) * (
-        F.col("cnt_q").cast("double") / F.col("cnt_ctx3")
-    ) + F.lit(1.0 - FOURGRAM_LAMBDA) * (
-        F.lit(TRIGRAM_LAMBDA) * (F.col("cnt_t234").cast("double") / F.col("cnt_b23"))
-        + F.lit(1.0 - TRIGRAM_LAMBDA)
-        * (
-            F.lit(BIGRAM_LAMBDA) * (F.col("cnt_b34").cast("double") / F.col("cnt_w3"))
-            + F.lit(1.0 - BIGRAM_LAMBDA)
-            * (F.col("cnt_w4").cast("double") / F.col("total"))
-        )
-    )
-    micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    scored = (
-        dqg.join(c4, ["w1", "w2", "w3", "w4"])
-        .join(ctx3, ["w1", "w2", "w3"])
-        .join(t234, ["w2", "w3", "w4"])
-        .join(b23, ["w2", "w3"])
-        .join(b34, ["w3", "w4"])
-        .join(broadcast_if_bounded(cu_w3), "w3")
-        .join(broadcast_if_bounded(cu_w4), "w4")
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", "m", micro.alias("micro"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.sum("m").cast("int").alias("n_4grams"),
-        stable_round(
-            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
-            / F.sum("m"),
-            4,
-        ).alias("fourgram_nll"),
-    )
-
-
-FIVEGRAM_LAMBDA = 0.6  # JM weight on the 5-gram MLE (lower orders keep their λs)
-
-
-def quality_5gram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursively interpolated 5-GRAM LM quality score (r9) — the
-    LADDER'S LAST RUNG: CCNet/RedPajama's production perplexity
-    filter is a 5-gram KenLM, and this key reaches that model order
-    with the same template every rung used (Chen & Goodman 1996,
-    eq. 5, recursing through the 4-gram/trigram/bigram/unigram
-    estimates below it). What remains between this and KenLM itself
-    is the smoothing flavor (interpolated Kneser-Ney at every order
-    vs JM here + KN at the bigram tier in `quality_kn_nll`) — the
-    MODEL-ORDER axis is now fully measured, not asserted.
-
-    Scale shape — the 4-gram docstring one order up, nothing else:
-    five slices + arrays_zip (pure JVM n-gram formation), per-doc
-    (w₁..w₅) map-side pre-agg, unigram broadcast, every higher-order
-    table (bigram/trigram/4-gram/5-gram) on shuffle joins keyed by
-    its n-gram — the five-table join tree is exactly what DuckDB's
-    oracle pays superlinearly for (the trigram rung measured 0.11×,
-    the 4-gram rung 0.35× at ×20) while Spark adds one more
-    partial-agg + one more co-keyed join per rung."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks"))
-    cu = (
-        base.select(F.explode("toks").alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt_u"))
-    )
-    tot = cu.agg(F.sum("cnt_u").alias("total"))
-
-    def _ngrams(k: int, names: list[str]) -> DataFrame:
-        # shared explode (r10): one definition for every rung
-        return _ngrams_from(base, k, names, with_doc=True)
-
-    cb = (
-        _ngrams(2, ["a", "b"]).groupBy("a", "b").agg(F.count(F.lit(1)).alias("cnt_b"))
-    )
-    ct3 = (
-        _ngrams(3, ["a", "b", "c"])
-        .groupBy("a", "b", "c")
-        .agg(F.count(F.lit(1)).alias("cnt_t"))
-    )
-    c4 = (
-        _ngrams(4, ["a", "b", "c", "d"])
-        .groupBy("a", "b", "c", "d")
-        .agg(F.count(F.lit(1)).alias("cnt_q"))
-    )
-    W5 = ["w1", "w2", "w3", "w4", "w5"]
-    dq5 = (
-        _ngrams(5, W5).groupBy("doc_id", *W5).agg(F.count(F.lit(1)).alias("m"))
-    )
-    c5 = dq5.groupBy(*W5).agg(F.sum("m").alias("cnt_5"))
-    ctx4 = c4.select(
-        F.col("a").alias("w1"), F.col("b").alias("w2"), F.col("c").alias("w3"),
-        F.col("d").alias("w4"), F.col("cnt_q").alias("cnt_ctx4"),
-    )
-    t2345 = c4.select(
-        F.col("a").alias("w2"), F.col("b").alias("w3"), F.col("c").alias("w4"),
-        F.col("d").alias("w5"), F.col("cnt_q").alias("cnt_t2345"),
-    )
-    ctx3 = ct3.select(
-        F.col("a").alias("w2"), F.col("b").alias("w3"), F.col("c").alias("w4"),
-        F.col("cnt_t").alias("cnt_ctx3"),
-    )
-    t345 = ct3.select(
-        F.col("a").alias("w3"), F.col("b").alias("w4"), F.col("c").alias("w5"),
-        F.col("cnt_t").alias("cnt_t345"),
-    )
-    b34 = cb.select(
-        F.col("a").alias("w3"), F.col("b").alias("w4"),
-        F.col("cnt_b").alias("cnt_b34"),
-    )
-    b45 = cb.select(
-        F.col("a").alias("w4"), F.col("b").alias("w5"),
-        F.col("cnt_b").alias("cnt_b45"),
-    )
-    cu_w4 = cu.select(F.col("term").alias("w4"), F.col("cnt_u").alias("cnt_w4"))
-    cu_w5 = cu.select(F.col("term").alias("w5"), F.col("cnt_u").alias("cnt_w5"))
-    p = F.lit(FIVEGRAM_LAMBDA) * (
-        F.col("cnt_5").cast("double") / F.col("cnt_ctx4")
-    ) + F.lit(1.0 - FIVEGRAM_LAMBDA) * (
-        F.lit(FOURGRAM_LAMBDA) * (F.col("cnt_t2345").cast("double") / F.col("cnt_ctx3"))
-        + F.lit(1.0 - FOURGRAM_LAMBDA)
-        * (
-            F.lit(TRIGRAM_LAMBDA) * (F.col("cnt_t345").cast("double") / F.col("cnt_b34"))
-            + F.lit(1.0 - TRIGRAM_LAMBDA)
-            * (
-                F.lit(BIGRAM_LAMBDA) * (F.col("cnt_b45").cast("double") / F.col("cnt_w4"))
-                + F.lit(1.0 - BIGRAM_LAMBDA)
-                * (F.col("cnt_w5").cast("double") / F.col("total"))
-            )
-        )
-    )
-    micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    scored = (
-        dq5.join(c5, W5)
-        .join(ctx4, ["w1", "w2", "w3", "w4"])
-        .join(t2345, ["w2", "w3", "w4", "w5"])
-        .join(ctx3, ["w2", "w3", "w4"])
-        .join(t345, ["w3", "w4", "w5"])
-        .join(b34, ["w3", "w4"])
-        .join(b45, ["w4", "w5"])
-        .join(broadcast_if_bounded(cu_w4), "w4")
-        .join(broadcast_if_bounded(cu_w5), "w5")
-        .crossJoin(F.broadcast(tot))
-        .select("doc_id", "m", micro.alias("micro"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.sum("m").cast("int").alias("n_5grams"),
-        stable_round(
-            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
-            / F.sum("m"),
-            4,
-        ).alias("fivegram_nll"),
-    )
 
 
 def quality_kn4_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1496,14 +1287,16 @@ def quality_kn4_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k+1)-gram type table) — the KN insight applied at every level,
     which is exactly what KenLM estimates.
 
-    Scale shape — the kn3 argument one order up: the 4-gram and every
-    multi-token-keyed statistic (ctx4, pred4, mid4, pred3) ride
-    shuffle joins on their n-gram keys (they grow toward |V|ⁿ — never
-    broadcast); the single-token-keyed statistics (mid3 by w₃, cont2
-    by w₄) are size-gated broadcasts; the type count is a 1-row
-    broadcast. Per-doc (w₁..w₄) pre-agg collapses Zipf-hot repeats
-    map-side; per-transition NLL in exact integer micro-units ×
-    multiplicity (the family discipline).
+    Scale shape — the kn3 argument one order up: the padded 4-gram
+    table is hash-partitioned by the (w₂,w₃) pivot; the context totals
+    and the order-3 predecessor / normalizer counts are windows over
+    the distinct 4-gram table; the order-2 statistics keyed (w₃,w₄)
+    are the one multi-token middle-order shuffle join (they grow
+    toward |V|ⁿ — never broadcast); the continuation counts by w₄ are
+    a size-gated broadcast and the type count a 1-row broadcast. The
+    raw 4-gram occurrence stream joins the annotated table once and
+    aggregates per doc; per-transition NLL in exact integer
+    micro-units (the family discipline).
 
     Implementation: the shared :func:`_kn_rung` at order 4."""
     return _kn_rung(spark, sf_dir, 4, "n_4grams", "kn4_nll")
@@ -1528,13 +1321,15 @@ def quality_kn5_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     FITTED discounts (D estimated from the count-of-counts n₁,n₂ per
     order) vs the fixed Chen & Goodman default here.
 
-    Scale shape — the kn4 argument one order up, nothing else: the
-    5-gram table and every multi-token-keyed statistic ride shuffle
-    joins on their n-gram keys; only the single-token-keyed mid3/cont2
-    broadcast under the size gate; the eight-table join tree is
-    precisely the shape DuckDB's oracle pays superlinearly for (the
-    kn3 rung measured 0.04× at ×100 — DuckDB 14 min vs Spark ~40 s)
-    while Spark adds one partial agg + one co-keyed join per rung."""
+    Scale shape — the kn4 argument one order up: the top-order
+    statistics are windows over the pivot-partitioned padded 5-gram
+    table; the annotated gram table carries two multi-token
+    middle-order joins (order 3 on (w₃,w₄,w₅), order 2 on (w₄,w₅)),
+    the size-gated continuation broadcast by w₅ and the 1-row type
+    count; the raw occurrence stream then joins it once on the 5-gram
+    key. DuckDB's oracle pays superlinearly for this estimator's join
+    tree (the kn3 rung measured 0.04× at ×100 — DuckDB 14 min vs Spark
+    ~40 s)."""
     return _kn_rung(spark, sf_dir, 5, "n_5grams", "kn5_nll")
 
 

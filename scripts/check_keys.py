@@ -6,11 +6,13 @@ Usage: python scripts/check_keys.py key1 key2 ... [--sf /root/testdata/sf0.001]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+SCRIPTS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(SCRIPTS))
+sys.path.insert(0, SCRIPTS)
 
 import duckdb  # noqa: E402
 

@@ -635,21 +635,40 @@ def test_unigram_nll_tiered_plan(spark, sf_dir, monkeypatch):
     spark.catalog.clearCache()
 
 
-def test_bigram_nll_expression_transitions_broadcast_unigrams(spark, sf_dir):
-    """The bigram-LM key must form transitions inside the token-array
-    expression — no self-join and no per-doc window sort anywhere in
-    the plan — broadcast BOTH vocab-bounded unigram probes (prev and
-    cur), and read only (doc_id, text). The corpus bigram table is
-    the one deliberate non-broadcast join (it grows toward |V|² with
-    corpus size), so the plan may carry shuffle joins, but never a
-    cartesian and never a Python node."""
-    from labelmain_spark.functions.text import quality_bigram_nll
+@pytest.mark.parametrize(
+    "key,n",
+    [
+        pytest.param("quality_bigram_nll", 2, id="quality_bigram_nll"),
+        pytest.param("quality_trigram_nll", 3, id="quality_trigram_nll"),
+        pytest.param("quality_4gram_nll", 4, id="quality_4gram_nll"),
+        pytest.param("quality_5gram_nll", 5, id="quality_5gram_nll"),
+    ],
+)
+def test_jm_nll_expression_grams_broadcast_unigrams(spark, sf_dir, key, n):
+    """Every Jelinek-Mercer rung must form its n-grams inside the
+    token-array expression — no self-join and no per-doc window sort
+    anywhere in the plan — broadcast BOTH vocab-bounded unigram probes,
+    and read only (doc_id, text). The multi-token count tables carry
+    no broadcast hint (they grow toward |V|ⁿ with corpus size), so the
+    plan may carry shuffle joins, but never a cartesian and never a
+    Python node.
 
-    df = quality_bigram_nll(spark, sf_dir)
+    The exchange and scan counts pin the one-count-table-per-order
+    shape of ``_jm_rung`` at fixture scale, where Catalyst broadcasts
+    the tiny count tables: 2n+1 corpus scans (the per-doc top-gram
+    pre-agg under both of its consumers, each middle-order table under
+    both of its joins, the unigram table under its two probes and the
+    total) and 2n+3 hash exchanges (one per scanned aggregate, plus the
+    top count table's and the final per-doc aggregate's). A silent
+    switch to the KN padded-gram cascade (one persisted pad table,
+    windows) changes both counts."""
+    df = getattr(text, key)(spark, sf_dir)
     plan = checks.physical_plan(df)
     assert "CartesianProduct" not in plan, plan[:1500]
     assert "Window" not in plan, plan[:1500]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:1500]
+    assert plan.count("Exchange hashpartitioning") == 2 * n + 3, plan[:3000]
+    assert plan.count("Scan parquet") == 2 * n + 1, plan[:3000]
     checks.assert_no_python_eval(df)
     checks.assert_read_schema(df, {"doc_id", "text"}, table_hint="documents")
     spark.catalog.clearCache()
@@ -1267,15 +1286,16 @@ def test_minhash_signature_diamond_is_cached(spark, sf_dir):
 
 def test_kn_pad_cache_pivot_partitioned(spark, sf_dir):
     """r14b: the persisted padded gram table is hash-partitioned by
-    the (w2, w3) pivot — a subset of every downstream grouping/window
-    key — so the gram windows (W[1:], W[1:-1], W[:-1]), the cnt_pad
-    rollups and the middle-order pred groupBys all read the cache
-    WITHOUT re-exchanging. Pin: the pivot exchange exists inside the
-    cached plan, and the old per-window exchanges keyed on 4 gram
-    columns are gone from the consumer side."""
+    the (w2, w3) pivot — (w2,) at order 3 — a subset of every
+    downstream grouping/window key, so the gram windows (W[1:],
+    W[1:-1], W[:-1]), the cnt_pad rollups and the middle-order pred
+    groupBys all read the cache WITHOUT re-exchanging. Pin, for kn5
+    and kn3: the pivot exchange exists inside the cached plan, and the
+    per-window exchanges keyed on the W[1:] / W[:-1] gram columns are
+    gone from the consumer side."""
     import re
 
-    from labelmain_spark.functions.text import quality_kn5_nll
+    from labelmain_spark.functions.text import quality_kn3_nll, quality_kn5_nll
 
     spark.catalog.clearCache()
     plan = checks.physical_plan(quality_kn5_nll(spark, sf_dir))
@@ -1288,4 +1308,9 @@ def test_kn_pad_cache_pivot_partitioned(spark, sf_dir):
     assert not re.search(
         r"hashpartitioning\(w1#\d+, w2#\d+, w3#\d+, w4#\d+, \d+\)", plan
     ), plan[:3000]
+    spark.catalog.clearCache()
+    plan = checks.physical_plan(quality_kn3_nll(spark, sf_dir))
+    assert re.search(r"hashpartitioning\(w2#\d+, \d+\)", plan), plan[:3000]
+    assert not re.search(r"hashpartitioning\(w1#\d+, w2#\d+, \d+\)", plan), plan[:3000]
+    assert not re.search(r"hashpartitioning\(w2#\d+, w3#\d+, \d+\)", plan), plan[:3000]
     spark.catalog.clearCache()
