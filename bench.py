@@ -87,17 +87,16 @@ HEADLINE = [
     "knn_join",
     "chunk_documents",
     # round-6: the one new family (training-order randomization);
-    # bpe_token_count / pack_sequences_bpe / semantic_dedup_ivf are
-    # variants of families already represented (text_tokens-class,
-    # shard_pack-class, semantic_dedup).
+    # bpe_token_count / pack_sequences_bpe are variants of families
+    # already represented (text_tokens-class, shard_pack-class).
     "corpus_shuffle",
     # round-7 new families: the incremental-lifecycle composition,
     # BM25 retrieval, and time-series gap fill. Excluded as variants:
     # sample_weighted (TakeOrdered top-N — topk-class), pagerank and
     # bpe_train (driver-coordinated iterative loops whose sf0.1 wall
     # is stage dispatch on a bounded graph/vocab, the family
-    # dedup_clusters already measures), ann_pq/ivf_pq (ann/semantic
-    # family represented by semantic_dedup + knn_join).
+    # dedup_clusters already measures), the PQ/IVF-PQ ANN keys
+    # (ann/semantic family represented by semantic_dedup + knn_join).
     "corpus_incremental",
     "bm25_topk",
     "gap_fill",

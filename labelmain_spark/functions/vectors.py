@@ -7,16 +7,18 @@ Scale design:
 - Brute-force top-k against one query vector is a narrow map + TakeOrdered
   — it scales fine (one pass, no shuffle) and is the correctness
   baseline every ANN variant is scored against.
-- The ANN paths: `ann_multiprobe_topk` (named path — flip-confidence
-  bucket probing) and `ann_ivf_topk` (sample-fitted coarse quantizer)
+- The ANN paths: `ann_multiprobe_topk` (flip-confidence bucket
+  probing) and `ann_ivf_seeded_topk` (hash-seeded coarse quantizer)
   prune the scan to probed buckets/cells — at 100 TB, partition
-  pruning when the store is laid out by bucket — at a recall cost
-  measured against the brute-force baseline in tests. `ann_pq_topk`
-  (r7) is the orthogonal axis: product quantization shrinks the
-  per-vector payload 32× so the query-time scan reads codes, not
-  floats; IVF × PQ compose into IVF-ADC at real scale. `ann_lsh_topk`
-  is the didactic single-probe OR-construction baseline (demoted r6,
-  scripts/lsh_sweep.py).
+  pruning when the store is laid out by bucket (`write_ivf_store`) —
+  at a recall cost measured against the brute-force baseline in
+  tests. `ann_pq_frozen_topk` is the orthogonal axis: product
+  quantization shrinks the per-vector payload 32× so the query-time
+  scan reads codes, not floats; `ann_ivf_pq_seeded_topk` composes the
+  two into IVF-ADC. Every IVF head is built from the same three
+  helpers: `_hash_seeds` (centroids), `_ivf_probes` (probe cells) and
+  `_ivf_assign` (cell per vector). `ann_lsh_topk` is the didactic
+  single-probe OR-construction baseline (scripts/lsh_sweep.py).
 - All dot products run on DOUBLE arrays with `zip_with` +
   `aggregate` — JVM-side, sequential fold, engine-reproducible (the
   DuckDB twin uses list_dot_product over the same doubles).
@@ -402,7 +404,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded scan, matching LSH theory. The family's NAMED ANN paths
     are `ann_multiprobe_topk` (flip-confidence probing; recall ≥ 0.9
     on planted near-dup neighbors, the production operating point)
-    and `ann_ivf_topk` (sample-fitted coarse quantizer). This key
+    and `ann_ivf_seeded_topk` (hash-seeded coarse quantizer). This key
     stays registered as the didactic single-probe reference the
     probing variants are measured against.
 
@@ -412,7 +414,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no explode), and TakeOrdered keeps the top-k a heap. For
     a query SET, the same signatures become an equi-join key on
     (table_id, sig) — `ann_multiprobe_topk` shows the probing variant,
-    `ann_ivf_topk` the centroid-partitioned one."""
+    `ann_ivf_seeded_topk` the centroid-partitioned one."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
 
@@ -664,73 +666,6 @@ IVF_K = 16  # coarse-quantizer cells; ~sqrt(N) at real scale
 IVF_NPROBE = 4
 
 
-def _ivf_fit_assign(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[int], DataFrame, list[list[float]]]:
-    """The IVF quantizer pipeline over the embeddings table — see
-    `_ivf_fit_assign_df` for the corpus-generic core."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return _ivf_fit_assign_df(
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
-
-
-def _ivf_fit_assign_df(
-    edf: DataFrame,
-) -> tuple[DataFrame, list[int], DataFrame, list[list[float]]]:
-    """The IVF quantizer pipeline shared by `ann_ivf_topk` (in-memory
-    probe), the cell-partitioned store path (`write_ivf_store` /
-    `probe_ivf_store`), and the IVF-ADC composition (`ann_ivf_pq_topk`):
-    sampled spherical-k-means fit, narrow cell assignment, query-side
-    probe-cell selection over an arbitrary (vec_id, v) corpus. Returns
-    (assigned(vec_id, v, cell), probe_cells, q(one row: q),
-    centroids) — the centroid list IS the frozen quantizer, persisted
-    by `write_ivf_store` so later batches upsert consistently."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    # L2-normalize before clustering: on unit vectors, L2 k-means is
-    # spherical k-means, so cell assignment agrees with the cosine
-    # metric the probe ranks by (unnormalized cells cut across cosine
-    # neighborhoods; recall@10 with nprobe=4: 1.0 at sf0.001, 0.6 at
-    # sf0.01 on the near-random fixture vectors).
-    e = edf.withColumn(
-        "fv", array_to_vector(F.transform("v", lambda x: x / _norm(F.col("v"))))
-    )
-
-    # k scales with corpus size (~N/60, capped): 16 cells over a
-    # 500-vector fixture would leave ~30 vectors/cell — quantization
-    # noise swamps the structure and recall collapses. At real scale
-    # k ≈ sqrt(N) with a sampled fit, and N/k stays in the thousands.
-    n = e.count()
-    if n == 0:
-        # Empty corpus: nothing to fit — a valid empty assignment/probe
-        # (the empty-partition contract), not a KMeans crash.
-        empty = e.select("vec_id", "v", F.lit(0).alias("cell")).filter(F.lit(False))
-        return empty, [], e.select(F.col("v").alias("q")).filter(F.lit(False)), []
-    k = max(2, min(IVF_K, n // 60))
-    # Quantizer fit is sampled above a bound: k-means cost is O(N·k·i)
-    # and the coarse centroids converge on a fraction of the corpus —
-    # at 10^9+ vectors training on everything is pure waste. Seeded
-    # sample keeps the model deterministic.
-    fit_cap = 100_000
-    fit_df = e if n <= fit_cap else e.sample(fraction=fit_cap / n, seed=42)
-    model = KMeans(k=k, seed=42, featuresCol="fv", predictionCol="cell").fit(fit_df)
-    assigned = model.transform(e)
-
-    centroids = [list(c) for c in model.clusterCenters()]
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(vector_to_array("fv")).first()
-    qv = list(q_row[0])
-
-    def l2(a: list[float], b: list[float]) -> float:
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    probe = sorted(range(k), key=lambda c: l2(centroids[c], qv))[:IVF_NPROBE]
-
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return assigned.select("vec_id", "v", "cell"), probe, q, centroids
-
-
 def _ivf_score(cands: DataFrame, q: DataFrame) -> DataFrame:
     """Exact-cosine top-k over an (already cell-pruned) candidate set."""
     return (
@@ -744,85 +679,77 @@ def _ivf_score(cands: DataFrame, q: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: k-means coarse quantizer (MLlib KMeans, fixed seed) →
-    every vector assigned to its nearest cell → probe the `IVF_NPROBE`
-    cells nearest the query with exact cosine inside them.
-
-    Scale shape: the quantizer trains on a sample (see
-    ``_ivf_fit_assign``), the centroid set is tiny and broadcast with
-    the assignment model, so assignment is a narrow map; the probe
-    filters the scan to nprobe/k of the corpus BEFORE any scoring.
-    Persisting the corpus partitioned by `cell` (``write_ivf_store``)
-    turns the probe into PARTITION PRUNING — the IVF inverted list,
-    literally; tests/test_layout.py proves a probe reads only the
-    probed cells' files (r5 verdict item 6). Cell-size skew is the
-    known hazard (popular cells → straggler tasks); mitigated by AQE
-    skew splitting or splitting fat cells into sub-cells (IVF-HNSW
-    hybrids do the same).
-    """
-    assigned, probe, q, _cents = _ivf_fit_assign(spark, sf_dir)
-    return _ivf_score(assigned.filter(F.col("cell").isin(probe)), q)
-
-
-def ann_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF retrieval with a DETERMINISTIC HASH-SEEDED quantizer (r10) —
-    `ann_ivf_topk`'s decision procedure made hash-checkable with
-    DATA-DERIVED centroids, completing the fitted-ANN oracle program:
-    the PQ and IVF-ADC axes got frozen-literal twins in r8/r9, the
-    SemDeDup assignment got the hash-seed twin (`semantic_dedup_seeded`,
-    whose recorded argument — MLlib k-means|| has no SQL replay —
-    covers this key's fit too); this key puts the RETRIEVAL path
-    (probe ranking → cell-pruned scan → exact top-k) under a full
-    value-hash oracle with centroids the SQL twin re-derives from the
-    data, not literals.
-
-    The seeding rule is the fitted key's k ∝ N deployment rule
-    (k = max(2, min(IVF_K, n//60))) over the k vectors with smallest
-    md5(vec_id); probe selection is the query's 6-dp-rounded cosine to
-    each seed centroid, top `IVF_NPROBE` by (sim DESC, cid ASC) —
-    `ann_ivf_pq_frozen_topk`'s driver-side ranking, tie rule included;
-    assignment shares `_centroid_assign_udf` (the banded Arrow matmul
-    and its exactness proof) verbatim; scoring shares `_ivf_score`.
-
-    Scale shape: seed selection is one bounded TakeOrdered collect
-    (≤ IVF_K rows), assignment a narrow map over broadcast centroids,
-    and the probe filters the scan to nprobe/k of the corpus before
-    any scoring — with the cell-partitioned store this is partition
-    pruning, exactly as the fitted key."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-    qv = [float(x) for x in q_row[0]]
-    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
-    k = max(2, min(IVF_K, n // 60))
-    seeds = (
+def _hash_seeds(e: DataFrame, k: int) -> list[list[float]]:
+    """The seeded quantizer: the k vectors of e(vec_id, v) with the
+    smallest md5(vec_id), raw (cosine normalizes, so seeds need no
+    arithmetic). One bounded TakeOrdered collect; the SQL twins' `seeds`
+    CTE re-derives the same rows from the data."""
+    rows = (
         e.select("vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("hk"))
         .orderBy("hk", "vec_id")
         .limit(k)
         .collect()
     )
-    cents = [[float(x) for x in r.v] for r in seeds]
+    return [[float(x) for x in r.v] for r in rows]
+
+
+def _ivf_probes(qv: list[float], cents: list[list[float]]) -> list[int]:
+    """The `IVF_NPROBE` cells a query scans: its 6-dp rounded cosine to
+    each centroid (exact sequential folds, the JVM/DuckDB evaluation
+    order), top cells by (sim DESC, cell ASC) — the oracles' ORDER BY,
+    tie rule included."""
     qnorm = math.sqrt(_py_seq_dot(qv, qv))
     sims = [
         math.floor(
-            (_py_seq_dot(qv, c) / (qnorm * math.sqrt(sum(x * x for x in c))))
-            * 1e6
-            + 0.5
+            _py_seq_dot(qv, c) / (qnorm * math.sqrt(sum(x * x for x in c))) * 1e6 + 0.5
         )
         / 1e6
         for c in cents
     ]
-    probes = sorted(range(len(sims)), key=lambda c: (-sims[c], c))[:IVF_NPROBE]
-    en = e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
+    return sorted(range(len(sims)), key=lambda c: (-sims[c], c))[:IVF_NPROBE]
+
+
+def _ivf_assign(e: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """e(vec_id, v) → (vec_id, v, cell): each vector's cell is the
+    first-max 6-dp rounded cosine centroid — a narrow Arrow map over
+    broadcast centroids (`_centroid_assign_udf` and its exactness
+    proof), the one assignment kernel every IVF path shares."""
     assign = _centroid_assign_udf(cents)
-    assigned = en.select(
-        "vec_id", "v", assign(F.col("v"), F.col("vn")).alias("s")
-    ).select("vec_id", "v", F.col("s.cluster").alias("cell"))
+    return (
+        e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
+        .select("vec_id", "v", assign(F.col("v"), F.col("vn")).alias("s"))
+        .select("vec_id", "v", F.col("s.cluster").alias("cell"))
+    )
+
+
+def ann_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF retrieval with a deterministic hash-seeded quantizer: probe
+    the `IVF_NPROBE` cells nearest the query, exact cosine inside them.
+    Every step re-derives in the DuckDB twin from the data, no
+    literals: k = max(2, min(IVF_K, n//60)) seed centroids
+    (`_hash_seeds`; k ∝ N keeps ~60 vectors per cell), the query's
+    probe ranking (`_ivf_probes`), each vector's cell (`_ivf_assign`)
+    and the exact top-k (`_ivf_score`). Recall@10 against brute force
+    is 0.6 at sf0.001 and sf0.01 (tests/test_properties.py).
+
+    Scale shape: seed selection is one bounded TakeOrdered collect
+    (≤ IVF_K rows), assignment a narrow map over broadcast centroids,
+    and the probe filters the scan to nprobe/k of the corpus before
+    any scoring. Persisting the corpus partitioned by `cell`
+    (`write_ivf_store`) turns the probe into partition pruning — the
+    IVF inverted list, literally. Cell-size skew is the known hazard
+    (popular cells → straggler tasks); AQE skew splitting or fat-cell
+    splitting mitigates it."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
+    if q_row is None or q_row[0] is None:
+        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
+    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
+    cents = _hash_seeds(e, max(2, min(IVF_K, n // 60)))
+    probes = _ivf_probes([float(x) for x in q_row[0]], cents)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return _ivf_score(assigned.filter(F.col("cell").isin(probes)), q)
+    return _ivf_score(_ivf_assign(e, cents).filter(F.col("cell").isin(probes)), q)
 
 
 def _sql_ann_ivf_seeded() -> str:
@@ -877,81 +804,53 @@ def _sql_ann_ivf_seeded() -> str:
 
 
 def write_ivf_store(
-    assigned: DataFrame, path: str, centroids: list[list[float]] | None = None
+    assigned: DataFrame, path: str, centroids: list[list[float]]
 ) -> None:
     """Persist an IVF-assigned corpus partitioned by cell — one file
     per cell directory (repartition first: the small-files trap), so a
     probe's `cell IN (...)` becomes directory-level partition pruning
     and reads nprobe/k of the store's files.
 
-    When ``centroids`` is given, the frozen quantizer is persisted
-    alongside under ``_quantizer/`` (underscore-prefixed → invisible
-    to the data scan's file listing, the _SUCCESS convention), making
-    the store SELF-DESCRIBING: later batches upsert with the same
-    quantizer (`upsert_ivf_store`) without refitting — refitting would
-    silently re-shard history (cell ids change meaning) and is the
-    classic IVF-maintenance bug."""
+    The quantizer is persisted alongside under ``_quantizer/``
+    (underscore-prefixed → invisible to the data scan's file listing,
+    the _SUCCESS convention), making the store SELF-DESCRIBING: later
+    batches upsert with the same centroids (`upsert_ivf_store`) —
+    re-seeding would silently re-shard history (cell ids change
+    meaning), the classic IVF-maintenance bug."""
     (
         assigned.repartition(F.col("cell"))
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
     )
-    if centroids is not None:
-        spark = assigned.sparkSession
-        rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        spark.createDataFrame(rows, "cell int, centroid array<double>").coalesce(
-            1
-        ).write.mode("overwrite").parquet(path + "/_quantizer")
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+    assigned.sparkSession.createDataFrame(
+        rows, "cell int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/_quantizer")
 
 
 def upsert_ivf_store(spark: SparkSession, path: str, batch: DataFrame) -> None:
     """Incremental IVF index maintenance — the daily-embedding-batch
     shape (the dedup_incremental / corpus_incremental discipline
-    applied to the ANN index): assign the new batch with the store's
-    FROZEN quantizer and APPEND into the existing cell directories.
-    Existing files are never rewritten; a probe after the upsert sees
-    old and new rows through the same partition pruning.
+    applied to the ANN index): assign the new batch(vec_id, v) with
+    the store's persisted quantizer and APPEND into the existing cell
+    directories. Existing files are never rewritten; a probe after the
+    upsert sees old and new rows through the same partition pruning.
 
-    Assignment rule: argmin squared-L2 against the persisted centroids
-    over the L2-NORMALIZED vector (spherical assignment — identical to
-    the fit-time `KMeans.transform` geometry), ties to the lowest cell
-    id; computed as one numpy matmul per Arrow batch (the
-    `_centroid_assign_udf` pattern — a narrow map, no shuffle until
-    the per-cell repartition for file sizing). Pinned in pytest
-    against a driver-side numpy reference and by the planted-neighbor
-    probe property."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cents = sorted(
-        (r.cell, r.centroid)
-        for r in spark.read.parquet(path + "/_quantizer").collect()
-    )
-    C = np.stack([np.asarray(c, dtype=np.float64) for _, c in cents])
-    cell_ids = np.array([i for i, _ in cents], dtype=np.int32)
-
-    @pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="int32")
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        V = V / np.sqrt(np.einsum("ij,ij->i", V, V))[:, None]
-        # ||v - c||² = ||v||² + ||c||² - 2v·c → argmin over cells; numpy
-        # argmin takes the FIRST minimum = lowest cell id on ties
-        d = (
-            np.einsum("ij,ij->i", V, V)[:, None]
-            + np.einsum("ij,ij->i", C, C)[None, :]
-            - 2.0 * (V @ C.T)
+    Assignment is `_ivf_assign` against the persisted centroids — the
+    rule that built the store, so old and new rows share one geometry.
+    Pinned in pytest against an exact sequential-fold reference and by
+    the planted-neighbor probe property."""
+    cents = [
+        c
+        for _, c in sorted(
+            (r.cell, r.centroid)
+            for r in spark.read.parquet(path + "/_quantizer").collect()
         )
-        return pd.Series(cell_ids[np.argmin(d, axis=1)])
-
-    assigned = batch.select(
-        "vec_id", "v", _assign(F.col("v")).alias("cell")
-    )
+    ]
     (
-        assigned.repartition(F.col("cell"))
+        _ivf_assign(batch, cents)
+        .repartition(F.col("cell"))
         .write.mode("append")
         .partitionBy("cell")
         .parquet(path)
@@ -970,194 +869,18 @@ def probe_ivf_store(
 PQ_M = 8  # subspaces: 64-dim vectors → 8 sub-vectors of 8 dims each
 PQ_KS = 16  # codewords per subspace (4-bit codes here; 256 = classic PQ at scale)
 PQ_RERANK = 50  # ADC candidate pool re-ranked with exact cosine
-PQ_FIT_CAP = 50_000  # driver-side training-sample bound (same argument as the BPE fit)
-PQ_FIT_ITERS = 10
-
-
-def _pq_fit(mat):
-    """Per-subspace Lloyd's k-means over a normalized sample — the PQ
-    codebook fit of Jégou/Douze/Schmid 2011 (TPAMI, "Product
-    Quantization for Nearest Neighbor Search"). Deterministic by
-    construction: seeded init, fixed iteration count, argmin ties to
-    the lower index. Returns (M, k, dsub) codebooks."""
-    import numpy as np
-
-    n, dim = mat.shape
-    dsub = dim // PQ_M
-    rng = np.random.RandomState(42)
-    books = []
-    for m in range(PQ_M):
-        sub = mat[:, m * dsub : (m + 1) * dsub]
-        k = min(PQ_KS, n)
-        idx = rng.choice(n, size=k, replace=False)
-        cents = sub[idx].copy()
-        for _ in range(PQ_FIT_ITERS):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
-            for j in range(k):
-                pts = sub[assign == j]
-                if len(pts):
-                    cents[j] = pts.mean(0)
-        books.append(cents)
-    return np.stack(books)
-
-
-def _pq_normalize(mat):
-    import numpy as np
-
-    norms = np.sqrt((mat * mat).sum(1, keepdims=True))
-    norms[norms == 0.0] = 1.0  # zero vectors encode as themselves
-    return mat / norms
-
-
-def _pq_encode_udf(books):
-    """Arrow-batched encoder: normalize, then per-subspace nearest
-    codeword → M small ints per vector. This is the stored
-    representation — dim×4 bytes collapse to M codes (64-dim float32 →
-    8 bytes, 32×), which is what lets a 100 TB embedding corpus keep
-    its scannable form in memory."""
-    import numpy as np
-
-    dsub = books.shape[2]
-
-    @F.pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
-        if vs.empty:
-            return pd.Series([], dtype=object)
-        mat = _pq_normalize(np.array(vs.tolist(), dtype=np.float64))
-        codes = np.empty((len(mat), PQ_M), dtype=np.int64)
-        for m in range(PQ_M):
-            sub = mat[:, m * dsub : (m + 1) * dsub]
-            # ||s - c||² = ||s||² - 2s·c + ||c||²; argmin over c drops ||s||²
-            d2 = (books[m] * books[m]).sum(1)[None, :] - 2.0 * (sub @ books[m].T)
-            codes[:, m] = d2.argmin(1)
-        return pd.Series(list(codes))
-
-    return enc
-
-
-def _pq_adc_udf(books, qnorm):
-    """Asymmetric-distance scorer: the query stays un-quantized; a
-    (M × k) lookup table of sub-inner-products is computed once on the
-    driver and captured in the UDF closure (broadcast with the task
-    binary — ~M·k·8 bytes). Score = Σ_m lut[m, code_m] ≈ ⟨q, v⟩ on
-    normalized vectors ≈ cosine. A narrow map over the codes column —
-    the corpus' float payload is never read at query time."""
-    import numpy as np
-
-    dsub = books.shape[2]
-    lut = np.stack(
-        [books[m] @ qnorm[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
-    )  # (M, k)
-
-    @F.pandas_udf("double")
-    def adc(codes: pd.Series) -> pd.Series:
-        if codes.empty:
-            return pd.Series([], dtype=np.float64)
-        c = np.array(codes.tolist(), dtype=np.int64)  # (batch, M)
-        return pd.Series(lut[np.arange(PQ_M)[None, :], c].sum(1))
-
-    return adc
-
-
-_PQ_BOOKS_CACHE: dict[tuple, object] = {}
-
-
-def _ann_pq(
-    spark: SparkSession, e: DataFrame, cache_key=None, universe: DataFrame | None = None
-) -> DataFrame:
-    """PQ encode → ADC scan → exact re-rank over an arbitrary
-    (vec_id, v) corpus; `ann_pq_topk` binds it to the embeddings table.
-    `cache_key` memoizes the fitted codebooks per immutable corpus.
-    `universe` optionally restricts the ADC scan to a pre-pruned
-    candidate subset (the IVF-ADC composition) — codebooks still fit on
-    the full corpus, and the exact re-rank still reads from `e`."""
-    import numpy as np
-
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None:
-        # empty-partition contract: valid empty result, not a crash
-        return (
-            e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-        )
-    dim = len(q_row[0])
-    if dim % PQ_M:
-        raise ValueError(f"PQ needs dim divisible by {PQ_M}, got {dim}")
-    qnorm = _pq_normalize(np.array([q_row[0]], dtype=np.float64))[0]
-
-    books = _PQ_BOOKS_CACHE.get(cache_key) if cache_key else None
-    if books is None:
-        n = e.count()
-        fit_df = e if n <= PQ_FIT_CAP else e.sample(fraction=PQ_FIT_CAP / n, seed=42)
-        sample = np.array(
-            [r[0] for r in fit_df.select("v").collect()], dtype=np.float64
-        )
-        books = _pq_fit(_pq_normalize(sample))
-        if cache_key:
-            _PQ_BOOKS_CACHE[cache_key] = books
-
-    enc, adc = _pq_encode_udf(books), _pq_adc_udf(books, qnorm)
-    base = e if universe is None else universe
-    cands = (
-        base.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("code", enc("v"))
-        .withColumn("adc_ip", adc("code"))
-        .orderBy(F.col("adc_ip").desc(), F.col("vec_id").asc())
-        .limit(PQ_RERANK)
-        .select("vec_id")
-    )
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return (
-        e.join(F.broadcast(cands), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
-
-
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (Jégou/Douze/Schmid 2011, TPAMI):
-    per-subspace codebooks fit on a bounded seeded sample → vectors
-    encoded to M 4-bit codes (narrow Arrow map) → query-time ADC scores
-    the codes against a driver-built (M × k) lookup table (narrow map —
-    the float payload is never read at query time) → top-`PQ_RERANK`
-    candidates re-ranked with exact cosine → top-k. Complements the
-    family: multiprobe/IVF prune WHICH vectors are scored; PQ shrinks
-    WHAT is read per vector (64-dim float32 → 8 bytes, 32×) — at
-    100 TB the two compose (IVF cells × PQ codes = IVF-ADC, the FAISS
-    default).
-
-    Scale shape: fit is O(sample) on the driver; encoding is
-    embarrassingly parallel and stored once; the ADC scan shuffles
-    nothing (TakeOrdered collects k·partitions candidates); the re-rank
-    reads `PQ_RERANK` rows by id — a broadcast semi-join here, point
-    lookups in the id-bucketed store at scale. Rows-only key: the
-    fitted codebooks have no SQL twin; recall is property-tested
-    against the brute-force baseline (tests/test_properties.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return _ann_pq(
-        spark, e, cache_key=(spark.sparkContext.applicationId, sf_dir)
-    )
-
-
 PQF_SCALE = 0.125  # 1/sqrt(dim): codewords at the unit-normalized subvector magnitude
 
 
 def _pq_frozen_books() -> list[list[list[float]]]:
     """PQ_M × PQ_KS × dsub codewords, seeded and FROZEN AT IMPORT and
     inlined as literals into BOTH engines (the `_sem_centroids`
-    pattern, extended to PQ per the r8 verdict item 3): the production
-    fitted-codebook key (`ann_pq_topk`) stays rows-only because a
-    driver-side k-means fit has no SQL twin, but nothing about the PQ
-    DECISION PROCEDURE — normalize, per-subspace argmin encode, ADC
-    lookup-table scoring, exact re-rank — depends on where the
-    codebooks came from. Frozen seeded codewords (scaled to the
-    unit-normalized subvector magnitude so ADC scores live in the
-    data's range) make the entire procedure oracle-checkable."""
+    pattern). A driver-side codebook fit would have no SQL twin, and
+    nothing in the PQ decision procedure — normalize, per-subspace
+    argmin encode, ADC lookup-table scoring, exact re-rank — depends
+    on where the codebooks came from. Frozen seeded codewords (scaled
+    to the unit-normalized subvector magnitude so ADC scores live in
+    the data's range) make the entire procedure oracle-checkable."""
     import numpy as np
 
     rng = np.random.RandomState(11)
@@ -1174,7 +897,7 @@ _PQ_FROZEN_BOOKS = _pq_frozen_books()
 def _pq_frozen_encode_udf():
     """Arrow-batched frozen-codebook encoder with the banded-exactness
     discipline of `_banded_round_matrix`: distances are computed as a
-    numpy matmul (`c2 − 2·sub@books`, the fitted encoder's form), and a
+    numpy matmul (`c2 − 2·sub@books`, the ‖s‖²-dropped form), and a
     row's subspace is re-derived with exact sequential Python folds —
     the oracle's evaluation order, including the first-occurrence tie
     rule — whenever the two smallest distances sit within 1e-9 of each
@@ -1224,9 +947,12 @@ def _pq_frozen_encode_udf():
 
 
 def ann_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`ann_pq_topk`'s oracle-checkable twin: the IDENTICAL
-    encode→ADC→re-rank plan with the codebooks frozen at import
-    (`_pq_frozen_books`) instead of fitted.
+    """Product-quantization ANN (Jégou/Douze/Schmid 2011, TPAMI) with
+    the codebooks frozen at import (`_pq_frozen_books`): vectors encode
+    to M 4-bit codes, the query scores the codes through an (M × k)
+    lookup table (ADC), and the top-`PQ_RERANK` pool is re-ranked with
+    exact cosine. Multiprobe/IVF prune WHICH vectors are scored; PQ
+    shrinks WHAT is read per vector (64-dim float32 → 8 bytes, 32×).
 
     Exactness argument (the `_sql_ann_multiprobe` discipline, term by
     term — every float on both sides is produced by the same
@@ -1235,8 +961,8 @@ def ann_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     - normalization: ``x / norm`` elementwise with the zero-vector
       guard (norm 0 → 1) — one IEEE division per element both sides.
     - encode: per-subspace distance to codeword i is
-      ``c2_i − 2·dot(sub, c_i)`` (the ‖s‖²-dropped form the fitted
-      encoder uses); c2_i is a Python sequential self-dot inlined as a
+      ``c2_i − 2·dot(sub, c_i)`` (‖s‖² dropped: it does not change the
+      argmin); c2_i is a Python sequential self-dot inlined as a
       literal in BOTH engines. The Spark side encodes via the banded
       Arrow UDF (`_pq_frozen_encode_udf` — numpy matmul, near-tie
       rows re-derived with exact folds), whose emitted code provably
@@ -1250,7 +976,7 @@ def ann_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     - cutoff and re-rank: top-`PQ_RERANK` by (adc DESC, vec_id) on
       bit-identical doubles, then the family's rounded exact cosine.
 
-    Scale shape = `ann_pq_topk`'s verbatim: narrow encode map (the
+    Scale shape: narrow encode map (the
     codes column is what a 100 TB store persists), zero-shuffle ADC
     scan, TakeOrdered candidate pool, broadcast-semi-join re-rank.
     (A first cut unrolled all M·k codeword distances as JVM fold
@@ -1457,27 +1183,19 @@ def _sql_ann_pq_frozen(ivf: bool = False, seeded: bool = False) -> str:
 
 
 def ann_ivf_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`ann_ivf_pq_topk`'s oracle-checkable twin (r9, extending the
-    r8-verdict inlined-literal technique to the COMPOSED production
-    shape): IVF cell pruning over the FROZEN `_SEM_CENTROIDS`
-    (semantic_dedup's assignment machinery and exactness proof,
-    shared verbatim via `_centroid_assign_udf`) × frozen-codebook
-    ADC (`_pq_frozen_rank`, shared verbatim with
-    `ann_pq_frozen_topk`) × exact rounded-cosine re-rank. Every
-    fitted constant in the fitted key has a frozen analogue here, so
-    the ENTIRE two-axis decision procedure — which cells to probe,
-    which codes each vector gets, how the LUT scores them, who
-    survives the rerank — re-derives in DuckDB.
+    """IVF-ADC (the FAISS default, IVFx,PQy) with both quantizers frozen
+    at import: IVF cell pruning over `_SEM_CENTROIDS` (`_ivf_probes`,
+    `_ivf_assign`) × frozen-codebook ADC and exact re-rank
+    (`_pq_frozen_rank`, shared with `ann_pq_frozen_topk`). Every
+    constant is a literal both engines inline, so the whole two-axis
+    decision procedure — which cells to probe, which codes each vector
+    gets, how the LUT scores them, who survives the rerank — re-derives
+    in DuckDB (`_sql_ann_pq_frozen(ivf=True)`).
 
-    Probe selection: the query's rounded (6 dp) cosine to each
-    frozen centroid, computed driver-side with exact sequential
-    folds (the same floats `_sql_sem_cos` produces from its inlined
-    literals), top `IVF_NPROBE` cells by (sim DESC, cell ASC) — the
-    oracle's ORDER BY, tie rule included. At 100 TB the universe
-    filter becomes partition pruning against the cell-partitioned
-    store (`write_ivf_store`), and the ADC scan reads
-    nprobe/k of the corpus as codes only — the family's
-    sublinear-in-rows-AND-bytes member, now hash-checkable."""
+    Scale shape: at 100 TB the universe filter becomes partition
+    pruning against the cell-partitioned store (`write_ivf_store`),
+    and the ADC scan reads nprobe/k of the corpus as codes only — the
+    family's member sublinear in both rows and bytes per row."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
@@ -1486,49 +1204,20 @@ def ann_ivf_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = list(q_row[0])
     if len(qv) != PQ_M * (64 // PQ_M):
         raise ValueError(f"frozen PQ codebooks assume dim 64, got {len(qv)}")
-    qnorm = math.sqrt(_py_seq_dot(qv, qv))
-    sims = [
-        math.floor(
-            (_py_seq_dot(qv, c) / (qnorm * math.sqrt(sum(x * x for x in c))))
-            * 1e6
-            + 0.5
-        )
-        / 1e6
-        for c in _SEM_CENTROIDS
-    ]
-    probes = sorted(range(len(sims)), key=lambda k: (-sims[k], k))[:IVF_NPROBE]
-    en = e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
-    assign = _centroid_assign_udf(_SEM_CENTROIDS)
-    assigned = en.select(
-        "vec_id", "v", assign(F.col("v"), F.col("vn")).alias("s")
-    ).select("vec_id", "v", F.col("s.cluster").alias("cluster"))
-    universe = assigned.filter(F.col("cluster").isin(probes)).select("vec_id", "v")
-    return _pq_frozen_rank(e, qv, universe=universe)
+    probes = _ivf_probes(qv, _SEM_CENTROIDS)
+    universe = _ivf_assign(e, _SEM_CENTROIDS).filter(F.col("cell").isin(probes))
+    return _pq_frozen_rank(e, qv, universe=universe.select("vec_id", "v"))
 
 
 def ann_ivf_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed IVF-ADC pipeline with a DATA-DERIVED hash-seeded
-    quantizer (r11, closing the r10 verdict's item 7): the one fitted
-    composition still rows-only after r10 was `ann_ivf_pq_topk` —
-    its two halves each had oracle twins (`ann_ivf_seeded_topk`
-    re-derives the quantizer from data; `ann_pq_frozen_topk` checks
-    the ADC under frozen codebooks) but the COMPOSITION (which cells
-    the data-derived quantizer prunes, then which codes survive ADC
-    inside exactly those cells) did not automatically inherit either
-    argument. This key composes them end-to-end: the seeded-IVF head
-    (`ann_ivf_seeded_topk`'s k ∝ N rule, md5-smallest seed rows,
-    `_centroid_assign_udf` assignment, 6-dp probe ranking — shared
-    verbatim) feeding `_pq_frozen_rank`'s frozen-codebook ADC →
-    exact-rerank tail (shared verbatim with `ann_pq_frozen_topk`),
-    under one full value-hash oracle whose SQL twin re-derives the
-    quantizer from the data AND replays the ADC from inlined
-    codebook literals (`_sql_ann_pq_frozen(seeded=True)`).
-
-    What remains genuinely un-oracle-able in `ann_ivf_pq_topk` is
-    only the sampled k-means/codebook FIT itself (no SQL replay of
-    Lloyd iterations — the recorded `semantic_dedup_seeded`
-    argument); every DECISION the fitted pipeline makes at query
-    time is now hash-checked through this twin.
+    """IVF-ADC with a data-derived hash-seeded quantizer: the
+    `ann_ivf_seeded_topk` head (`_hash_seeds`, `_ivf_probes`,
+    `_ivf_assign`) feeding the frozen-codebook ADC → exact-rerank tail
+    (`_pq_frozen_rank`). Its SQL twin re-derives the quantizer from
+    the data AND replays the ADC from inlined codebook literals
+    (`_sql_ann_pq_frozen(seeded=True)`), so the composition — which
+    cells the seeded quantizer prunes, then which codes survive ADC
+    inside exactly those cells — is hash-checked end to end.
 
     Scale shape: identical to `ann_ivf_pq_frozen_topk` — seed
     selection is one bounded TakeOrdered collect (≤ IVF_K rows),
@@ -1545,61 +1234,9 @@ def ann_ivf_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(qv) != PQ_M * (64 // PQ_M):
         raise ValueError(f"frozen PQ codebooks assume dim 64, got {len(qv)}")
     n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
-    k = max(2, min(IVF_K, n // 60))
-    seeds = (
-        e.select("vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("hk"))
-        .orderBy("hk", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    cents = [[float(x) for x in r.v] for r in seeds]
-    qnorm = math.sqrt(_py_seq_dot(qv, qv))
-    sims = [
-        math.floor(
-            (_py_seq_dot(qv, c) / (qnorm * math.sqrt(sum(x * x for x in c))))
-            * 1e6
-            + 0.5
-        )
-        / 1e6
-        for c in cents
-    ]
-    probes = sorted(range(len(sims)), key=lambda c: (-sims[c], c))[:IVF_NPROBE]
-    en = e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
-    assign = _centroid_assign_udf(cents)
-    assigned = en.select(
-        "vec_id", "v", assign(F.col("v"), F.col("vn")).alias("s")
-    ).select("vec_id", "v", F.col("s.cluster").alias("cell"))
-    universe = assigned.filter(F.col("cell").isin(probes)).select("vec_id", "v")
-    return _pq_frozen_rank(e, qv, universe=universe)
-
-
-def _ann_ivf_pq(spark: SparkSession, e: DataFrame, cache_key=None) -> DataFrame:
-    """IVF-ADC over an arbitrary (vec_id, v) corpus: IVF prunes WHICH
-    vectors are scanned (probed cells), PQ shrinks WHAT is read per
-    vector (ADC over codes), exact cosine re-ranks the pool."""
-    assigned, probe, _q, _cents = _ivf_fit_assign_df(e)
-    universe = assigned.filter(F.col("cell").isin(probe)).select("vec_id", "v")
-    return _ann_pq(spark, e, cache_key=cache_key, universe=universe)
-
-
-def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed production ANN shape — IVF-ADC (the FAISS default:
-    IVFx,PQy): the sampled spherical-k-means coarse quantizer restricts
-    the scan to `IVF_NPROBE` cells (partition pruning once the store is
-    laid out by cell — `write_ivf_store`), product-quantization codes
-    shrink the per-vector payload inside those cells 32×, ADC ranks the
-    pool, and exact cosine re-ranks the top-`PQ_RERANK`. The two
-    orthogonal axes the family ships separately (`ann_ivf_topk`,
-    `ann_pq_topk`), composed and tested end-to-end: at 100 TB this is
-    nprobe/k of the corpus read as codes-only — the only family member
-    whose query cost is sublinear in BOTH rows and bytes-per-row.
-    Rows-only key: fitted quantizer + codebooks have no SQL twin;
-    planted-neighbor recall tested in tests/test_properties.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return _ann_ivf_pq(
-        spark, e, cache_key=(spark.sparkContext.applicationId, sf_dir)
-    )
+    cents = _hash_seeds(e, max(2, min(IVF_K, n // 60)))
+    universe = _ivf_assign(e, cents).filter(F.col("cell").isin(_ivf_probes(qv, cents)))
+    return _pq_frozen_rank(e, qv, universe=universe.select("vec_id", "v"))
 
 
 SEM_K = 16
@@ -1609,11 +1246,11 @@ SEM_THRESHOLD = 0.4
 def _sem_centroids() -> list[list[float]]:
     """SEM_K seeded gaussian cluster centers, frozen at import and
     inlined as literals into BOTH engines (the neardup-planes pattern).
-    A production SemDeDup fits k-means first (ann_ivf_topk shows the
-    MLlib path); frozen random centers keep the operator fully
-    oracle-checkable and exercise the identical plan — the paper's
-    result depends on the cluster-then-pairwise structure, not on
-    centroid quality."""
+    A production SemDeDup fits k-means first; frozen random centers
+    keep the operator fully oracle-checkable and exercise the identical
+    plan — the paper's result depends on the cluster-then-pairwise
+    structure, not on centroid quality. `semantic_dedup_seeded` runs
+    the same plan over data-derived centroids."""
     import numpy as np
 
     rng = np.random.RandomState(5)
@@ -1695,8 +1332,8 @@ def _centroid_assign_udf(cents: list[list[float]]):
     # Memoize on centroid CONTENT: the registry key passes the frozen
     # module-level list on every call, and rebuilding the pandas_udf
     # (capture + registration) was ~0.2 s of every plan build. The
-    # cache key is the full value tuple, not id() — vec_scale passes
-    # freshly-fitted lists that must never alias.
+    # cache key is the full value tuple, not id() — vec_scale and the
+    # seeded keys pass freshly-built lists that must never alias.
     cache_key = tuple(tuple(c) for c in cents)
     cached = _ASSIGN_UDF_CACHE.get(cache_key)
     if cached is not None:
@@ -1822,9 +1459,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids (no fit job at query time); the pairwise stage is the
     paper's blocking structure — all-pairs only WITHIN a cluster, via
     one self-join keyed by cluster id, so cost is Σ|cluster|², bounded
-    by choosing k ∝ N/target_cluster_size at fit time (the 100 TB
-    deployment fits k-means on a sample — ann_ivf_topk's quantizer —
-    and k is millions, keeping clusters O(thousands)). Vectors ride
+    by choosing k ∝ N/target_cluster_size (the 100 TB deployment
+    seeds or fits millions of centroids, keeping clusters
+    O(thousands); `semantic_dedup_seeded` seeds k ∝ N). Vectors ride
     the cluster join once; the exists-style removal is a semi-join.
 
     Determinism: per-centroid cosines are stable_round-ed to 1e-6
@@ -1858,85 +1495,33 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and, in assignment, decides only where provably equal to the
     fold). The grouped-map contract is honest: one cluster
     materializes in one Python worker, and cluster size is bounded
-    ~N/k BY CONSTRUCTION (k grows with N at fit time; the
-    ``semantic_dedup_plan`` entry point takes the fitted centroid
-    list, and scripts/vec_scale.py measures it with k ∝ N)."""
+    ~N/k BY CONSTRUCTION (k grows with N; the
+    ``semantic_dedup_plan`` entry point takes any centroid list, and
+    scripts/vec_scale.py measures it with k ∝ N)."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     return semantic_dedup_plan(spark, e, _SEM_CENTROIDS)
 
 
-def semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with a FITTED quantizer — the production path the
-    frozen-centroid `semantic_dedup` key documents (r5 verdict item
-    8): centroids come from the sampled spherical-k-means fit
-    (`_ivf_fit_assign`'s recipe: L2-normalize, seeded KMeans on a
-    bounded sample, k ∝ N so cluster size stays ~constant), then the
-    IDENTICAL `semantic_dedup_plan` runs over them — assignment
-    matmul, cluster-blocked candidate matmul, exact JVM verify.
-
-    Rows-only by design: fitted centroids are a model artifact DuckDB
-    cannot reproduce; instead tests/test_properties.py re-derives the
-    full removal set in numpy FROM THIS KEY'S OWN audit output
-    (cluster + c2c columns) against brute-force pair cosines — an
-    exact decision-procedure oracle, stronger than a hash compare of
-    frozen fixtures. The fit is one bounded eager driver action (the
-    ann_ivf class)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
-    if n < 2:
-        # nothing to cluster (empty partition / day filter): the plan
-        # over frozen centroids yields the correct empty/degenerate
-        # audit without a quantizer fit
-        return semantic_dedup_plan(spark, e, _SEM_CENTROIDS[:2])
-    k = max(2, min(64, n // 125))
-    fit_cap = 100_000
-    fe = e.withColumn(
-        "fv", array_to_vector(F.transform("v", lambda x: x / _norm(F.col("v"))))
-    )
-    fit_df = fe if n <= fit_cap else fe.sample(fraction=fit_cap / n, seed=42)
-    model = KMeans(k=k, seed=42, featuresCol="fv", predictionCol="cell").fit(fit_df)
-    cents = [[float(x) for x in c] for c in model.clusterCenters()]
-    return semantic_dedup_plan(spark, e, cents)
-
-
 def semantic_dedup_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over a DETERMINISTIC HASH-SEEDED quantizer (r10, r9
-    verdict item 8) — the fitted path's ENTIRE decision procedure made
-    hash-checkable with DATA-DERIVED (non-literal) centroids.
+    """SemDeDup over a deterministic hash-seeded quantizer: the k
+    vectors with the smallest md5(vec_id) (`_hash_seeds`, k = max(2,
+    min(64, n//125)) — k ∝ N keeps clusters ~125 vectors) become the
+    centroids, raw. Everything downstream — the Arrow matmul
+    assignment with its banded exact re-derive, the cluster-blocked
+    candidate matmul, the exact JVM verify, the keep-the-atypical
+    removal rule — is `semantic_dedup_plan`, under a full value-hash
+    oracle that re-derives the seeds in SQL.
 
-    Why the fitted key itself cannot gain a SQL oracle (the recorded
-    argument item 8 asked for): `semantic_dedup_ivf`'s centroids come
-    from MLlib KMeans — seed-deterministic WITHIN Spark, but its
-    k-means|| initialization draws from Spark's per-partition RNG
-    stream and its Lloyd updates accumulate float means in partition
-    order; no SQL engine can replay either, so equality of fitted
-    centroids across engines is unachievable by construction (and
-    inlining one engine's fit as literals into the other's query is a
-    frozen twin, which `semantic_dedup` already is).
-
-    This key closes the remaining gap: replace the fit with a
-    deterministic seeding rule BOTH engines can compute exactly — the
-    k vectors with the smallest md5(vec_id) (k = max(2, min(64,
-    n//125)), the fitted key's k ∝ N deployment rule) become the
-    centroids, raw (cosine normalizes, so seed vectors need no
-    arithmetic beyond the shared norm fold). Everything downstream —
-    the Arrow matmul assignment with its banded exact re-derive, the
-    cluster-blocked candidate matmul, the exact JVM verify, the
-    keep-the-atypical removal rule — is `semantic_dedup_plan`
-    VERBATIM, i.e. the exact code path the fitted key runs, now under
-    a full value-hash oracle that re-derives the seeds in SQL.
+    Why seeds and not a k-means fit: MLlib's k-means|| initialization
+    draws from Spark's per-partition RNG stream and its Lloyd updates
+    accumulate float means in partition order, so no SQL engine can
+    replay a fit; the md5 rule both engines compute exactly.
 
     Scale shape: seed selection is a global top-k by hash (one
-    TakeOrdered, k ≤ 64 rows ≈ 32 KB collected — a bounded driver
-    action like the fit it replaces); the plan's scale argument is
-    semantic_dedup's. Hash seeding is also the honest production
-    fallback when no fit artifact is available — uniform over the id
-    space, scale-invariant, reproducible across reruns."""
+    TakeOrdered, k ≤ 64 rows ≈ 32 KB collected); the plan's scale
+    argument is semantic_dedup's. Hash seeding is uniform over the id
+    space, scale-invariant and reproducible across reruns."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
@@ -1947,15 +1532,7 @@ def semantic_dedup_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the oracle derives the lone vector as centroid 0 (cluster=0,
         # c2c=1.0), which frozen random centroids would not match.
         return semantic_dedup_plan(spark, e, _SEM_CENTROIDS[:2])
-    k = max(2, min(64, n // 125))
-    seeds = (
-        e.select("vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("hk"))
-        .orderBy("hk", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    cents = [[float(x) for x in r.v] for r in seeds]
-    return semantic_dedup_plan(spark, e, cents)
+    return semantic_dedup_plan(spark, e, _hash_seeds(e, max(2, min(64, n // 125))))
 
 
 def _sql_semantic_dedup_seeded() -> str:
@@ -2434,21 +2011,8 @@ QUERIES = {
     "ann_pq_frozen_topk": ann_pq_frozen_topk,  # full oracle (r9): frozen codebooks inlined as SQL literals
     "ann_ivf_pq_frozen_topk": ann_ivf_pq_frozen_topk,  # full oracle (r9): the composed IVF-ADC shape, frozen twin
     "ann_ivf_pq_seeded_topk": ann_ivf_pq_seeded_topk,  # full oracle (r11): data-derived seeded quantizer × frozen-codebook ADC — the composed pipeline's every query-time decision hash-checked
-    # SUPERSEDED rows-only keys retired from the registry r12 (r11
-    # verdict item 6): ann_ivf_topk, ann_pq_topk, ann_ivf_pq_topk and
-    # semantic_dedup_ivf ran the SAME query-time decision procedures
-    # as their seeded/frozen oracle twins above, differing only in
-    # where the quantizer/codebook constants come from (a fitted
-    # k-means/PQ training run vs hash-seeded or import-frozen
-    # literals). The fitted-path CODE stays (ann_ivf_topk,
-    # ann_pq_topk, ann_ivf_pq_topk, semantic_dedup_ivf functions +
-    # fit_ivf_quantizer/fit_pq_codebooks) and its recall / stability /
-    # decision-procedure properties stay pinned in
-    # tests/test_properties.py and tests/test_layout.py — but the
-    # registry no longer carries permanently-unverifiable duplicates
-    # of hash-checked plans (rows-only surface 15 → 11).
     "semantic_dedup": semantic_dedup,
-    "semantic_dedup_seeded": semantic_dedup_seeded,  # full oracle (r10): hash-seeded data-derived centroids, the fitted path's plan made hash-checkable
+    "semantic_dedup_seeded": semantic_dedup_seeded,  # full oracle (r10): semantic_dedup's plan over hash-seeded data-derived centroids
     "knn_join": knn_join,
     "cluster_topics": cluster_topics,
 }

@@ -469,8 +469,7 @@ PRIORITY = [
     # normalize → per-subspace argmin encode → LUT ADC → exact
     # re-rank — with import-frozen codebooks inlined as SQL literals
     # (functions/vectors.py::_sql_ann_pq_frozen), the multiprobe
-    # technique extended to the codes-and-lookup-table family; the
-    # fitted ann_pq_topk stays rows-only alongside.
+    # technique extended to the codes-and-lookup-table family.
     # semantic_dedup moved out r10 after green rows since r5:
     # semantic_dedup_seeded (rotating in) runs semantic_dedup_plan
     # VERBATIM with DATA-DERIVED hash-seeded centroids — strictly
@@ -729,10 +728,6 @@ PRIORITY = [
     "quality_model_score",
     "order_limit", "similarity_topk", "label_stats",
     "bpe_token_count", "pack_sequences_bpe",
-    # semantic_dedup_ivf retired from the registry r12 along with
-    # ann_ivf_topk/ann_pq_topk/ann_ivf_pq_topk (r11 verdict item 6) —
-    # superseded by their seeded/frozen hash-checked twins; see the
-    # note at functions/vectors.py::QUERIES.
     # per-language tokenizer fertility audit under the fitted BPE
     # (rows-only: no SQL twin for BPE segmentation; exact long sums,
     # integer-arithmetic threshold flag).

@@ -116,21 +116,41 @@ def test_digest_history_probe_is_colocated(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS test_digest_history")
 
 
+def _seeded_ivf_store(spark, sf_dir, tmp_path):
+    """Write the embeddings as a cell-partitioned IVF store under
+    ``tmp_path/ivf_store`` with the seeded quantizer
+    `ann_ivf_seeded_topk` uses; return (probe cells, query frame,
+    centroids)."""
+    from labelmain_spark.functions import vectors
+    from labelmain_spark.sources.readers import load_table
+
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cents = vectors._hash_seeds(e, max(2, min(vectors.IVF_K, e.count() // 60)))
+    q = e.filter(F.col("vec_id") == vectors.QUERY_VEC_ID).select(F.col("v").alias("q"))
+    probe = vectors._ivf_probes([float(x) for x in q.first().q], cents)
+    vectors.write_ivf_store(
+        vectors._ivf_assign(e, cents), str(tmp_path / "ivf_store"), cents
+    )
+    return probe, q, cents
+
+
 def test_ivf_cell_store_probe_prunes_partitions(spark, sf_dir, tmp_path):
     """SCALE.md's IVF-layout claim, proven (r6): persisting embeddings
     partitioned by quantizer cell turns an ANN probe into directory
     pruning — the probe scan (a) carries a PartitionFilter on cell,
     (b) touches only nprobe of the k cell files on disk, and (c)
-    returns exactly the in-memory ann_ivf result."""
+    returns exactly the in-memory ann_ivf_seeded_topk result (a
+    full-oracle key)."""
     import glob
 
     from pyspark.sql import functions as F
 
     from labelmain_spark.functions import vectors
 
-    assigned, probe, q, cents = vectors._ivf_fit_assign(spark, sf_dir)
+    probe, q, _ = _seeded_ivf_store(spark, sf_dir, tmp_path)
     path = str(tmp_path / "ivf_store")
-    vectors.write_ivf_store(assigned, path, cents)
 
     cell_dirs = glob.glob(path + "/cell=*")
     assert len(cell_dirs) > len(probe), "fixture must have unprobed cells"
@@ -158,18 +178,19 @@ def test_ivf_cell_store_probe_prunes_partitions(spark, sf_dir, tmp_path):
     ), (touched, allowed)
     assert len(touched) == len(probe), (len(touched), len(probe))
 
-    want = vectors.ann_ivf_topk(spark, sf_dir).collect()
+    want = vectors.ann_ivf_seeded_topk(spark, sf_dir).collect()
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want]
 
 
 def test_ivf_store_upsert_appends_with_frozen_quantizer(spark, sf_dir, tmp_path):
     """Incremental IVF maintenance: a new batch upserted into the cell
-    store (a) is assigned EXACTLY as the driver-side numpy reference
+    store (a) is assigned EXACTLY as an exact sequential-fold reference
     assigns against the persisted centroids, (b) only APPENDS files —
     every pre-existing file is untouched, (c) a probe after the upsert
     finds a planted near-duplicate of the query at rank 1 while the
     pre-upsert rows still appear through the same partition pruning."""
     import glob
+    import math
     import os
 
     import numpy as np
@@ -177,9 +198,8 @@ def test_ivf_store_upsert_appends_with_frozen_quantizer(spark, sf_dir, tmp_path)
 
     from labelmain_spark.functions import vectors
 
-    assigned, probe, q, cents = vectors._ivf_fit_assign(spark, sf_dir)
+    probe, q, cents = _seeded_ivf_store(spark, sf_dir, tmp_path)
     path = str(tmp_path / "ivf_store")
-    vectors.write_ivf_store(assigned, path, cents)
     before = {r.vec_id for r in vectors.probe_ivf_store(spark, path, probe, q).collect()}
     pre_files = set(glob.glob(path + "/cell=*/*.parquet"))
     pre_sizes = {f: os.path.getsize(f) for f in pre_files}
@@ -201,18 +221,27 @@ def test_ivf_store_upsert_appends_with_frozen_quantizer(spark, sf_dir, tmp_path)
     assert pre_files <= post_files
     assert all(os.path.getsize(f) == pre_sizes[f] for f in pre_files)
 
-    # (a) assignment equals the numpy reference against the persisted
-    # centroids (normalized L2 argmin, first-min ties)
-    C = np.stack([np.asarray(c, dtype=np.float64) for c in cents])
+    # (a) assignment equals an exact reference against the persisted
+    # centroids: sequential-fold cosine, stable-rounded to 6 dp, first
+    # max (lowest cell) on ties
     store = spark.read.parquet(path)
     got_cells = {
         r.vec_id: r.cell
         for r in store.filter(F.col("vec_id") >= 900001).collect()
     }
     for vid, v in batch_rows:
-        V = np.asarray(v, dtype=np.float64)
-        V = V / np.sqrt(V @ V)
-        want = int(np.argmin(((V[None, :] - C) ** 2).sum(axis=1)))
+        vn = math.sqrt(vectors._py_seq_dot(v, v))
+        sims = [
+            math.floor(
+                vectors._py_seq_dot(v, c)
+                / (vn * math.sqrt(vectors._py_seq_dot(c, c)))
+                * 1e6
+                + 0.5
+            )
+            / 1e6
+            for c in cents
+        ]
+        want = sims.index(max(sims))
         assert got_cells[vid] == want, (vid, got_cells[vid], want)
 
     # (c) the planted near-dup lands in a probed cell and tops the probe

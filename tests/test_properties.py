@@ -203,12 +203,12 @@ def test_multiprobe_planted_neighbors_recall(spark, sf_dir):
 
 
 def test_pq_planted_neighbors_recall(spark, sf_dir):
-    """PQ-ADC at the production operating point — true near-duplicates
-    at cos ≈ 0.99 must survive quantization: the 4-bit × 8-subspace
-    codes lose fine rank among near-random neighbors (cos ≈ 0.4), but a
-    planted neighbor's approximate inner product towers over the bulk,
-    so it must reach the rerank pool and the exact rerank must rank it.
-    Recall ≥ 0.9 over 10 plants."""
+    """PQ-ADC (frozen codebooks) at the production operating point —
+    true near-duplicates at cos ≈ 0.99 must survive quantization: the
+    4-bit × 8-subspace codes lose fine rank among near-random
+    neighbors (cos ≈ 0.4), but a planted neighbor's approximate inner
+    product towers over the bulk, so it must reach the rerank pool and
+    the exact rerank must rank it. Recall ≥ 0.9 over 10 plants."""
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -225,18 +225,19 @@ def test_pq_planted_neighbors_recall(spark, sf_dir):
         rows.append((pid, [float(x) for x in v]))
     corpus = e.union(spark.createDataFrame(rows, "vec_id long, v array<double>"))
 
-    got = {r.vec_id for r in vectors._ann_pq(spark, corpus).collect()}
+    got = {r.vec_id for r in vectors._pq_frozen_rank(corpus, qv.tolist()).collect()}
     recall = len(got & set(planted_ids)) / len(planted_ids)
     assert recall >= 0.9, f"PQ planted-neighbor recall {recall}"
 
 
 def test_ivf_pq_compose_planted_recall(spark, sf_dir):
-    """IVF-ADC (the FAISS-default composition, `ann_ivf_pq_topk`) at
-    the production operating point: planted near-duplicates of the
-    query (cos ≈ 0.99) must survive BOTH pruning axes — land in the
-    query's probed cells (spherical k-means sends near-identical
-    vectors to the same cell) AND top the ADC ranking — so the exact
-    rerank returns them. Recall ≥ 0.9 over 10 plants."""
+    """IVF-ADC (the FAISS-default composition, `ann_ivf_pq_seeded_topk`'s
+    head and tail over a planted corpus) at the production operating
+    point: planted near-duplicates of the query (cos ≈ 0.99) must
+    survive BOTH pruning axes — land in the query's probed cells
+    (near-identical vectors share a nearest centroid) AND top the ADC
+    ranking — so the exact rerank returns them. Recall ≥ 0.9 over 10
+    plants."""
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -253,7 +254,18 @@ def test_ivf_pq_compose_planted_recall(spark, sf_dir):
         rows.append((pid, [float(x) for x in v]))
     corpus = e.union(spark.createDataFrame(rows, "vec_id long, v array<double>"))
 
-    got = {r.vec_id for r in vectors._ann_ivf_pq(spark, corpus).collect()}
+    n = corpus.count()
+    cents = vectors._hash_seeds(corpus, max(2, min(vectors.IVF_K, n // 60)))
+    probes = vectors._ivf_probes(qv.tolist(), cents)
+    universe = (
+        vectors._ivf_assign(corpus, cents)
+        .filter(F.col("cell").isin(probes))
+        .select("vec_id", "v")
+    )
+    got = {
+        r.vec_id
+        for r in vectors._pq_frozen_rank(corpus, qv.tolist(), universe=universe).collect()
+    }
     recall = len(got & set(planted_ids)) / len(planted_ids)
     assert recall >= 0.9, f"IVF-ADC planted-neighbor recall {recall}"
 
@@ -262,7 +274,7 @@ def test_pq_rerank_scores_exact_and_deterministic(spark, sf_dir):
     """The PQ key's returned scores are EXACT cosines (quantization may
     cost pool recall, never score fidelity): every returned (vec_id,
     cos_sim) must equal the brute-force score for that id, and two runs
-    must return identical rows (seeded fit, fixed iterations)."""
+    must return identical rows (codebooks frozen at import)."""
     e = load_table(spark, sf_dir, "embeddings").selectExpr(
         "vec_id", "cast(embedding as array<double>) v"
     )
@@ -283,8 +295,8 @@ def test_pq_rerank_scores_exact_and_deterministic(spark, sf_dir):
             .collect()
         )
     }
-    run1 = [(r.vec_id, r.cos_sim) for r in vectors.ann_pq_topk(spark, sf_dir).collect()]
-    run2 = [(r.vec_id, r.cos_sim) for r in vectors.ann_pq_topk(spark, sf_dir).collect()]
+    run1 = [(r.vec_id, r.cos_sim) for r in vectors.ann_pq_frozen_topk(spark, sf_dir).collect()]
+    run2 = [(r.vec_id, r.cos_sim) for r in vectors.ann_pq_frozen_topk(spark, sf_dir).collect()]
     assert run1 == run2
     assert len(run1) == vectors.TOP_K
     for vid, cs in run1:
@@ -294,15 +306,9 @@ def test_pq_rerank_scores_exact_and_deterministic(spark, sf_dir):
 def test_pq_codes_are_m_small_ints(spark, sf_dir):
     """The stored representation is really M codes in [0, PQ_KS) — the
     32× compression claim is the schema, not prose."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    sample = np.array(
-        [r[0] for r in e.limit(200).select("v").collect()], dtype=np.float64
-    )
-    books = vectors._pq_fit(vectors._pq_normalize(sample))
-    enc = vectors._pq_encode_udf(books)
+    enc = vectors._pq_frozen_encode_udf()
     codes = e.select(enc("v").alias("code")).collect()
     for row in codes:
         assert len(row.code) == vectors.PQ_M
@@ -526,11 +532,12 @@ def test_multimodal_features_deterministic(spark, sf_dir):
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    """IVF with nprobe=4/16 cells must beat single-table LSH recall:
-    the quantizer adapts to the data distribution, the hyperplanes
-    don't."""
+    """Seeded IVF (nprobe=4 of k ∝ N cells) must hold recall ≥ 0.5
+    against brute force. At sf0.001 it ties single-table LSH (0.6);
+    hash-chosen seeds do not adapt to the data the way a k-means fit
+    would, so it does not beat it."""
     brute = {r.vec_id for r in vectors.similarity_topk(spark, sf_dir).collect()}
-    ivf = {r.vec_id for r in vectors.ann_ivf_topk(spark, sf_dir).collect()}
+    ivf = {r.vec_id for r in vectors.ann_ivf_seeded_topk(spark, sf_dir).collect()}
     assert ivf, "IVF returned nothing — probe set is broken"
     recall = len(ivf & brute) / len(brute)
     assert recall >= 0.5, f"IVF recall {recall} vs brute force too low"
@@ -1002,22 +1009,22 @@ def test_semantic_candidate_margin_covers_rounding_half_step():
     assert (0, 1) not in cands(pair_with_dot(SEM_THRESHOLD - 1e-3))
 
 
-def test_semantic_dedup_ivf_decisions_exact(spark, sf_dir):
-    """The fitted-quantizer SemDeDup has no SQL oracle, so verify the
-    whole decision procedure instead: re-derive the removal set in
-    numpy from the key's OWN audit columns (cluster, c2c) plus
-    brute-force pair cosines under the published rule — same-cluster
-    neighbor at rounded cos >= threshold that outranks by (lower c2c,
-    then lower vec_id) => removed — and require exact set equality.
-    Also pin that the fit actually clustered (k > 1 clusters used)."""
+def test_semantic_dedup_seeded_decisions_exact(spark, sf_dir):
+    """Verify the seeded SemDeDup's decision procedure independently of
+    its SQL twin: re-derive the removal set in numpy from the key's OWN
+    audit columns (cluster, c2c) plus brute-force pair cosines under
+    the published rule — same-cluster neighbor at rounded cos >=
+    threshold that outranks by (lower c2c, then lower vec_id) =>
+    removed — and require exact set equality. Also pin that the seeds
+    actually clustered (k > 1 clusters used)."""
     import numpy as np
 
-    from labelmain_spark.functions.vectors import SEM_THRESHOLD, semantic_dedup_ivf
+    from labelmain_spark.functions.vectors import SEM_THRESHOLD, semantic_dedup_seeded
     from labelmain_spark.sources.readers import load_table
 
     audit = {
         r.vec_id: (r.cluster, r.c2c, r.removed)
-        for r in semantic_dedup_ivf(spark, sf_dir).collect()
+        for r in semantic_dedup_seeded(spark, sf_dir).collect()
     }
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
     ids = np.array([r.vec_id for r in emb])
