@@ -2,15 +2,18 @@
 survives 100 TB, not just one that returns correct rows.
 
 Used by tests to pin: parquet filter pushdown + column pruning,
-broadcast joins for dim tables, TakeOrderedAndProject for top-k, and
-the absence of Python evaluation nodes in hot paths.
+broadcast joins for dim tables, TakeOrderedAndProject for top-k, the
+absence of Python evaluation nodes in hot paths, and how many Spark
+jobs and tasks a call dispatches.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -77,3 +80,22 @@ def assert_no_python_eval(df: DataFrame) -> None:
 
 def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange\b", physical_plan(df)))
+
+
+def jobs_and_tasks(spark: SparkSession, fn: Callable[[], object]) -> tuple[int, int]:
+    """Run ``fn()`` under a job group of its own and return how many
+    Spark jobs it ran and how many tasks those jobs completed. The
+    listener bus is drained first, so the counts are complete."""
+    sc = spark.sparkContext
+    group = f"checks.jobs_and_tasks.{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs if (info := st.getJobInfo(j)) for s in info.stageIds}
+    tasks = sum(si.numCompletedTasks for s in stages if (si := st.getStageInfo(s)))
+    return len(jobs), tasks

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from labelmain_spark.labelstore import layout
@@ -37,6 +39,99 @@ def test_partitioned_lookup_prunes_and_matches(spark, sf_dir, tmp_path):
 
     want = store.filter(F.col("addr") == addr).collect()
     assert [r.addr for r in got.collect()] == [r.addr for r in want]
+
+
+# Every XXH64 tail branch: 0-3 single bytes, one 4-byte word, 8-byte
+# lanes, the 32-byte stripe loop and what follows it, plus multi-byte
+# UTF-8 (lengths are of the encoded bytes).
+_HASH_STRINGS = [
+    "", "a", "abc", "abcd", "abcdefg", "abcdefgh",
+    "x" * 31, "y" * 32, "z" * 33, "1BoatSLRHtKNngkdXEeobR76b53LETtpyT" * 3,
+    "é", "日本", "€uro", "bc1q" + "ü" * 20, "🙂" * 9, "ab🙂" * 30,
+]
+
+
+def test_driver_xxh64_matches_spark(spark):
+    """The driver-side hash and bucket the lookup uses agree with
+    Spark's xxhash64 and the partition expression the writer uses."""
+    lens = {len(s.encode("utf-8")) for s in _HASH_STRINGS}
+    assert {0, 1, 3, 4, 7, 8, 31, 32, 33} <= lens and max(lens) >= 100
+
+    df = spark.createDataFrame([(s,) for s in _HASH_STRINGS], "s string")
+    rows = df.select(
+        "s",
+        F.xxhash64("s").alias("h"),
+        layout._bucket_expr(F.col("s"), 64).alias("b64"),
+        layout._bucket_expr(F.col("s"), 4096).alias("b4096"),
+    ).collect()
+    assert len(rows) == len(_HASH_STRINGS)
+    for r in rows:
+        assert layout._xxh64(r.s) == r.h, r.s
+        assert layout._xxh64(r.s) % 64 == r.b64, r.s
+        assert layout._xxh64(r.s) % 4096 == r.b4096, r.s
+
+
+def test_partitioned_lookup_reads_one_directory(spark, sf_dir, tmp_path):
+    """With more bucket directories than Spark's 32-path threshold for
+    a parallel listing job, a lookup plus its collect runs at most the
+    one-file schema read and the scan: no hash job, no listing job."""
+    import glob
+
+    store = wallet_labels(spark, sf_dir)
+    path = str(tmp_path / "store_default")
+    layout.write_partitioned(store, path)
+    assert len(glob.glob(f"{path}/{layout.BUCKET_COL}=*")) > 32
+
+    addr = store.select("addr").orderBy("addr").first()[0]
+    got = []
+    jobs, tasks = checks.jobs_and_tasks(
+        spark, lambda: got.extend(layout.lookup_partitioned(spark, path, addr).collect())
+    )
+    assert jobs <= 2 and tasks <= 2, f"lookup ran {jobs} jobs / {tasks} tasks"
+    want = store.filter(F.col("addr") == addr).collect()
+    assert [r.asDict(recursive=True) for r in got] == [
+        r.asDict(recursive=True) for r in want
+    ]
+
+
+def test_partitioned_lookup_missing_bucket_falls_back(spark, tmp_path):
+    """An address whose bucket directory was never written takes the
+    fallback (pruned root read) and returns no rows with the columns
+    of a hit; an absent address in a written bucket returns no rows;
+    an unreadable bucket directory raises instead of falling back."""
+    import os
+
+    store = spark.createDataFrame([("addr-a", 1), ("addr-b", 2)], "addr string, n int")
+    path = str(tmp_path / "store_two")
+    layout.write_partitioned(store, path)
+    written = {layout._xxh64(a) % layout.DEFAULT_BUCKETS for a in ("addr-a", "addr-b")}
+
+    def probe(hit_bucket: bool) -> str:
+        for i in range(10_000):
+            a = f"probe-{i}"
+            if (layout._xxh64(a) % layout.DEFAULT_BUCKETS in written) == hit_bucket:
+                return a
+        raise AssertionError("no probe address found")
+
+    hit = layout.lookup_partitioned(spark, path, "addr-a")
+    assert [tuple(r) for r in hit.collect()] == [("addr-a", 1)]
+
+    absent_dir = probe(hit_bucket=False)
+    bucket = layout._xxh64(absent_dir) % layout.DEFAULT_BUCKETS
+    assert not os.path.exists(f"{path}/{layout.BUCKET_COL}={bucket}")
+    miss = layout.lookup_partitioned(spark, path, absent_dir)
+    assert miss.collect() == []
+    assert miss.schema == hit.schema
+
+    absent_row = layout.lookup_partitioned(spark, path, probe(hit_bucket=True))
+    assert absent_row.collect() == []
+    assert absent_row.schema == hit.schema
+
+    # Any other read error is not a missing bucket and is raised.
+    os.makedirs(f"{path}/{layout.BUCKET_COL}={bucket}")
+    with pytest.raises(AnalysisException) as err:
+        layout.lookup_partitioned(spark, path, absent_dir)
+    assert err.value.getCondition() != "PATH_NOT_FOUND"
 
 
 def test_partitioned_write_one_file_per_bucket(spark, sf_dir, tmp_path):

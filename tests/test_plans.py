@@ -158,12 +158,14 @@ def test_range_join_one_shuffle_one_broadcast(spark, sf_dir):
     `createDataFrame(ACCT_BANDS)` must not fan into extra jobs)."""
     from labelmain_spark.operators.joins import join_range
 
-    sc = spark.sparkContext
-    sc.setJobGroup("join_range_jobs", "plan pin")
-    df = join_range(spark, sf_dir)
-    df.count()
-    sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("join_range_jobs"))
+    df = None
+
+    def run():
+        nonlocal df
+        df = join_range(spark, sf_dir)
+        df.count()
+
+    n_jobs, _ = checks.jobs_and_tasks(spark, run)
     assert n_jobs <= 8, f"join_range ran {n_jobs} Spark jobs (measured 5)"
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_broadcast = plan.count("BroadcastExchange")
@@ -230,12 +232,14 @@ def test_dedup_minhash_shares_one_shingle_materialization(spark, sf_dir):
     from labelmain_spark.functions.dedup import dedup_minhash
 
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup("dedup_minhash_jobs", "plan pin")
-    df = dedup_minhash(spark, sf_dir)
-    df.count()
-    sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("dedup_minhash_jobs"))
+    df = None
+
+    def run():
+        nonlocal df
+        df = dedup_minhash(spark, sf_dir)
+        df.count()
+
+    n_jobs, _ = checks.jobs_and_tasks(spark, run)
     assert n_jobs <= 25, f"dedup_minhash ran {n_jobs} Spark jobs (measured 19)"
     plan = df._jdf.queryExecution().executedPlan().toString()
     # ≥5 branches over the cache: pruned-index signature side, hot-set
@@ -303,12 +307,14 @@ def test_corpus_pipeline_bounded_jobs_and_no_cartesian(spark, sf_dir):
     from labelmain_spark.pipeline import corpus_pipeline
 
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup("corpus_pipeline_jobs", "plan pin")
-    df = corpus_pipeline(spark, sf_dir)
-    df.count()
-    sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("corpus_pipeline_jobs"))
+    df = None
+
+    def run():
+        nonlocal df
+        df = corpus_pipeline(spark, sf_dir)
+        df.count()
+
+    n_jobs, _ = checks.jobs_and_tasks(spark, run)
     assert n_jobs <= 24, f"corpus_pipeline ran {n_jobs} Spark jobs (measured 19)"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan, plan
@@ -326,12 +332,14 @@ def test_corpus_incremental_bounded_jobs_digest_history_no_cartesian(spark, sf_d
     from labelmain_spark.pipeline import corpus_incremental
 
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup("corpus_incremental_jobs", "plan pin")
-    df = corpus_incremental(spark, sf_dir)
-    df.count()
-    sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("corpus_incremental_jobs"))
+    df = None
+
+    def run():
+        nonlocal df
+        df = corpus_incremental(spark, sf_dir)
+        df.count()
+
+    n_jobs, _ = checks.jobs_and_tasks(spark, run)
     assert n_jobs <= 40, f"corpus_incremental ran {n_jobs} Spark jobs"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan, plan[:1500]
