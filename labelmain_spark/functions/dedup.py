@@ -1247,10 +1247,11 @@ def dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries 16-byte block digests + the candidate texts; per-block
     cost is quadratic, so the skew lever at 100 TB is W itself
     (boilerplate openings -> raise W; recall is unchanged for dups
-    longer than W). The join-free alternative for pathological
-    blocks — sort within block and test only each row's
-    lexicographic successor, valid over space-delimited all-above-
-    space alphabets — is one window over the same exchange.
+    longer than W). That quadratic term is an open exposure on a
+    corpus with one hot block: PERF.md §"Hostile-block A/B for the
+    two prefix-dup paths" measured this join at 22.0 s on a
+    32k-doc block, 25.9× slower than a successor-window scan — a
+    scan that flags prefixes but cannot name the ``dup_of`` witness.
 
     Output: one row per augmented-corpus doc (doc_id, n_tokens,
     is_prefix_dup, dup_of) with dup_of = the smallest strictly-longer
@@ -1260,8 +1261,8 @@ def dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _prefix_keyed(df: DataFrame) -> DataFrame:
     """(doc_id, text, n_tokens, block) with the first-PREFIX_W-token
-    blocking digest — shared by the join path, the successor-window
-    path and the incremental stream probe. Rows under PREFIX_W tokens
+    blocking digest — shared by the join path and the incremental
+    stream probe. Rows under PREFIX_W tokens
     are already filtered (ineligible by the blocking contract)."""
     toks = F.split(F.col("text"), " ")
     return df.select(
@@ -1404,62 +1405,6 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
         .filter(F.col("containment") >= CONTAIN_T)
-    )
-
-
-def prefix_dup_flags_window(aug: DataFrame) -> DataFrame:
-    """The JOIN-FREE scale path for prefix-dup detection — the
-    lexicographic-successor scan the ``dedup_prefix`` docstring
-    promises for pathological blocks: within a block, sort the
-    DISTINCT texts; a text has a token-boundary superstring in the
-    block IFF its immediate distinct successor starts with it + ' '.
-
-    Soundness (above-space alphabets — every corpus char > ' ' except
-    the separator itself, true of whitespace-tokenized text): any
-    string strictly between A and one of A's extensions shares A as a
-    char-prefix and continues with a char <= ' ', and the only such
-    char is the separator — so it is itself a token-boundary
-    extension of A, and in particular the immediate successor is.
-    Pinned equivalent to the blocked join on both the corpus and a
-    hostile engineered block (test_prefix_window_equals_join).
-
-    Cost: one distinct + one window + one flag join-back, all keyed
-    by the 16-byte block digest — O(N log N) in block size where the
-    candidate join is quadratic; the trade is that the flag's WITNESS
-    (which superstring) is the successor, not the min-doc_id one, so
-    this path emits flags only."""
-    toks = F.split(F.col("text"), " ")
-    keyed = aug.select(
-        "doc_id",
-        "text",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.md5(F.array_join(F.slice(toks, 1, PREFIX_W), " ")).alias("block"),
-    )
-    from pyspark.sql.window import Window
-
-    eligible = keyed.filter(F.col("n_tokens") >= PREFIX_W)
-    dtexts = eligible.select("block", "text").distinct()
-    w = Window.partitionBy("block").orderBy("text")
-    flags = (
-        dtexts.withColumn("_nxt", F.lead("text", 1).over(w))
-        .withColumn(
-            "flagged",
-            F.coalesce(
-                F.expr("substr(_nxt, 1, length(text) + 1) = concat(text, ' ')"),
-                F.lit(False),
-            ),
-        )
-        .drop("_nxt")
-    )
-    return (
-        keyed.join(flags.select("block", "text", "flagged"), ["block", "text"], "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.when(F.coalesce("flagged", F.lit(False)), F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("is_prefix_dup"),
-        )
     )
 
 

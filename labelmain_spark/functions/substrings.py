@@ -102,61 +102,6 @@ def _md5_span_map(docs: DataFrame, L: int) -> DataFrame:
     return docs.select("doc_id", F.posexplode(grams).alias("pos", "gram_md5"))
 
 
-def _span_group_stats(spans: DataFrame) -> DataFrame:
-    """(gram_md5, n_occ, first{doc_id,pos}) for every digest occurring
-    ≥ 2 times — the skew-resistant alternative to the per-digest
-    window: count and min(struct(doc_id, pos)) are MAP-SIDE COMBINABLE
-    partial aggregates, so the exchange carries one partial row per
-    (task, digest) instead of every occurrence of the hot digest, and
-    the join-back that re-attaches the stats is a JOIN, which AQE's
-    skew splitting DOES cover (windows it does not: a window key
-    cannot be split). min(struct(...)) is lexicographic on
-    (doc_id, pos) — exactly the window plan's
-    row_number() ORDER BY doc_id, pos == 1 row."""
-    return (
-        spans.groupBy("gram_md5")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_occ"),
-            F.min(F.struct("doc_id", "pos")).alias("first"),
-        )
-        .filter(F.col("n_occ") >= 2)
-    )
-
-
-def _duplicate_spans_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """duplicate_spans via partial-agg + size-gated join-back — the
-    hot-digest-skew alternative measured against the window plan in
-    scripts/span_skew_ab.py; same rows by construction."""
-    from labelmain_spark.sources.readers import broadcast_if_bounded
-
-    spans = _md5_spans(spark, sf_dir, DUP_SPAN_L)
-    stats = _span_group_stats(spans).select(
-        "gram_md5", F.col("n_occ").alias("n_dups")
-    )
-    return spans.join(broadcast_if_bounded(stats), "gram_md5").select(
-        "doc_id", "pos", "gram_md5", "n_dups"
-    )
-
-
-def _cuts_agg(spans: DataFrame, L: int) -> DataFrame:
-    """Cut intervals via partial-agg + join-back (see
-    :func:`_span_group_stats`): an occurrence is cut iff its digest
-    duplicates AND it is not the group's lexicographically-first
-    (doc_id, pos) — the window plan's ``rn > 1``, without shuffling
-    every occurrence of a hot digest into one task's sort."""
-    from labelmain_spark.sources.readers import broadcast_if_bounded
-
-    stats = _span_group_stats(spans)
-    return (
-        spans.join(broadcast_if_bounded(stats), "gram_md5")
-        .filter(
-            (F.col("first.doc_id") != F.col("doc_id"))
-            | (F.col("first.pos") != F.col("pos"))
-        )
-        .select("doc_id", F.col("pos").alias("s"), (F.col("pos") + L).alias("e"))
-    )
-
-
 def _covered_positions(cuts: DataFrame, as_array: bool = False) -> DataFrame:
     """Merge per-doc cut intervals (doc_id, s, e) with the classic
     gaps-and-islands pattern (running max of ends over a per-doc
@@ -209,12 +154,12 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hot-digest skew, MEASURED (r10, closing the r9 advisory): the
     window shuffles every occurrence of a digest into one task and
-    AQE skew-split covers joins, not windows — so the skew-safe
-    alternative (:func:`_duplicate_spans_agg`: map-side-combinable
-    count partials + size-gated join-back) was A/B-run on fixtures
-    where ONE gram_md5 holds 40% and then 85% of all span positions
-    (identical-token boilerplate docs, the shape Zipf generators
-    never produce; scripts/span_skew_ab.py). The window WINS BOTH:
+    AQE skew-split covers joins, not windows — so a skew-safe
+    alternative (map-side-combinable count partials + size-gated
+    join-back) was A/B-run on fixtures where ONE gram_md5 holds 40%
+    and then 85% of all span positions (identical-token boilerplate
+    docs, the shape Zipf generators never produce). The window WINS
+    BOTH (PERF.md §"Hot-digest span skew settled by measurement"):
     ×20 at 40% hot 11.1 s vs 19.1 s (5-pass medians); at 85% hot
     (15.1M occurrences of one digest) 76.3 s vs 113.2 s. Reason: the
     join-back plan evaluates the O(L)-per-position span map TWICE
@@ -225,8 +170,8 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sort for a count-only window. The exposure that remains is a
     single task holding the hottest digest's (doc_id, pos, md5) rows
     — linear scan work, no quadratic term, ~6 GB per 1e8 occurrences
-    — bounded and accepted. Correctness parity between the plans is
-    pinned in tests/test_skew.py on the 40%-hot fixture."""
+    — bounded and accepted. tests/test_skew.py checks the hot group
+    against a first-principles reference on a ~40%-hot fixture."""
     from pyspark.sql import Window as W
 
     spans = _md5_spans(spark, sf_dir, DUP_SPAN_L)
@@ -262,15 +207,14 @@ def remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hot-digest skew, MEASURED (r10; full reasoning at
     :func:`duplicate_spans`): this key's window DOES sort the hot
     group one-task (row_number), yet still beats the skew-safe
-    agg+join-back twin (:func:`_remove_duplicate_spans_agg`) on the
-    hot-digest fixtures — ×20 at 40% hot 21.2 s vs 26.9 s (5-pass
-    medians), at 85% hot (15.1M one-digest occurrences, a 0.9 GB
-    one-task sort) 154.4 s vs 165.0 s — because the alternative's
-    second span-map evaluation costs more than the hot sort at every
-    measured share. Residual bound: one task sort-spills the hottest
-    digest (~6 GB / 1e8 occurrences, disk-backed ExternalSorter,
-    linear-log work); the twin stays in-tree as the measured-rejected
-    alternative, parity-pinned in tests/test_skew.py."""
+    agg+join-back alternative on the hot-digest fixtures (PERF.md
+    §"Hot-digest span skew settled by measurement") — ×20 at 40% hot
+    21.2 s vs 26.9 s (5-pass medians), at 85% hot (15.1M one-digest
+    occurrences, a 0.9 GB one-task sort) 154.4 s vs 165.0 s — because
+    the alternative's second span-map evaluation costs more than the
+    hot sort at every measured share. Residual bound: one task
+    sort-spills the hottest digest (~6 GB / 1e8 occurrences,
+    disk-backed ExternalSorter, linear-log work)."""
     from pyspark.sql import Window as W
 
     L = DUP_SPAN_L
@@ -288,18 +232,10 @@ def remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _reassemble_after_cuts(spark, sf_dir, cuts)
 
 
-def _remove_duplicate_spans_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """remove_duplicate_spans with :func:`_cuts_agg` cut selection —
-    the skew A/B twin (scripts/span_skew_ab.py); same rows by
-    construction."""
-    spans = _md5_spans(spark, sf_dir, DUP_SPAN_L)
-    return _reassemble_after_cuts(spark, sf_dir, _cuts_agg(spans, DUP_SPAN_L))
-
-
 def _reassemble_after_cuts(
     spark: SparkSession, sf_dir: str, cuts: DataFrame
 ) -> DataFrame:
-    """Shared tail of the removal key: merge cut intervals, then
+    """Tail of the removal key: merge cut intervals, then
     per-doc ARRAY SURGERY on the token arrays (r13 re-plan, guide
     §2.3/§2.4 — before/after in plans/r13/remove_duplicate_spans_*).
     The r12 tail posexploded every token, LEFT ANTI joined the covered

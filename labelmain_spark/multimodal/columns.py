@@ -158,32 +158,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def resize_payload(df: DataFrame, factor: int = 4) -> DataFrame:
-    """Resize over an opaque payload: binary in → smaller binary out
-    (1:1 row map, the image-thumbnail shape). A real implementation
-    decodes, scales, re-encodes; codecs are absent from this container,
-    so the deterministic stand-in stride-samples every ``factor``-th
-    byte — same schema contract (binary → binary + refreshed metadata),
-    same Arrow batch path, same no-shuffle narrow plan."""
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            small = pdf["payload"].map(lambda b: bytes(b)[::factor])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": small,
-                    "n_bytes": small.map(len).astype("int32"),
-                    "checksum": small.map(lambda b: hashlib.md5(b).hexdigest()),
-                }
-            )
-
-    return df.mapInPandas(
-        run, schema="doc_id long, payload binary, n_bytes int, checksum string"
-    )
-
-
 N_FRAMES = 4
 FRAME_LEN = 16
 

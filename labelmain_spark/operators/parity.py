@@ -11,20 +11,14 @@ This also matters at 100 TB: a 1000-executor sum is combined in whatever
 order tasks finish, so exactness-by-decimal is the only way to get a
 reproducible aggregate at scale.
 
-Exactness is a MODE, not a tax (r4 verdict item 4): decimal partials
-leave Spark's compact-long fast path and cost ~4× on the agg expression
-(PERF.md, measured in isolation). ``set_agg_mode("fast")`` — or env
-``SPARK_GRAFT_AGG_MODE=fast`` — switches ``dsum``/``davg`` to plain IEEE
-double sums for pipelines that prefer throughput over bit-reproducible
-hashes (values differ from exact mode only in final ulps). The default
-stays ``exact``: the driver's cross-engine value-hash gate and any
-run-to-run-reproducible production aggregate require it. The SQL twins
-are always exact — the oracle defines the reference answer.
+Exactness is the only mode. Decimal partials leave Spark's compact-long
+fast path and cost ~4× on the agg expression (PERF.md, measured in
+isolation); the driver's cross-engine value-hash gate and any
+run-to-run-reproducible production aggregate need that price paid. The
+SQL twins are exact too — the oracle defines the reference answer.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,53 +26,26 @@ from pyspark.sql import functions as F
 # Enough integer digits for ~1e12 row sums of price-scale values.
 DEC = "decimal(28,6)"
 
-_AGG_MODES = ("exact", "fast")
-_agg_mode = os.environ.get("SPARK_GRAFT_AGG_MODE", "exact")
-if _agg_mode not in _AGG_MODES:
-    raise ValueError(f"SPARK_GRAFT_AGG_MODE must be one of {_AGG_MODES}")
-
-
-def agg_mode() -> str:
-    return _agg_mode
-
-
-def set_agg_mode(mode: str) -> None:
-    """'exact' (default): decimal partials, order-independent,
-    bit-stable across engines/cluster sizes. 'fast': IEEE double
-    partials — ~4× cheaper on the agg expression, final-ulp
-    nondeterminism under shuffle-order changes."""
-    global _agg_mode
-    if mode not in _AGG_MODES:
-        raise ValueError(f"agg mode must be one of {_AGG_MODES}")
-    _agg_mode = mode
-
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:
     """Order-independent exact sum of a double column, returned as
-    double (or a plain double sum in 'fast' mode — see module docs).
+    double.
 
     SQL twin: ``CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE)``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if _agg_mode == "fast":
-        out = F.sum(c.cast("double"))
-    else:
-        out = F.sum(c.cast(DEC)).cast("double")
+    out = F.sum(c.cast(DEC)).cast("double")
     return out.alias(alias) if alias else out
 
 
 def davg(col: Column | str, alias: str | None = None) -> Column:
     """Exact-sum average: exact decimal sum cast to double, divided by
     count — a single deterministic IEEE division, identical in DuckDB.
-    ('fast' mode: plain double mean.)
 
     SQL twin: ``CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE) / COUNT(x)``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if _agg_mode == "fast":
-        out = F.sum(c.cast("double")) / F.count(c)
-    else:
-        out = F.sum(c.cast(DEC)).cast("double") / F.count(c)
+    out = F.sum(c.cast(DEC)).cast("double") / F.count(c)
     return out.alias(alias) if alias else out
 
 

@@ -21,7 +21,6 @@ Design for 100 TB:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from labelmain_spark.functions.packing import shard_pack
 from labelmain_spark.sources.readers import load_table
@@ -84,12 +83,6 @@ def export_packed_corpus(
     sharded corpus."""
     docs = load_table(spark, sf_dir, "documents")
     write_shards(docs, shard_pack(spark, sf_dir), path, fmt=fmt)
-
-
-def read_shard(spark: SparkSession, path: str, shard_id: int) -> DataFrame:
-    """Read ONE shard with partition pruning (the filter prunes
-    directories — asserted in tests, not just row-filtered)."""
-    return spark.read.parquet(path).filter(F.col("shard_id") == shard_id)
 
 
 import os as _os

@@ -134,11 +134,10 @@ def test_sessionize_hot_user_matches_reference(spark, skew_dirs):
 # splitting covers joins, not windows — so a boilerplate span occurring
 # 1e6-1e8 times on a real crawl is a one-task sort. These tests pin the
 # hot-digest case (one gram_md5 at ~40% of ALL span positions: docs
-# that are a single repeated token, the padding/boilerplate shape) and
-# assert the window plan and the skew-splittable partial-agg+join-back
-# plan (_duplicate_spans_agg / _remove_duplicate_spans_agg) are the
-# same operator. The timed A/B at x20 lives in scripts/span_skew_ab.py
-# with the verdict recorded at the code site (substrings.py).
+# that are a single repeated token, the padding/boilerplate shape)
+# against a first-principles reference. The timed A/B that kept the
+# window plan over a partial-agg+join-back alternative is recorded in
+# PERF.md §"Hot-digest span skew settled by measurement".
 
 HOT_TOK = "boiler"
 N_HOT_DOCS = 120          # identical-token docs -> every span = ONE digest
@@ -178,33 +177,6 @@ def span_skew_dir(tmp_path_factory):
     return rows, str(path)
 
 
-def test_span_plans_agree_under_hot_digest(spark, span_skew_dir):
-    """Window plan == partial-agg+join-back plan, row for row, on the
-    fixture whose hottest digest is ~40% of all span positions."""
-    from labelmain_spark.functions import substrings as ss
-
-    rows, d = span_skew_dir
-    L = ss.DUP_SPAN_L
-
-    # the fixture really is pathological: one digest ~40% of ALL spans
-    n_hot_spans = N_HOT_DOCS * (HOT_DOC_TOKENS - L + 1)
-    n_all_spans = sum(
-        max(0, len(t.split(" ")) - L + 1) for _, t in rows
-    )
-    assert 0.30 < n_hot_spans / n_all_spans < 0.50
-
-    dup_w = _collected(ss.duplicate_spans(spark, d))
-    dup_a = _collected(ss._duplicate_spans_agg(spark, d))
-    assert dup_w == dup_a
-    # non-hot duplicate groups exist too (the copied normal docs), so
-    # the agg plan's join-back is exercised on >1 group
-    assert len({r[2] for r in dup_w}) > 1
-
-    rm_w = _collected(ss.remove_duplicate_spans(spark, d))
-    rm_a = _collected(ss._remove_duplicate_spans_agg(spark, d))
-    assert rm_w == rm_a
-
-
 def test_span_hot_digest_matches_reference(spark, span_skew_dir):
     """Keep-the-globally-first semantics on the hot group against a
     from-first-principles reference: the lexicographically-first hot
@@ -216,11 +188,15 @@ def test_span_hot_digest_matches_reference(spark, span_skew_dir):
     rows, d = span_skew_dir
     L = ss.DUP_SPAN_L
     n_spans = HOT_DOC_TOKENS - L + 1
-    hot = (
-        ss.duplicate_spans(spark, d)
-        .filter(f"doc_id >= {N_NORMAL_DOCS}")
-        .collect()
-    )
+
+    # the fixture really is pathological: one digest ~40% of ALL spans
+    n_all_spans = sum(max(0, len(t.split(" ")) - L + 1) for _, t in rows)
+    assert 0.30 < N_HOT_DOCS * n_spans / n_all_spans < 0.50
+
+    dup = ss.duplicate_spans(spark, d).collect()
+    # non-hot duplicate groups exist too (the copied normal docs)
+    assert len({r.gram_md5 for r in dup}) > 1
+    hot = [r for r in dup if r.doc_id >= N_NORMAL_DOCS]
     assert len(hot) == N_HOT_DOCS * n_spans
     assert len({r.gram_md5 for r in hot}) == 1
     assert all(r.n_dups == N_HOT_DOCS * n_spans for r in hot)

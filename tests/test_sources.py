@@ -1,64 +1,11 @@
-"""Bronze format readers + quarantine + silver writer round-trips."""
+"""The paged cursor source: batch and streaming reads, retries,
+backpressure and checkpoint restarts."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from labelmain_spark.sources import formats
-from labelmain_spark.sources.readers import load_table
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("amount", T.DoubleType()),
-    ]
-)
-
-
-def test_json_landing_quarantine(spark, tmp_path):
-    p = tmp_path / "landing.json"
-    lines = [
-        json.dumps({"id": 1, "name": "a", "amount": 1.5}),
-        json.dumps({"id": 2, "name": "b", "amount": 2.5}),
-        '{"id": 3, "name": "broken',  # corrupt payload
-        "not json at all",
-    ]
-    p.write_text("\n".join(lines))
-    clean, quarantine = formats.read_json_landing(spark, str(p), SCHEMA)
-    assert clean.count() == 2
-    assert {r.id for r in clean.collect()} == {1, 2}
-    q = [r[formats.CORRUPT_COL] for r in quarantine.collect()]
-    assert len(q) == 2 and any("broken" in s for s in q)
-
-
-def test_csv_landing_quarantine(spark, tmp_path):
-    p = tmp_path / "landing.csv"
-    p.write_text("id,name,amount\n1,a,1.5\n2,b,not_a_number\n3,c,3.5\n")
-    clean, quarantine = formats.read_csv_landing(spark, str(p), SCHEMA)
-    assert {r.id for r in clean.collect()} == {1, 3}
-    assert quarantine.count() == 1
-
-
-def test_silver_write_partition_pruning(spark, sf_dir, tmp_path):
-    """Partitioned silver write → incremental read prunes partitions."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    out = str(tmp_path / "silver")
-    formats.write_silver(ev, out, "day")
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    one_day = back.filter(F.col("day") == "2024-01-05")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    # partition filter must reach the scan (pruned read, not post-filter)
-    assert one_day.count() > 0
-    assert "PartitionFilters" in plan or "day#" not in plan.split("Scan")[0]
 
 
 def test_paged_source_batch_roundtrip(spark, tmp_path):
@@ -315,23 +262,6 @@ def test_paged_stream_fault_across_checkpoint_restart(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 400
     with open(flaky) as f:
         assert f.read().strip() == "0", "post-restart retry path never ran"
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC silver layer: round-trip preserves rows and the scan pushes
-    filters just like parquet."""
-    from labelmain_spark.sources import formats
-    from labelmain_spark.sources.readers import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    formats.write_orc(orders, str(tmp_path / "orders_orc"))
-    back = formats.read_orc(spark, str(tmp_path / "orders_orc"))
-    assert back.count() == orders.count()
-    filtered = back.filter(back.o_orderkey == 1)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "o_orderkey" in plan, plan
 
 
 def test_walk_cursor_chain_excludes_inflight_page(tmp_path):

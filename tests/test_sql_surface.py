@@ -76,40 +76,6 @@ def test_coverage_doc_matches_registry():
     assert set(o) <= set(q)
 
 
-def test_agg_fast_mode(spark, sf_dir):
-    """'fast' agg mode (IEEE double partials) must agree with the
-    default exact mode to float tolerance, and the switch must be
-    reversible — exact stays the default the oracle gate relies on."""
-    from labelmain_spark.operators import aggregates, parity
-
-    # count_sum still rides dsum/davg (rollup_agg moved to the
-    # mode-independent micro-unit form late-r11, which would make this
-    # test pass vacuously — the key must be one the switch reaches).
-    def rowmap():
-        return {
-            (r.event_type, r.n): (r.total_value, r.avg_value)
-            for r in aggregates.count_sum(spark, sf_dir).collect()
-        }
-
-    assert parity.agg_mode() == "exact"
-    exact = rowmap()
-    try:
-        parity.set_agg_mode("fast")
-        fast = rowmap()
-    finally:
-        parity.set_agg_mode("exact")
-    assert fast.keys() == exact.keys()
-    for k, vals in exact.items():
-        for v, fv in zip(vals, fast[k]):
-            assert abs(fv - v) <= 1e-6 * max(1.0, abs(v)), (k, fv, v)
-    assert parity.agg_mode() == "exact"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        parity.set_agg_mode("approximate")
-
-
 def test_micro_units_raises_on_non_finite(spark):
     """r11 advice: micro_units must fail LOUDLY on NaN/Inf like the
     DuckDB twin's BIGINT cast does, instead of Spark's silent
