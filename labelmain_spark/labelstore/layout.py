@@ -7,15 +7,26 @@ Two layouts, two query patterns:
 
 1. **Hash-bucket partitioned parquet** (``write_partitioned`` /
    ``lookup_partitioned``): the store is written under
-   ``bucket=N/`` directories where ``N = pmod(xxhash64(addr), buckets)``.
-   A point lookup hashes the address on the driver (a Python XXH64
-   that matches Spark's ``xxhash64``, so no Spark job), then reads only
-   the ``bucket=N/`` directory: the file index lists one directory
-   instead of all ``buckets`` of them, so no listing job runs however
-   many buckets the store has. The partition filter and the addr
-   equality pushed to parquet row groups stay in the plan. A bucket
-   that was never written has no directory; the lookup then falls back
-   to the pruned read of the store root, which returns zero rows.
+   ``bucket=N/`` directories where ``N = pmod(xxhash64(addr), buckets)``
+   and ``buckets`` is the writing session's
+   ``spark.sql.shuffle.partitions``, so the bucket count follows the
+   cluster (2 at ``local[2]``, thousands on a cluster) and a refresh
+   writes one file per slot, not a fixed number of small files. Rows
+   are sorted by ``(bucket, addr)`` within each file, so parquet
+   row-group statistics let the pushed ``addr`` filter skip data inside
+   a large bucket. After the data commit a ``_layout.json`` manifest
+   next to the data records the bucket count and the store schema
+   (Spark's file index ignores ``_``-prefixed names, so a plain
+   ``spark.read.parquet(version)`` is unchanged).
+
+   A point lookup reads the manifest, hashes the address on the driver
+   (a Python XXH64 that matches Spark's ``xxhash64``, so no Spark job)
+   with the manifest's bucket count, and reads only ``bucket=N/`` with
+   the manifest schema: no listing job, no schema-inference job, one
+   scan task. The partition filter and the addr equality pushed to
+   parquet row groups stay in the plan. A bucket that was never written
+   has no directory; the lookup then returns an empty frame with the
+   manifest schema without running anything.
 
 2. **Bucketed managed table** (``write_bucketed``): ``bucketBy(addr)``
    pre-shuffles the store ONCE at write time. Every later
@@ -32,12 +43,16 @@ automatically (partition pruning; bucket-aware SortMergeJoin).
 
 from __future__ import annotations
 
+import json
+
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 BUCKET_COL = "bucket"
-DEFAULT_BUCKETS = 64  # local demo size; thousands at 100 TB
+MANIFEST = "_layout.json"
 
 
 def _bucket_expr(addr, buckets: int):
@@ -95,41 +110,89 @@ def _xxh64(s: str) -> int:
     return h - (1 << 64) if h >> 63 else h
 
 
-def write_partitioned(store: DataFrame, path: str, buckets: int = DEFAULT_BUCKETS) -> None:
-    """Land the store as bucket=N/ partitioned parquet.
+def _manifest_file(spark: SparkSession, path: str):
+    """The version's manifest as a Hadoop (FileSystem, Path) pair, so it
+    lives on whatever store Spark writes the data to."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{MANIFEST}")
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
+    fs, p = _manifest_file(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_manifest(spark: SparkSession, path: str) -> dict:
+    fs, p = _manifest_file(spark, path)
+    try:
+        inp = fs.open(p)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        raise FileNotFoundError(f"store version {path} has no {MANIFEST}") from None
+    try:
+        return json.loads(bytes(inp.readAllBytes()).decode("utf-8"))
+    finally:
+        inp.close()
+
+
+def write_partitioned(store: DataFrame, path: str) -> None:
+    """Land the store as bucket=N/ partitioned parquet, one bucket per
+    shuffle partition of the writing session, then its manifest.
 
     ``repartition(bucket)`` before ``partitionBy`` keeps it to one file
     per partition directory (without it every task writes a sliver of
-    every bucket — the classic small-files trap at scale)."""
+    every bucket — the classic small-files trap at scale); sorting by
+    ``(bucket, addr)`` also satisfies the writer's partition ordering,
+    so no second sort runs."""
+    spark = store.sparkSession
+    buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     (
         store.withColumn(BUCKET_COL, _bucket_expr(F.col("addr"), buckets))
         .repartition(F.col(BUCKET_COL))
+        .sortWithinPartitions(BUCKET_COL, "addr")
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
         .parquet(path)
     )
+    # The schema as a parquet read returns it (every field nullable), so
+    # a hit and a never-written bucket agree on it.
+    schema = json.loads(store._jdf.schema().asNullable().json())
+    _write_manifest(spark, path, {"buckets": buckets, "schema": schema})
 
 
-def lookup_partitioned(
-    spark: SparkSession, path: str, addr: str, buckets: int = DEFAULT_BUCKETS
-) -> DataFrame:
+def lookup_partitioned(spark: SparkSession, path: str, addr: str) -> DataFrame:
     """Point lookup that lists and reads one partition directory.
 
-    The bucket is hashed on the driver (``_xxh64``, no Spark job) and
-    only ``bucket=N/`` is read; ``basePath`` keeps ``bucket`` a
+    The bucket is hashed on the driver (``_xxh64``, no Spark job) with
+    the bucket count the manifest recorded at write time, and only
+    ``bucket=N/`` is read, with the manifest schema, so no schema
+    footer is read before the scan. ``basePath`` keeps ``bucket`` a
     partition column, so the bucket predicate is still a
     PartitionFilter and the addr equality is pushed to parquet as a
     data filter. An address whose bucket was never written has no
-    directory: that one error falls back to the pruned read of the
-    store root, which yields zero rows with the store's columns."""
-    bucket = _xxh64(addr) % buckets
-    pred = (F.col(BUCKET_COL) == F.lit(bucket)) & (F.col("addr") == F.lit(addr))
+    directory: that one error returns an empty local frame with the
+    store's columns. A version without a manifest raises
+    ``FileNotFoundError`` naming it."""
+    manifest = _read_manifest(spark, path)
+    schema = T.StructType.fromJson(manifest["schema"])
+    bucket = _xxh64(addr) % manifest["buckets"]
     try:
-        df = spark.read.option("basePath", path).parquet(f"{path}/{BUCKET_COL}={bucket}")
+        df = (
+            spark.read.schema(schema)
+            .option("basePath", path)
+            .parquet(f"{path}/{BUCKET_COL}={bucket}")
+        )
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        df = spark.read.parquet(path)
+        # limit(0) plans an empty local relation: nothing runs.
+        return spark.createDataFrame([], schema).limit(0)
+    pred = (F.col(BUCKET_COL) == F.lit(bucket)) & (F.col("addr") == F.lit(addr))
     return df.filter(pred).drop(BUCKET_COL)
 
 

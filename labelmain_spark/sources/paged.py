@@ -9,14 +9,23 @@ real ``spark.read.format(...)`` source instead of driver-side glue:
 
 - **Batch** (`PagedJsonDataSource`): the driver walks the cursor chain
   exactly like the reference (cheap metadata hops — one small header
-  read per page), then hands ONE InputPartition PER PAGE to executors,
-  which fetch page bodies in parallel. Serial discovery, parallel I/O —
-  the shape a paginated HTTP API actually permits at scale.
+  read per page), then splits it into at most ``defaultParallelism``
+  contiguous page ranges, one InputPartition per slot; each task
+  fetches its pages in order and yields one Arrow batch per page.
+  Serial discovery, parallel I/O — the shape a paginated HTTP API
+  actually permits at scale — without a Python task per page: each
+  task pays a fixed start-up cost, so a task per page made a 10-page
+  read cost 10 of them on 2 slots. The slot count is read from the
+  session by :func:`register`, because the planner runs in a Python
+  worker that has none.
 - **Streaming** (`reader` + ``readStream``): offsets are page indices;
   each micro-batch reads exactly the pages that appeared since the last
-  committed offset, and the offset lives in the streaming CHECKPOINT —
-  restart resumes from the durable cursor, fixing the reference's
-  lost-``endCursor`` restart bug (chainabuse/main.py:107-109).
+  committed offset, grouped the same way, and the offset lives in the
+  streaming CHECKPOINT — restart resumes from the durable cursor,
+  fixing the reference's lost-``endCursor`` restart bug
+  (chainabuse/main.py:107-109). The reader keeps the chain it has
+  walked and resumes each walk from its tail, so a trigger costs one
+  hop per new page; after a restart the first walk starts at page-0.
 
 Pages are JSON-lines files ``page-<n>.json`` with a sidecar chain file
 ``page-<n>.next`` naming the next page (empty = last) — a faithful
@@ -124,9 +133,24 @@ def write_page_fixture(path: str, rows: list[tuple], page_size: int = 500) -> in
     return len(pages)
 
 
-def _walk_cursor_chain(path: str) -> list[str]:
+def _next_cursor(page_file: str) -> str | None:
+    """The page's next-cursor (``""`` = last page), or None while its
+    ``.next`` pointer is not yet published."""
+    try:
+        with open(page_file[: -len(".json")] + ".next") as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        return None
+
+
+def _walk_cursor_chain(path: str, known: Sequence[str] = ()) -> list[str]:
     """The reference's cursor loop: start at page-0, follow each page's
     next-cursor until exhausted. Driver-side metadata hops only.
+
+    ``known`` is a chain prefix an earlier walk returned: the walk
+    resumes from its tail page's next-cursor, re-read because the tail's
+    ``.next`` is rewritten when the next page lands, so a stream pays
+    one hop per new page instead of one per page ever published.
 
     A page whose ``.next`` pointer is not yet visible is IN-FLIGHT
     (writers publish page-N.json before page-N.next, non-atomically)
@@ -135,19 +159,28 @@ def _walk_cursor_chain(path: str) -> list[str]:
     crashing the whole streaming query with FileNotFoundError when a
     poll landed between the two writes. The next poll sees the
     completed pointer — offsets stay monotone."""
-    pages, cur = [], "page-0.json"
+    pages = list(known)
+    cur = _next_cursor(pages[-1]) if pages else "page-0.json"
     while cur:
         full = os.path.join(path, cur)
         if not os.path.isfile(full):
             break
-        nxt_file = full[: -len(".json")] + ".next"
-        try:
-            with open(nxt_file) as f:
-                cur = f.read().strip()
-        except FileNotFoundError:
+        cur = _next_cursor(full)
+        if cur is None:
             break  # pointer not yet published — page is in-flight
         pages.append(full)
     return pages
+
+
+def _page_ranges(pages: list[str], slots: int) -> list[list[str]]:
+    """Split the chain into at most ``slots`` contiguous page ranges of
+    near-equal length: one read task per slot instead of per page."""
+    k = min(len(pages), max(slots, 1))
+    if not k:
+        return []
+    q, r = divmod(len(pages), k)
+    cuts = [i * q + min(i, r) for i in range(k + 1)]
+    return [pages[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
 def _read_page(page_file: str) -> Iterator[tuple]:
@@ -202,9 +235,9 @@ try:  # Python Data Source API (Spark 4+)
         InputPartition,
     )
 
-    class _PagePartition(InputPartition):
-        def __init__(self, page_file: str) -> None:
-            self.page_file = page_file
+    class _PageRange(InputPartition):
+        def __init__(self, pages: list[str]) -> None:
+            self.pages = pages
 
     def _retry_opts(options: dict) -> tuple[int, float, bool]:
         opts = {str(k).lower(): v for k, v in dict(options).items()}
@@ -214,27 +247,29 @@ try:  # Python Data Source API (Spark 4+)
             str(opts.get("injectfaults", "false")).lower() == "true",
         )
 
-    class _PagedReader(DataSourceReader):
-        def __init__(self, options: dict) -> None:
+    class _PageReads:
+        """What the batch and stream readers share: the options, and
+        reading one page range as one Arrow batch per page, each page
+        on its own retry budget."""
+
+        def __init__(self, options: dict, slots: int) -> None:
             self.path = options["path"]
+            self.slots = slots
             (self.max_retries, self.backoff_s,
              self.inject_faults) = _retry_opts(options)
 
+        def read(self, partition: _PageRange) -> Iterator:
+            for page in partition.pages:
+                yield from _read_page_arrow(
+                    page, self.max_retries, self.backoff_s, self.inject_faults,
+                )
+
+    class _PagedReader(_PageReads, DataSourceReader):
         def partitions(self) -> Sequence[InputPartition]:
-            return [_PagePartition(p) for p in _walk_cursor_chain(self.path)]
+            return [_PageRange(r) for r in
+                    _page_ranges(_walk_cursor_chain(self.path), self.slots)]
 
-        def read(self, partition: _PagePartition) -> Iterator:
-            return _read_page_arrow(
-                partition.page_file, self.max_retries, self.backoff_s,
-                self.inject_faults,
-            )
-
-    class _PageOffset:
-        @staticmethod
-        def to_json(n: int) -> dict:
-            return {"page": n}
-
-    class _PagedStreamReader(DataSourceStreamReader):
+    class _PagedStreamReader(_PageReads, DataSourceStreamReader):
         """Micro-batch reader: offset = number of pages consumed. The
         checkpoint stores it — the durable form of the reference's
         in-memory endCursor.
@@ -258,14 +293,22 @@ try:  # Python Data Source API (Spark 4+)
         anchored trigger is bounded, which is the backpressure
         property that matters while the stream runs."""
 
-        def __init__(self, options: dict) -> None:
-            self.path = options["path"]
-            (self.max_retries, self.backoff_s,
-             self.inject_faults) = _retry_opts(options)
+        def __init__(self, options: dict, slots: int) -> None:
+            super().__init__(options, slots)
             opts = {str(k).lower(): v for k, v in dict(options).items()}
             cap = int(opts.get("maxpagespertrigger", 0))
             self.max_pages = cap if cap > 0 else None
             self._anchor: int | None = None
+            # Complete pages seen so far, from page ``_base`` on: each
+            # walk resumes from the tail, and commit drops what no batch
+            # can plan again (the tail stays, it is the walk's cursor).
+            self._chain: list[str] = []
+            self._base = 0
+
+        def _walk(self, upto: int | None = None) -> int:
+            if upto is None or self._base + len(self._chain) < upto:
+                self._chain = _walk_cursor_chain(self.path, self._chain)
+            return self._base + len(self._chain)
 
         def initialOffset(self) -> dict:
             self._anchor = 0
@@ -278,29 +321,35 @@ try:  # Python Data Source API (Spark 4+)
             # micro-batch that keeps failing re-plans the SAME window
             # instead of each trigger admitting another cap's worth of
             # outstanding pages.
-            n = len(_walk_cursor_chain(self.path))
+            n = self._walk()
             if self.max_pages is not None and self._anchor is not None:
                 n = min(n, self._anchor + self.max_pages)
             return {"page": n}
 
         def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
             self._anchor = end["page"]
-            chain = _walk_cursor_chain(self.path)
-            return [_PagePartition(p) for p in chain[start["page"] : end["page"]]]
-
-        def read(self, partition: _PagePartition) -> Iterator:
-            return _read_page_arrow(
-                partition.page_file, self.max_retries, self.backoff_s,
-                self.inject_faults,
-            )
+            self._walk(end["page"])
+            window = self._chain[start["page"] - self._base : end["page"] - self._base]
+            return [_PageRange(r) for r in _page_ranges(window, self.slots)]
 
         def commit(self, end: dict) -> None:
             # offsets are durable in the streaming checkpoint; the
             # committed position re-anchors the admission cap
             self._anchor = max(end["page"], self._anchor or 0)
+            drop = min(end["page"] - self._base, len(self._chain) - 1)
+            if drop > 0:
+                del self._chain[:drop]
+                self._base += drop
 
     class PagedJsonDataSource(DataSource):
-        """``spark.read.format("paged_json").option("path", dir)``."""
+        """``spark.read.format("paged_json").option("path", dir)``.
+
+        ``slots`` caps the read partitions of a batch or micro-batch.
+        The planner runs in a Python worker that has no session, so
+        :func:`register` sets it from the session's
+        ``defaultParallelism`` on a subclass made at registration."""
+
+        slots = 1
 
         @classmethod
         def name(cls) -> str:
@@ -310,10 +359,10 @@ try:  # Python Data Source API (Spark 4+)
             return PAGE_SCHEMA
 
         def reader(self, schema) -> _PagedReader:
-            return _PagedReader(self.options)
+            return _PagedReader(self.options, self.slots)
 
         def streamReader(self, schema) -> _PagedStreamReader:
-            return _PagedStreamReader(self.options)
+            return _PagedStreamReader(self.options, self.slots)
 
     HAVE_DATASOURCE_API = True
 except ImportError:  # pragma: no cover - pyspark < 4
@@ -324,7 +373,12 @@ except ImportError:  # pragma: no cover - pyspark < 4
 def register(spark: SparkSession) -> None:
     if not HAVE_DATASOURCE_API:
         raise NotImplementedError("Python Data Source API requires Spark 4+")
-    spark.dataSource.register(PagedJsonDataSource)
+
+    class _SessionPagedJson(PagedJsonDataSource):
+        # Defined here, so it is pickled by value with this attribute.
+        slots = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(_SessionPagedJson)
 
 
 def _fixture_dir(spark: SparkSession, sf_dir: str) -> str:

@@ -30,10 +30,11 @@ def _conf(spark, key: str, value: str):
 def test_partitioned_lookup_prunes_and_matches(spark, sf_dir, tmp_path):
     store = abuse_labels(spark, sf_dir)
     path = str(tmp_path / "store_part")
-    layout.write_partitioned(store, path, buckets=16)
+    with _conf(spark, "spark.sql.shuffle.partitions", "16"):
+        layout.write_partitioned(store, path)
 
     addr = store.select("addr").orderBy("addr").first()[0]
-    got = layout.lookup_partitioned(spark, path, addr, buckets=16)
+    got = layout.lookup_partitioned(spark, path, addr)
     checks.assert_partition_filter(got, layout.BUCKET_COL)
     checks.assert_pushed_filter(got, "addr")
 
@@ -73,13 +74,14 @@ def test_driver_xxh64_matches_spark(spark):
 
 def test_partitioned_lookup_reads_one_directory(spark, sf_dir, tmp_path):
     """With more bucket directories than Spark's 32-path threshold for
-    a parallel listing job, a lookup plus its collect runs at most the
-    one-file schema read and the scan: no hash job, no listing job."""
+    a parallel listing job, a lookup plus its collect runs exactly the
+    scan: no hash job, no listing job, no schema-inference job."""
     import glob
 
     store = wallet_labels(spark, sf_dir)
-    path = str(tmp_path / "store_default")
-    layout.write_partitioned(store, path)
+    path = str(tmp_path / "store_wide")
+    with _conf(spark, "spark.sql.shuffle.partitions", "48"):
+        layout.write_partitioned(store, path)
     assert len(glob.glob(f"{path}/{layout.BUCKET_COL}=*")) > 32
 
     addr = store.select("addr").orderBy("addr").first()[0]
@@ -87,7 +89,7 @@ def test_partitioned_lookup_reads_one_directory(spark, sf_dir, tmp_path):
     jobs, tasks = checks.jobs_and_tasks(
         spark, lambda: got.extend(layout.lookup_partitioned(spark, path, addr).collect())
     )
-    assert jobs <= 2 and tasks <= 2, f"lookup ran {jobs} jobs / {tasks} tasks"
+    assert (jobs, tasks) == (1, 1), f"lookup ran {jobs} jobs / {tasks} tasks"
     want = store.filter(F.col("addr") == addr).collect()
     assert [r.asDict(recursive=True) for r in got] == [
         r.asDict(recursive=True) for r in want
@@ -95,21 +97,22 @@ def test_partitioned_lookup_reads_one_directory(spark, sf_dir, tmp_path):
 
 
 def test_partitioned_lookup_missing_bucket_falls_back(spark, tmp_path):
-    """An address whose bucket directory was never written takes the
-    fallback (pruned root read) and returns no rows with the columns
-    of a hit; an absent address in a written bucket returns no rows;
-    an unreadable bucket directory raises instead of falling back."""
+    """An address whose bucket directory was never written returns no
+    rows with the columns of a hit, without running a job; an absent
+    address in a written bucket returns no rows; a bucket path that is
+    not a partition directory raises instead of reading as empty."""
     import os
 
     store = spark.createDataFrame([("addr-a", 1), ("addr-b", 2)], "addr string, n int")
     path = str(tmp_path / "store_two")
     layout.write_partitioned(store, path)
-    written = {layout._xxh64(a) % layout.DEFAULT_BUCKETS for a in ("addr-a", "addr-b")}
+    buckets = layout._read_manifest(spark, path)["buckets"]
+    written = {layout._xxh64(a) % buckets for a in ("addr-a", "addr-b")}
 
     def probe(hit_bucket: bool) -> str:
         for i in range(10_000):
             a = f"probe-{i}"
-            if (layout._xxh64(a) % layout.DEFAULT_BUCKETS in written) == hit_bucket:
+            if (layout._xxh64(a) % buckets in written) == hit_bucket:
                 return a
         raise AssertionError("no probe address found")
 
@@ -117,32 +120,92 @@ def test_partitioned_lookup_missing_bucket_falls_back(spark, tmp_path):
     assert [tuple(r) for r in hit.collect()] == [("addr-a", 1)]
 
     absent_dir = probe(hit_bucket=False)
-    bucket = layout._xxh64(absent_dir) % layout.DEFAULT_BUCKETS
+    bucket = layout._xxh64(absent_dir) % buckets
     assert not os.path.exists(f"{path}/{layout.BUCKET_COL}={bucket}")
-    miss = layout.lookup_partitioned(spark, path, absent_dir)
-    assert miss.collect() == []
-    assert miss.schema == hit.schema
+    miss = []
+
+    def lookup_miss():
+        miss.append(layout.lookup_partitioned(spark, path, absent_dir))
+        miss.append(miss[0].collect())
+
+    jobs, _ = checks.jobs_and_tasks(spark, lookup_miss)
+    assert miss[1] == [] and jobs == 0, f"missing bucket ran {jobs} jobs"
+    assert miss[0].schema == hit.schema
 
     absent_row = layout.lookup_partitioned(spark, path, probe(hit_bucket=True))
     assert absent_row.collect() == []
     assert absent_row.schema == hit.schema
 
-    # Any other read error is not a missing bucket and is raised.
-    os.makedirs(f"{path}/{layout.BUCKET_COL}={bucket}")
+    # Any other read error is not a missing bucket and is raised: a
+    # plain file where the bucket directory belongs has no partition
+    # column to filter on.
+    with open(f"{path}/{layout.BUCKET_COL}={bucket}", "w") as f:
+        f.write("not parquet")
     with pytest.raises(AnalysisException) as err:
         layout.lookup_partitioned(spark, path, absent_dir)
     assert err.value.getCondition() != "PATH_NOT_FOUND"
 
 
 def test_partitioned_write_one_file_per_bucket(spark, sf_dir, tmp_path):
-    store = wallet_labels(spark, sf_dir)
-    path = str(tmp_path / "store_files")
-    layout.write_partitioned(store, path, buckets=8)
+    """One file per bucket directory, at most one bucket per shuffle
+    partition, and every file sorted by addr (so parquet row-group
+    stats can skip data inside a bucket)."""
     import glob
 
-    for d in glob.glob(path + "/bucket=*"):
+    import pyarrow.parquet as pq
+
+    store = wallet_labels(spark, sf_dir)
+    path = str(tmp_path / "store_files")
+    with _conf(spark, "spark.sql.shuffle.partitions", "8"):
+        layout.write_partitioned(store, path)
+    dirs = glob.glob(path + "/bucket=*")
+    assert 1 < len(dirs) <= 8
+    for d in dirs:
         files = glob.glob(d + "/*.parquet")
         assert len(files) == 1, f"{d}: {len(files)} files (small-files trap)"
+        addrs = pq.read_table(files[0], columns=["addr"]).column("addr").to_pylist()
+        assert addrs == sorted(addrs), f"{d}: addr not sorted"
+
+
+def test_manifest_bucket_count_outlives_session_conf(spark, sf_dir, tmp_path):
+    """The lookup hashes with the bucket count recorded at write time,
+    not the reading session's: a version written at 8 shuffle
+    partitions answers every address from a session set to 3."""
+    store = wallet_labels(spark, sf_dir)
+    path = str(tmp_path / "store_8")
+    with _conf(spark, "spark.sql.shuffle.partitions", "8"):
+        layout.write_partitioned(store, path)
+    assert layout._read_manifest(spark, path)["buckets"] == 8
+    want = {r.addr: r.asDict(recursive=True) for r in store.collect()}
+    with _conf(spark, "spark.sql.shuffle.partitions", "3"):
+        for addr, row in want.items():
+            got = layout.lookup_partitioned(spark, path, addr).collect()
+            assert [r.asDict(recursive=True) for r in got] == [row], addr
+
+
+def test_missing_manifest_names_the_version(spark, tmp_path):
+    import os
+
+    store = spark.createDataFrame([("addr-a", 1)], "addr string, n int")
+    path = str(tmp_path / "store_bare")
+    layout.write_partitioned(store, path)
+    os.remove(f"{path}/{layout.MANIFEST}")
+    with pytest.raises(FileNotFoundError, match=str(path)):
+        layout.lookup_partitioned(spark, path, "addr-a")
+
+
+def test_version_read_runs_no_listing_job(spark, sf_dir, tmp_path):
+    """The manifest is invisible to a plain read of the version, and a
+    version written with the session's bucket count reads with the one
+    schema job: no parallel listing job over bucket directories."""
+    store = wallet_labels(spark, sf_dir)
+    path = str(tmp_path / "store_plain_read")
+    layout.write_partitioned(store, path)
+    got = []
+    jobs, tasks = checks.jobs_and_tasks(spark, lambda: got.append(spark.read.parquet(path)))
+    assert (jobs, tasks) == (1, 1), f"version read ran {jobs} jobs / {tasks} tasks"
+    assert sorted(got[0].drop(layout.BUCKET_COL).columns) == sorted(store.columns)
+    assert got[0].count() == store.count()
 
 
 def test_bucketed_consolidate_eliminates_store_shuffle(spark, sf_dir, tmp_path):

@@ -10,7 +10,8 @@ import pytest
 
 def test_paged_source_batch_roundtrip(spark, tmp_path):
     """Custom Python data source: rows written into the page chain come
-    back exactly, one partition per page (parallel page fetch)."""
+    back exactly, in one partition per slot (contiguous page ranges
+    fetched in parallel), never more partitions than pages."""
     from labelmain_spark.sources import paged
 
     rows = [(i, i % 7, "click" if i % 2 else "view", float(i) / 4) for i in range(1234)]
@@ -18,7 +19,8 @@ def test_paged_source_batch_roundtrip(spark, tmp_path):
     assert n_pages == 13
     paged.register(spark)
     df = spark.read.format("paged_json").option("path", str(tmp_path / "pages")).load()
-    assert df.rdd.getNumPartitions() == n_pages
+    slots = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == min(n_pages, slots)
     got = sorted(tuple(r) for r in df.collect())
     assert got == sorted(rows)
 
@@ -125,6 +127,48 @@ def test_paged_source_retries_transient_fault(spark, tmp_path):
     assert got == sorted(rows)
     with open(flaky) as f:
         assert f.read().strip() == "0", "retry path was never exercised"
+
+
+def test_paged_source_retries_fault_inside_page_range(spark, tmp_path):
+    """A transient fault on a page in the middle of its task's page
+    range is retried in place: the pages before it are not re-read and
+    every row arrives exactly once."""
+    from labelmain_spark.sources import paged
+
+    pages_dir = str(tmp_path / "pages")
+    rows = [(i, i % 5, "click", float(i)) for i in range(1200)]
+    n_pages = paged.write_page_fixture(pages_dir, rows, page_size=100)
+    slots = spark.sparkContext.defaultParallelism
+    ranges = paged._page_ranges(paged._walk_cursor_chain(pages_dir), slots)
+    assert len(ranges[0]) > 1 and n_pages > slots
+    inner = ranges[0][-1]  # last page of the first range, not its first
+    flaky = inner[: -len(".json")] + ".flaky"
+    with open(flaky, "w") as f:
+        f.write("2")
+    paged.register(spark)
+    df = (
+        spark.read.format("paged_json")
+        .option("path", pages_dir)
+        .option("backoffS", "0.01")
+        .option("injectFaults", "true")
+        .load()
+    )
+    got = [tuple(r) for r in df.collect()]
+    assert len(got) == len(set(got)) and sorted(got) == sorted(rows)
+    with open(flaky) as f:
+        assert f.read().strip() == "0", "retry path was never exercised"
+
+
+def test_page_ranges_are_contiguous_and_slot_bounded():
+    from labelmain_spark.sources.paged import _page_ranges
+
+    pages = [f"page-{i}.json" for i in range(10)]
+    for slots in (1, 2, 3, 4, 10, 32):
+        ranges = _page_ranges(pages, slots)
+        assert len(ranges) == min(slots, len(pages))
+        assert [p for r in ranges for p in r] == pages
+        assert max(map(len, ranges)) - min(map(len, ranges)) <= 1
+    assert _page_ranges([], 4) == []
 
 
 def test_paged_source_ignores_stray_sidecar_without_opt_in(spark, tmp_path):
@@ -280,3 +324,44 @@ def test_walk_cursor_chain_excludes_inflight_page(tmp_path):
     assert chain == [
         str(tmp_path / "pages" / f"page-{i}.json") for i in range(2)
     ]
+
+
+def test_walk_cursor_chain_resumes_from_tail(tmp_path, monkeypatch):
+    """A resumed walk re-reads the tail's next-cursor and then opens one
+    ``.next`` per new page, not one per page ever published; the
+    in-flight rule still holds at the resumed end."""
+    import builtins
+
+    from labelmain_spark.sources import paged
+
+    pages_dir = str(tmp_path / "pages")
+    rows = [(i, i % 3, "click", float(i)) for i in range(400)]
+    paged.write_page_fixture(pages_dir, rows[:300], page_size=10)
+    known = paged._walk_cursor_chain(pages_dir)
+    assert len(known) == 30
+
+    opens: list[str] = []
+
+    def counting_open(file, *a, **kw):
+        if str(file).endswith(".next"):
+            opens.append(str(file))
+        return builtins.open(file, *a, **kw)
+
+    monkeypatch.setattr(paged, "open", counting_open, raising=False)
+    # the chain grows 10 pages; the old tail's .next is rewritten
+    paged.write_page_fixture(pages_dir, rows, page_size=10)
+    opens.clear()
+    chain = paged._walk_cursor_chain(pages_dir, known)
+    assert chain == [os.path.join(pages_dir, f"page-{i}.json") for i in range(40)]
+    assert len(opens) == 1 + 10, opens  # the tail's pointer, then the new pages
+
+    opens.clear()
+    assert paged._walk_cursor_chain(pages_dir, chain) == chain
+    assert len(opens) == 1
+
+    # a new page whose pointer is not yet published is not admitted
+    with open(os.path.join(pages_dir, "page-39.next"), "w") as f:
+        f.write("page-40.json")
+    with open(os.path.join(pages_dir, "page-40.json"), "w") as f:
+        f.write("")
+    assert paged._walk_cursor_chain(pages_dir, chain) == chain
