@@ -9,12 +9,13 @@ Two layouts, two query patterns:
    ``lookup_partitioned``): the store is written under
    ``bucket=N/`` directories where ``N = pmod(xxhash64(addr), buckets)``
    and ``buckets`` is the writing session's
-   ``spark.sql.shuffle.partitions``, so the bucket count follows the
-   cluster (2 at ``local[2]``, thousands on a cluster) and a refresh
-   writes one file per slot, not a fixed number of small files. Rows
-   are sorted by ``(bucket, addr)`` within each file, so parquet
-   row-group statistics let the pushed ``addr`` filter skip data inside
-   a large bucket. After the data commit a ``_layout.json`` manifest
+   ``spark.sql.shuffle.partitions``, so a refresh writes one file per
+   shuffle partition (2 at the benchmark's ``local[2]``), not a fixed 64
+   small files. That rule is measured only at local bucket counts: a
+   small store written from a session with thousands of shuffle
+   partitions gets thousands of tiny files, and sizing the count from
+   the store's rows or bytes is still open (ROADMAP item 3). After the
+   data commit a ``_layout.json`` manifest
    next to the data records the bucket count and the store schema
    (Spark's file index ignores ``_``-prefixed names, so a plain
    ``spark.read.parquet(version)`` is unchanged).
@@ -146,15 +147,12 @@ def write_partitioned(store: DataFrame, path: str) -> None:
 
     ``repartition(bucket)`` before ``partitionBy`` keeps it to one file
     per partition directory (without it every task writes a sliver of
-    every bucket — the classic small-files trap at scale); sorting by
-    ``(bucket, addr)`` also satisfies the writer's partition ordering,
-    so no second sort runs."""
+    every bucket — the classic small-files trap at scale)."""
     spark = store.sparkSession
     buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     (
         store.withColumn(BUCKET_COL, _bucket_expr(F.col("addr"), buckets))
         .repartition(F.col(BUCKET_COL))
-        .sortWithinPartitions(BUCKET_COL, "addr")
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
         .parquet(path)

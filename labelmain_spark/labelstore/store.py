@@ -18,11 +18,11 @@ the reference would switch to:
 
 Scale layout (labelstore/layout.py): each store version is hash-bucketed
 on addr into one bucket per shuffle partition of the writing session,
-sorted by addr within each file, with a ``_layout.json`` manifest
-recording the bucket count and schema, so a point lookup reads one
-bucket directory in one task. The consolidate merge joins on addr and
-should run against a store bucketed on addr so the state side never
-re-shuffles (see operators/merge.py notes).
+with a ``_layout.json`` manifest recording the bucket count and
+schema, so a point lookup reads one bucket directory in one task. The
+consolidate merge joins on addr and should run against a store
+bucketed on addr so the state side never re-shuffles (see
+operators/merge.py notes).
 """
 
 from __future__ import annotations

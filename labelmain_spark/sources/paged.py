@@ -17,7 +17,11 @@ real ``spark.read.format(...)`` source instead of driver-side glue:
   task pays a fixed start-up cost, so a task per page made a 10-page
   read cost 10 of them on 2 slots. The slot count is read from the
   session by :func:`register`, because the planner runs in a Python
-  worker that has none.
+  worker that has none, and it is fixed for the registration: a
+  cluster whose executors arrive after ``register`` (dynamic
+  allocation, where ``defaultParallelism`` can start at 2) keeps that
+  many ranges until the source is registered again. Only ``local[N]``
+  sessions have measured this.
 - **Streaming** (`reader` + ``readStream``): offsets are page indices;
   each micro-batch reads exactly the pages that appeared since the last
   committed offset, grouped the same way, and the offset lives in the
@@ -347,7 +351,11 @@ try:  # Python Data Source API (Spark 4+)
         ``slots`` caps the read partitions of a batch or micro-batch.
         The planner runs in a Python worker that has no session, so
         :func:`register` sets it from the session's
-        ``defaultParallelism`` on a subclass made at registration."""
+        ``defaultParallelism`` on a subclass made at registration. The
+        value is the one at registration time and holds for every
+        later batch read and stream trigger of that registration, even
+        after executors are added; register again to pick up a new
+        one."""
 
         slots = 1
 
