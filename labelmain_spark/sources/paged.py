@@ -65,6 +65,12 @@ import time
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 PAGE_SCHEMA = "event_id bigint, user_id bigint, event_type string, value double"
 
@@ -204,21 +210,17 @@ def _read_page_arrow(
     """One Arrow RecordBatch per page — the Python Data Source API's
     fast path: rows cross the Python→JVM boundary as ONE columnar
     batch instead of per-tuple pickling (measured 13.2 s → ~3 s for
-    the 100k-row sf0.1 corpus). Falls back to tuple yields if pyarrow
-    is unavailable. The fetch itself rides the T5 linear-backoff
-    retry, so a transient fault never costs a task (let alone a
-    stage) re-run."""
+    the 100k-row sf0.1 corpus). The fetch itself rides the T5
+    linear-backoff retry, so a transient fault never costs a task (let
+    alone a stage) re-run."""
 
     def fetch() -> list[tuple]:
         if inject_faults:
             _maybe_inject_fault(page_file)
         return list(_read_page(page_file))
 
-    try:
-        import pyarrow as pa
-    except ImportError:  # pragma: no cover - pyarrow is baked into the env
-        yield from _with_retries(fetch, max_retries, backoff_s)
-        return
+    import pyarrow as pa
+
     rows = _with_retries(fetch, max_retries, backoff_s)
     yield pa.RecordBatch.from_arrays(
         [
@@ -231,157 +233,146 @@ def _read_page_arrow(
     )
 
 
-try:  # Python Data Source API (Spark 4+)
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        DataSourceStreamReader,
-        InputPartition,
+class _PageRange(InputPartition):
+    def __init__(self, pages: list[str]) -> None:
+        self.pages = pages
+
+
+def _retry_opts(options: dict) -> tuple[int, float, bool]:
+    opts = {str(k).lower(): v for k, v in dict(options).items()}
+    return (
+        int(opts.get("maxretries", MAX_RETRIES)),
+        float(opts.get("backoffs", BACKOFF_S)),
+        str(opts.get("injectfaults", "false")).lower() == "true",
     )
 
-    class _PageRange(InputPartition):
-        def __init__(self, pages: list[str]) -> None:
-            self.pages = pages
 
-    def _retry_opts(options: dict) -> tuple[int, float, bool]:
+class _PageReads:
+    """What the batch and stream readers share: the options, and
+    reading one page range as one Arrow batch per page, each page
+    on its own retry budget."""
+
+    def __init__(self, options: dict, slots: int) -> None:
+        self.path = options["path"]
+        self.slots = slots
+        (self.max_retries, self.backoff_s,
+         self.inject_faults) = _retry_opts(options)
+
+    def read(self, partition: _PageRange) -> Iterator:
+        for page in partition.pages:
+            yield from _read_page_arrow(
+                page, self.max_retries, self.backoff_s, self.inject_faults,
+            )
+
+
+class _PagedReader(_PageReads, DataSourceReader):
+    def partitions(self) -> Sequence[InputPartition]:
+        return [_PageRange(r) for r in
+                _page_ranges(_walk_cursor_chain(self.path), self.slots)]
+
+
+class _PagedStreamReader(_PageReads, DataSourceStreamReader):
+    """Micro-batch reader: offset = number of pages consumed. The
+    checkpoint stores it — the durable form of the reference's
+    in-memory endCursor.
+
+    T5 admission control: with ``maxPagesPerTrigger`` set,
+    ``latestOffset`` advances at most that many pages past the
+    last position it knows the query reached, so a running stream
+    drains a backlog (a burst of new pages, a restart far behind
+    the head) in bounded micro-batches instead of one unbounded
+    catch-up batch. The anchor is every position the engine
+    actually tells us — ``initialOffset``, each planned batch's
+    end (``partitions``, which also covers the post-restart replay
+    batch), each ``commit`` — never a guess: the Python DataSource
+    API gives ``latestOffset`` no committed offset
+    (python_streaming_source_runner protocol: LATEST_OFFSET takes
+    no input), so the one trigger planned before any anchor exists
+    (observed: a fresh query's batch 0 — the JVM calls
+    latestOffset before initialOffset) runs uncapped; guessing an
+    anchor of 0 there would return an offset BELOW the committed
+    one after a clean-commit restart and re-deliver pages. Every
+    anchored trigger is bounded, which is the backpressure
+    property that matters while the stream runs."""
+
+    def __init__(self, options: dict, slots: int) -> None:
+        super().__init__(options, slots)
         opts = {str(k).lower(): v for k, v in dict(options).items()}
-        return (
-            int(opts.get("maxretries", MAX_RETRIES)),
-            float(opts.get("backoffs", BACKOFF_S)),
-            str(opts.get("injectfaults", "false")).lower() == "true",
-        )
+        cap = int(opts.get("maxpagespertrigger", 0))
+        self.max_pages = cap if cap > 0 else None
+        self._anchor: int | None = None
+        # Complete pages seen so far, from page ``_base`` on: each
+        # walk resumes from the tail, and commit drops what no batch
+        # can plan again (the tail stays, it is the walk's cursor).
+        self._chain: list[str] = []
+        self._base = 0
 
-    class _PageReads:
-        """What the batch and stream readers share: the options, and
-        reading one page range as one Arrow batch per page, each page
-        on its own retry budget."""
+    def _walk(self, upto: int | None = None) -> int:
+        if upto is None or self._base + len(self._chain) < upto:
+            self._chain = _walk_cursor_chain(self.path, self._chain)
+        return self._base + len(self._chain)
 
-        def __init__(self, options: dict, slots: int) -> None:
-            self.path = options["path"]
-            self.slots = slots
-            (self.max_retries, self.backoff_s,
-             self.inject_faults) = _retry_opts(options)
+    def initialOffset(self) -> dict:
+        self._anchor = 0
+        return {"page": 0}
 
-        def read(self, partition: _PageRange) -> Iterator:
-            for page in partition.pages:
-                yield from _read_page_arrow(
-                    page, self.max_retries, self.backoff_s, self.inject_faults,
-                )
+    def latestOffset(self) -> dict:
+        # Cap against the anchor WITHOUT mutating it (r10 advice):
+        # the anchor advances only at positions the engine actually
+        # reached (initialOffset / partitions / commit), so a
+        # micro-batch that keeps failing re-plans the SAME window
+        # instead of each trigger admitting another cap's worth of
+        # outstanding pages.
+        n = self._walk()
+        if self.max_pages is not None and self._anchor is not None:
+            n = min(n, self._anchor + self.max_pages)
+        return {"page": n}
 
-    class _PagedReader(_PageReads, DataSourceReader):
-        def partitions(self) -> Sequence[InputPartition]:
-            return [_PageRange(r) for r in
-                    _page_ranges(_walk_cursor_chain(self.path), self.slots)]
+    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        self._anchor = end["page"]
+        self._walk(end["page"])
+        window = self._chain[start["page"] - self._base : end["page"] - self._base]
+        return [_PageRange(r) for r in _page_ranges(window, self.slots)]
 
-    class _PagedStreamReader(_PageReads, DataSourceStreamReader):
-        """Micro-batch reader: offset = number of pages consumed. The
-        checkpoint stores it — the durable form of the reference's
-        in-memory endCursor.
+    def commit(self, end: dict) -> None:
+        # offsets are durable in the streaming checkpoint; the
+        # committed position re-anchors the admission cap
+        self._anchor = max(end["page"], self._anchor or 0)
+        drop = min(end["page"] - self._base, len(self._chain) - 1)
+        if drop > 0:
+            del self._chain[:drop]
+            self._base += drop
 
-        T5 admission control: with ``maxPagesPerTrigger`` set,
-        ``latestOffset`` advances at most that many pages past the
-        last position it knows the query reached, so a running stream
-        drains a backlog (a burst of new pages, a restart far behind
-        the head) in bounded micro-batches instead of one unbounded
-        catch-up batch. The anchor is every position the engine
-        actually tells us — ``initialOffset``, each planned batch's
-        end (``partitions``, which also covers the post-restart replay
-        batch), each ``commit`` — never a guess: the Python DataSource
-        API gives ``latestOffset`` no committed offset
-        (python_streaming_source_runner protocol: LATEST_OFFSET takes
-        no input), so the one trigger planned before any anchor exists
-        (observed: a fresh query's batch 0 — the JVM calls
-        latestOffset before initialOffset) runs uncapped; guessing an
-        anchor of 0 there would return an offset BELOW the committed
-        one after a clean-commit restart and re-deliver pages. Every
-        anchored trigger is bounded, which is the backpressure
-        property that matters while the stream runs."""
 
-        def __init__(self, options: dict, slots: int) -> None:
-            super().__init__(options, slots)
-            opts = {str(k).lower(): v for k, v in dict(options).items()}
-            cap = int(opts.get("maxpagespertrigger", 0))
-            self.max_pages = cap if cap > 0 else None
-            self._anchor: int | None = None
-            # Complete pages seen so far, from page ``_base`` on: each
-            # walk resumes from the tail, and commit drops what no batch
-            # can plan again (the tail stays, it is the walk's cursor).
-            self._chain: list[str] = []
-            self._base = 0
+class PagedJsonDataSource(DataSource):
+    """``spark.read.format("paged_json").option("path", dir)``.
 
-        def _walk(self, upto: int | None = None) -> int:
-            if upto is None or self._base + len(self._chain) < upto:
-                self._chain = _walk_cursor_chain(self.path, self._chain)
-            return self._base + len(self._chain)
+    ``slots`` caps the read partitions of a batch or micro-batch.
+    The planner runs in a Python worker that has no session, so
+    :func:`register` sets it from the session's
+    ``defaultParallelism`` on a subclass made at registration. The
+    value is the one at registration time and holds for every
+    later batch read and stream trigger of that registration, even
+    after executors are added; register again to pick up a new
+    one."""
 
-        def initialOffset(self) -> dict:
-            self._anchor = 0
-            return {"page": 0}
+    slots = 1
 
-        def latestOffset(self) -> dict:
-            # Cap against the anchor WITHOUT mutating it (r10 advice):
-            # the anchor advances only at positions the engine actually
-            # reached (initialOffset / partitions / commit), so a
-            # micro-batch that keeps failing re-plans the SAME window
-            # instead of each trigger admitting another cap's worth of
-            # outstanding pages.
-            n = self._walk()
-            if self.max_pages is not None and self._anchor is not None:
-                n = min(n, self._anchor + self.max_pages)
-            return {"page": n}
+    @classmethod
+    def name(cls) -> str:
+        return "paged_json"
 
-        def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-            self._anchor = end["page"]
-            self._walk(end["page"])
-            window = self._chain[start["page"] - self._base : end["page"] - self._base]
-            return [_PageRange(r) for r in _page_ranges(window, self.slots)]
+    def schema(self) -> str:
+        return PAGE_SCHEMA
 
-        def commit(self, end: dict) -> None:
-            # offsets are durable in the streaming checkpoint; the
-            # committed position re-anchors the admission cap
-            self._anchor = max(end["page"], self._anchor or 0)
-            drop = min(end["page"] - self._base, len(self._chain) - 1)
-            if drop > 0:
-                del self._chain[:drop]
-                self._base += drop
+    def reader(self, schema) -> _PagedReader:
+        return _PagedReader(self.options, self.slots)
 
-    class PagedJsonDataSource(DataSource):
-        """``spark.read.format("paged_json").option("path", dir)``.
-
-        ``slots`` caps the read partitions of a batch or micro-batch.
-        The planner runs in a Python worker that has no session, so
-        :func:`register` sets it from the session's
-        ``defaultParallelism`` on a subclass made at registration. The
-        value is the one at registration time and holds for every
-        later batch read and stream trigger of that registration, even
-        after executors are added; register again to pick up a new
-        one."""
-
-        slots = 1
-
-        @classmethod
-        def name(cls) -> str:
-            return "paged_json"
-
-        def schema(self) -> str:
-            return PAGE_SCHEMA
-
-        def reader(self, schema) -> _PagedReader:
-            return _PagedReader(self.options, self.slots)
-
-        def streamReader(self, schema) -> _PagedStreamReader:
-            return _PagedStreamReader(self.options, self.slots)
-
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    PagedJsonDataSource = None  # type: ignore[assignment]
-    HAVE_DATASOURCE_API = False
+    def streamReader(self, schema) -> _PagedStreamReader:
+        return _PagedStreamReader(self.options, self.slots)
 
 
 def register(spark: SparkSession) -> None:
-    if not HAVE_DATASOURCE_API:
-        raise NotImplementedError("Python Data Source API requires Spark 4+")
-
     class _SessionPagedJson(PagedJsonDataSource):
         # Defined here, so it is pickled by value with this attribute.
         slots = spark.sparkContext.defaultParallelism

@@ -55,6 +55,26 @@ def _enable_nanos_as_long(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Give the events ``ts`` column ONE type whatever the fixture
+    vintage — the rule the batch reader (:func:`load_table`) and the
+    stream (streaming/incremental.py ``stream_events``) both apply to a
+    frame read with the file's own schema, so every downstream
+    consumer (epoch casts, watermarks — which reject NTZ) sees plain
+    TIMESTAMP. Needs :func:`_enable_nanos_as_long` on the session that
+    read ``df``."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        # TIMESTAMP(NANOS) read as long ns; truncate to µs exactly as
+        # DuckDB does. div is exact integer floor-division.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        # parquet timestamp[us] infers as TIMESTAMP_NTZ; the session tz
+        # is pinned UTC, so the cast is the identity on stored values.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 # Resolved-relation memo — the engine's mini-catalog. Every
 # ``spark.read.parquet`` call re-lists the path and re-reads parquet
 # footers ON THE DRIVER (~70-90 ms/table measured at sf0.1), and a
@@ -83,20 +103,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return cached
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # TIMESTAMP(NANOS) read as long ns (see session.py);
-            # truncate to µs exactly as DuckDB does. div is exact
-            # integer floor-division.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            # parquet timestamp[us] infers as TIMESTAMP_NTZ; normalize
-            # to TIMESTAMP so every downstream consumer (epoch casts,
-            # watermarks — which reject NTZ — and the streaming twins)
-            # sees ONE type regardless of fixture vintage. The session
-            # tz is pinned UTC above, so the conversion is the identity
-            # on the stored values.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df)
     _RELATION_MEMO[memo_key] = df
     if len(_RELATION_MEMO) > 4096:  # pathological many-path sessions
         _RELATION_MEMO.clear()

@@ -20,6 +20,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 from labelmain_spark.functions.packing import shard_pack
@@ -148,25 +150,27 @@ def _sweep_stale_tmp(root: str) -> None:
                 pass
 
 
-def publish_corpus(spark: SparkSession, sf_dir: str, root: str) -> str:
-    """Atomic versioned publish of the packed corpus — the batch twin
-    of the streaming sink's commit protocol (streaming/incremental.py
-    ``run_upsert_sink``): claim ``root/v<n>/`` exclusively (O_EXCL
-    mkdir — concurrent publishers get distinct versions), write the
-    FULL new corpus into it, then atomically swap the ``CURRENT``
-    pointer. Readers resolving through CURRENT see the old corpus
+def commit_version(root: str, write: Callable[[str], None]) -> str:
+    """Commit one new version under ``root`` — the library's one
+    CURRENT-pointer commit, used by :func:`publish_corpus` and the
+    streaming upsert sink (streaming/incremental.py
+    ``run_upsert_sink``). Claims ``root/v<n>/`` exclusively (O_EXCL
+    mkdir — concurrent committers get distinct versions), calls
+    ``write(path)`` to fill it, then atomically swaps the ``CURRENT``
+    pointer. Readers resolving through CURRENT see the old version
     until the instant of the swap and the new one after — never a torn
-    mix. A crash mid-write leaves an orphan ``v`` dir and CURRENT
-    untouched; later publishes skip past it and prune it. The pointer
-    never moves backwards: a slow publisher that finishes after a
-    newer version committed leaves CURRENT alone. The previous pointer
-    target is kept (one-step time travel / rollback), older ones
-    pruned. Corrupt CURRENT content is recovered from the on-disk
-    version dirs instead of raising.
+    mix. A crash inside ``write`` leaves an orphan ``v`` dir and
+    CURRENT untouched; later commits skip past it and prune it. The
+    pointer never moves backwards: a slow committer that finishes
+    after a newer version committed leaves CURRENT alone. The previous
+    pointer target is kept (one-step time travel / rollback, and the
+    crash-replay window of a streaming batch), older ones pruned.
+    Corrupt CURRENT content is recovered from the on-disk version dirs
+    instead of raising.
 
     At object-store scale the pointer file becomes a manifest commit
     (Delta/Iceberg); the layout here is the same contract on a
-    filesystem. Returns the published version string."""
+    filesystem. Returns the claimed version string."""
     import shutil
     import tempfile
 
@@ -175,9 +179,9 @@ def publish_corpus(spark: SparkSession, sf_dir: str, root: str) -> str:
     prev_n = _current_version(root)
     n = _claim_version(root)
     nxt = f"v{n}"
-    export_packed_corpus(spark, sf_dir, _os.path.join(root, nxt))
+    write(_os.path.join(root, nxt))
     # Commit: write-temp + rename is atomic on POSIX; re-check that a
-    # concurrent publisher hasn't already advanced past us (monotonic
+    # concurrent committer hasn't already advanced past us (monotonic
     # pointer — last-writer-wins would let a slow v1 clobber a v2).
     cur_now = _current_version(root)
     won = cur_now is None or cur_now < n
@@ -190,7 +194,7 @@ def publish_corpus(spark: SparkSession, sf_dir: str, root: str) -> str:
         # pointer's previous target (rollback); every other dir BELOW
         # the pointer is garbage — crashed orphans and superseded
         # losers alike. Dirs ABOVE the pointer belong to concurrent
-        # publishers still writing and are never touched.
+        # committers still writing and are never touched.
         keep = {n} | ({prev_n} if prev_n is not None else set())
         for v in _existing_versions(root):
             if v not in keep and v < n:
@@ -198,9 +202,19 @@ def publish_corpus(spark: SparkSession, sf_dir: str, root: str) -> str:
     return nxt
 
 
+def publish_corpus(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """Atomic versioned publish of the packed corpus: the full new
+    corpus is exported into a fresh version under ``root`` and made
+    visible by :func:`commit_version`'s pointer swap. Returns the
+    published version string."""
+    return commit_version(root, lambda path: export_packed_corpus(spark, sf_dir, path))
+
+
 def read_published(spark: SparkSession, root: str, version: str | None = None) -> DataFrame:
-    """Read the published corpus: CURRENT by default, or a pinned
-    version (the retained previous one) for rollback/repro reads."""
+    """Read a root committed by :func:`commit_version` — a published
+    corpus or the upsert sink's state table: the version CURRENT names
+    by default, or a pinned version (the retained previous one) for
+    rollback/repro reads."""
     import os
 
     if version is None:

@@ -18,6 +18,26 @@ tricks maps onto a first-class streaming concept:
   → ``foreachBatch`` + the merge operators → exactly-once effect.
 - T6/T7 event-time windows + late data → watermarked window aggs.
 
+**Sink contract.** Every ``run_*_sink`` is one call to
+:func:`_epoch_sink`, which runs the stream through ``foreachBatch``
+with ``trigger(availableNow=True)`` on the given checkpoint.
+
+- Epoch directory: a batch's output lands under its own
+  ``epoch=<id>`` directory, written with ``mode("overwrite")``.
+  ``foreachBatch`` is AT-LEAST-ONCE, so a replayed batch rewrites the
+  same directory instead of appending duplicates on task retry; the
+  ``finalize_*`` readers merge the epochs (:func:`_epoch_partials`,
+  which also answers a stream that has landed zero epochs).
+- Fresh-checkpoint rule: the overwrite is idempotent only within one
+  run. A checkpoint without ``offsets/`` is a new run, so the sink's
+  output directories are cleared first — a previous run's epochs at
+  the same path would otherwise be read back with this run's. An
+  existing checkpoint is a crash-resume: its landed epochs are
+  committed work ``availableNow`` will not replay, and they stay.
+- The upsert sink keeps a keyed state table instead of epochs; each
+  merged state is committed through ``sources.writers.commit_version``
+  and a replayed batch merges as a no-op, so nothing is cleared.
+
 At scale the streaming state store is RocksDB-backed
 (``spark.sql.streaming.stateStore.providerClass``), watermarks bound
 state size, and ``maxFilesPerTrigger``/``maxOffsetsPerTrigger`` provide
@@ -28,69 +48,39 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from labelmain_spark.operators.merge import upsert
 from labelmain_spark.operators.parity import DEC
-from labelmain_spark.sources.readers import _enable_nanos_as_long
-
-def _events_ts_is_long_nanos(sf_dir: str) -> bool:
-    """Inspect the parquet footer: TIMESTAMP(NANOS) fixtures (which
-    Spark only reads via legacy nanosAsLong=long) vs native µs/ms
-    timestamps. Streaming requires an explicit schema, so the choice
-    must be made up front — hardcoding one layout silently emits zero
-    rows when the fixtures change (round-3 postmortem)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts").type
-    return pa.types.is_int64(t) or (pa.types.is_timestamp(t) and t.unit == "ns")
+from labelmain_spark.sources.readers import _enable_nanos_as_long, normalize_events_ts
+from labelmain_spark.sources.writers import commit_version, read_published
 
 
-def events_schema(sf_dir: str) -> T.StructType:
-    """Stream-source schema for the events table, matching what the
-    batch reader (readers.load_table) would infer for the same files."""
-    nanos = _events_ts_is_long_nanos(sf_dir)
-    ts_type: T.DataType = T.LongType() if nanos else T.TimestampNTZType()
-    # NTZ here matches the file bytes; stream_events casts to TIMESTAMP
-    # right after read so consumers (watermarks reject NTZ) see the
-    # same TimestampType the batch reader normalizes to.
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one landing-zone table, one file per
+    trigger. The schema is the batch reader's for the same file (the
+    r4 rule: a hardcoded stream schema silently emits zero rows when
+    the fixtures drift), which the fixture tripwire also pins."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", f"{name}.parquet")  # file source needs a dir
+        .parquet(sf_dir)
     )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events landing zone — the streaming
-    twin of readers.load_table(events): schema branched on the parquet
-    footer exactly like the batch path, ns→µs conversion only when the
-    files really are long-nanos."""
+    twin of readers.load_table(events): the same file schema, and
+    ``ts`` normalized by the same readers.normalize_events_ts, so
+    consumers (watermarks reject NTZ) see the batch reader's
+    TimestampType whatever the fixture vintage."""
     _enable_nanos_as_long(spark)
-    raw = (
-        spark.readStream.schema(events_schema(sf_dir))
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .parquet(sf_dir)
-    )
-    if _events_ts_is_long_nanos(sf_dir):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # NTZ → TIMESTAMP under the UTC-pinned session: identity on the
-        # values, required by withWatermark (rejects TIMESTAMP_NTZ) and
-        # matches the batch reader's normalized type.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_events_ts(_table_stream(spark, sf_dir, "events"))
 
 
 def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -140,84 +130,10 @@ def enriched_counts(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Read the committed state version (the one the CURRENT pointer
-    names). Versions other than CURRENT are either already-pruned
-    history or an in-flight write — never visible to readers."""
-    with open(os.path.join(state_path, "CURRENT")) as f:
-        version = f.read().strip()
-    return spark.read.parquet(os.path.join(state_path, version))
-
-
-def run_upsert_sink(
-    events: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-) -> None:
-    """T4: foreachBatch + last-write-wins merge into a parquet state
-    table — the UpdateOne(upsert:true) sink. Re-running a batch is
-    idempotent because the merge is keyed (exactly-once effect from
-    at-least-once delivery, the same property the reference leans on).
-
-    The commit is crash-atomic: each batch writes a NEW versioned dir
-    (``v<n+1>``) and then atomically swaps the ``CURRENT`` pointer file
-    (``os.replace``). A crash before the swap leaves CURRENT on the old
-    version and the streaming checkpoint un-committed, so restart
-    replays the batch; a crash after the swap replays the batch against
-    already-merged state, which the keyed last-write-wins merge makes a
-    no-op. At object-store scale the pointer file becomes a manifest
-    commit (Delta/Iceberg-style); the layout here is the same contract
-    on a filesystem.
-    """
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        doc = batch.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("ts").alias("last_ts"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        cur_file = os.path.join(state_path, "CURRENT")
-        if os.path.isfile(cur_file):
-            with open(cur_file) as f:
-                prev = f.read().strip()
-            merged = upsert(read_state(spark, state_path), doc, "user_id")
-            nxt = f"v{int(prev[1:]) + 1}"
-        else:  # first batch: no state yet
-            os.makedirs(state_path, exist_ok=True)
-            prev, merged, nxt = None, doc, "v0"
-        merged.write.mode("overwrite").parquet(os.path.join(state_path, nxt))
-        fd, tmp = tempfile.mkstemp(dir=state_path, prefix="_current_")
-        with os.fdopen(fd, "w") as f:
-            f.write(nxt)
-        os.replace(tmp, cur_file)  # atomic pointer swap = the commit
-        # prune history: keep nxt (live) and prev (crash-replay window)
-        for d in os.listdir(state_path):
-            if d.startswith("v") and d not in (nxt, prev):
-                shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
-
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents landing zone — the
-    arrival stream of a crawl. Schema is derived from the actual
-    parquet footer via the batch reader (the r4 rule: a hardcoded
-    stream schema silently emits zero rows when fixtures drift), which
-    the fixture tripwire also pins."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    arrival stream of a crawl."""
+    return _table_stream(spark, sf_dir, "documents")
 
 
 def incremental_dedup_stream(docs: DataFrame, history_digests: DataFrame) -> DataFrame:
@@ -321,217 +237,44 @@ def incremental_prefix_stream(docs: DataFrame, history: DataFrame) -> DataFrame:
     )
 
 
-def run_corpus_increment_sink(
-    docs: DataFrame,
-    hist_digests: DataFrame,
-    bench: DataFrame,
-    freq: DataFrame,
-    tot: DataFrame,
-    th: DataFrame,
+def _epoch_sink(
+    stream: DataFrame,
+    checkpoint_path: str,
+    write_epoch: Callable[[DataFrame, int], None],
+    *out_dirs: str,
+) -> None:
+    """Run ``stream`` to the end of its available input, handing each
+    micro-batch to ``write_epoch(batch, epoch_id)`` — the one
+    streaming query every sink here starts. Applies the
+    fresh-checkpoint rule of the sink contract (module docstring) to
+    ``out_dirs``."""
+    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
+        for d in out_dirs:
+            shutil.rmtree(d, ignore_errors=True)
+    (
+        stream.writeStream.foreachBatch(write_epoch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _frame_sink(
+    stream: DataFrame,
     out_path: str,
     checkpoint_path: str,
+    per_batch: Callable[[DataFrame], DataFrame],
 ) -> None:
-    """Streaming twin of the per-batch half of ``corpus_incremental``
-    (pipeline.py): every micro-batch of the crawl stream is digest-
-    deduped against the STATIC history digest table, span-
-    decontaminated against the STATIC benchmark n-gram set, and
-    scored/bucketed against the STATIC pre-fitted unigram model +
-    tercile thresholds — exactly the production daily-crawl loop where
-    history digests, benchmark set, frequency table and thresholds are
-    yesterday's persisted artifacts. The whole body is
-    ``pipeline.dedup_clean_batch`` + ``pipeline.score_against_model``,
-    shared verbatim with the batch key, so stream-accumulated output
-    is batch-exact by construction (pinned by
-    test_stream_corpus_increment_matches_batch). The curriculum
-    POSITION stage is deliberately absent: a global prefix-count over
-    the full increment is a finalization step (write_ordered_corpus),
-    not a per-micro-batch one. Idempotency: each epoch overwrites its
-    own ``epoch=<id>`` directory (the run_upsert_sink discipline —
-    foreachBatch is at-least-once, a plain append would double docs on
-    task retry)."""
-    from labelmain_spark.pipeline import dedup_clean_batch, score_against_model
+    """An epoch sink whose epoch output is the one frame
+    ``per_batch(batch)``, written to ``out_path/epoch=<id>``."""
 
-    def clean_batch(batch: DataFrame, epoch_id: int) -> None:
-        kept = dedup_clean_batch(
-            batch.select("doc_id", "text"), hist_digests, bench
-        )
-        score_against_model(kept, freq, tot, th).write.mode("overwrite").parquet(
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
+        per_batch(batch).write.mode("overwrite").parquet(
             os.path.join(out_path, f"epoch={epoch_id}")
         )
 
-    q = (
-        docs.writeStream.foreachBatch(clean_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_tag_filter_sink(
-    docs: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Streaming twin of tag_and_filter: each crawl micro-batch runs
-    the tagger+mixer expressions (functions/text.py::tag_docs — shared
-    VERBATIM with the batch key, so parity holds by construction; the
-    taggers are row-local, no cross-batch state) and lands as parquet
-    with the keep verdict and reason codes attached. Same idempotent
-    epoch-overwrite discipline as the other sinks: foreachBatch is
-    at-least-once, so each epoch rewrites its OWN epoch=<id> directory
-    instead of appending duplicates on task retry."""
-    from labelmain_spark.functions.text import tag_docs
-
-    def tag_batch(batch: DataFrame, epoch_id: int) -> None:
-        tag_docs(batch.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        docs.writeStream.foreachBatch(tag_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_blocklist_sink(
-    docs: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Streaming twin of blocklist_filter (r7 verdict item 6): the
-    domain-blocklist gate is the FIRST filter a daily-crawl pipeline
-    runs at ingest, so each crawl micro-batch classifies through
-    functions/web.py::blocklist_docs — shared VERBATIM with the batch
-    key; the suffix-rule map is row-local, no cross-batch state, so
-    parity holds by construction — and lands as parquet with the
-    verdict and matched entry attached. Same idempotent
-    epoch-overwrite discipline as the other sinks (foreachBatch is
-    at-least-once; each epoch rewrites its OWN directory)."""
-    from labelmain_spark.functions.web import blocklist_docs
-
-    def block_batch(batch: DataFrame, epoch_id: int) -> None:
-        blocklist_docs(batch.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        docs.writeStream.foreachBatch(block_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_pii_luhn_sink(
-    docs: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Streaming twin of pii_luhn (r7 verdict item 6): the
-    Luhn-validated card scrub is the other ingest-time gate a crawl
-    pipeline runs daily; each micro-batch runs
-    functions/pii.py::luhn_docs — shared VERBATIM with the batch key,
-    row-local array expressions, no cross-batch state — and lands the
-    redacted text + counts as parquet under the idempotent
-    epoch-overwrite discipline."""
-    from labelmain_spark.functions.pii import luhn_docs
-
-    def luhn_batch(batch: DataFrame, epoch_id: int) -> None:
-        luhn_docs(batch.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        docs.writeStream.foreachBatch(luhn_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_decontaminate_sink(
-    docs: DataFrame,
-    bench: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Streaming twin of decontaminate_spans: each micro-batch of the
-    crawl stream is span-decontaminated against the STATIC benchmark
-    n-gram hash table (functions/contamination.py::decontaminate_docs)
-    and appended as parquet shards. The cleaner is per-document given
-    the benchmark — no cross-batch state — so stream-accumulated
-    output is batch-exact (pinned by
-    test_stream_decontaminate_matches_batch). Window functions are
-    unsupported on streaming DataFrames, so the n-gram chain runs
-    under ``foreachBatch``, the standard shape for per-batch
-    relational logic with no cross-batch state; the static bench side
-    re-plans per micro-batch, so a refreshed eval suite is visible on
-    the next trigger. foreachBatch delivery is AT-LEAST-ONCE, so each
-    epoch overwrites its OWN ``epoch=<id>`` partition directory — a
-    replayed batch rewrites the same directory instead of appending
-    duplicates (idempotent, the run_upsert_sink discipline; a plain
-    append would silently double documents on task retry). Production
-    routes the final publish through the versioned atomic pointer in
-    sources/writers."""
-    from labelmain_spark.functions.contamination import decontaminate_docs
-
-    def clean_batch(batch: DataFrame, epoch_id: int) -> None:
-        decontaminate_docs(batch.select("doc_id", "text"), bench).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        docs.writeStream.foreachBatch(clean_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_cms_sink(
-    events: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
-) -> None:
-    """Streaming Count-Min sketch (r11): each micro-batch builds its
-    PARTIAL sketch through functions/sketch.py::cms_build — shared
-    VERBATIM with the batch key, so parity holds by construction —
-    and lands it under its own ``epoch=<id>`` directory (the
-    idempotent epoch-overwrite discipline every sink here uses:
-    foreachBatch is at-least-once, a replayed epoch rewrites its OWN
-    partial, never double-counts). The full-corpus sketch is the
-    cell-wise SUM of the epoch partials (:func:`finalize_cms`):
-    sketch(A ∪ B) = sketch(A) + sketch(B) cell-for-cell is the CMS
-    mergeability property, and exercising it across micro-batches is
-    the streaming form of the same map-side partial / reduce-side
-    merge the batch groupBy does across partitions. The same
-    checkpoint-vs-stale-epochs distinction as run_release_sink
-    applies: a fresh checkpoint clears leftover epochs."""
-    from labelmain_spark.functions.sketch import cms_build
-
-    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
-        shutil.rmtree(out_path, ignore_errors=True)
-
-    def sketch_batch(batch: DataFrame, epoch_id: int) -> None:
-        cms_build(batch.select(key_col), key_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        events.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _epoch_sink(stream, checkpoint_path, write_epoch, out_path)
 
 
 def _epoch_partials(spark: SparkSession, out_path: str, schema: str) -> DataFrame:
@@ -547,6 +290,140 @@ def _epoch_partials(spark: SparkSession, out_path: str, schema: str) -> DataFram
     return spark.read.schema(schema).parquet(out_path)
 
 
+def run_upsert_sink(events: DataFrame, state_path: str, checkpoint_path: str) -> None:
+    """T4: foreachBatch + last-write-wins merge into a parquet state
+    table — the UpdateOne(upsert:true) sink. Re-running a batch is
+    idempotent because the merge is keyed (exactly-once effect from
+    at-least-once delivery, the same property the reference leans on).
+
+    Each merged state is committed as a new version through
+    ``sources.writers.commit_version`` and read back through
+    ``read_published``. A crash before the pointer swap leaves CURRENT
+    on the old version and the streaming checkpoint un-committed, so
+    restart replays the batch; a crash after the swap replays the
+    batch against already-merged state, which the keyed
+    last-write-wins merge makes a no-op."""
+
+    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
+        doc = batch.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max("ts").alias("last_ts"),
+            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
+        )
+        if os.path.isfile(os.path.join(state_path, "CURRENT")):
+            doc = upsert(read_published(batch.sparkSession, state_path), doc, "user_id")
+        commit_version(state_path, doc.write.mode("overwrite").parquet)
+
+    _epoch_sink(events, checkpoint_path, merge_batch)
+
+
+def run_corpus_increment_sink(
+    docs: DataFrame, hist_digests: DataFrame, bench: DataFrame, freq: DataFrame,
+    tot: DataFrame, th: DataFrame, out_path: str, checkpoint_path: str
+) -> None:
+    """Streaming twin of the per-batch half of ``corpus_incremental``
+    (pipeline.py): every micro-batch of the crawl stream is digest-
+    deduped against the STATIC history digest table, span-
+    decontaminated against the STATIC benchmark n-gram set, and
+    scored/bucketed against the STATIC pre-fitted unigram model +
+    tercile thresholds — exactly the production daily-crawl loop where
+    history digests, benchmark set, frequency table and thresholds are
+    yesterday's persisted artifacts. The whole body is
+    ``pipeline.dedup_clean_batch`` + ``pipeline.score_against_model``,
+    shared verbatim with the batch key, so stream-accumulated output
+    is batch-exact by construction (pinned by
+    test_stream_corpus_increment_matches_batch). The curriculum
+    POSITION stage is deliberately absent: a global prefix-count over
+    the full increment is a finalization step (write_ordered_corpus),
+    not a per-micro-batch one."""
+    from labelmain_spark.pipeline import dedup_clean_batch, score_against_model
+
+    def clean_and_score(batch: DataFrame) -> DataFrame:
+        kept = dedup_clean_batch(batch.select("doc_id", "text"), hist_digests, bench)
+        return score_against_model(kept, freq, tot, th)
+
+    _frame_sink(docs, out_path, checkpoint_path, clean_and_score)
+
+
+def run_tag_filter_sink(docs: DataFrame, out_path: str, checkpoint_path: str) -> None:
+    """Streaming twin of tag_and_filter: each crawl micro-batch runs
+    the tagger+mixer expressions (functions/text.py::tag_docs — shared
+    VERBATIM with the batch key, so parity holds by construction; the
+    taggers are row-local, no cross-batch state) and lands as parquet
+    with the keep verdict and reason codes attached."""
+    from labelmain_spark.functions.text import tag_docs
+
+    _frame_sink(docs, out_path, checkpoint_path,
+                lambda batch: tag_docs(batch.select("doc_id", "text")))
+
+
+def run_blocklist_sink(docs: DataFrame, out_path: str, checkpoint_path: str) -> None:
+    """Streaming twin of blocklist_filter (r7 verdict item 6): the
+    domain-blocklist gate is the FIRST filter a daily-crawl pipeline
+    runs at ingest, so each crawl micro-batch classifies through
+    functions/web.py::blocklist_docs — shared VERBATIM with the batch
+    key; the suffix-rule map is row-local, no cross-batch state, so
+    parity holds by construction — and lands as parquet with the
+    verdict and matched entry attached."""
+    from labelmain_spark.functions.web import blocklist_docs
+
+    _frame_sink(docs, out_path, checkpoint_path,
+                lambda batch: blocklist_docs(batch.select("doc_id", "text")))
+
+
+def run_pii_luhn_sink(docs: DataFrame, out_path: str, checkpoint_path: str) -> None:
+    """Streaming twin of pii_luhn (r7 verdict item 6): the
+    Luhn-validated card scrub is the other ingest-time gate a crawl
+    pipeline runs daily; each micro-batch runs
+    functions/pii.py::luhn_docs — shared VERBATIM with the batch key,
+    row-local array expressions, no cross-batch state — and lands the
+    redacted text + counts as parquet."""
+    from labelmain_spark.functions.pii import luhn_docs
+
+    _frame_sink(docs, out_path, checkpoint_path,
+                lambda batch: luhn_docs(batch.select("doc_id", "text")))
+
+
+def run_decontaminate_sink(
+    docs: DataFrame, bench: DataFrame, out_path: str, checkpoint_path: str
+) -> None:
+    """Streaming twin of decontaminate_spans: each micro-batch of the
+    crawl stream is span-decontaminated against the STATIC benchmark
+    n-gram hash table (functions/contamination.py::decontaminate_docs).
+    The cleaner is per-document given the benchmark — no cross-batch
+    state — so stream-accumulated output is batch-exact (pinned by
+    test_stream_decontaminate_matches_batch). Window functions are
+    unsupported on streaming DataFrames, so the n-gram chain runs
+    under ``foreachBatch``, the standard shape for per-batch
+    relational logic with no cross-batch state; the static bench side
+    re-plans per micro-batch, so a refreshed eval suite is visible on
+    the next trigger. Production routes the final publish through the
+    versioned atomic pointer in sources/writers."""
+    from labelmain_spark.functions.contamination import decontaminate_docs
+
+    _frame_sink(docs, out_path, checkpoint_path,
+                lambda batch: decontaminate_docs(batch.select("doc_id", "text"), bench))
+
+
+def run_cms_sink(
+    events: DataFrame, out_path: str, checkpoint_path: str, key_col: str = "user_id"
+) -> None:
+    """Streaming Count-Min sketch (r11): each micro-batch builds its
+    PARTIAL sketch through functions/sketch.py::cms_build — shared
+    VERBATIM with the batch key, so parity holds by construction —
+    and lands it as its epoch's output; a replayed epoch rewrites its
+    own partial and never double-counts. The full-corpus sketch is the
+    cell-wise SUM of the epoch partials (:func:`finalize_cms`):
+    sketch(A ∪ B) = sketch(A) + sketch(B) cell-for-cell is the CMS
+    mergeability property, and exercising it across micro-batches is
+    the streaming form of the same map-side partial / reduce-side
+    merge the batch groupBy does across partitions."""
+    from labelmain_spark.functions.sketch import cms_build
+
+    _frame_sink(events, out_path, checkpoint_path,
+                lambda batch: cms_build(batch.select(key_col), key_col))
+
+
 def finalize_cms(spark: SparkSession, out_path: str) -> DataFrame:
     """Merge the per-epoch partial sketches into the corpus sketch:
     cell-wise sum over (seed, bucket) — the CMS merge operation. The
@@ -560,39 +437,22 @@ def finalize_cms(spark: SparkSession, out_path: str) -> DataFrame:
 
 
 def run_hll_sink(
-    events: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
+    events: DataFrame, out_path: str, checkpoint_path: str, key_col: str = "user_id"
 ) -> None:
     """Streaming HyperLogLog (r11) — the cardinality member of the
     per-micro-batch partial-sketch family (run_cms_sink is the
-    frequency member; same idempotent epoch-overwrite discipline, same
-    checkpoint-vs-stale-epochs handling). Each micro-batch builds its
-    PARTIAL register table through functions/sketch.py::hll_build —
-    shared VERBATIM with the batch key — and the corpus sketch is the
-    cell-wise MAX of the epoch partials (:func:`finalize_hll`):
+    frequency member). Each micro-batch builds its PARTIAL register
+    table through functions/sketch.py::hll_build — shared VERBATIM
+    with the batch key — and the corpus sketch is the cell-wise MAX of
+    the epoch partials (:func:`finalize_hll`):
     hll(A ∪ B) = max(hll(A), hll(B)) register-for-register, which is
     what lets a pipeline keep one 256-row table per shard/day and
     answer COUNT(DISTINCT) over any union of them without ever
     re-shuffling raw keys."""
     from labelmain_spark.functions.sketch import hll_build
 
-    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
-        shutil.rmtree(out_path, ignore_errors=True)
-
-    def sketch_batch(batch: DataFrame, epoch_id: int) -> None:
-        hll_build(batch.select(key_col), key_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"epoch={epoch_id}"))
-
-    q = (
-        events.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _frame_sink(events, out_path, checkpoint_path,
+                lambda batch: hll_build(batch.select(key_col), key_col))
 
 
 def finalize_hll(spark: SparkSession, out_path: str) -> DataFrame:
@@ -606,19 +466,14 @@ def finalize_hll(spark: SparkSession, out_path: str) -> DataFrame:
     )
 
 
-def run_drift_sink(
-    vectors: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
+def run_drift_sink(vectors: DataFrame, out_path: str, checkpoint_path: str) -> None:
     """Streaming embedding-drift partials (late r11) — the third
     member of the per-micro-batch partial family (CMS = frequency,
     HLL = cardinality, this = per-dimension MOMENTS): each
     micro-batch of landing vectors writes its (dim, _n, mx) partial —
     the exact count and micro-unit fixed-point sum from
     functions/vectors.py::_micro_mean_partials, shared VERBATIM with
-    the batch key so parity holds by construction — under the
-    idempotent ``epoch=<id>`` overwrite discipline. Count/sum are
+    the batch key so parity holds by construction. Count/sum are
     mergeable, so the stream's running per-dim means are exact at
     any epoch cut, and :func:`finalize_drift` compares them against
     a FROZEN baseline register (the index's published per-dim means)
@@ -627,10 +482,7 @@ def run_drift_sink(
     into the index (the batch key's docstring has the QA story)."""
     from labelmain_spark.functions.vectors import _micro_mean_partials
 
-    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
-        shutil.rmtree(out_path, ignore_errors=True)
-
-    def drift_batch(batch: DataFrame, epoch_id: int) -> None:
+    def moments(batch: DataFrame) -> DataFrame:
         e = batch.select(
             F.posexplode(F.col("embedding").cast("array<double>")).alias(
                 "dim", "x"
@@ -638,19 +490,11 @@ def run_drift_sink(
         )
         # one partial row per dim per epoch: collapse the per-partition
         # split (the batch is one epoch's bounded slice)
-        _micro_mean_partials(e, ["dim"]).groupBy("dim").agg(
+        return _micro_mean_partials(e, ["dim"]).groupBy("dim").agg(
             F.sum("_n").alias("_n"), F.sum("mx").alias("mx")
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_path, f"epoch={epoch_id}")
         )
 
-    q = (
-        vectors.writeStream.foreachBatch(drift_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _frame_sink(vectors, out_path, checkpoint_path, moments)
 
 
 def finalize_drift(
@@ -703,10 +547,7 @@ def finalize_drift(
 
 
 def run_release_sink(
-    docs: DataFrame,
-    prev_digests: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
+    docs: DataFrame, prev_digests: DataFrame, out_path: str, checkpoint_path: str
 ) -> None:
     """Streaming twin of the snapshot-delta family (r8 verdict item
     8 — the release-engineering loop on a stream): each micro-batch
@@ -716,27 +557,18 @@ def run_release_sink(
     corpus_delta; per-batch the join is stream-static LEFT, so only
     the cur-side statuses (added/changed/unchanged) can fire — and
     (2) lands a per-(lang, source) doc/token PARTIAL aggregate
-    through functions/profile.py::slice_agg. ``removed`` rows and
+    through functions/profile.py::slice_agg, each under its own
+    ``delta/`` and ``parts/`` epoch directory. ``removed`` rows and
     the card-drift table are STREAM-CLOSE reconciles
     (:func:`finalize_release`): a doc that never arrives cannot be
     classified until the release window closes, and drift is an
-    aggregate over the whole snapshot. Same idempotent
-    epoch-overwrite discipline as every sink here (foreachBatch is
-    at-least-once; each epoch rewrites its OWN directory — partials
-    from a replayed epoch overwrite, never double-count)."""
+    aggregate over the whole snapshot — which is why a previous
+    release's epochs at the same ``out_path`` must not survive a
+    fresh checkpoint (they would be summed into this release)."""
     from labelmain_spark.functions.dedup import delta_classify, doc_digest
     from labelmain_spark.functions.profile import slice_agg
 
-    # r10 (advisor): the epoch-overwrite discipline is idempotent only
-    # WITHIN one run — epoch= directories left by a PREVIOUS release at
-    # the same out_path would be silently summed into delta/drift. A
-    # fresh checkpoint means a fresh release run (stale epochs must
-    # go); an existing checkpoint means a crash-resume of THIS run
-    # (landed epochs are committed work availableNow will not replay —
-    # keep them). Checkpoint existence is exactly that distinction.
-    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
-        for sub in ("delta", "parts"):
-            shutil.rmtree(os.path.join(out_path, sub), ignore_errors=True)
+    delta_dir, parts_dir = (os.path.join(out_path, d) for d in ("delta", "parts"))
 
     def release_batch(batch: DataFrame, epoch_id: int) -> None:
         cur = batch.select(
@@ -745,20 +577,12 @@ def run_release_sink(
         )
         delta_classify(
             cur.select("doc_id", "new_digest").join(prev_digests, "doc_id", "left")
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_path, "delta", f"epoch={epoch_id}")
-        )
+        ).write.mode("overwrite").parquet(os.path.join(delta_dir, f"epoch={epoch_id}"))
         slice_agg(cur, "n_docs_cur", "tok_cur").write.mode("overwrite").parquet(
-            os.path.join(out_path, "parts", f"epoch={epoch_id}")
+            os.path.join(parts_dir, f"epoch={epoch_id}")
         )
 
-    q = (
-        docs.writeStream.foreachBatch(release_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _epoch_sink(docs, checkpoint_path, release_batch, delta_dir, parts_dir)
 
 
 def finalize_release(
@@ -774,50 +598,36 @@ def finalize_release(
     drift = functions/profile.py::drift_report over the previous
     aggregate and the order-free SUM of the landed partials —
     exactly the batch keys' values, because long sums are
-    associative and the classify expression is row-local."""
+    associative and the classify expression is row-local. A release
+    window with zero landed batches is valid: every previous doc is
+    ``removed`` and the current aggregate is empty."""
     from labelmain_spark.functions.dedup import delta_classify
     from labelmain_spark.functions.profile import drift_report
 
-    # r10 (advisor): a release window with ZERO landed batches (the
-    # stream source was empty) leaves no delta/parts directories —
-    # reading them unconditionally raised. Semantically an empty
-    # stream is a valid release: every previous doc is `removed` and
-    # the current aggregate is empty, so substitute typed empty frames.
-    delta_dir = os.path.join(out_path, "delta")
-    if os.path.exists(delta_dir):
-        landed = spark.read.parquet(delta_dir).select(
-            "doc_id", "status", "old_digest", "new_digest"
-        )  # drop the epoch partition column the per-epoch layout adds
-    else:
-        landed = spark.createDataFrame(
-            [],
-            "doc_id long, status string, old_digest string, new_digest string",
-        )
+    landed = _epoch_partials(
+        spark,
+        os.path.join(out_path, "delta"),
+        "doc_id long, status string, old_digest string, new_digest string",
+    ).drop("epoch")  # the partition column of the per-epoch layout
     removed = delta_classify(
         prev_digests.join(landed.select("doc_id"), "doc_id", "left_anti").withColumn(
             "new_digest", F.lit(None).cast("string")
         )
     )
     delta = landed.unionByName(removed)
-    parts_dir = os.path.join(out_path, "parts")
-    if os.path.exists(parts_dir):
-        parts = spark.read.parquet(parts_dir)
-    else:
-        parts = spark.createDataFrame(
-            [], "lang string, source string, n_docs_cur long, tok_cur long"
+    cur_agg = (
+        _epoch_partials(
+            spark,
+            os.path.join(out_path, "parts"),
+            "lang string, source string, n_docs_cur long, tok_cur long",
         )
-    cur_agg = parts.groupBy("lang", "source").agg(
-        F.sum("n_docs_cur").alias("n_docs_cur"),
-        F.sum("tok_cur").alias("tok_cur"),
+        .groupBy("lang", "source")
+        .agg(F.sum("n_docs_cur").alias("n_docs_cur"), F.sum("tok_cur").alias("tok_cur"))
     )
     return delta, drift_report(prev_agg, cur_agg)
 
 
-def run_shard_sink(
-    docs: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-) -> None:
+def run_shard_sink(docs: DataFrame, out_path: str, checkpoint_path: str) -> None:
     """Streaming shard-frontier assignment — ``shard_pack`` for an
     APPEND-ONLY corpus: a crawl lands documents continuously, and the
     export layer wants each doc's global shard assignment without
@@ -832,30 +642,22 @@ def run_shard_sink(
     files land in doc_id order the stream reproduces the batch
     ``shard_pack`` row-for-row (the parity pin).
 
-    Idempotency: foreachBatch is at-least-once, so the frontier must
-    be REPLAY-STABLE — each epoch writes its own token total under
-    ``frontier/epoch=<id>`` and reads only epochs STRICTLY BELOW
-    itself when rebasing (its own stale directory from a crashed
-    attempt is thereby excluded), making a replayed epoch recompute
-    the byte-identical assignment. The frontier read is one tiny
-    summary row per prior epoch — O(epochs), never O(corpus) — which
-    is what keeps the rebase constant-cost at 100 TB where re-summing
-    landed docs would be a full manifest scan per batch. Same
-    fresh-checkpoint-clears-stale-epochs rule as run_release_sink."""
-    if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
-        for sub in ("assign", "frontier"):
-            shutil.rmtree(os.path.join(out_path, sub), ignore_errors=True)
-
-    def assign_batch(batch: DataFrame, epoch_id: int) -> None:
-        _shard_assign_epoch(batch, out_path, epoch_id)
-
-    q = (
-        docs.writeStream.foreachBatch(assign_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    Replay rule: the frontier must be REPLAY-STABLE — each epoch
+    writes its own token total under ``frontier/epoch=<id>`` and reads
+    only epochs STRICTLY BELOW itself when rebasing (its own stale
+    directory from a crashed attempt is thereby excluded), making a
+    replayed epoch recompute the byte-identical assignment. The
+    frontier read is one tiny summary row per prior epoch — O(epochs),
+    never O(corpus) — which is what keeps the rebase constant-cost at
+    100 TB where re-summing landed docs would be a full manifest scan
+    per batch."""
+    _epoch_sink(
+        docs,
+        checkpoint_path,
+        lambda batch, epoch_id: _shard_assign_epoch(batch, out_path, epoch_id),
+        os.path.join(out_path, "assign"),
+        os.path.join(out_path, "frontier"),
     )
-    q.awaitTermination()
 
 
 def _shard_assign_epoch(batch: DataFrame, out_path: str, epoch_id: int) -> None:

@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import types as T
 
 from labelmain_spark.sources.readers import TABLES, load_table
-from labelmain_spark.streaming.incremental import _events_ts_is_long_nanos, events_schema
+from labelmain_spark.streaming.incremental import stream_events
 
 # What the code paths assume about the parquet files on disk. Values are
 # sets of acceptable pyarrow type strings: time-typed columns accept
@@ -115,8 +115,8 @@ def test_fixture_schema_tripwire(sf_dir, table):
         assert got[col] in ok, (
             f"FIXTURE DRIFT: {table}.{col} is parquet {got[col]!r}, but the "
             f"readers only handle {sorted(ok)}. Update "
-            f"labelmain_spark/sources/readers.py (batch) and "
-            f"labelmain_spark/streaming/incremental.py (stream schema) together."
+            f"labelmain_spark/sources/readers.py: normalize_events_ts is the "
+            f"one ts rule, used by load_table and stream_events alike."
         )
 
 
@@ -128,11 +128,11 @@ def test_events_ts_normalized_to_timestamp(spark, sf_dir):
         f"events.ts loaded as {df.schema['ts'].dataType}, expected TimestampType — "
         "the normalization branch in readers.load_table missed this layout"
     )
-    # stream schema must take the matching branch for the same files
-    nanos = _events_ts_is_long_nanos(sf_dir)
-    ts_field = events_schema(sf_dir)["ts"].dataType
-    expected = T.LongType() if nanos else T.TimestampNTZType()
-    assert ts_field == expected
+    # the stream over the same files must normalize to the same type
+    ts_field = stream_events(spark, sf_dir).schema["ts"].dataType
+    assert isinstance(ts_field, T.TimestampType), (
+        f"stream_events ts is {ts_field}, expected TimestampType"
+    )
 
 
 NANOS_ROWS = [
@@ -161,11 +161,9 @@ def test_nanos_fallback_roundtrip(spark, tmp_path):
     """The legacy TIMESTAMP(NANOS) branch (readers.py nanosAsLong +
     div-1000) is dead code against current fixtures; keep it alive by
     writing a real nanos parquet and asserting the µs truncation matches
-    what DuckDB's epoch semantics would produce."""
+    what DuckDB's epoch semantics would produce. The stream over the
+    same file must yield the same TIMESTAMP values."""
     _write_nanos_events(str(tmp_path / "events.parquet"))
-    # footer probe must classify this file as legacy long-nanos
-    assert _events_ts_is_long_nanos(str(tmp_path))
-    assert events_schema(str(tmp_path))["ts"].dataType == T.LongType()
 
     df = load_table(spark, str(tmp_path), "events")
     assert isinstance(df.schema["ts"].dataType, T.TimestampType)
@@ -175,3 +173,11 @@ def test_nanos_fallback_roundtrip(spark, tmp_path):
         assert got[event_id] == want.replace(tzinfo=None), (
             f"event {event_id}: ns={ns} loaded as {got[event_id]}, want {want}"
         )
+
+    stream = stream_events(spark, str(tmp_path))
+    assert isinstance(stream.schema["ts"].dataType, T.TimestampType)
+    stream.select("event_id", "ts").writeStream.format("memory").queryName(
+        "nanos_stream"
+    ).trigger(availableNow=True).start().awaitTermination()
+    streamed = {r.event_id: r.ts for r in spark.sql("SELECT * FROM nanos_stream").collect()}
+    assert streamed == got

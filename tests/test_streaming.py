@@ -5,6 +5,7 @@ idempotent across replays."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -60,14 +61,20 @@ def test_stream_ttl_dedup(spark, sf_dir):
 def test_upsert_sink_idempotent_replay(spark, sf_dir):
     """Running the sink twice (fresh checkpoint → full replay) must
     converge to the same state — the at-least-once + idempotent-merge
-    contract (T4)."""
+    contract (T4). Each merged state is a version committed by
+    writers.commit_version, whose prune keeps only the live version
+    and the one before it."""
+    from labelmain_spark.sources.writers import read_published
+
     with tempfile.TemporaryDirectory() as tmp:
         state = f"{tmp}/state"
         inc.run_upsert_sink(inc.stream_events(spark, sf_dir), state, f"{tmp}/cp1")
-        first = sorted(map(str, inc.read_state(spark, state).collect()))
+        first = sorted(map(str, read_published(spark, state).collect()))
         inc.run_upsert_sink(inc.stream_events(spark, sf_dir), state, f"{tmp}/cp2")
-        second = sorted(map(str, inc.read_state(spark, state).collect()))
+        second = sorted(map(str, read_published(spark, state).collect()))
         assert first == second
+        versions = [d for d in os.listdir(state) if d.startswith("v")]
+        assert len(versions) <= 2, versions
 
 
 def test_stateful_running_totals_matches_batch(spark, sf_dir):
@@ -553,15 +560,11 @@ def test_stream_release_matches_batch(spark, sf_dir, tmp_path):
     )
 
 
-def test_release_empty_stream_and_stale_epoch_hygiene(spark, sf_dir, tmp_path):
-    """r10 (advisor): (a) a release window whose stream lands ZERO
+def test_release_empty_stream_finalizes(spark, sf_dir, tmp_path):
+    """r10 (advisor): a release window whose stream lands ZERO
     batches must still finalize — every previous doc classifies as
     `removed` and drift sees an empty current aggregate (no raise on
-    the missing delta/parts directories); (b) epoch= directories left
-    at the same out_path by a PREVIOUS release run must NOT leak into
-    a new run's reconcile — a fresh checkpoint clears them, while a
-    resumed (existing) checkpoint keeps its own committed epochs."""
-    import labelmain_spark.streaming.incremental as inc
+    the missing delta/parts directories)."""
     from labelmain_spark.functions.dedup import delta_snapshots
     from labelmain_spark.functions.profile import slice_agg
     from labelmain_spark.sources.readers import load_table
@@ -572,13 +575,6 @@ def test_release_empty_stream_and_stale_epoch_hygiene(spark, sf_dir, tmp_path):
     prev_digests, cur = delta_snapshots(docs)
     prev_agg = slice_agg(docs.limit(0), "n_docs_prev", "tok_prev")
     out_path = str(tmp_path / "release")
-
-    # ---- (b) stale epochs from a "previous run" at the same path
-    stale = str(tmp_path / "release/delta/epoch=999")
-    cur.limit(3).selectExpr(
-        "doc_id", "'added' AS status",
-        "CAST(NULL AS STRING) AS old_digest", "'stale' AS new_digest",
-    ).write.parquet(stale)
 
     # empty landing zone -> availableNow stream with zero batches
     landing = str(tmp_path / "landing")
@@ -591,12 +587,105 @@ def test_release_empty_stream_and_stale_epoch_hygiene(spark, sf_dir, tmp_path):
 
     delta, drift = inc.finalize_release(spark, prev_digests, prev_agg, out_path)
     rows = delta.collect()
-    # stale epoch purged: nothing 'added'; empty stream: ALL prev docs removed
     assert rows and all(r.status == "removed" for r in rows)
     assert {r.doc_id for r in rows} == {
         r.doc_id for r in prev_digests.select("doc_id").collect()
     }
     assert drift.count() == 0  # both aggregates empty -> no drift rows
+
+
+@pytest.fixture(scope="module")
+def small_landing(spark, sf_dir, tmp_path_factory):
+    """Small one-file landing zones (documents, event keys, vectors):
+    each sink run over one of them is exactly one epoch, ``epoch=0``."""
+    from labelmain_spark.sources.readers import load_table
+
+    root = tmp_path_factory.mktemp("landing")
+    tables = {
+        "docs": load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text", "lang", "source").orderBy("doc_id").limit(40),
+        "events": load_table(spark, sf_dir, "events")
+        .select("user_id").orderBy("event_id").limit(200),
+        "vectors": load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding").orderBy("vec_id").limit(20),
+    }
+    for name, df in tables.items():
+        df.coalesce(1).write.parquet(str(root / name))
+    return str(root)
+
+
+def _epoch_sink_case(spark, land, sink, out):
+    """(run(checkpoint), output dirs) for one epoch sink over the
+    ``small_landing`` zones, with small static sides."""
+    from labelmain_spark.functions.contamination import benchmark_ngrams
+
+    def stream(table):
+        path = os.path.join(land, table)
+        return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+
+    def texts():
+        return stream("docs").select("doc_id", "text")
+
+    docs = spark.read.parquet(os.path.join(land, "docs")).select("doc_id", "text")
+    bench = benchmark_ngrams(docs.limit(5))
+    if sink == "corpus_increment":
+        hist = spark.createDataFrame([], "h string")
+        freq = (
+            docs.select(F.explode(F.split("text", " ")).alias("term"))
+            .groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        tot = freq.agg(F.sum("cnt").alias("total"))
+        th = spark.createDataFrame([(5.0, 10.0)], "t1 double, t2 double")
+        return (lambda ck: inc.run_corpus_increment_sink(
+            texts(), hist, bench, freq, tot, th, out, ck)), [out]
+    if sink == "decontaminate":
+        return (lambda ck: inc.run_decontaminate_sink(texts(), bench, out, ck)), [out]
+    if sink == "release":
+        prev = spark.createDataFrame([], "doc_id long, old_digest string")
+        return (lambda ck: inc.run_release_sink(stream("docs"), prev, out, ck)), [
+            os.path.join(out, "delta"), os.path.join(out, "parts"),
+        ]
+    if sink == "shard":
+        return (lambda ck: inc.run_shard_sink(texts(), out, ck)), [
+            os.path.join(out, "assign"), os.path.join(out, "frontier"),
+        ]
+    if sink in ("cms", "hll"):
+        run = getattr(inc, f"run_{sink}_sink")
+        return (lambda ck: run(stream("events"), out, ck)), [out]
+    if sink == "drift":
+        return (lambda ck: inc.run_drift_sink(stream("vectors"), out, ck)), [out]
+    run = getattr(inc, f"run_{sink}_sink")  # tag_filter, blocklist, pii_luhn
+    return (lambda ck: run(texts(), out, ck)), [out]
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        "corpus_increment", "tag_filter", "blocklist", "pii_luhn", "decontaminate",
+        "cms", "hll", "drift", "release", "shard",
+    ],
+)
+def test_fresh_checkpoint_clears_stale_epochs(spark, small_landing, tmp_path, sink):
+    """The fresh-checkpoint rule of the sink contract, on every epoch
+    sink: an ``epoch=999`` directory a previous run left under each
+    output dir must not be read back after a run on a fresh
+    checkpoint, and a resume on that checkpoint must keep the epochs
+    it landed."""
+    out = str(tmp_path / "out")
+    run, out_dirs = _epoch_sink_case(spark, small_landing, sink, out)
+
+    def landed():
+        return {d: sorted(map(str, spark.read.parquet(d).collect())) for d in out_dirs}
+
+    run(str(tmp_path / "ckpt_prev"))
+    want = landed()
+    assert all(want.values()), want
+    for d in out_dirs:
+        shutil.copytree(os.path.join(d, "epoch=0"), os.path.join(d, "epoch=999"))
+    run(str(tmp_path / "ckpt"))
+    assert landed() == want, "stale epoch=999 rows read back after a fresh checkpoint"
+    run(str(tmp_path / "ckpt"))  # resume: nothing new, landed epochs stay
+    assert landed() == want
 
 
 def test_stream_cms_matches_batch(spark, sf_dir, tmp_path):
