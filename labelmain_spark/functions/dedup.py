@@ -153,11 +153,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares the digest), else ``new``.
 
     Scale shape: history flows as a DIGEST-ONLY projection (32 bytes/
-    doc) into a distinct + left join keyed by digest — in production
-    the history digests live in the bucketed label-store layout
-    (labelstore/layout.py), making the probe co-located with no
-    history rescan; the within-batch keep-first is a min partial agg
-    on the (small) batch. Nothing touches historical TEXT, ever."""
+    doc) into a distinct + left join keyed by digest. History is
+    re-read and re-hashed each run, and the planner broadcasts or
+    shuffles the distinct digest set as its size estimate decides;
+    the within-batch keep-first is a min partial agg on the (small)
+    batch. No historical TEXT reaches the join."""
     from labelmain_spark.functions.sampling import _hash_bp_expr
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -198,9 +198,8 @@ def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each snapshot flows as a DIGEST-ONLY projection
     (doc_id, 32-byte sha256) into ONE full-outer join keyed on
     doc_id; classification is pure expression work on the joined row.
-    In production both digest tables live in the bucketed label-store
-    layout (labelstore/layout.py), making the merge co-located —
-    zero-shuffle — and no snapshot's TEXT ever moves."""
+    A full-outer join is not broadcast, so both digest projections
+    are shuffled on doc_id; no snapshot's TEXT crosses the shuffle."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     prev, cur = delta_snapshots(docs)
     j = prev.join(
@@ -266,10 +265,10 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     index; only band-colliding (new, hist) pairs are Jaccard-verified;
     each new doc reports its best historical match. History text is
     touched only for verification of its own candidates — the band
-    index (doc_id + BANDS short signatures) is what persists between
-    crawls, and in production it is the bucketed-layout table the new
-    batch's bands join against, co-located and without a history
-    rescan.
+    index (doc_id + BANDS short signatures) is what a production
+    deployment would persist between crawls. Here it is recomputed
+    from the corpus each run, and the planner broadcasts or shuffles
+    the history bands as its size estimate decides.
 
     Batch split: the same ``incr:`` hash keyspace rule as
     dedup_incremental (lowest INCR_NEW_BP basis points = today).

@@ -3,43 +3,33 @@ reference's MongoDB B-tree index on ``addr`` (the ``filter={"addr": x}``
 point lookups at bitcoinabuse/main.go:245, walletexplorer/main.go:111,
 chainabuse/main.py:85).
 
-Two layouts, two query patterns:
+The layout is hash-bucket partitioned parquet (``write_partitioned`` /
+``lookup_partitioned``): the store is written under ``bucket=N/``
+directories where ``N = pmod(xxhash64(addr), buckets)`` and ``buckets``
+is the writing session's ``spark.sql.shuffle.partitions``, so a refresh
+writes one file per shuffle partition (2 at the benchmark's
+``local[2]``), not a fixed 64 small files. That rule is measured only at
+local bucket counts: a small store written from a session with
+thousands of shuffle partitions gets thousands of tiny files, and
+sizing the count from the store's rows or bytes is still open (ROADMAP
+item 2). After the data commit a ``_layout.json`` manifest next to the
+data records the bucket count and the store schema (Spark's file index
+ignores ``_``-prefixed names, so a plain ``spark.read.parquet(version)``
+is unchanged).
 
-1. **Hash-bucket partitioned parquet** (``write_partitioned`` /
-   ``lookup_partitioned``): the store is written under
-   ``bucket=N/`` directories where ``N = pmod(xxhash64(addr), buckets)``
-   and ``buckets`` is the writing session's
-   ``spark.sql.shuffle.partitions``, so a refresh writes one file per
-   shuffle partition (2 at the benchmark's ``local[2]``), not a fixed 64
-   small files. That rule is measured only at local bucket counts: a
-   small store written from a session with thousands of shuffle
-   partitions gets thousands of tiny files, and sizing the count from
-   the store's rows or bytes is still open (ROADMAP item 3). After the
-   data commit a ``_layout.json`` manifest
-   next to the data records the bucket count and the store schema
-   (Spark's file index ignores ``_``-prefixed names, so a plain
-   ``spark.read.parquet(version)`` is unchanged).
+A point lookup reads the manifest, hashes the address on the driver (a
+Python XXH64 that matches Spark's ``xxhash64``, so no Spark job) with
+the manifest's bucket count, and reads only ``bucket=N/`` with the
+manifest schema: no listing job, no schema-inference job, one scan
+task. The partition filter and the addr equality pushed to parquet row
+groups stay in the plan. A bucket that was never written has no
+directory; the lookup then returns an empty frame with the manifest
+schema without running anything.
 
-   A point lookup reads the manifest, hashes the address on the driver
-   (a Python XXH64 that matches Spark's ``xxhash64``, so no Spark job)
-   with the manifest's bucket count, and reads only ``bucket=N/`` with
-   the manifest schema: no listing job, no schema-inference job, one
-   scan task. The partition filter and the addr equality pushed to
-   parquet row groups stay in the plan. A bucket that was never written
-   has no directory; the lookup then returns an empty frame with the
-   manifest schema without running anything.
-
-2. **Bucketed managed table** (``write_bucketed``): ``bucketBy(addr)``
-   pre-shuffles the store ONCE at write time. Every later
-   consolidation merge (full-outer join on addr — the reference's
-   per-refresh upsert) then plans with NO Exchange on the store side:
-   the join reads co-located buckets. At 100 TB the store-side shuffle
-   is the single biggest cost of a refresh, and this removes it from
-   every refresh forever in exchange for one write-time shuffle.
-
-Both are config/layout choices around plain DataFrames — no engine
-code, which is the point: Spark's planner exploits the layout
-automatically (partition pruning; bucket-aware SortMergeJoin).
+The layout serves lookups only. The refresh merge
+(``store.consolidate``) reads a version as plain parquet and shuffles
+it on addr: the bucket directories are not a Spark bucketing the
+planner can use to skip that exchange.
 """
 
 from __future__ import annotations
@@ -192,74 +182,3 @@ def lookup_partitioned(spark: SparkSession, path: str, addr: str) -> DataFrame:
         return spark.createDataFrame([], schema).limit(0)
     pred = (F.col(BUCKET_COL) == F.lit(bucket)) & (F.col("addr") == F.lit(addr))
     return df.filter(pred).drop(BUCKET_COL)
-
-
-def write_bucketed(
-    store: DataFrame, table: str, buckets: int | None = None, sorted_by: str = "addr"
-) -> None:
-    """Save the store as a managed table bucketed+sorted on addr —
-    the write-once shuffle that makes every subsequent addr-join
-    shuffle-free on this side.
-
-    Bucket count must equal ``spark.sql.shuffle.partitions`` (the
-    default here): with a mismatch the planner falls back to a plain
-    scan ("Bucketed: false — disabled by query planner") and shuffles
-    BOTH join sides, which silently forfeits the whole point (verified
-    in tests/test_layout.py: 8 buckets under 32 shuffle partitions →
-    2 exchanges; 32 → 1)."""
-    if buckets is None:
-        buckets = int(store.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    (
-        store.write.mode("overwrite")
-        .bucketBy(buckets, "addr")
-        .sortBy(sorted_by)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def write_digest_history(
-    digests: DataFrame, table: str, buckets: int | None = None
-) -> None:
-    """Persist a corpus DIGEST history (1 column ``h``, 32 B/doc) as a
-    bucketed+sorted managed table — the production artifact behind
-    every incremental-dedup docstring's "history probe is co-located"
-    claim (functions/dedup.py::dedup_incremental,
-    pipeline.py::corpus_incremental stage 2,
-    streaming/incremental.py::incremental_dedup_stream). Written once
-    per snapshot; every day's batch then anti-joins it with NO
-    Exchange under the history scan (asserted in
-    tests/test_layout.py::test_digest_history_probe_is_colocated).
-    Same bucket-count contract as write_bucketed."""
-    if buckets is None:
-        buckets = int(digests.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    (
-        digests.write.mode("overwrite")
-        .bucketBy(buckets, "h")
-        .sortBy("h")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def probe_history_digests(
-    spark: SparkSession, table: str, batch: DataFrame
-) -> DataFrame:
-    """Incremental-dedup history probe against the bucketed digest
-    store: batch rows whose digest history has never seen (the 'new'
-    survivors). The store side reads its buckets in place — only the
-    (small) batch shuffles, and historical TEXT never exists in this
-    plan at all: the store IS digests."""
-    return batch.join(spark.table(table), "h", "left_anti")
-
-
-def consolidate_against_bucketed(
-    spark: SparkSession, table: str, fresh: DataFrame
-) -> DataFrame:
-    """The refresh merge against a bucketed store: full-outer join on
-    addr where the store side reads its buckets in place (no Exchange
-    under the store scan — asserted in tests/test_layout.py). The
-    fresh side still shuffles, but fresh ≪ store at every refresh."""
-    from labelmain_spark.labelstore.store import consolidate
-
-    return consolidate(spark.table(table), fresh)

@@ -7,41 +7,33 @@ whole array, bitcoinabuse/main.go:239-245; walletexplorer $addToSet-
 appends, walletexplorer/main.go:98-113). This module is what a user of
 the reference would switch to:
 
-- the label document schema (`LABEL_STRUCT`),
-- per-source extractors building label tables from landed data,
+- per-source extractors building label tables from landed data, one
+  doc per addr with a sorted `labels` array of
+  `{name, date, type, desc, src}` structs,
 - `consolidate` — the cross-source merge with an explicit policy for
   the $set-vs-$addToSet wrinkle (SURVEY.md §7 M2): labels live in
   per-source namespaces; consolidation unions namespaces and dedups
   within them, so one source's refresh can never clobber another's
   labels (the bug waiting to happen in the reference).
-- the query surface: point lookup, per-source/type stats.
+- the query surface: per-source/type stats (the point lookup is
+  ``layout.lookup_partitioned`` over a stored version).
 
 Scale layout (labelstore/layout.py): each store version is hash-bucketed
 on addr into one bucket per shuffle partition of the writing session,
 with a ``_layout.json`` manifest recording the bucket count and
 schema, so a point lookup reads one bucket directory in one task. The
-consolidate merge joins on addr and should run against a store
-bucketed on addr so the state side never re-shuffles (see
-operators/merge.py notes).
+consolidate merge is a full-outer join on addr, which Spark does not
+broadcast: against a stored version both sides are shuffled on addr,
+whatever the broadcast threshold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from labelmain_spark.operators.merge import merge_add_to_set
 from labelmain_spark.sources.readers import load_table
-
-LABEL_STRUCT = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("date", T.StringType()),  # stored raw, as the reference does
-        T.StructField("type", T.StringType()),
-        T.StructField("desc", T.StringType()),
-        T.StructField("src", T.StringType()),
-    ]
-)
 
 
 def _addr(col) -> Column:
@@ -85,25 +77,12 @@ def wallet_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def consolidate(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cross-source consolidation keyed by addr: union the two label
-    arrays, dedup identical structs, keep deterministic order. Because
-    each label carries its `src`, sources occupy disjoint namespaces —
-    a $set refresh from one source replaces only its own namespace
+    """Cross-source consolidation keyed by addr: the $addToSet merge
+    (sorted distinct union of the two label arrays). Because each label
+    carries its `src`, sources occupy disjoint namespaces — a $set
+    refresh from one source replaces only its own namespace
     (replace-by-source policy), never the other's."""
-    empty = F.array().cast(T.ArrayType(LABEL_STRUCT))
-    aa, bb = a.alias("a"), b.alias("b")
-    joined = aa.join(bb, F.col("a.addr") == F.col("b.addr"), "full_outer")
-    return joined.select(
-        F.coalesce(F.col("a.addr"), F.col("b.addr")).alias("addr"),
-        F.array_sort(
-            F.array_distinct(
-                F.concat(
-                    F.coalesce(F.col("a.labels"), empty),
-                    F.coalesce(F.col("b.labels"), empty),
-                )
-            )
-        ).alias("labels"),
-    )
+    return merge_add_to_set(a, b, "addr", "labels")
 
 
 def refresh_source(store: DataFrame, src: str, fresh: DataFrame) -> DataFrame:
@@ -115,10 +94,6 @@ def refresh_source(store: DataFrame, src: str, fresh: DataFrame) -> DataFrame:
         F.filter("labels", lambda l: l["src"] != F.lit(src)).alias("labels"),
     ).filter(F.size("labels") > 0)
     return consolidate(stripped, fresh)
-
-
-def lookup(store: DataFrame, addr: str) -> DataFrame:
-    return store.filter(F.col("addr") == F.lit(addr))
 
 
 def label_stats_df(store: DataFrame) -> DataFrame:

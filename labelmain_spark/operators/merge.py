@@ -16,11 +16,10 @@ policies into the same collection:
 Production form on a table store is a single Delta/Iceberg
 `MERGE INTO t USING s ON t.key = s.key` (no full-outer rewrite of the
 untouched partitions); the DataFrame form here is the engine-agnostic,
-oracle-checkable core with identical semantics. At 100 TB the updates
-side is small relative to state, so the physical plan to want is a
-shuffle on the key with the state side pre-bucketed by key — bucketing
-the state table by addr removes the state-side shuffle from every
-incremental merge.
+oracle-checkable core with identical semantics. Both merges are
+full-outer joins on the key, which Spark does not broadcast, so the
+state side is shuffled on the key in every merge however small the
+updates side is.
 """
 
 from __future__ import annotations

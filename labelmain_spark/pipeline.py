@@ -247,16 +247,16 @@ def corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     training order and drive write_ordered_corpus.
 
     At 100 TB: history enters the plan as three PRE-FITTABLE bounded
-    artifacts — the digest set (32 B/doc, bucketed-layout co-located
-    probe), the unigram frequency table (size-gated broadcast, r9)
-    and the 1-row tercile thresholds — plus the benchmark n-gram set
-    (benchmark-bounded). The fixture fits all of them in-plan from
-    the prev snapshot so the DuckDB oracle can re-derive everything,
-    but no stage ever shuffles history TEXT: the only corpus-scale
-    work is over TODAY'S batch (delta anti/semi probes, the span
-    hash chain, one explode for scoring, the prefix-count). Nothing
-    is quadratic; no global sort; every join against history is
-    broadcast- or digest-keyed."""
+    artifacts — the digest set (32 B/doc, broadcast or shuffled on the
+    digest as its size decides), the unigram frequency table
+    (size-gated broadcast, r9) and the 1-row tercile thresholds — plus
+    the benchmark n-gram set (benchmark-bounded). The fixture fits all
+    of them in-plan from the prev snapshot so the DuckDB oracle can
+    re-derive everything, but no stage ever shuffles history TEXT: the
+    only corpus-scale work is over TODAY'S batch (delta anti/semi
+    probes, the span hash chain, one explode for scoring, the
+    prefix-count). Nothing is quadratic; no global sort; every join
+    against history is broadcast- or digest-keyed."""
     from labelmain_spark.functions.contamination import (
         CONTAM_EVAL_BP,
         benchmark_ngrams,

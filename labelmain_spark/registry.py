@@ -358,8 +358,8 @@ PRIORITY = [
     #   paragraph-explode + LEFT ANTI strip shape is the J3 carrier,
     #   plan-asserted in pytest);
     # dedup_incremental_near out after five green rows (r6-r10;
-    #   dedup_incremental — rotating in — probes the same bucketed
-    #   digest-history under the simpler exact semantics, keeping the
+    #   dedup_incremental — rotating in — probes the same digest
+    #   history under the simpler exact semantics, keeping the
     #   incremental-probe family's driver row through a
     #   never-verified member).
     "dedup_cross_source",

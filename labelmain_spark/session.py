@@ -67,7 +67,9 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Managed tables (bucketed-layout demos) go to tmp, not the repo.
+        # A deployment path: Spark's warehouse (managed tables, and the
+        # spark-warehouse dir a session may create) goes under
+        # SPARK_GRAFT_WAREHOUSE or tmp, never the working directory.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

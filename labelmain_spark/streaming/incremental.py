@@ -112,13 +112,12 @@ def enriched_counts(events: DataFrame, dim: DataFrame) -> DataFrame:
     form of the label-enrichment query surface (events enriched with
     the label store by key, then aggregated per window).
 
-    At scale the static side is either broadcast (small dim) or a
-    bucketed table co-located with the stream's partitioning; the join
-    re-plans per micro-batch, so a refreshed dim is picked up on the
-    next trigger — the same freshness contract the reference gets from
-    re-reading Mongo every cycle. The broadcast hint is SIZE-GATED
-    (r9): a caller-supplied user dimension is corpus-scale at 100 TB,
-    and the gate's shuffle fallback co-partitions on user_id."""
+    The join re-plans per micro-batch, so a refreshed dim is picked up
+    on the next trigger — the same freshness contract the reference
+    gets from re-reading Mongo every cycle. The broadcast hint is
+    SIZE-GATED (r9): a small dim is broadcast, while a caller-supplied
+    user dimension is corpus-scale at 100 TB, and the gate's fallback
+    shuffles both sides on user_id."""
     from labelmain_spark.sources.readers import broadcast_if_bounded
 
     joined = events.join(broadcast_if_bounded(dim), "user_id", "left")
@@ -142,9 +141,9 @@ def incremental_dedup_stream(docs: DataFrame, history_digests: DataFrame) -> Dat
     history digest table — survivors are the docs history has never
     seen. Stream-static anti joins are stateless (no watermark
     needed); the static side re-plans per micro-batch, so a history
-    refreshed between triggers is visible on the next one — and in
-    production the static side is the bucketed label-store digest
-    table, making the probe co-located (labelstore/layout.py).
+    refreshed between triggers is visible on the next one. The planner
+    broadcasts or shuffles the static digest table as its size
+    estimate decides.
 
     Within-batch duplicates are NOT collapsed here (that is the batch
     twin's 'dup_in_batch' class, a stateful within-stream question
@@ -185,9 +184,9 @@ def incremental_prefix_stream(docs: DataFrame, history: DataFrame) -> DataFrame:
 
     Scale shape: two stream-static equi-joins keyed on the 16-byte
     block digest (stateless — no watermark, no stream state); the
-    static side is the history's block index, bucketed in production
-    so the probe is co-located. Same quadratic-per-block exposure and
-    same W lever as the batch key."""
+    static side is the history's block index, rebuilt per micro-batch
+    and broadcast or shuffled as its size estimate decides. Same
+    quadratic-per-block exposure and same W lever as the batch key."""
     from labelmain_spark.functions.dedup import _prefix_keyed
 
     kb = _prefix_keyed(docs)

@@ -1,5 +1,6 @@
-"""Layout tests: partition-pruned point lookups and the bucketed-store
-shuffle elimination — the physical-design half of the label store."""
+"""Layout tests: partition-pruned point lookups over hash-bucket store
+versions and the IVF cell store — the physical-design half of the
+label store."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from labelmain_spark.labelstore import layout
-from labelmain_spark.labelstore.store import abuse_labels, consolidate, wallet_labels
+from labelmain_spark.labelstore.store import abuse_labels, wallet_labels
 from labelmain_spark.plans import checks
 
 
@@ -201,72 +202,6 @@ def test_version_read_runs_no_listing_job(spark, sf_dir, tmp_path):
     assert (jobs, tasks) == (1, 1), f"version read ran {jobs} jobs / {tasks} tasks"
     assert sorted(got[0].drop(layout.BUCKET_COL).columns) == sorted(store.columns)
     assert got[0].count() == store.count()
-
-
-def test_bucketed_consolidate_eliminates_store_shuffle(spark, sf_dir, tmp_path):
-    a = abuse_labels(spark, sf_dir)
-    b = wallet_labels(spark, sf_dir)
-    layout.write_bucketed(a, "test_store_bucketed")
-
-    plain_path = str(tmp_path / "store_plain")
-    a.write.mode("overwrite").parquet(plain_path)
-
-    try:
-        with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-            bucketed = layout.consolidate_against_bucketed(
-                spark, "test_store_bucketed", b
-            )
-            plain = consolidate(spark.read.parquet(plain_path), b)
-            n_bucketed = checks.count_exchanges(bucketed)
-            n_plain = checks.count_exchanges(plain)
-            assert n_bucketed < n_plain, (
-                f"bucketed store did not save a shuffle: "
-                f"{n_bucketed} vs {n_plain} exchanges"
-            )
-            got = sorted(map(str, bucketed.collect()))
-            want = sorted(map(str, plain.collect()))
-            assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS test_store_bucketed")
-
-
-def test_digest_history_probe_is_colocated(spark, sf_dir, tmp_path):
-    """The incremental-dedup history probe against the bucketed digest
-    store must read history in place: the LEFT ANTI join plans with
-    strictly fewer Exchanges than the same probe against plain
-    parquet, and produces identical survivors — the measured form of
-    every 'history probe is co-located' docstring claim
-    (dedup_incremental / corpus_incremental / the streaming twin)."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-    from labelmain_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("h")
-    )
-    is_new = F.expr(_hash_bp_expr("doc_id", "spark", salt="incr:")) < 1000
-    hist = docs.filter(~is_new).select("h").distinct()
-    batch = docs.filter(is_new)
-
-    layout.write_digest_history(hist, "test_digest_history")
-    plain_path = str(tmp_path / "hist_plain")
-    hist.write.mode("overwrite").parquet(plain_path)
-    try:
-        with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-            bucketed = layout.probe_history_digests(
-                spark, "test_digest_history", batch
-            )
-            plain = batch.join(spark.read.parquet(plain_path), "h", "left_anti")
-            n_bucketed = checks.count_exchanges(bucketed)
-            n_plain = checks.count_exchanges(plain)
-            assert n_bucketed < n_plain, (
-                f"bucketed digest store did not save the history shuffle: "
-                f"{n_bucketed} vs {n_plain} exchanges"
-            )
-            got = sorted(r.doc_id for r in bucketed.collect())
-            want = sorted(r.doc_id for r in plain.collect())
-            assert got == want and got
-    finally:
-        spark.sql("DROP TABLE IF EXISTS test_digest_history")
 
 
 def _seeded_ivf_store(spark, sf_dir, tmp_path):
