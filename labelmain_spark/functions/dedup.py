@@ -35,11 +35,7 @@ from labelmain_spark.sources.readers import load_table, table_row_count
 # one-directional: sampling → text → parity/readers never reaches back
 # into dedup, so this module-level import (the ORACLE literal needs it
 # at import time anyway) cannot cycle
-from labelmain_spark.functions.sampling import _hash_bp_expr as _sampling_hash_bp_expr
-
-
-def _sampling_hash_bp(key_col: str, engine: str, salt: str) -> str:
-    return _sampling_hash_bp_expr(key_col, engine, salt=salt)
+from labelmain_spark.functions.sampling import _hash_bp_expr
 
 MINHASH_K = 12
 BANDS = 4  # rows per band = MINHASH_K // BANDS = 3
@@ -158,8 +154,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles the distinct digest set as its size estimate decides;
     the within-batch keep-first is a min partial agg on the (small)
     batch. No historical TEXT reaches the join."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("h")
     )
@@ -225,8 +219,6 @@ def delta_snapshots(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     projection (doc_id, old_digest) and ``cur`` as the current
     snapshot's doc rows with the revision applied to ``text`` (all
     other columns carried through)."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-
     in_prev = F.expr(_hash_bp_expr("doc_id", "spark", salt="snapA:")) < DELTA_BP
     in_cur = F.expr(_hash_bp_expr("doc_id", "spark", salt="snapB:")) < DELTA_BP
     revised = F.expr(_hash_bp_expr("doc_id", "spark", salt="mut:")) < DELTA_MUT_BP
@@ -282,7 +274,6 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pair_jaccard); best-match is a partial-agg max(struct) keyed by
     the new doc — no windows, no all-pairs, nothing rescans history
     text beyond its candidates."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
     from pyspark import StorageLevel
 
     n_docs = table_row_count(spark, sf_dir, "documents")
@@ -1048,7 +1039,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     group_key = F.coalesce(F.col("component"), F.col("doc_id"))
     split = F.when(
-        F.expr(_sampling_hash_bp_expr("group_key", "spark")) < VAL_BP, F.lit("val")
+        F.expr(_hash_bp_expr("group_key", "spark")) < VAL_BP, F.lit("val")
     ).otherwise(F.lit("train"))
     return (
         labeled.withColumn("group_key", group_key)
@@ -1518,8 +1509,6 @@ _MINHASH_PAIRS_SQL = f"""
 """
 
 def _sql_incr_hb() -> str:
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-
     return _hash_bp_expr("doc_id", "duck", salt="incr:")
 
 
@@ -1720,15 +1709,15 @@ ORACLE = {
         WITH prev AS (
             SELECT doc_id, sha256(lower(trim(text))) AS old_digest
             FROM documents
-            WHERE {_sampling_hash_bp("doc_id", "duck", "snapA:")} < {DELTA_BP}
+            WHERE {_hash_bp_expr("doc_id", "duck", salt="snapA:")} < {DELTA_BP}
         ), cur AS (
             SELECT doc_id,
                    sha256(lower(trim(
-                       CASE WHEN {_sampling_hash_bp("doc_id", "duck", "mut:")} < {DELTA_MUT_BP}
+                       CASE WHEN {_hash_bp_expr("doc_id", "duck", salt="mut:")} < {DELTA_MUT_BP}
                             THEN text || ' rev2' ELSE text END
                    ))) AS new_digest
             FROM documents
-            WHERE {_sampling_hash_bp("doc_id", "duck", "snapB:")} < {DELTA_BP}
+            WHERE {_hash_bp_expr("doc_id", "duck", salt="snapB:")} < {DELTA_BP}
         )
         SELECT COALESCE(prev.doc_id, cur.doc_id) AS doc_id,
                CASE WHEN prev.doc_id IS NULL THEN 'added'
@@ -1900,7 +1889,7 @@ ORACLE = {
             FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
         )
         SELECT doc_id, group_key,
-               CASE WHEN {_sampling_hash_bp_expr("group_key", "duck")} < {VAL_BP}
+               CASE WHEN {_hash_bp_expr("group_key", "duck")} < {VAL_BP}
                     THEN 'val' ELSE 'train' END AS split
         FROM keyed
     """,

@@ -290,11 +290,8 @@ def drift_report(prev: DataFrame, cur: DataFrame) -> DataFrame:
 
 
 def _sql_card_drift() -> str:
-    from labelmain_spark.functions.dedup import (
-        DELTA_BP,
-        DELTA_MUT_BP,
-        _sampling_hash_bp,
-    )
+    from labelmain_spark.functions.dedup import DELTA_BP, DELTA_MUT_BP
+    from labelmain_spark.functions.sampling import _hash_bp_expr
 
     pct = sql_stable_round(
         "CAST(COALESCE(c.n_docs_cur, 0) - COALESCE(p.n_docs_prev, 0) AS DOUBLE)"
@@ -306,15 +303,15 @@ def _sql_card_drift() -> str:
             SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs_prev,
                    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tok_prev
             FROM documents
-            WHERE {_sampling_hash_bp("doc_id", "duck", "snapA:")} < {DELTA_BP}
+            WHERE {_hash_bp_expr("doc_id", "duck", salt="snapA:")} < {DELTA_BP}
             GROUP BY lang, source
         ), cur AS (
             SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs_cur,
                    CAST(SUM(len(string_split(
-                       CASE WHEN {_sampling_hash_bp("doc_id", "duck", "mut:")} < {DELTA_MUT_BP}
+                       CASE WHEN {_hash_bp_expr("doc_id", "duck", salt="mut:")} < {DELTA_MUT_BP}
                             THEN text || ' rev2' ELSE text END, ' '))) AS BIGINT) AS tok_cur
             FROM documents
-            WHERE {_sampling_hash_bp("doc_id", "duck", "snapB:")} < {DELTA_BP}
+            WHERE {_hash_bp_expr("doc_id", "duck", salt="snapB:")} < {DELTA_BP}
             GROUP BY lang, source
         )
         SELECT COALESCE(p.lang, c.lang) AS lang,

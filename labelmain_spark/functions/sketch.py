@@ -141,26 +141,18 @@ def _hh_sketch_selectivity(cells: list, d: int = CMS_D) -> float:
     return sel
 
 
-def _hh_sketch(ev: DataFrame, key_col: str, d: int = CMS_D) -> DataFrame:
-    """The sketch-prefiltered tier: build the CMS, inline it as a
-    DENSE d·w array literal (cells are dense integers 0..d·w-1, so
-    element_at is one O(1) positional access — the first cut used a
-    create_map literal, whose GetMapValue is a LINEAR key scan, and
-    4 lookups × ~128 expected depth × 40M rows measured 12.3 s at
-    ev×400; the same lesson as the unigram map-tier cap), then filter
-    rows by the min cell estimate BEFORE the exact count's exchange.
-    No false negatives (CMS never under-estimates) → output equals
-    the naive form exactly."""
-    # bounded collect: exactly d·w ≤ 256 cells regardless of corpus size
-    cells = cms_build(ev, key_col).collect()
-    if not cells:
-        return _hh_exact(ev, key_col).filter(F.lit(False))
-    return _hh_sketch_from_cells(ev, key_col, cells, d)
-
-
 def _hh_sketch_from_cells(
     ev: DataFrame, key_col: str, cells: list, d: int = CMS_D
 ) -> DataFrame:
+    """The sketch-prefiltered tier over collected CMS ``cells``: inline
+    them as a DENSE d·w array literal (cells are dense integers
+    0..d·w-1, so element_at is one O(1) positional access — the first
+    cut used a create_map literal, whose GetMapValue is a LINEAR key
+    scan, and 4 lookups × ~128 expected depth × 40M rows measured
+    12.3 s at ev×400; the same lesson as the unigram map-tier cap),
+    then filter rows by the min cell estimate BEFORE the exact count's
+    exchange. No false negatives (CMS never under-estimates) → output
+    equals the naive form exactly."""
     dense = [0] * (d * CMS_W)
     for r in cells:
         dense[r["seed"] * CMS_W + r["bucket"]] = r["n"]

@@ -19,6 +19,10 @@ Scale design:
   helpers: `_hash_seeds` (centroids), `_ivf_probes` (probe cells) and
   `_ivf_assign` (cell per vector). `ann_lsh_topk` is the didactic
   single-probe OR-construction baseline (scripts/lsh_sweep.py).
+- Every top-k key is candidate generation followed by one exact
+  ranking step, on three shared builders: `_vectors` (the one
+  embeddings read), `_query_vec` (the one driver-side query fetch)
+  and `_rerank` (the one exact rounded-cosine top-k).
 - All dot products run on DOUBLE arrays with `zip_with` +
   `aggregate` — JVM-side, sequential fold, engine-reproducible (the
   DuckDB twin uses list_dot_product over the same doubles).
@@ -35,6 +39,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labelmain_spark.functions.sampling import _hash_bp_expr
 from labelmain_spark.operators.parity import (
     DEC,
     micro_units,
@@ -68,20 +73,63 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# DuckDB twin of `stable_round(cosine(v, q), 4)` over columns v and qv
+_SQL_COS = sql_stable_round(
+    "(list_dot_product(v, qv) / "
+    "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))))",
+    4,
+)
+
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """e(vec_id, v): the embeddings as DOUBLE arrays."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
+def _query(e: DataFrame) -> DataFrame:
+    """The one-row q(q) frame holding the query vector of e(vec_id, v)."""
+    return e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
+
+
+def _query_vec(e: DataFrame) -> list[float] | None:
+    """The query vector on the driver (one job), or None when the
+    corpus is empty or holds no query vector."""
+    row = _query(e).first()
+    return None if row is None or row[0] is None else [float(x) for x in row[0]]
+
+
+def _no_hits(e: DataFrame) -> DataFrame:
+    """The empty top-k: with no query vector a key answers no rows, not
+    a driver crash (the empty-partition contract every key holds —
+    tests/test_empty_inputs.py)."""
+    return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
+
+
+def _rerank(cands: DataFrame, q: DataFrame, keep: Column | None = None) -> DataFrame:
+    """The family's one exact top-k: candidates(vec_id, v, …) minus the
+    query, crossed with the broadcast one-row q(q, …), optionally
+    narrowed by ``keep`` (a predicate over both sides), ranked by
+    (rounded cosine desc, vec_id) — a map-side filter and a
+    TakeOrdered heap, no shuffle."""
+    scored = cands.filter(F.col("vec_id") != QUERY_VEC_ID).crossJoin(F.broadcast(q))
+    if keep is not None:
+        scored = scored.filter(keep)
+    return (
+        scored.select(
+            "vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim")
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
+        .limit(TOP_K)
+    )
+
+
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k neighbors of the query vector
     (vec_id=0), deterministic rank on (rounded cosine desc, vec_id)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("q")
-    )
-    scored = (
-        e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim"))
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc()).limit(TOP_K)
+    e = _vectors(spark, sf_dir)
+    return _rerank(e, _query(e))
 
 
 def _micro_mean_partials(e: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -134,14 +182,6 @@ def embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("_n_total")
 
 
-def _sampling_hash_bp_sql(key_col: str, salt: str) -> str:
-    """DuckDB spelling of the sampling-family hash split (the oracle
-    twin of the salted predicates embedding_drift builds in Spark)."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-
-    return _hash_bp_expr(key_col, "duck", salt=salt)
-
-
 DRIFT_MUT_DIMS = 8     # the fixture perturbation hits dims 0..7 only
 DRIFT_MUT_SHIFT = 0.5  # +shift on those dims for the revised 5%
 DRIFT_EPS = 0.015      # |Δmean| at/above which a dimension is flagged
@@ -174,8 +214,6 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders of headroom), means stable_round(6)ed BEFORE the delta
     subtraction so both engines difference identical doubles; the
     flag compares that deterministic delta against DRIFT_EPS."""
-    from labelmain_spark.functions.sampling import _hash_bp_expr
-
     emb = load_table(spark, sf_dir, "embeddings")
     in_prev = F.expr(_hash_bp_expr("vec_id", "spark", salt="snapA:")) < 9000
     in_cur = F.expr(_hash_bp_expr("vec_id", "spark", salt="snapB:")) < 9000
@@ -415,8 +453,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a query SET, the same signatures become an equi-join key on
     (table_id, sig) — `ann_multiprobe_topk` shows the probing variant,
     `ann_ivf_seeded_topk` the centroid-partitioned one."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(spark, sf_dir)
 
     def signatures(v: Column) -> Column:
         sigs = []
@@ -431,7 +468,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             sigs.append(sig)
         return F.array(*sigs)
 
-    sigd = e.select("vec_id", "v", signatures(F.col("v")).alias("sigs"))
+    # signatures() is built once (its 2,048 plane literals are py4j
+    # calls); the query's signatures ride in the same broadcast row as
+    # the query vector, so the collision test adds no second query join
+    sigd = e.withColumn("sigs", signatures(F.col("v")))
     q = sigd.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("v").alias("q"), F.col("sigs").alias("qsigs")
     )
@@ -439,14 +479,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.zip_with(F.col("sigs"), F.col("qsigs"), lambda a, b: a == b),
         lambda x: x,
     )
-    return (
-        sigd.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .filter(collides)
-        .select("vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
+    return _rerank(sigd, q, keep=collides)
 
 
 def _sql_ann_lsh() -> str:
@@ -469,18 +502,13 @@ def _sql_ann_lsh() -> str:
         ) + ")"
 
     collide = " OR ".join(f"{sig('v', t)} = {sig('qv', t)}" for t in tables)
-    cos = sql_stable_round(
-        "(list_dot_product(v, qv) / "
-        "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))))",
-        4,
-    )
     return f"""
         WITH e AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         ), q AS (
             SELECT v AS qv FROM e WHERE vec_id = {QUERY_VEC_ID}
         )
-        SELECT vec_id, {cos} AS cos_sim
+        SELECT vec_id, {_SQL_COS} AS cos_sim
         FROM e CROSS JOIN q
         WHERE vec_id <> {QUERY_VEC_ID} AND ({collide})
         ORDER BY cos_sim DESC, vec_id ASC LIMIT {TOP_K}
@@ -552,27 +580,11 @@ def _ann_multiprobe(e: DataFrame, n_probes: int = ANN_MP_PROBES) -> DataFrame:
     better recall than the single-bucket probe at bounded extra scan,
     and recall ≥ 0.9 on planted true near-neighbors (cos ≈ 0.99), the
     production near-dup operating point."""
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        # Empty corpus / absent query vector: a valid empty top-k, not
-        # a driver crash (the empty-partition contract every key holds
-        # — tests/test_empty_inputs.py).
-        return (
-            e.select(
-                "vec_id", F.lit(0.0).alias("cos_sim")
-            ).filter(F.lit(False))
-        )
-    probes = _mp_probe_buckets(list(q_row[0]), n_probes)
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return (
-        e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("_sig", _mp_sig())
-        .filter(F.col("_sig").isin(probes))
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
+    qv = _query_vec(e)
+    if qv is None:
+        return _no_hits(e)
+    probes = _mp_probe_buckets(qv, n_probes)
+    return _rerank(e.filter(_mp_sig().isin(probes)), _query(e))
 
 
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,9 +602,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to ORDER BY penalty, combo-list lexicographic), XOR probe buckets,
     signature membership, exact rounded-cosine rerank. The 'rows-only
     by nature' objection the r7 window slot burned on is gone."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return _ann_multiprobe(e)
+    return _ann_multiprobe(_vectors(spark, sf_dir))
 
 
 def _sql_ann_multiprobe() -> str:
@@ -630,11 +640,6 @@ def _sql_ann_multiprobe() -> str:
         f"(CASE WHEN list_dot_product(v, {p}) >= 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
     )
-    cos = sql_stable_round(
-        "(list_dot_product(v, qv) / "
-        "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))))",
-        4,
-    )
     return f"""
         WITH e AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -654,7 +659,7 @@ def _sql_ann_multiprobe() -> str:
             SELECT xor(CAST(m AS BIGINT), CAST(qsig AS BIGINT)) AS bucket
             FROM pen ORDER BY penalty ASC, combo ASC LIMIT {ANN_MP_PROBES}
         )
-        SELECT vec_id, {cos} AS cos_sim
+        SELECT vec_id, {_SQL_COS} AS cos_sim
         FROM e CROSS JOIN q
         WHERE vec_id <> {QUERY_VEC_ID}
           AND CAST(({row_sig}) AS BIGINT) IN (SELECT bucket FROM probes)
@@ -664,19 +669,6 @@ def _sql_ann_multiprobe() -> str:
 
 IVF_K = 16  # coarse-quantizer cells; ~sqrt(N) at real scale
 IVF_NPROBE = 4
-
-
-def _ivf_score(cands: DataFrame, q: DataFrame) -> DataFrame:
-    """Exact-cosine top-k over an (already cell-pruned) candidate set."""
-    return (
-        cands.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
 
 
 def _hash_seeds(e: DataFrame, k: int) -> list[list[float]]:
@@ -722,6 +714,17 @@ def _ivf_assign(e: DataFrame, cents: list[list[float]]) -> DataFrame:
     )
 
 
+def _seeded_cells(
+    spark: SparkSession, sf_dir: str, e: DataFrame, qv: list[float]
+) -> DataFrame:
+    """The seeded IVF head: k = max(2, min(IVF_K, n//60)) hash seeds
+    (k ∝ N keeps ~60 vectors per cell), each vector's cell, and the
+    filter to the query's probed cells — (vec_id, v, cell)."""
+    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
+    cents = _hash_seeds(e, max(2, min(IVF_K, n // 60)))
+    return _ivf_assign(e, cents).filter(F.col("cell").isin(_ivf_probes(qv, cents)))
+
+
 def ann_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF retrieval with a deterministic hash-seeded quantizer: probe
     the `IVF_NPROBE` cells nearest the query, exact cosine inside them.
@@ -729,7 +732,7 @@ def ann_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals: k = max(2, min(IVF_K, n//60)) seed centroids
     (`_hash_seeds`; k ∝ N keeps ~60 vectors per cell), the query's
     probe ranking (`_ivf_probes`), each vector's cell (`_ivf_assign`)
-    and the exact top-k (`_ivf_score`). Recall@10 against brute force
+    and the exact top-k (`_rerank`). Recall@10 against brute force
     is 0.6 at sf0.001 and sf0.01 (tests/test_properties.py).
 
     Scale shape: seed selection is one bounded TakeOrdered collect
@@ -740,16 +743,11 @@ def ann_ivf_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF inverted list, literally. Cell-size skew is the known hazard
     (popular cells → straggler tasks); AQE skew splitting or fat-cell
     splitting mitigates it."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
-    cents = _hash_seeds(e, max(2, min(IVF_K, n // 60)))
-    probes = _ivf_probes([float(x) for x in q_row[0]], cents)
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return _ivf_score(_ivf_assign(e, cents).filter(F.col("cell").isin(probes)), q)
+    e = _vectors(spark, sf_dir)
+    qv = _query_vec(e)
+    if qv is None:
+        return _no_hits(e)
+    return _rerank(_seeded_cells(spark, sf_dir, e, qv), _query(e))
 
 
 def _sql_ann_ivf_seeded() -> str:
@@ -862,8 +860,7 @@ def probe_ivf_store(
 ) -> DataFrame:
     """Exact-cosine top-k over a cell-partitioned store, scanning only
     the probed cells (PartitionFilters — asserted in tests)."""
-    store = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    return _ivf_score(store, q)
+    return _rerank(spark.read.parquet(path).filter(F.col("cell").isin(probe)), q)
 
 
 PQ_M = 8  # subspaces: 64-dim vectors → 8 sub-vectors of 8 dims each
@@ -984,16 +981,9 @@ def ann_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyzing the 128-HOF tree at sf0.01; the banded Arrow encode
     below is the measured replacement, same proof class as
     `_banded_round_matrix`.)"""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-    qv = list(q_row[0])
-    dim = len(qv)
-    if dim != PQ_M * (64 // PQ_M):
-        raise ValueError(f"frozen PQ codebooks assume dim 64, got {dim}")
-    return _pq_frozen_rank(e, qv)
+    e = _vectors(spark, sf_dir)
+    qv = _query_vec(e)
+    return _no_hits(e) if qv is None else _pq_frozen_rank(e, qv)
 
 
 def _pq_frozen_rank(e: DataFrame, qv: list, universe: DataFrame | None = None) -> DataFrame:
@@ -1003,7 +993,10 @@ def _pq_frozen_rank(e: DataFrame, qv: list, universe: DataFrame | None = None) -
     The LUT is Python sequential-fold floats inlined as literals; the
     ADC sum is an exact left-to-right chain over the looked-up
     doubles — the same floats the oracle's lut{m}[code{m}] chain
-    adds."""
+    adds. Every PQ key passes through here, so the codebooks' dim-64
+    contract is checked here once."""
+    if len(qv) != PQ_M * (64 // PQ_M):
+        raise ValueError(f"frozen PQ codebooks assume dim 64, got {len(qv)}")
     dsub = len(qv) // PQ_M
     qn2 = 0.0
     for x in qv:
@@ -1032,16 +1025,7 @@ def _pq_frozen_rank(e: DataFrame, qv: list, universe: DataFrame | None = None) -
         .limit(PQ_RERANK)
         .select("vec_id")
     )
-    q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("q"))
-    return (
-        e.join(F.broadcast(cands), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", stable_round(cosine(F.col("v"), F.col("q")), 4).alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
+    return _rerank(e.join(F.broadcast(cands), "vec_id"), _query(e))
 
 
 def _sql_ann_pq_frozen(ivf: bool = False, seeded: bool = False) -> str:
@@ -1086,11 +1070,6 @@ def _sql_ann_pq_frozen(ivf: bool = False, seeded: bool = False) -> str:
         lut_exprs.append(f"{lut_list} AS lut{m}")
         adc_terms.append(f"lut{m}[code{m}]")
     adc = "\n                 + ".join(adc_terms)
-    cos = sql_stable_round(
-        "(list_dot_product(v, qv) / "
-        "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))))",
-        4,
-    )
     ivf_ctes, scan_src = "", f"e WHERE vec_id <> {QUERY_VEC_ID}"
     if seeded:
         qsim = sql_stable_round(
@@ -1176,7 +1155,7 @@ def _sql_ann_pq_frozen(ivf: bool = False, seeded: bool = False) -> str:
             FROM coded CROSS JOIN lut
             ORDER BY adc_ip DESC, vec_id ASC LIMIT {PQ_RERANK}
         )
-        SELECT e.vec_id, {cos} AS cos_sim
+        SELECT e.vec_id, {_SQL_COS} AS cos_sim
         FROM e JOIN cands USING (vec_id) CROSS JOIN q
         ORDER BY cos_sim DESC, vec_id ASC LIMIT {TOP_K}
     """
@@ -1196,14 +1175,10 @@ def ann_ivf_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning against the cell-partitioned store (`write_ivf_store`),
     and the ADC scan reads nprobe/k of the corpus as codes only — the
     family's member sublinear in both rows and bytes per row."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-    qv = list(q_row[0])
-    if len(qv) != PQ_M * (64 // PQ_M):
-        raise ValueError(f"frozen PQ codebooks assume dim 64, got {len(qv)}")
+    e = _vectors(spark, sf_dir)
+    qv = _query_vec(e)
+    if qv is None:
+        return _no_hits(e)
     probes = _ivf_probes(qv, _SEM_CENTROIDS)
     universe = _ivf_assign(e, _SEM_CENTROIDS).filter(F.col("cell").isin(probes))
     return _pq_frozen_rank(e, qv, universe=universe.select("vec_id", "v"))
@@ -1211,13 +1186,13 @@ def ann_ivf_pq_frozen_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ann_ivf_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-ADC with a data-derived hash-seeded quantizer: the
-    `ann_ivf_seeded_topk` head (`_hash_seeds`, `_ivf_probes`,
-    `_ivf_assign`) feeding the frozen-codebook ADC → exact-rerank tail
-    (`_pq_frozen_rank`). Its SQL twin re-derives the quantizer from
-    the data AND replays the ADC from inlined codebook literals
-    (`_sql_ann_pq_frozen(seeded=True)`), so the composition — which
-    cells the seeded quantizer prunes, then which codes survive ADC
-    inside exactly those cells — is hash-checked end to end.
+    `ann_ivf_seeded_topk` head (`_seeded_cells`: `_hash_seeds`,
+    `_ivf_probes`, `_ivf_assign`) feeding the frozen-codebook ADC →
+    exact-rerank tail (`_pq_frozen_rank`). Its SQL twin re-derives the
+    quantizer from the data AND replays the ADC from inlined codebook
+    literals (`_sql_ann_pq_frozen(seeded=True)`), so the composition —
+    which cells the seeded quantizer prunes, then which codes survive
+    ADC inside exactly those cells — is hash-checked end to end.
 
     Scale shape: identical to `ann_ivf_pq_frozen_topk` — seed
     selection is one bounded TakeOrdered collect (≤ IVF_K rows),
@@ -1225,18 +1200,12 @@ def ann_ivf_pq_seeded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan reads nprobe/k of the corpus (partition pruning against a
     cell-partitioned store), codes-only bytes per vector, exact
     rerank on a PQ_RERANK-bounded broadcast pool."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q_row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").first()
-    if q_row is None or q_row[0] is None:
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).filter(F.lit(False))
-    qv = [float(x) for x in q_row[0]]
-    if len(qv) != PQ_M * (64 // PQ_M):
-        raise ValueError(f"frozen PQ codebooks assume dim 64, got {len(qv)}")
-    n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
-    cents = _hash_seeds(e, max(2, min(IVF_K, n // 60)))
-    universe = _ivf_assign(e, cents).filter(F.col("cell").isin(_ivf_probes(qv, cents)))
-    return _pq_frozen_rank(e, qv, universe=universe.select("vec_id", "v"))
+    e = _vectors(spark, sf_dir)
+    qv = _query_vec(e)
+    if qv is None:
+        return _no_hits(e)
+    universe = _seeded_cells(spark, sf_dir, e, qv).select("vec_id", "v")
+    return _pq_frozen_rank(e, qv, universe=universe)
 
 
 SEM_K = 16
@@ -1498,9 +1467,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~N/k BY CONSTRUCTION (k grows with N; the
     ``semantic_dedup_plan`` entry point takes any centroid list, and
     scripts/vec_scale.py measures it with k ∝ N)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return semantic_dedup_plan(spark, e, _SEM_CENTROIDS)
+    return semantic_dedup_plan(spark, _vectors(spark, sf_dir), _SEM_CENTROIDS)
 
 
 def semantic_dedup_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1522,8 +1489,7 @@ def semantic_dedup_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered, k ≤ 64 rows ≈ 32 KB collected); the plan's scale
     argument is semantic_dedup's. Hash seeding is uniform over the id
     space, scale-invariant and reproducible across reruns."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")  # row-preserving projection
     if n == 0:
         # empty corpus: nothing to seed — any centroid set yields the
@@ -1658,14 +1624,9 @@ def cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything downstream is vocab- or k-bounded."""
     from pyspark.sql import Window as W
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).select("vec_id", "v", _norm(F.col("v")).alias("vn"))
-    assign = _centroid_assign_udf(_SEM_CENTROIDS)
-    assigned = e.select(
-        "vec_id", assign(F.col("v"), F.col("vn")).alias("s")
-    ).select("vec_id", F.col("s.cluster").alias("cluster"))
+    assigned = _ivf_assign(_vectors(spark, sf_dir), _SEM_CENTROIDS).select(
+        "vec_id", F.col("cell").alias("cluster")
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     jd = docs.join(assigned, docs.doc_id == assigned.vec_id).select(
@@ -1825,8 +1786,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(spark, sf_dir)
     qrows = (
         e.filter(F.col("vec_id") % KNN_Q_MOD == 0)
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
@@ -1934,11 +1894,7 @@ _SQL_KNN_JOIN = f"""
     ),
     scored AS (
         SELECT q_id, vec_id,
-               {sql_stable_round(
-                   "(list_dot_product(v, qv) / "
-                   "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))))",
-                   4,
-               )} AS cos
+               {_SQL_COS} AS cos
         FROM e CROSS JOIN q
         WHERE e.vec_id % {KNN_Q_MOD} <> 0
     )
@@ -2105,9 +2061,9 @@ ORACLE = {
                     >= {DRIFT_EPS} AS INTEGER) AS drift_flag
         FROM p FULL OUTER JOIN c ON p.dim = c.dim
     """.format(
-        mut=_sampling_hash_bp_sql("vec_id", "mut:"),
-        snap_a=_sampling_hash_bp_sql("vec_id", "snapA:"),
-        snap_b=_sampling_hash_bp_sql("vec_id", "snapB:"),
+        mut=_hash_bp_expr("vec_id", "duck", salt="mut:"),
+        snap_a=_hash_bp_expr("vec_id", "duck", salt="snapA:"),
+        snap_b=_hash_bp_expr("vec_id", "duck", salt="snapB:"),
     ),
     # Mirrors the banded semantics exactly: same frozen planes, same 48-bit
     # sign signature, same band split — candidates via DISTINCT (set-

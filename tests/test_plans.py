@@ -1130,7 +1130,12 @@ def test_heavy_hitters_tiers_and_sketch_plan_shape(spark, sf_dir):
     exchange so only candidate-key rows shuffle — and must agree
     with the naive tier row-for-row (no false negatives).
     (Exactness vs the naive form is ALSO the driver oracle's job.)"""
-    from labelmain_spark.functions.sketch import _hh_exact, _hh_sketch, heavy_hitters
+    from labelmain_spark.functions.sketch import (
+        _hh_exact,
+        _hh_sketch_from_cells,
+        cms_build,
+        heavy_hitters,
+    )
     from labelmain_spark.sources.readers import load_table
 
     df = heavy_hitters(spark, sf_dir)
@@ -1143,7 +1148,7 @@ def test_heavy_hitters_tiers_and_sketch_plan_shape(spark, sf_dir):
     checks.assert_no_python_eval(df)
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    sk = _hh_sketch(ev, "user_id")
+    sk = _hh_sketch_from_cells(ev, "user_id", cms_build(ev, "user_id").collect())
     sk.count()
     splan = sk._jdf.queryExecution().executedPlan().toString()
     assert splan.count("FileScan") == 1, splan
@@ -1157,6 +1162,47 @@ def test_heavy_hitters_tiers_and_sketch_plan_shape(spark, sf_dir):
     got = {(r.user_id, r.n) for r in sk.collect()}
     want = {(r.user_id, r.n) for r in _hh_exact(ev, "user_id").collect()}
     assert got == want and got, (len(got), len(want))
+
+
+# plan-build jobs per vector top-k key: the driver-side query fetch,
+# plus the seed collect for the seeded IVF heads
+_TOPK_BUILD_JOBS = {
+    "similarity_topk": 0,
+    "ann_lsh_topk": 0,
+    "ann_multiprobe_topk": 1,
+    "ann_ivf_seeded_topk": 2,
+    "ann_pq_frozen_topk": 1,
+    "ann_ivf_pq_frozen_topk": 1,
+    "ann_ivf_pq_seeded_topk": 2,
+}
+
+
+@pytest.mark.parametrize("key", list(_TOPK_BUILD_JOBS))
+def test_vector_topk_one_broadcast_rerank(spark, sf_dir, key):
+    """Every vector top-k key is candidate generation followed by the
+    family's one exact rerank: the executed plan has no shuffle
+    exchange, exactly one BroadcastNestedLoopJoin (the query row —
+    `ann_lsh_topk`'s collision test reads the query signatures from
+    that same row) and a TakeOrderedAndProject heap. Plan build runs
+    only the query fetch and the seed collect, counted on a second
+    call so the row-count memo is already filled."""
+    import re
+
+    from labelmain_spark.functions import vectors
+
+    fn = vectors.QUERIES[key]
+    fn(spark, sf_dir)
+    built = {}
+    jobs, _ = checks.jobs_and_tasks(
+        spark, lambda: built.setdefault("df", fn(spark, sf_dir))
+    )
+    df = built["df"]
+    df.collect()
+    plan = checks.physical_plan(df).split("== Initial Plan ==")[0]
+    assert not re.search(r"\bExchange\b", plan), plan[:3000]
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan[:3000]
+    assert "TakeOrderedAndProject" in plan, plan[:3000]
+    assert jobs == _TOPK_BUILD_JOBS[key], (key, jobs)
 
 
 def test_token_budget_prune_filters_offsets_below_window(spark, sf_dir):

@@ -315,6 +315,18 @@ def test_pq_codes_are_m_small_ints(spark, sf_dir):
         assert all(0 <= c < vectors.PQ_KS for c in row.code)
 
 
+def test_pq_frozen_rank_rejects_other_dims(spark):
+    """The frozen codebooks split a 64-dim vector into PQ_M subspaces.
+    Every PQ key passes through `_pq_frozen_rank`, which must refuse a
+    vector of any other dimension, naming the one it needs, rather than
+    score truncated subvectors."""
+    e = spark.createDataFrame(
+        [(0, [1.0] * 32), (1, [0.5] * 32)], "vec_id long, v array<double>"
+    )
+    with pytest.raises(ValueError, match="dim 64, got 32"):
+        vectors._pq_frozen_rank(e, [1.0] * 32)
+
+
 def test_simhash_identical_docs_same_signature(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(5)
     dup = docs.union(docs)  # every doc duplicated
