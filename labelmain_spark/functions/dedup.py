@@ -23,6 +23,24 @@ Scale design:
 - SimHash packs a doc into a 60-bit signature by per-bit voting over
   token hashes; near-dups differ in ≤ 3 bits. Implemented with 60
   bit-extraction aggregates (JVM-side), grouped by signature bucket.
+
+Builders — every key composes these, none re-spells them (index →
+candidates → one verification, the similarity-join shape):
+
+- ``doc_digest`` — the one content digest of exact dedup.
+- ``_shingle_df`` / ``_exploded_shingles_of`` — the shingle array and
+  the one persisted (doc_id, s) postings table of any corpus frame;
+  ``_exploded_shingles`` is its documents-table call.
+- ``_minhash_index`` — postings plus the persisted, primed MinHash
+  signature table; ``_minhash_pairs`` is the production banding +
+  verification over it.
+- ``_bands`` — the (doc_id, band, sig) explode; ``_band_pairs`` is its
+  self-join.
+- ``_jaccard_scored`` — set sizes and the 4-dp Jaccard of any
+  (doc_a, doc_b, …, common) frame; ``_pair_jaccard`` is its
+  candidate-pair verifier.
+- ``_reassembled`` / ``_with_totals`` — paragraph regroup and per-doc
+  totals of the paragraph keys.
 """
 
 from __future__ import annotations
@@ -75,11 +93,17 @@ def _pruned_index(e: DataFrame, max_df: int) -> DataFrame:
     return e.join(hot, "s", "left_anti")
 
 
+def doc_digest(col: str) -> Column:
+    """The content digest of every exact-dedup and snapshot-delta
+    consumer, batch and streaming: sha256 of the normalized text."""
+    return F.sha2(F.lower(F.trim(F.col(col))), 256)
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: sha256 over normalized text; survivor = min doc_id.
     Output only duplicate-cluster survivors plus cluster sizes."""
     docs = load_table(spark, sf_dir, "documents")
-    h = F.sha2(F.lower(F.trim(F.col("text"))), 256)
+    h = doc_digest("text")
     return (
         docs.select(h.alias("h"), "doc_id")
         .groupBy("h")
@@ -115,7 +139,7 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The tier expression is a row-local CASE (broadcast dim join in
     production) — no extra shuffle over dedup_exact."""
     docs = load_table(spark, sf_dir, "documents")
-    h = F.sha2(F.lower(F.trim(F.col("text"))), 256)
+    h = doc_digest("text")
     tier = F.expr(_TIER_SQL)
     return (
         docs.select(h.alias("h"), "doc_id", tier.cast("int").alias("tier"))
@@ -155,7 +179,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the within-batch keep-first is a min partial agg on the (small)
     batch. No historical TEXT reaches the join."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("h")
+        "doc_id", doc_digest("text").alias("h")
     )
     is_new = F.expr(_hash_bp_expr("doc_id", "spark", salt="incr:")) < INCR_NEW_BP
     new = docs.filter(is_new)
@@ -202,12 +226,6 @@ def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "full_outer",
     )
     return delta_classify(j)
-
-
-def doc_digest(col: str) -> Column:
-    """The snapshot-identity digest both delta keys and the streaming
-    twin share: sha256 of the normalized text."""
-    return F.sha2(F.lower(F.trim(F.col(col))), 256)
 
 
 def delta_snapshots(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -274,32 +292,10 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pair_jaccard); best-match is a partial-agg max(struct) keyed by
     the new doc — no windows, no all-pairs, nothing rescans history
     text beyond its candidates."""
-    from pyspark import StorageLevel
-
-    n_docs = table_row_count(spark, sf_dir, "documents")
-    e = _exploded_shingles(spark, sf_dir, prime=False)  # sig prime fills it
-    # r13 (guide §5): persist + prime the signatures — the nb/hb
-    # batch/history filters below are differently-keyed consumers, so
-    # without the persist BOTH sides re-ran the pruned-index anti-join
-    # + 12-window min-aggregate over the full postings (two sig
-    # subtrees in plans/r13/dedup_incremental_near_before.txt). One
-    # signature row per doc; same cache entry as dedup_minhash's.
-    sig = minhash_signatures(_pruned_index(e, _max_df(n_docs))).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig.count()
-
-    rows_per_band = MINHASH_K // BANDS
-    band_cols = []
-    for b in range(BANDS):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat(*cols).alias("sig"))
-        )
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bs")
-    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
+    # the nb/hb batch/history filters are differently-keyed consumers
+    # of the one persisted signature table (dedup_minhash's entry)
+    e, sig = _minhash_index(spark, sf_dir)
+    bands = _bands(sig, BANDS)
     is_new = F.expr(_hash_bp_expr("doc_id", "spark", salt="incr:")) < INCR_NEW_BP
     nb = bands.filter(is_new).select(F.col("doc_id").alias("doc_a"), "band", "sig")
     hb = bands.filter(~is_new).select(F.col("doc_id").alias("doc_b"), "band", "sig")
@@ -349,14 +345,15 @@ def _shingles_from_tokens(t: Column) -> Column:
     )
 
 
-def _shingle_df(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
-    """doc_id → shingle array, ONE shuffle of the raw text keyed by
-    doc_id. The repartition (a) spreads the CPU-bound shingling across
-    all cores even when the input is a single file split, and (b) keys
-    the layout by doc_id so every downstream per-doc groupBy (set
-    sizes, signatures) is shuffle-free. Shuffling the raw text beats
-    the alternative (shuffle token arrays, or shuffle the exploded
-    postings) on bytes: text ≤ tokens < postings.
+def _shingle_df(docs: DataFrame, *extra: str) -> DataFrame:
+    """doc_id → shingle array for any (doc_id, *extra, text) frame,
+    ONE shuffle of the raw text keyed by doc_id. The repartition (a)
+    spreads the CPU-bound shingling across all cores even when the
+    input is a single file split, and (b) keys the layout by doc_id so
+    every downstream per-doc groupBy (set sizes, signatures) is
+    shuffle-free. Shuffling the raw text beats the alternative (shuffle
+    token arrays, or shuffle the exploded postings) on bytes: text ≤
+    tokens < postings.
 
     split() stays its own projection under the lambda: Spark's
     CollapseProject refuses to merge projects when it would duplicate a
@@ -364,7 +361,6 @@ def _shingle_df(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
     once per row, not once per element_at — asserted on the optimized
     plan in tests/test_plans.py (a regression here is O(len·w) per
     doc)."""
-    docs = load_table(spark, sf_dir, "documents")
     n = docs.sparkSession.sparkContext.defaultParallelism
     return (
         docs.select("doc_id", *extra, "text")
@@ -378,78 +374,80 @@ def _shingle_df(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
     )
 
 
-def _exploded_shingles(
-    spark: SparkSession, sf_dir: str, *extra: str, prime: bool = True
+def _exploded_shingles_of(
+    docs: DataFrame, *extra: str, prime: bool = True
 ) -> DataFrame:
-    # explode_outer, not explode: plain explode pushes a size()>0
-    # predicate below the repartition exchange, re-evaluating the whole
-    # shingle expression on the unparallelized scan side (measured 5 s
-    # vs 0.4 s at sf0.1). Shingle arrays are never empty, so the outer
-    # variant is semantically identical here.
-    #
-    # The dedup DAGs are diamonds: signatures, set sizes, and both
-    # sides of the common-shingle join all consume this table. Exchange
-    # reuse does NOT fire here (column pruning pushes per-branch
-    # projections below the exchange, so the subtrees stop being
-    # canonical-identical — verified on the physical plan), so the
-    # shared table is persisted instead: shingling executes once, every
-    # branch reads the in-memory columnar copy. Spark's CacheManager
-    # keys entries by canonical plan, so repeated calls share one entry
-    # per sf_dir rather than accumulating copies. Explode preserves the
-    # upstream hash layout on doc_id, so the cached table satisfies the
-    # per-doc groupBys with no further shuffle (no second repartition —
-    # r2's explode-then-repartition shape paid an extra postings-sized
-    # shuffle for a layout the shingle shuffle already provides;
-    # removing it halved the materialization cost at sf0.1).
+    """The one persisted postings table (doc_id, *extra, s) of a
+    (doc_id, *extra, text) corpus frame.
+
+    explode_outer, not explode: plain explode pushes a size()>0
+    predicate below the repartition exchange, re-evaluating the whole
+    shingle expression on the unparallelized scan side (measured 5 s vs
+    0.4 s at sf0.1). Shingle arrays are never empty, so the outer
+    variant is semantically identical here.
+
+    The dedup DAGs are diamonds: signatures, set sizes, and both sides
+    of the common-shingle join all consume this table. Exchange reuse
+    does NOT fire here (column pruning pushes per-branch projections
+    below the exchange, so the subtrees stop being canonical-identical
+    — verified on the physical plan), so the shared table is persisted
+    instead: shingling executes once, every branch reads the in-memory
+    columnar copy. Spark's CacheManager keys entries by canonical plan,
+    so repeated calls over the same corpus share one entry rather than
+    accumulating copies. Explode preserves the upstream hash layout on
+    doc_id, so the cached table satisfies the per-doc groupBys with no
+    further shuffle (an explode-then-repartition shape pays an extra
+    postings-sized shuffle for a layout the shingle shuffle already
+    provides; removing it halved the materialization cost at sf0.1).
+
+    ``prime`` runs the eager count: otherwise the first action runs all
+    diamond branches concurrently against a not-yet-populated cache and
+    each recomputes the shingling (observed 4× work on first run).
+    Callers whose FIRST action on the table is itself serial on a
+    single reading leaf stage (the minhash signature prime — its
+    hot-shingle broadcast build reads the postings before the probe
+    stage can start) pass ``prime=False``: the cache fills inside that
+    stage and the separate prime job disappears. Callers that fan out
+    concurrently in their first action (the contamination keys,
+    bloom_decontaminate, ngram_jaccard, containment_dedup) keep it."""
     from pyspark import StorageLevel
 
     e = (
-        _shingle_df(spark, sf_dir, *extra)
+        _shingle_df(docs, *extra)
         .select("doc_id", *extra, F.explode_outer("shingles").alias("s"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Prime eagerly: otherwise the first action runs all diamond
-    # branches concurrently against a not-yet-populated cache and each
-    # recomputes the shingling (observed 4× work on first run).
-    # r14b: callers whose FIRST action on e is itself serial on a
-    # single e-reading leaf stage (the minhash signature prime — its
-    # hot-shingle broadcast build reads e before the probe stage can
-    # start) pass prime=False: the cache fills inside that stage and
-    # the separate prime job (one full dispatch + cache-write pass
-    # that the signature prime then re-reads) disappears. Callers
-    # that fan out on e concurrently in their first action
-    # (contamination_check/matrix, bloom_decontaminate,
-    # ngram_jaccard) keep the eager prime.
     if prime:
         e.count()
     return e
 
 
-def _exploded_shingles_of(docs: DataFrame) -> DataFrame:
-    """Persisted postings (doc_id, s) for an ARBITRARY (doc_id, text)
-    corpus — the `_exploded_shingles` discipline (repartition the raw
-    text by doc_id before the CPU-bound shingling; project the token
-    array so the lambda never re-tokenizes; persist the diamond and
-    prime it eagerly) for callers whose corpus is not the bare
-    documents table (containment_dedup runs over the `_prefix_corpus`
-    augmented view). r13 origin: containment_dedup inlined this and
-    lost all three properties — split() inside the transform lambda
-    (O(len²) per doc), no repartition (single-split scan → one core),
-    no persist (the plan scanned documents.parquet 16× for the five
-    downstream consumers)."""
-    from pyspark import StorageLevel
-
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    e = (
-        docs.select("doc_id", "text")
-        .repartition(n, F.col("doc_id"))
-        .select("doc_id", F.split(F.col("text"), " ").alias("t"))
-        .select("doc_id", _shingles_from_tokens(F.col("t")).alias("shingles"))
-        .select("doc_id", F.explode_outer("shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+def _exploded_shingles(
+    spark: SparkSession, sf_dir: str, *extra: str, prime: bool = True
+) -> DataFrame:
+    """The documents table's postings: one cache entry per sf_dir,
+    shared by the dedup and contamination keys."""
+    return _exploded_shingles_of(
+        load_table(spark, sf_dir, "documents"), *extra, prime=prime
     )
-    e.count()
-    return e
+
+
+def _jaccard_scored(e: DataFrame, common: DataFrame) -> DataFrame:
+    """Attach ``sz_a``, ``sz_b`` (per-doc set sizes from the postings
+    ``e``) and the 4-dp ``jaccard = common / (|A| + |B| - common)`` to
+    a (doc_a, doc_b, …, common) frame — the one verification tail of
+    every shingle-set key."""
+    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    jaccard = stable_round(
+        F.col("common").cast("double")
+        / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
+        4,
+    )
+    return (
+        common.join(sa, "doc_a").join(sb, "doc_b").withColumn("jaccard", jaccard)
+    )
 
 
 def _pair_jaccard(e: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -474,7 +472,6 @@ def _pair_jaccard(e: DataFrame, pairs: DataFrame) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     pairs.count()  # prime: both consumers must read the cache, not race it
     ea = e.select(F.col("doc_id").alias("doc_a"), "s")
@@ -491,21 +488,7 @@ def _pair_jaccard(e: DataFrame, pairs: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            stable_round(
-                F.col("common").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-                4,
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard_scored(e, common).select("doc_a", "doc_b", "jaccard")
 
 
 def minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
@@ -527,42 +510,53 @@ def minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return ed.groupBy("doc_id").agg(*aggs)
 
 
-def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs with Jaccard verification.
+def _minhash_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(postings, signatures) of the documents table — the index every
+    MinHash key bands.
 
     Signatures (and therefore candidates) are computed over the
     df-PRUNED shingle index — boilerplate shingles cannot form a hot
     band bucket; verification scores full-set Jaccard on the original
     shingles. The n_docs count is parquet-metadata only (no scan).
 
-    r13 (guide §5, the dedup_simhash fix applied here): the signature
-    table is persisted + primed before the band self-join — the a/b
-    sides of `_band_pairs` are differently-keyed consumers, so
-    exchange reuse never fires and each side re-ran the pruned-index
-    anti-join + 12-window min-aggregate over the full postings (two
-    copies of the sig subtree in the before plan, plans/r13/). One
+    The signature table is persisted + primed: its band consumers (the
+    a/b sides of `_band_pairs`, the batch/history split of
+    dedup_incremental_near) are differently-keyed, so exchange reuse
+    never fires and each side would re-run the pruned-index anti-join
+    + 12-window min-aggregate over the full postings. One
     (doc_id, 12×16-hex) row per document — signature-sized, never
-    corpus-sized; lsh_recall_audit's counterfactual banding reads the
-    same cache entry (CacheManager keys by canonical plan)."""
+    corpus-sized; every caller shares one cache entry (CacheManager
+    keys by canonical plan). The signature prime is the postings'
+    first action and fills their cache inside its hot-set build stage,
+    so the postings skip their own prime."""
     from pyspark import StorageLevel
 
     n_docs = table_row_count(spark, sf_dir, "documents")
-    e = _exploded_shingles(spark, sf_dir, prime=False)  # sig prime fills it
+    e = _exploded_shingles(spark, sf_dir, prime=False)
     sig = minhash_signatures(_pruned_index(e, _max_df(n_docs))).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sig.count()  # prime: both self-join sides must read the cache, not race it
+    sig.count()
+    return e, sig
+
+
+def _minhash_pairs(e: DataFrame, sig: DataFrame) -> DataFrame:
+    """The production 4×3 banding, verified: (doc_a, doc_b, jaccard)
+    pairs at Jaccard >= JACCARD_THRESHOLD."""
     cand = _band_pairs(sig, BANDS)
     return _pair_jaccard(e, cand).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
-def _band_pairs(sig: DataFrame, n_bands: int) -> DataFrame:
-    """Banded LSH candidate pairs from a minhash signature table:
-    split the k-column signature into ``n_bands`` contiguous bands,
-    bucket-join on (band, concatenated band signature), emit distinct
-    ordered pairs. Parametrized on band count so the recall audit can
-    measure counterfactual configurations against the production one
-    from the SAME signatures."""
+def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs with Jaccard verification:
+    the ``_minhash_index`` signatures banded and verified by
+    ``_minhash_pairs``."""
+    return _minhash_pairs(*_minhash_index(spark, sf_dir))
+
+
+def _bands(sig: DataFrame, n_bands: int) -> DataFrame:
+    """(doc_id, band, sig): the k-column signature split into
+    ``n_bands`` contiguous bands, one row per band."""
     rows_per_band = MINHASH_K // n_bands
     band_cols = []
     for b in range(n_bands):
@@ -570,9 +564,18 @@ def _band_pairs(sig: DataFrame, n_bands: int) -> DataFrame:
         band_cols.append(
             F.struct(F.lit(b).alias("band"), F.concat(*cols).alias("sig"))
         )
-    bands = sig.select(
+    return sig.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("bs")
     ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+
+
+def _band_pairs(sig: DataFrame, n_bands: int) -> DataFrame:
+    """Banded LSH candidate pairs from a minhash signature table:
+    bucket-join the ``_bands`` rows on (band, band signature), emit
+    distinct ordered pairs. Parametrized on band count so the recall
+    audit can measure counterfactual configurations against the
+    production one from the SAME signatures."""
+    bands = _bands(sig, n_bands)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -634,7 +637,6 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-consumer shape stays.
 
     # Full-set verification over the unpruned index.
-    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     ea = e.select(F.col("doc_id").alias("doc_a"), "s")
     eb = e.select(F.col("doc_id").alias("doc_b2"), F.col("s").alias("s_b"))
     common = (
@@ -643,17 +645,9 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b", "lang", "source")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = stable_round(
-        F.col("common").cast("double")
-        / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        4,
-    )
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", "lang", "source", jac.alias("jaccard"))
+        _jaccard_scored(e, common)
+        .select("doc_a", "doc_b", "lang", "source", "jaccard")
         .filter(F.col("jaccard") >= F.lit(0.3))
     )
 
@@ -785,19 +779,7 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("doc_id", "pos", "para")).alias("w"))
         .select(F.col("w.doc_id").alias("doc_id"), F.col("w.pos").alias("pos"), F.col("w.para").alias("para"))
     )
-    kept = winners.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(pos, para))), x -> x.para), ' ')"
-        ).alias("clean_text"),
-    )
-    totals = paras.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_para"))
-    return totals.join(kept, "doc_id", "left").select(
-        "doc_id",
-        "n_para",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-    )
+    return _with_totals(paras, _reassembled(winners))
 
 
 def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,9 +795,25 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (bounded by corpus shape, not size — same argument as
     _pruned_index), and the per-doc reassembly regroup."""
     paras = _exploded_paragraphs(spark, sf_dir)
-    out = boiler_cleaned(paras)
+    return _with_totals(paras, boiler_cleaned(paras))
+
+
+def _reassembled(kept: DataFrame) -> DataFrame:
+    """(doc_id, n_kept, clean_text): the surviving (doc_id, pos, para)
+    rows regrouped per doc and joined in position order."""
+    return kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_kept"),
+        F.expr(
+            "array_join(transform(array_sort(collect_list(struct(pos, para))), x -> x.para), ' ')"
+        ).alias("clean_text"),
+    )
+
+
+def _with_totals(paras: DataFrame, kept: DataFrame) -> DataFrame:
+    """The audit view of a ``_reassembled`` frame: every doc with its
+    paragraph total, fully-stripped docs as (n_kept 0, '')."""
     totals = paras.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_para"))
-    return totals.join(out, "doc_id", "left").select(
+    return totals.join(kept, "doc_id", "left").select(
         "doc_id",
         "n_para",
         F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
@@ -836,12 +834,8 @@ def boiler_cleaned(paras: DataFrame) -> DataFrame:
         .filter(F.col("df") > BOILER_DF)
         .select("h")
     )
-    kept = paras.withColumn("h", F.md5("para")).join(hot, "h", "left_anti")
-    return kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(pos, para))), x -> x.para), ' ')"
-        ).alias("clean_text"),
+    return _reassembled(
+        paras.withColumn("h", F.md5("para")).join(hot, "h", "left_anti")
     )
 
 
@@ -918,69 +912,29 @@ def _pair_components(spark: SparkSession, sf_dir: str):
     RELEASED before returning, so a long driver run does not
     accumulate dead cached pair tables across keys.
 
-    r14 (VERDICT #2, the flat-8→32-scaling attribution): in the
-    driver tier the old path still ran THREE dispatch-bound Spark
-    jobs over tiny tables (bipartite edges.distinct persist + prime,
-    the toPandas collect of those edges, the label-frame ship-back)
-    before the consumers added their own. The pairs are already
-    persisted and bounded here, so the driver tier now unions
-    directly over the collected PAIR list (no bipartite encoding, no
-    second distinct/persist) and hands the label dict to
-    ``dedup_clusters`` so its sizes/canonical tail is two dict passes
-    instead of a groupBy + join + persist over a few-thousand-row
-    frame. Labels are identical: component = min doc_id fixpoint,
-    which is unique. At scale n_pairs blows the bound and the
-    distributed hash-min loop runs unchanged.
-
-    r14b: the tier gate and the driver-tier collect are ONE action —
-    a limit(SMALL_PLAN_ROWS + 1).toPandas() probe of the persisted
-    pair table. ≤ B rows back proves completeness (the limit dropped
-    nothing), so the old count() prime + separate full toPandas
-    collapse into the probe; over the bound, the exact count and the
-    distributed tier run exactly as before on the cache the probe
+    Driver tier: the tier gate and the collect are ONE action, a
+    limit(SMALL_PLAN_ROWS + 1).toPandas() probe of the persisted pair
+    table — ≤ B rows back proves the limit dropped nothing — and
+    ``graph._union_find`` labels the collected pairs directly (no
+    bipartite encoding, no second distinct/persist). The label dict
+    goes to ``dedup_clusters``, whose sizes/canonical tail is then two
+    dict passes. Labels are identical on both tiers: component = min
+    doc_id fixpoint, which is unique. Over the bound, the exact count
+    and the distributed hash-min loop run on the cache the probe
     started populating."""
     from pyspark import StorageLevel
     from pyspark.sql.types import StructField, StructType
 
-    from labelmain_spark.functions.graph import connected_components
+    from labelmain_spark.functions.graph import _union_find, connected_components
     from labelmain_spark.session import SMALL_PLAN_ROWS
 
     pairs = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # r14b: the tier gate and the driver-tier collect share ONE action.
-    # limit(B+1).toPandas() returns AT MOST B+1 rows: ≤ B rows back
-    # means the limit dropped nothing — the collected frame IS the
-    # complete pair set AND its length is the exact count — so the
-    # driver tier no longer pays a count() prime plus a second
-    # toPandas job over the same cached table. Over the bound, the
-    # probe cost one bounded collect (the cache it populated is
-    # reused) and the distributed tier proceeds exactly as before,
-    # including the exact count.
     pdf = pairs.limit(SMALL_PLAN_ROWS + 1).toPandas()
     if len(pdf) <= SMALL_PLAN_ROWS:
         n_pairs = len(pdf)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in zip(pdf["doc_a"], pdf["doc_b"]):
-            a = a.item() if hasattr(a, "item") else a
-            b = b.item() if hasattr(b, "item") else b
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        labels = {u: find(u) for u in parent}
+        labels = _union_find(zip(pdf["doc_a"], pdf["doc_b"]))
         afield = pairs.schema["doc_a"]
         schema = StructType(
             [
@@ -1056,8 +1010,9 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually surface. Ground truth is exact and complete: every pair
     with Jaccard >= JACCARD_THRESHOLD shares >= 1 shingle, so the
     UNPRUNED inverted-index self-join generates a lossless candidate
-    superset and ``_pair_jaccard`` scores it exactly. The LSH side is
-    ``dedup_minhash`` verbatim (already hash-checked), so the audit
+    superset and ``_jaccard_scored`` scores it exactly. The LSH side is
+    ``dedup_minhash``'s ``_minhash_pairs`` over the same
+    ``_minhash_index`` (already hash-checked), so the audit
     nests two checked procedures under one oracle. Counts and basis
     points only — no float surface (the 4-dp jaccard rounding lives
     inside the shared sub-plans).
@@ -1090,23 +1045,15 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs). Long-lived sessions invoking the audit repeatedly should
     `spark.catalog.clearCache()` between invocations — the bench and
     the test suite already do."""
-    n_docs = table_row_count(spark, sf_dir, "documents")
-    # prime=False: dedup_minhash's signature prime below is the first
-    # action on e and fills the cache inside its hot-set build stage.
-    e = _exploded_shingles(spark, sf_dir, prime=False)
+    # one index build: both bandings read the same persisted signatures
+    e, sig = _minhash_index(spark, sf_dir)
     ea = e.select(F.col("doc_id").alias("doc_a"), "s")
     eb = e.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    # Ground truth, FUSED (r13, guide §2.3/§2.4): the unpruned
-    # inverted-index self-join emits each co-occurring pair once PER
-    # SHARED SHINGLE, so count(*) per pair over that join IS |A∩B| —
-    # the r12 form discarded that information (distinct), then
-    # re-joined the full postings table twice via _pair_jaccard to
-    # recount it. Partial (map-side) aggregation collapses the pair
-    # stream before the exchange; two full-postings joins and the
-    # pair-distinct shuffle disappear from the plan. The jaccard
-    # expression is _pair_jaccard's verbatim, so the emitted pair set
-    # is identical.
-    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    # Ground truth, FUSED: the unpruned inverted-index self-join emits
+    # each co-occurring pair once PER SHARED SHINGLE, so count(*) per
+    # pair over that join IS |A∩B|. Partial (map-side) aggregation
+    # collapses the pair stream before the exchange — no pair-distinct
+    # shuffle, no re-join of the full postings to recount it.
     common = (
         ea.join(
             eb,
@@ -1115,38 +1062,23 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     true_pairs = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            stable_round(
-                F.col("common").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-                4,
-            )
-            >= JACCARD_THRESHOLD
-        )
+        _jaccard_scored(e, common)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
         .persist()
     )
-    lsh = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").persist()
+    lsh = _minhash_pairs(e, sig).select("doc_a", "doc_b").persist()
     hits = true_pairs.join(lsh, ["doc_a", "doc_b"])
-    sig = minhash_signatures(_pruned_index(e, _max_df(n_docs)))
-    # r14 (guide §2.4): the COUNTERFACTUAL banding's hit set derives
-    # from the truth table the audit already pays for — for any band
-    # candidate pair, J_full >= threshold IFF the pair is in
-    # true_pairs (the unpruned self-join truth is COMPLETE over
-    # J >= threshold, and _pair_jaccard scored the identical full-set
-    # jaccard), so hits_b2 = band2_candidates ∩ true_pairs. The r13
-    # form re-ran the whole _pair_jaccard verify chain (pair persist +
-    # prime + 3 joins) only to intersect its output with true_pairs
-    # again; one LEFT SEMI against the cached truth replaces it.
-    # n_hits_b2 is bit-identical by the equivalence above. The
-    # PRODUCTION side (lsh/hits) deliberately stays dedup_minhash
-    # verbatim — the audit certifies the real pipeline, so its
-    # precision row must be measured, not derived.
+    # The COUNTERFACTUAL banding's hit set derives from the truth table
+    # the audit already pays for — for any band candidate pair,
+    # J_full >= threshold IFF the pair is in true_pairs (the unpruned
+    # self-join truth is COMPLETE over J >= threshold and scored by the
+    # same full-set jaccard), so hits_b2 = band2_candidates ∩
+    # true_pairs: one LEFT SEMI against the cached truth instead of a
+    # second verify chain. The PRODUCTION side (lsh/hits) stays the
+    # real pipeline — the audit certifies it, so its precision row is
+    # measured, not derived.
     hits_b2 = _band_pairs(sig, AUDIT_ALT_BANDS).join(
         true_pairs, ["doc_a", "doc_b"], "left_semi"
     )
@@ -1332,18 +1264,17 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_recall_audit ground-truth shape), so the value hash pins the
     pruned plan against a provably complete one.
 
-    r13 plan (guide §1/§2.4/§5): postings are built ONCE via
-    `_exploded_shingles_of` (persisted diamond — the r12 inline form
-    re-scanned parquet 16× across its five downstream consumers and
-    re-tokenized inside the transform lambda, O(len²) per doc), and
-    the prefix selection is a min-k struct aggregate per doc —
+    Plan: postings are built ONCE via `_exploded_shingles_of`
+    (persisted diamond — an inline form re-scanned parquet 16× across
+    its five downstream consumers and re-tokenized inside the
+    transform lambda, O(len²) per doc), and the prefix selection is a
+    min-k struct aggregate per doc —
     `slice(array_sort(collect_list(struct(_df, s))), 1,
     floor((1-t)*cnt)+1)` — one hash aggregate on the doc_id exchange,
     replacing a row_number() window that shuffle-sorted the ENTIRE
     df-joined postings table to pick ~(1-t)·|S|+1 rows per doc."""
     aug = _prefix_corpus(spark, sf_dir)
     e = _exploded_shingles_of(aug)
-    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     df_tbl = e.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
     prefix = (
         e.join(df_tbl, "s")
@@ -1377,23 +1308,12 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    containment = stable_round(
+        F.col("common").cast("double") / F.least("sz_a", "sz_b"), 4
+    )
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            stable_round(
-                F.col("common").cast("double") / F.least("sz_a", "sz_b"), 4
-            ).alias("containment"),
-            stable_round(
-                F.col("common").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-                4,
-            ).alias("jaccard"),
-        )
+        _jaccard_scored(e, common)
+        .select("doc_a", "doc_b", containment.alias("containment"), "jaccard")
         .filter(F.col("containment") >= CONTAIN_T)
     )
 

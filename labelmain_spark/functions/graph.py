@@ -103,44 +103,20 @@ def connected_components(
 
 
 def _driver_union_find(edges: DataFrame, stats: dict | None) -> DataFrame:
-    """Path-compressed union-find over a BOUNDED collected edge list —
-    bit-identical labels to the hash-min loop (component = min u, both
-    are the connected-components fixpoint, which is unique). One
-    collect + one createDataFrame replace O(diameter) × (2 joins +
-    2 aggs + 1 action)."""
+    """Union-find over a BOUNDED collected edge list — bit-identical
+    labels to the hash-min loop (component = min u, both are the
+    connected-components fixpoint, which is unique). One collect + one
+    createDataFrame replace O(diameter) × (2 joins + 2 aggs + 1
+    action). Each attribute p links its members through the first u
+    seen with it (pair-nodes are never labeled)."""
     from pyspark.sql.types import StructField, StructType
 
     spark = edges.sparkSession
     pdf = edges.toPandas()
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    anchor: dict = {}  # p -> first u seen (pair-nodes never labeled)
-    for u, p in zip(pdf["u"], pdf["p"]):
-        if u not in parent:
-            parent[u] = u
-        a = anchor.setdefault(p, u)
-        if a != u:
-            ra, ru = find(a), find(u)
-            if ra != ru:
-                # attach larger root under smaller so roots trend to
-                # the min (final labels still take an explicit min)
-                if ru < ra:
-                    ra, ru = ru, ra
-                parent[ru] = ra
-    lo: dict = {}
-    for u in parent:
-        r = find(u)
-        if r not in lo or u < lo[r]:
-            lo[r] = u
-    rows = [(u, lo[find(u)]) for u in parent]
+    anchor: dict = {}
+    labels = _union_find(
+        (anchor.setdefault(p, u), u) for u, p in zip(pdf["u"], pdf["p"])
+    )
     if stats is not None:
         stats["rounds"] = 0
         stats["tier"] = "driver"
@@ -151,9 +127,34 @@ def _driver_union_find(edges: DataFrame, stats: dict | None) -> DataFrame:
             StructField("component", ufield.dataType, True),
         ]
     )
-    return spark.createDataFrame(
-        [(_py(u), _py(c)) for u, c in rows], schema
-    )
+    return spark.createDataFrame(list(labels.items()), schema)
+
+
+def _union_find(pairs) -> dict:
+    """{node: min node of its component} over an iterable of (a, b)
+    edges — path-compressed union-find that attaches the larger root
+    under the smaller, so every root IS its component's minimum. Numpy
+    scalars come back as plain python values."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        a, b = _py(a), _py(b)
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {u: find(u) for u in parent}
 
 
 def _py(v):

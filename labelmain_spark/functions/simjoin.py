@@ -45,7 +45,9 @@ def similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary makes unigram token-set jaccard high for nearly every
     # pair (88 k pairs at sf0.01); shingles give the same selectivity as
     # the rest of the dedup family.
-    docs = _shingle_df(spark, sf_dir).withColumnRenamed("shingles", "tokens")
+    docs = _shingle_df(load_table(spark, sf_dir, "documents")).withColumnRenamed(
+        "shingles", "tokens"
+    )
     tf = HashingTF(inputCol="tokens", outputCol="vec", numFeatures=1 << 18, binary=True)
     vecs = tf.transform(docs)
     lsh = MinHashLSH(inputCol="vec", outputCol="hashes", numHashTables=8, seed=42)

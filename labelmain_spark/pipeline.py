@@ -32,6 +32,8 @@ SAMPLE_BP = 5000  # keep 50% of surviving keyspace
 
 
 def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from labelmain_spark.functions.dedup import doc_digest
+
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tok = F.size(toks)
@@ -45,7 +47,7 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars", "text", quality.alias("q")
     ).filter(F.col("q") >= MIN_QUALITY)
 
-    h = F.sha2(F.lower(F.trim(F.col("text"))), 256)
+    h = doc_digest("text")
     w = W.partitionBy(h).orderBy("doc_id")
     survivors = (
         staged.withColumn("rn", F.row_number().over(w))
@@ -147,7 +149,9 @@ def dedup_clean_batch(
     stateful streaming half (ttl_dedup /
     dropDuplicatesWithinWatermark), per the incremental_dedup_stream
     split discipline."""
-    dig = batch.withColumn("h", F.sha2(F.lower(F.trim(F.col("text"))), 256))
+    from labelmain_spark.functions.dedup import doc_digest
+
+    dig = batch.withColumn("h", doc_digest("text"))
     nodup = dig.join(hist_digests, "h", "left_anti")
     first = nodup.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     surv = (
@@ -261,7 +265,7 @@ def corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         CONTAM_EVAL_BP,
         benchmark_ngrams,
     )
-    from labelmain_spark.functions.dedup import DELTA_BP, DELTA_MUT_BP
+    from labelmain_spark.functions.dedup import DELTA_BP, DELTA_MUT_BP, doc_digest
     from labelmain_spark.functions.packing import exclusive_cumsum
     from labelmain_spark.functions.sampling import (
         CURR_DIGITS,
@@ -280,15 +284,13 @@ def corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1. delta: new work = cur docs added or changed vs prev, minus
     # the benchmark split (never train on eval docs).
     prev = docs.filter(in_prev)
-    prev_dig = prev.select(
-        "doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("old_h")
-    )
+    prev_dig = prev.select("doc_id", doc_digest("text").alias("old_h"))
     cur_text = F.when(revised, F.concat(F.col("text"), F.lit(" rev2"))).otherwise(
         F.col("text")
     )
     cur = docs.filter(in_cur).select("doc_id", cur_text.alias("text"))
     batch = (
-        cur.withColumn("h", F.sha2(F.lower(F.trim(F.col("text"))), 256))
+        cur.withColumn("h", doc_digest("text"))
         .join(prev_dig, "doc_id", "left")
         .filter(F.col("old_h").isNull() | (F.col("old_h") != F.col("h")))
         .filter(~is_eval)

@@ -150,9 +150,9 @@ def incremental_dedup_stream(docs: DataFrame, history_digests: DataFrame) -> Dat
     answered by ttl_dedup/dropDuplicatesWithinWatermark); this
     operator answers exactly the history-membership half, and the
     parity test pins that split."""
-    d = docs.select(
-        "doc_id", F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("h")
-    )
+    from labelmain_spark.functions.dedup import doc_digest
+
+    d = docs.select("doc_id", doc_digest("text").alias("h"))
     return d.join(history_digests, "h", "left_anti")
 
 

@@ -57,25 +57,7 @@ def main():
     sig = dedup.minhash_signatures(ep)
     t("signatures count", lambda: sig.count())
 
-    rows_per_band = dedup.MINHASH_K // dedup.BANDS
-    band_cols = []
-    for b in range(dedup.BANDS):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.struct(F.lit(b).alias("band"), F.concat(*cols).alias("sig")))
-    bands = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    a, b2 = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b2,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = dedup._band_pairs(sig, dedup.BANDS)
     t("candidates count", lambda: cand.count())
     t("pair jaccard + filter", lambda: dedup._pair_jaccard(e, cand).filter(F.col("jaccard") >= dedup.JACCARD_THRESHOLD).count())
 

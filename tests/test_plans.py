@@ -1205,6 +1205,33 @@ def test_vector_topk_one_broadcast_rerank(spark, sf_dir, key):
     assert jobs == _TOPK_BUILD_JOBS[key], (key, jobs)
 
 
+# plan-build jobs per MinHash key: one `_minhash_index` build (the
+# signature prime) plus the candidate-pair prime; dedup_clusters adds
+# the pair-set tier probe. A second index build in one call adds a job.
+_MINHASH_BUILD_JOBS = {
+    "dedup_minhash": 12,
+    "dedup_incremental_near": 12,
+    "lsh_recall_audit": 12,
+    "dedup_clusters": 19,
+}
+
+
+@pytest.mark.parametrize("key", list(_MINHASH_BUILD_JOBS))
+def test_minhash_family_build_jobs(spark, sf_dir, key):
+    """Plan build of every MinHash key builds the shingle/signature
+    index once, counted on a second call after `release_caches` so
+    the row-count memo is filled and no cache entry is left over."""
+    from labelmain_spark.functions import dedup
+    from labelmain_spark.session import release_caches
+
+    fn = dedup.QUERIES[key]
+    fn(spark, sf_dir)
+    release_caches(spark)
+    jobs, _ = checks.jobs_and_tasks(spark, lambda: fn(spark, sf_dir))
+    release_caches(spark)
+    assert jobs == _MINHASH_BUILD_JOBS[key], (key, jobs)
+
+
 def test_token_budget_prune_filters_offsets_below_window(spark, sf_dir):
     """sample_token_budget's budget prune (r12): the offsets-side
     filter `_poff0 < TOKEN_BUDGET` must be IN the plan (parts that

@@ -1446,6 +1446,37 @@ def test_split_leakage_safe_properties(spark, sf_dir):
         assert leaked, "plain split straddles a cluster but guard changed nothing"
 
 
+def test_pair_components_tiers_agree(spark, sf_dir, monkeypatch):
+    """`_pair_components` has two arms: the driver union-find over the
+    collected pairs, and the distributed hash-min loop once the pair
+    set passes SMALL_PLAN_ROWS. Both cluster keys give the same
+    non-empty rows on either arm; a spy on `connected_components`
+    proves the second run took the distributed arm and the first did
+    not."""
+    from labelmain_spark import session
+    from labelmain_spark.functions import graph
+
+    calls = []
+    real = graph.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs.get("driver_tier"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "connected_components", spy)
+    keys = (dedup.dedup_clusters, dedup.split_leakage_safe)
+
+    def rows():
+        return [sorted(tuple(r) for r in k(spark, sf_dir).collect()) for k in keys]
+
+    driver = rows()
+    assert calls == []
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
+    distributed = rows()
+    assert calls == [False, False]
+    assert all(driver) and distributed == driver
+
+
 def test_components_driver_tier_equals_distributed_loop(spark):
     """The r12 driver union-find tier is output-IDENTICAL to the
     distributed hash-min loop (the connected-components fixpoint is
