@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from labelmain_spark.operators.parity import stable_round
+from labelmain_spark.session import persist_counted, unpersist
 from labelmain_spark.sources.readers import load_table
 
 # GPT-2-style pre-tokenizer, simplified to ASCII classes (the fixture
@@ -301,8 +302,6 @@ def train_bpe_merges_distributed(
     Determinism: counts are exact longs; ties break (count desc, pair
     lexicographic asc) — identical to the reference; the result is
     asserted EQUAL to `fit_bpe_merges` on the same texts in pytest."""
-    from pyspark import StorageLevel
-
     from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
 
     toks = docs.select(
@@ -310,7 +309,7 @@ def train_bpe_merges_distributed(
             F.regexp_extract_all(F.col("text"), F.lit(_PRETOKEN_JAVA_RE), 0)
         ).alias("word")
     )
-    words = (
+    words, n_vocab = persist_counted(
         toks.groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .select(
@@ -320,9 +319,7 @@ def train_bpe_merges_distributed(
                 " i -> substring(word, i, 1))"
             ).alias("seg"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_vocab = words.count()
     merges: list[tuple[str, str, int]] = []
     pair_structs = (
         "zip_with(slice(seg, 1, size(seg) - 1), slice(seg, 2, size(seg) - 1),"
@@ -342,19 +339,18 @@ def train_bpe_merges_distributed(
                 break
             left, right, pc = top[0].l, top[0].r, int(top[0].pc)
             merges.append((left, right, pc))
-            nw = words.select(
-                "cnt", _apply_merge(F.col("seg"), left, right).alias("seg")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
             # materialize the child BEFORE dropping the parent cache
             # (the connected_components discipline): unpersisting
             # first leaves nw's lineage rooted at the raw corpus, and
             # every later round re-pays the full word-frequency pass —
             # measured 134 s at the ×100 tier vs 17 s after this fix,
             # the vocab-bounded-loop contract restored
-            nw.count()
-            words.unpersist()
+            nw, _ = persist_counted(
+                words.select("cnt", _apply_merge(F.col("seg"), left, right).alias("seg"))
+            )
+            unpersist(words)
             words = nw
-    words.unpersist()
+    unpersist(words)
     return merges
 
 

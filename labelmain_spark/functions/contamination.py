@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from labelmain_spark.functions.dedup import _exploded_shingles, _sql_shingles
 from labelmain_spark.functions.sampling import _hash_bp_expr
 from labelmain_spark.operators.parity import sql_stable_round, stable_round
+from labelmain_spark.session import track_persist
 
 CONTAM_EVAL_BP = 500  # lowest 5% of the doc_id hash keyspace = eval set
 CONTAM_THRESHOLD = 0.5  # overlap ratio at/above which a doc is flagged
@@ -168,19 +169,16 @@ def decontaminate_docs(docs: DataFrame, bench: DataFrame) -> DataFrame:
     no anti-join, no collect_list of the corpus. The only
     corpus-sized exchange left is the one repartition that keys the
     token arrays by doc_id for the (small) cut-side join."""
-    from pyspark import StorageLevel
-
     from labelmain_spark.functions.substrings import (
         _covered_positions,
         _md5_span_map,
     )
 
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    tarr = (
+    tarr = track_persist(
         docs.select("doc_id", "text")
         .repartition(n_part, F.col("doc_id"))
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cuts = (
         _md5_span_map(tarr, DECON_N)

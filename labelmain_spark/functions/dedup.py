@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from labelmain_spark.operators.parity import stable_round
+from labelmain_spark.session import persist_counted, track_persist, unpersist
 from labelmain_spark.sources.readers import load_table, table_row_count
 # one-directional: sampling → text → parity/readers never reaches back
 # into dedup, so this module-level import (the ORACLE literal needs it
@@ -410,16 +411,10 @@ def _exploded_shingles_of(
     stage and the separate prime job disappears. Callers that fan out
     concurrently in their first action (the contamination keys,
     bloom_decontaminate, ngram_jaccard, containment_dedup) keep it."""
-    from pyspark import StorageLevel
-
-    e = (
-        _shingle_df(docs, *extra)
-        .select("doc_id", *extra, F.explode_outer("shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e = _shingle_df(docs, *extra).select(
+        "doc_id", *extra, F.explode_outer("shingles").alias("s")
     )
-    if prime:
-        e.count()
-    return e
+    return persist_counted(e)[0] if prime else track_persist(e)
 
 
 def _exploded_shingles(
@@ -470,10 +465,7 @@ def _pair_jaccard(e: DataFrame, pairs: DataFrame) -> DataFrame:
     following inner join, and the semi's build side broadcasts under
     AQE whenever it fits (no forced hint, same rationale as below).
     """
-    from pyspark import StorageLevel
-
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()  # prime: both consumers must read the cache, not race it
+    pairs, _ = persist_counted(pairs)
     ea = e.select(F.col("doc_id").alias("doc_a"), "s")
     eb = e.select(F.col("doc_id").alias("doc_b"), "s").join(
         pairs.select("doc_b"), "doc_b", "left_semi"
@@ -529,14 +521,9 @@ def _minhash_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     keys by canonical plan). The signature prime is the postings'
     first action and fills their cache inside its hot-set build stage,
     so the postings skip their own prime."""
-    from pyspark import StorageLevel
-
     n_docs = table_row_count(spark, sf_dir, "documents")
     e = _exploded_shingles(spark, sf_dir, prime=False)
-    sig = minhash_signatures(_pruned_index(e, _max_df(n_docs))).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig.count()
+    sig, _ = persist_counted(minhash_signatures(_pruned_index(e, _max_df(n_docs))))
     return e, sig
 
 
@@ -692,16 +679,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     two vote aggregates in the before plan). The persisted table is
     one (doc_id, simhash, bucket) row per document — signature-sized,
     not corpus-sized, safe to cache at any scale."""
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     sig = simhash(docs)
     bucket = F.shiftright(F.col("simhash"), SIMHASH_BITS - 16)
-    s = (
-        sig.select("doc_id", "simhash", bucket.alias("bucket"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    s.count()  # prime: both join sides must read the cache, not race it
+    s, _ = persist_counted(sig.select("doc_id", "simhash", bucket.alias("bucket")))
     a, b = s.alias("a"), s.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
@@ -730,8 +711,6 @@ def _exploded_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and without the barrier each branch re-scans the corpus text. Same
     persist-the-shared-explode pattern (and justification) as
     ``_exploded_shingles``."""
-    from pyspark import StorageLevel
-
     # coalesce(text, ''): NULL text would make size(toks) = -1 on Spark
     # (sequence(0, -1) emits a descending 2-array → two bogus rows)
     # while DuckDB's range(NULL) drops the doc — coalescing makes the
@@ -747,9 +726,8 @@ def _exploded_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"i -> array_join(slice(toks, i * {PARA_W} + 1, {PARA_W}), ' '))"
             )
         ).alias("pos", "para"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    paras.count()  # prime before the diamond branches race the cache
-    return paras
+    )
+    return persist_counted(paras)[0]
 
 
 def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,15 +900,12 @@ def _pair_components(spark: SparkSession, sf_dir: str):
     doc_id fixpoint, which is unique. Over the bound, the exact count
     and the distributed hash-min loop run on the cache the probe
     started populating."""
-    from pyspark import StorageLevel
     from pyspark.sql.types import StructField, StructType
 
     from labelmain_spark.functions.graph import _union_find, connected_components
     from labelmain_spark.session import SMALL_PLAN_ROWS
 
-    pairs = dedup_minhash(spark, sf_dir).select("doc_a", "doc_b").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pairs = track_persist(dedup_minhash(spark, sf_dir).select("doc_a", "doc_b"))
     pdf = pairs.limit(SMALL_PLAN_ROWS + 1).toPandas()
     if len(pdf) <= SMALL_PLAN_ROWS:
         n_pairs = len(pdf)
@@ -943,7 +918,7 @@ def _pair_components(spark: SparkSession, sf_dir: str):
             ]
         )
         cc = spark.createDataFrame(list(labels.items()), schema)
-        pairs.unpersist()
+        unpersist(pairs)
         return n_pairs, cc, labels
     n_pairs = pairs.count()
     pk = F.concat_ws(":", F.col("doc_a"), F.col("doc_b"))
@@ -951,7 +926,7 @@ def _pair_components(spark: SparkSession, sf_dir: str):
         pairs.select(F.col("doc_b").alias("u"), pk.alias("p"))
     )
     cc = connected_components(edges, driver_tier=False)
-    pairs.unpersist()
+    unpersist(pairs)
     return n_pairs, cc, None
 
 
@@ -1042,9 +1017,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cache lifetime (advisor r12): true_pairs / lsh stay
     persisted after the returned aggregate materializes (unpersisting
     inside this function would evict them before the caller's action
-    runs). Long-lived sessions invoking the audit repeatedly should
-    `spark.catalog.clearCache()` between invocations — the bench and
-    the test suite already do."""
+    runs); ``release_caches`` drops them."""
     # one index build: both bandings read the same persisted signatures
     e, sig = _minhash_index(spark, sf_dir)
     ea = e.select(F.col("doc_id").alias("doc_a"), "s")
@@ -1062,13 +1035,12 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    true_pairs = (
+    true_pairs = track_persist(
         _jaccard_scored(e, common)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
-        .persist()
     )
-    lsh = _minhash_pairs(e, sig).select("doc_a", "doc_b").persist()
+    lsh = track_persist(_minhash_pairs(e, sig).select("doc_a", "doc_b"))
     hits = true_pairs.join(lsh, ["doc_a", "doc_b"])
     # The COUNTERFACTUAL banding's hit set derives from the truth table
     # the audit already pays for — for any band candidate pair,

@@ -26,10 +26,10 @@ algorithm.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from labelmain_spark.session import persist_counted, track_persist, unpersist
 from labelmain_spark.sources.readers import load_table
 
 MAX_ITER = 30
@@ -78,16 +78,11 @@ def connected_components(
     than the whole membership."""
     from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
 
-    edges = edges.select("u", "p").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = edges.count()
+    edges, n_edges = persist_counted(edges.select("u", "p").distinct())
     if driver_tier and n_edges <= SMALL_PLAN_ROWS:
         out = _driver_union_find(edges, stats)
-        edges.unpersist()
+        unpersist(edges)
         return out
-    comp = (
-        edges.select("u").distinct().select("u", F.col("u").alias("comp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
     # The node count this prime returns doubles as the runtime
     # statistic gating the loop's execution conf: a fixpoint loop over
     # a few hundred cached label rows is scheduling-bound under the
@@ -95,7 +90,9 @@ def connected_components(
     # jobs), so small graphs iterate single-partition — see
     # session.small_plan_conf for the measurement and the
     # why-this-is-not-hand-scheduling argument.
-    n_nodes = comp.count()
+    comp, n_nodes = persist_counted(
+        edges.select("u").distinct().select("u", F.col("u").alias("comp"))
+    )
     if stats is not None:
         stats["tier"] = "distributed"
     with small_plan_conf(edges.sparkSession, n_nodes <= SMALL_PLAN_ROWS):
@@ -173,27 +170,25 @@ def _hash_min_loop(
         proposed = (
             edges.join(comp_p, "p").groupBy("u").agg(F.min("pcomp").alias("newcomp"))
         )
-        merged = (
-            comp.join(proposed, "u", "left")
-            .select(
+        merged = track_persist(
+            comp.join(proposed, "u", "left").select(
                 "u",
                 F.least(F.col("comp"), F.coalesce(F.col("newcomp"), F.col("comp"))).alias("comp"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         changed = (
             merged.join(comp.withColumnRenamed("comp", "old"), "u")
             .filter(F.col("comp") != F.col("old"))
             .count()  # fixpoint probe — one scalar per round, as in GraphX
         )
-        comp.unpersist()
+        unpersist(comp)
         comp = merged
         rounds += 1
         if changed == 0:
             break
     else:
-        edges.unpersist()
-        comp.unpersist()
+        unpersist(edges)
+        unpersist(comp)
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds "
             f"({changed} labels still changing) — component diameter exceeds "
@@ -201,7 +196,7 @@ def _hash_min_loop(
         )
     if stats is not None:
         stats["rounds"] = rounds
-    edges.unpersist()
+    unpersist(edges)
     return comp.select("u", F.col("comp").alias("component"))
 
 
@@ -294,10 +289,10 @@ def integer_pagerank(
     from labelmain_spark.operators.parity import stable_round
     from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
 
-    e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    e = track_persist(edges)
     if driver_tier and e.count() <= SMALL_PLAN_ROWS:
         out = _driver_pagerank(spark, e)
-        e.unpersist()
+        unpersist(e)
         return out
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     deg = e.join(outdeg, "src")
@@ -307,18 +302,15 @@ def integer_pagerank(
         .distinct()
     )
     st = nodes.agg(F.count(F.lit(1)).alias("n"))
-    base_nodes = (
-        nodes.crossJoin(F.broadcast(st))
-        .select(
+    base_nodes, n_nodes = persist_counted(  # materializes the corpus passes too
+        nodes.crossJoin(F.broadcast(st)).select(
             "node",
             F.expr(f"{PR_SCALE} DIV n").alias("units"),
             F.expr(
                 f"(({PR_SCALE} DIV n) * {PR_D_DEN - PR_D_NUM}) DIV {PR_D_DEN}"
             ).alias("base"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_nodes = base_nodes.count()  # materializes the corpus passes too
     r = base_nodes.select("node", "units")
     for _ in range(PR_ITERS):
         s = (
@@ -338,11 +330,13 @@ def integer_pagerank(
                 ).alias("units"),
             )
         )
-    out = r.select(
-        "node",
-        F.col("units").alias("rank_units"),
-        stable_round(F.col("units").cast("double") / F.lit(1e9), 9).alias("pr"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    out = track_persist(
+        r.select(
+            "node",
+            F.col("units").alias("rank_units"),
+            stable_round(F.col("units").cast("double") / F.lit(1e9), 9).alias("pr"),
+        )
+    )
     with small_plan_conf(spark, n_nodes <= SMALL_PLAN_ROWS):
         out.count()  # run the cached-graph iterations under the gated conf
     return out

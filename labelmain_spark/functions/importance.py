@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from labelmain_spark.sources.readers import broadcast_if_bounded
 from labelmain_spark.operators.parity import DEC, sql_stable_round, stable_round
+from labelmain_spark.session import track_persist
 from labelmain_spark.sources.readers import load_table
 
 DSIR_BUCKETS = 256
@@ -110,17 +111,14 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     but lost whole-stage codegen on the per-occurrence md5 —
     interpreted lambdas measured 5.1 s. Codegen'd explode + one
     doc_id exchange wins.)"""
-    from pyspark import StorageLevel
-
     occ = _bigram_buckets(spark, sf_dir)
-    docb = (
+    docb = track_persist(
         occ.repartition("doc_id")
         .groupBy("doc_id", "b")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.expr(f"CASE WHEN {_TARGET_PRED_SPARK} THEN 1 ELSE 0 END")).alias("cnt_t"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # No eager prime (unlike _exploded_shingles): both consumers live
     # in ONE action, and the llr BROADCAST side is built before the

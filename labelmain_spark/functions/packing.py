@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from labelmain_spark.session import track_persist
 from labelmain_spark.sources.readers import load_table
 
 PACK_PART_W = 1024
@@ -78,8 +79,6 @@ def exclusive_cumsum(
     contract every packing key relies on."""
     if _level >= _MAX_LEVELS:
         raise RuntimeError("exclusive_cumsum: recursion depth exceeded")
-    from pyspark import StorageLevel
-
     # Persist the keyed rows: the level stats, the totals aggregation
     # and the final offsets join all consume them, and without the
     # barrier Catalyst re-executes the upstream scan per branch — at
@@ -87,7 +86,7 @@ def exclusive_cumsum(
     # tokens. Callers pass a NARROW projection (key + value), so the
     # cached footprint is ~16 bytes/row. The stats row doubles as the
     # cache prime.
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = track_persist(df)
     mn, mx, cnt = df.agg(
         F.min(order_col), F.max(order_col), F.count(F.lit(1))
     ).first()

@@ -19,10 +19,10 @@ from labelmain_spark.operators.parity import (
     sql_stable_round,
     stable_round,
 )
+from labelmain_spark.session import persist_counted, track_persist
 from labelmain_spark.sources.readers import (
     broadcast_if_bounded,
     load_table,
-    persist_counted,
     rebalance_dense_scan,
     table_row_count,
 )
@@ -325,8 +325,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1.6 s for the tf projection)
         return F.size(toks) - F.size(F.array_remove(toks, term))
 
-    from pyspark import StorageLevel
-
     # the tokenize+tf projection is CPU-dense (~0.5 ms/row at the
     # qvocab width), but Spark sizes scan partitions by BYTES — the
     # ×100 single-file fixture arrives as 15 splits on 32 cores,
@@ -335,18 +333,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # readers.rebalance_dense_scan with a size gate so sub-second
     # fixtures skip the extra stage).
     docs = rebalance_dense_scan(docs)
-    from ..session import track_persist
-
-    # tracked for release_caches: the RESULT plan reads this cache, so
-    # unpersisting before return would re-tokenize the corpus in the
-    # caller's action (r8 advice item — library sessions must not leak
-    # one entry per invocation)
+    # the RESULT plan reads this cache, so unpersisting before return
+    # would re-tokenize the corpus in the caller's action; it stays
+    # until release_caches
     base = track_persist(
         docs.select(
             "doc_id",
             F.size(toks).cast("long").alias("dl"),
             *[_tf(t).cast("long").alias(f"tf_{i}") for i, t in enumerate(qvocab)],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     srow = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -953,9 +948,7 @@ def _kn_rung(
         # unpersisted form) showed AQE exchange reuse does NOT fire
         # across them — the corpus was exploded once per consumer.
         # One corpus-scale scratch table, the _exploded_shingles
-        # class (MEMORY_AND_DISK, evicted by caller clearCache or
-        # session end).
-        from pyspark import StorageLevel
+        # class (released by release_caches).
 
         # r14b (guide §2.4, remove shuffles outright): hash-partition
         # the CACHED pad table by a common SUBSET of every downstream
@@ -974,13 +967,11 @@ def _kn_rung(
         # post-cache exchanges to 2 (pm₂'s window + cont, whose keys
         # drop below the pivot).
         pivot = W[1:2] if order == 3 else W[1:3]
-        cnt_top_pad = (
+        cnt_top_pad, _ = persist_counted(
             pad_occ.groupBy(*W)
             .agg(F.count(F.lit(1)).alias("cnt"))
             .repartition(*[F.col(c) for c in pivot])
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        cnt_top_pad.count()  # prime: consumers must read the cache, not race it
         cnt_pad: dict[int, DataFrame] = {order: cnt_top_pad}
         for m in range(order - 1, 1, -1):
             cnt_pad[m] = (

@@ -47,6 +47,7 @@ from labelmain_spark.operators.parity import (
     sql_stable_round,
     stable_round,
 )
+from labelmain_spark.session import track_persist
 from labelmain_spark.sources.readers import (
     broadcast_if_bounded,
     load_table,
@@ -1339,23 +1340,19 @@ def semantic_dedup_plan(
     (k ∝ N, the paper's deployment rule), so the measured scale trend
     exercises the exact shipped plan. See ``semantic_dedup`` for
     semantics and scale analysis."""
-    from pyspark import StorageLevel
-
     e = e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
     assign = _centroid_assign_udf(cents)
-    assigned = (
+    assigned = track_persist(
         e.select(
             "vec_id",
             F.expr("transform(v, x -> x / vn)").alias("nv"),
             assign(F.col("v"), F.col("vn")).alias("s"),
-        )
-        .select(
+        ).select(
             "vec_id",
             "nv",
             F.col("s.cluster").alias("cluster"),
             F.col("s.c2c").alias("c2c"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     thr = SEM_THRESHOLD
 
@@ -1927,8 +1924,8 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     free at any corpus size. Run per query batch, the same composition
     audits recall continuously as the corpus grows — the drift signal
     that tells an operator the quantizer needs refitting."""
-    ann = ann_ivf_seeded_topk(spark, sf_dir).select("vec_id").persist()
-    exact = similarity_topk(spark, sf_dir).select("vec_id").persist()
+    ann = track_persist(ann_ivf_seeded_topk(spark, sf_dir).select("vec_id"))
+    exact = track_persist(similarity_topk(spark, sf_dir).select("vec_id"))
     hits = ann.join(F.broadcast(exact), "vec_id", "inner")
     return (
         ann.agg(F.count(F.lit(1)).cast("long").alias("n_ann"))

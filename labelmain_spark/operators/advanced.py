@@ -27,6 +27,7 @@ from labelmain_spark.operators.parity import (
     sql_stable_round,
     stable_round,
 )
+from labelmain_spark.session import track_persist
 from labelmain_spark.sources.readers import broadcast_if_bounded, load_table
 
 SESSION_GAP_S = 1800.0  # 30 min
@@ -311,20 +312,16 @@ def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond it take the decimal(28,6) form (operators/parity.py), which
     this plan replaced precisely because events-scale groups never get
     there."""
-    from pyspark import StorageLevel
-
     micro = micro_units(F.col("value"))  # the shared fixed-point idiom
     ev = load_table(spark, sf_dir, "events")
-    hour = (
+    hour = track_persist(
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("bucket"),
             F.col("event_type"),
-        )
-        .agg(
+        ).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(micro).alias("_sum_micro"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     day = (
         hour.groupBy(

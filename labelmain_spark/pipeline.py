@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from labelmain_spark.functions.sampling import _hash_bp_expr
 from labelmain_spark.operators.parity import davg, sql_davg, sql_stable_round, stable_round
+from labelmain_spark.session import persist_counted
 from labelmain_spark.sources.readers import broadcast_if_bounded, load_table
 
 MIN_QUALITY = 0.2
@@ -314,14 +315,7 @@ def corpus_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r13, guide §5: reused AND expensive; eager prime per the
     # _exploded_shingles discipline so concurrent first-action branches
     # don't each recompute it).
-    from pyspark import StorageLevel
-
-    freq = (
-        hterms.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    freq.count()
+    freq, _ = persist_counted(hterms.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")))
     tot = freq.agg(F.sum("cnt").alias("total"))
     hscored = (
         hterms.join(broadcast_if_bounded(freq.crossJoin(F.broadcast(tot))), "term")

@@ -9,11 +9,12 @@ operator module exposes:
   (reserved for genuinely non-SQL-expressible ops).
 
 Cache lifecycle: several callables persist diamond-shaped intermediates
-(shared shingle/paragraph explodes, cumsum level caches). Entries are
+(shared shingle/paragraph explodes, cumsum level caches), all through
+the session-tracked helpers in ``labelmain_spark.session``. Entries are
 keyed by canonical plan — repeat calls on the same input reuse one entry
 — but a long-lived session iterating MANY keys should call
 ``labelmain_spark.session.release_caches(spark)`` between keys to bound
-executor storage memory (bench.py and the test fixtures do).
+executor storage memory (``perfbench/`` and the parity tests do).
 """
 
 from __future__ import annotations

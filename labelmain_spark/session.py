@@ -10,6 +10,11 @@ same code is correct on a 1000-executor cluster against ~100 TB:
 - Arrow on for every pandas interchange (Pandas UDFs, toPandas).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive-UTC) and are stable across machines.
+
+It also owns the one scratch-cache rule: every operator persist in the
+library goes through :func:`track_persist` / :func:`persist_counted`
+(one storage level, session-tracked) and is dropped by
+:func:`unpersist` or :func:`release_caches`.
 """
 
 from __future__ import annotations
@@ -19,7 +24,8 @@ import tempfile
 import weakref
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -106,61 +112,84 @@ def build_session(
 # documented Connect limitation, not a correctness issue.
 _TRACKED_PERSISTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
+STORAGE_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
+"""The one level every library persist uses: Spark's DataFrame
+default (cached columnar batches kept as objects in memory, spilled to
+disk under pressure). PERF.md has the A/B against the serialized
+``MEMORY_AND_DISK``."""
 
-def track_persist(df):
-    """Register an operator-persisted DataFrame for release via
-    :func:`release_caches`. Operators whose RESULT plan still reads the
-    persisted frame (e.g. ``bm25_topk``'s tokenized tf projection)
-    cannot unpersist before returning — the caller's action would
-    recompute the projection and lose the single-tokenization plan —
-    so they register here instead; a ``release_caches(owner_session)``
-    call (and only it) drops the entry. Long-lived library sessions
-    that never call ``release_caches`` would otherwise accumulate one
-    cache entry per distinct invocation (r8 advice item); entries are
-    scoped to ``df.sparkSession`` so concurrent sessions cannot
-    release each other's frames (r10 advice item)."""
+
+def _handle(df):
     handle = getattr(df, "_jdf", None)
-    _TRACKED_PERSISTS.setdefault(df.sparkSession, []).append(
-        handle if handle is not None else df
-    )
+    return handle if handle is not None else df
+
+
+def track_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at :data:`STORAGE_LEVEL` and register it under
+    ``df.sparkSession`` for :func:`release_caches`. Every operator
+    persist in the library goes through here (or through
+    :func:`persist_counted` / :func:`unpersist`), so one release drops
+    exactly what the session's queries cached. A frame the RESULT plan
+    still reads (e.g. ``bm25_topk``'s tokenized tf projection) stays
+    cached until that release; a frame dropped before its operator
+    returns goes through :func:`unpersist` instead."""
+    df = df.persist(STORAGE_LEVEL)
+    _TRACKED_PERSISTS.setdefault(df.sparkSession, []).append(_handle(df))
     return df
 
 
-def release_caches(spark: SparkSession, clear_shared: bool = True) -> None:
-    """Drop every persisted intermediate OWNED BY ``spark`` (shared
-    explodes, cumsum level caches). Several operators persist
-    diamond-shaped intermediates (``_exploded_shingles``,
-    ``_exploded_paragraphs``, ``exclusive_cumsum`` levels); Spark's
-    CacheManager keys them by canonical plan so repeat calls share one
-    entry per input, but entries from DIFFERENT queries/inputs
-    accumulate for the lifetime of the session. Long-lived sessions
-    iterating many registry keys must call this between keys — bench.py
-    and the test fixtures do; the correctness driver's per-key runs are
-    short-lived.
+def persist_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """:func:`track_persist` plus ONE count job, returning (cached
+    frame, exact row count). The count is the cache prime: without it
+    the first action's concurrent branches each recompute the frame
+    instead of reading the cache.
 
-    Scoping is two-tier, and the tiers differ (r10 self-review): the
-    TRACKED-release step unpersists only the caller's frames — other
-    live sessions' tracked lists are untouched. The final
-    ``catalog.clearCache()`` backstop, however, is APPLICATION-WIDE in
-    classic Spark (SharedState.cacheManager is per-SparkContext, not
-    per-session) — it exists because many operators persist
-    self-managed intermediates that never enter the tracked list, and
-    a long bench run must be able to reset storage to zero. In a
-    process hosting multiple concurrent sessions over one JVM, pass
-    ``clear_shared=False`` to release only the caller's tracked frames
-    and leave sibling sessions' cached data alone."""
-    from pyspark.sql import DataFrame as _DF
+    It is also the ADAPTIVE companion to
+    ``readers.broadcast_if_bounded`` for frames whose plan-time size
+    estimate is hopeless (r10: Catalyst estimates an aggregate over an
+    EXPLODE at the explode's inflated output bytes — 817 MB at ×200 /
+    1.6 GB at ×400 for a unigram frequency table that is actually a
+    few KB — so the stats gate refuses the broadcast and the planner
+    degrades the scoring join to a full token-row SortMergeJoin; worse,
+    below the threshold crossover Catalyst broadcast the 55M-row
+    EXPLODED side, whose estimate is the pre-explode file bytes). The
+    caller decides the broadcast on the returned EXACT count instead.
+    At 100 TB this is the only sound gate for vocabulary-shaped
+    frames: plan-time stats cannot bound a distinct-count, the runtime
+    count can."""
+    df = track_persist(df)
+    return df, df.count()
 
+
+def unpersist(df: DataFrame) -> None:
+    """Drop ``df``'s cache now and its tracked entry with it — for
+    frames released before their operator returns (loop rounds, driver
+    arms, per-epoch frames), so the tracked list stays bounded in a
+    loop or stream that never ends."""
+    handle = _handle(df)
+    tracked = _TRACKED_PERSISTS.get(df.sparkSession)
+    if tracked:
+        tracked[:] = [h for h in tracked if h is not handle]
+    df.unpersist()
+
+
+def release_caches(spark: SparkSession) -> None:
+    """Drop every persist tracked under ``spark`` — the scratch caches
+    its queries left behind (shared explodes, pad tables, signature
+    tables, result-read projections). Spark's CacheManager keys them
+    by canonical plan, so repeat calls share one entry per input, but
+    entries from DIFFERENT queries/inputs accumulate for the lifetime
+    of the session. Long-lived sessions iterating many registry keys
+    call this between keys (``perfbench/`` and the parity tests do).
+    Other live sessions' tracked frames are untouched."""
     for h in _TRACKED_PERSISTS.pop(spark, []):
         try:
-            if isinstance(h, _DF):  # Connect fallback: DataFrame
+            if isinstance(h, DataFrame):  # Connect fallback: DataFrame
                 h.unpersist()
             else:  # py4j JVM Dataset handle (hasattr lies on py4j objects)
                 h.unpersist(False)
         except Exception:
             pass  # session of the tracked frame may already be stopped
-    if clear_shared:
-        spark.catalog.clearCache()
 
 
 SMALL_PLAN_ROWS = 200_000

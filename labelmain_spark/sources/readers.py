@@ -225,30 +225,6 @@ def broadcast_if_bounded(df: DataFrame, max_bytes: int | None = None) -> DataFra
     return df
 
 
-def persist_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """Persist + session-track ``df`` and run ONE count job, returning
-    (cached frame, exact row count) — the ADAPTIVE companion to
-    :func:`broadcast_if_bounded` for frames whose plan-time size
-    estimate is hopeless (r10: Catalyst estimates an aggregate over an
-    EXPLODE at the explode's inflated output bytes — 817 MB at ×200 /
-    1.6 GB at ×400 for a unigram frequency table that is actually a
-    few KB — so the stats gate refuses the broadcast and the planner
-    degrades the scoring join to a full token-row SortMergeJoin; worse,
-    below the threshold crossover Catalyst broadcast the 55M-row
-    EXPLODED side, whose estimate is the pre-explode file bytes). The
-    caller decides the broadcast on the returned EXACT count instead.
-    Cost: one extra job over an aggregate the plan computes anyway;
-    the cache makes the second consumption free and is released by
-    ``release_caches`` (session-tracked). At 100 TB this is the only
-    sound gate for vocabulary-shaped frames: plan-time stats cannot
-    bound a distinct-count, the runtime count can."""
-    from labelmain_spark.session import track_persist
-
-    df = df.persist()
-    track_persist(df)
-    return df, df.count()
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
     """Register each table as a temp view so operators can use spark.sql."""
     for n in names or TABLES:

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from labelmain_spark.operators.merge import upsert
 from labelmain_spark.operators.parity import DEC
+from labelmain_spark.session import release_caches, track_persist, unpersist
 from labelmain_spark.sources.readers import _enable_nanos_as_long, normalize_events_ts
 from labelmain_spark.sources.writers import commit_version, read_published
 
@@ -246,12 +247,20 @@ def _epoch_sink(
     micro-batch to ``write_epoch(batch, epoch_id)`` — the one
     streaming query every sink here starts. Applies the
     fresh-checkpoint rule of the sink contract (module docstring) to
-    ``out_dirs``."""
+    ``out_dirs``. What an epoch persisted is released once the epoch
+    is written (classic PySpark hands each micro-batch its own session
+    object, so this drops only the epoch's own caches) — a stream that
+    never ends must not pin one scratch cache per epoch."""
     if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
         for d in out_dirs:
             shutil.rmtree(d, ignore_errors=True)
+
+    def run_epoch(batch: DataFrame, epoch_id: int) -> None:
+        write_epoch(batch, epoch_id)
+        release_caches(batch.sparkSession)
+
     (
-        stream.writeStream.foreachBatch(write_epoch)
+        stream.writeStream.foreachBatch(run_epoch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
@@ -679,16 +688,18 @@ def _shard_assign_epoch(batch: DataFrame, out_path: str, epoch_id: int) -> None:
     # exclusive_cumsum re-persists — a no-op) so the batch's cache
     # entry can be released after the writes; a long-running
     # stream must not accumulate one pinned frame per epoch.
-    counts = batch.select(
-        "doc_id",
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
-        .cast("long")
-        .alias("n_tokens"),
-        # the doc fingerprint rides the narrow projection (the
-        # shard_manifest one-pass pattern) so the INCREMENTAL manifest
-        # needs no second pass over document text
-        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
-    ).persist()
+    counts = track_persist(
+        batch.select(
+            "doc_id",
+            F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
+            .cast("long")
+            .alias("n_tokens"),
+            # the doc fingerprint rides the narrow projection (the
+            # shard_manifest one-pass pattern) so the INCREMENTAL
+            # manifest needs no second pass over document text
+            F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
+        )
+    )
     assigned = (
         exclusive_cumsum(counts, "doc_id", "n_tokens", "_rel")
         .select(
@@ -713,7 +724,7 @@ def _shard_assign_epoch(batch: DataFrame, out_path: str, epoch_id: int) -> None:
     ).write.mode("overwrite").parquet(
         os.path.join(out_path, "frontier", f"epoch={epoch_id}")
     )
-    counts.unpersist()
+    unpersist(counts)
 
 
 def finalize_shards(spark: SparkSession, out_path: str) -> DataFrame:

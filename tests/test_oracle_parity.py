@@ -7,10 +7,24 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from labelmain_spark.session import release_caches
 from tests.oracle_utils import assert_parity
 
 _QUERIES = entrymod.queries()
 _ORACLE = entrymod.oracle_sql()
+
+
+def _assert_released(spark, key):
+    """``release_caches`` must leave no RDD storage behind: every
+    library persist is session-tracked, so releasing the session drops
+    exactly what the key cached."""
+    release_caches(spark)
+    left = [
+        str(i.name())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if i.memSize() > 0 or i.diskSize() > 0
+    ]
+    assert not left, f"{key} left cached storage after release_caches: {left}"
 
 
 def test_registry_shape():
@@ -22,6 +36,7 @@ def test_registry_shape():
 @pytest.mark.parametrize("key", sorted(_ORACLE))
 def test_parity(key, spark, duck, sf_dir):
     sdf = _QUERIES[key](spark, sf_dir).toPandas()
+    _assert_released(spark, key)
     ddf = duck.execute(_ORACLE[key]).fetchdf()
     assert_parity(sdf, ddf, key)
 
@@ -31,6 +46,7 @@ def test_rows_only(key, spark, sf_dir):
     df = _QUERIES[key](spark, sf_dir)
     assert df.count() >= 0
     assert df.schema.fieldNames()
+    _assert_released(spark, key)
 
 
 def test_entry(spark):

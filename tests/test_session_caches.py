@@ -1,11 +1,19 @@
-"""Session-scoped persist tracking: the WeakKeyDictionary must be able
-to actually collect an abandoned session, which requires that tracked
-handles never strongly reference the Python SparkSession (r10
+"""The one scratch-cache rule: every library persist goes through the
+session-tracked helpers in ``labelmain_spark.session``, so
+``release_caches(spark)`` drops exactly what ``spark``'s queries cached.
+
+The tracked list is a WeakKeyDictionary keyed by session; it must be
+able to actually collect an abandoned session, which requires that
+tracked handles never strongly reference the Python SparkSession (r10
 self-review: DataFrame values hold ``_session`` → they pin the weak key
 forever, degrading the dict to a strong one for exactly the sessions it
-exists to clean up)."""
+exists to clean up). That every registry key releases to zero storage
+is checked per key by the parity tests (tests/test_oracle_parity.py)."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 from labelmain_spark import session as sess
 
@@ -32,12 +40,9 @@ def test_tracked_handles_hold_no_session_backref(spark, sf_dir):
 
 
 def test_release_caches_scoped_to_caller(spark, sf_dir):
-    """The tracked-release step must only drop the caller's entry — a
+    """Releasing one session must only drop that session's entry — a
     second session's tracked list survives. (Simulated with a distinct
-    weak-key object: real concurrent sessions share the test JVM. The
-    catalog.clearCache() backstop is application-wide by Spark's own
-    design — release_caches documents that and takes
-    clear_shared=False for multi-session processes.)"""
+    weak-key object: real concurrent sessions share the test JVM.)"""
 
     class _FakeSession:
         pass
@@ -47,43 +52,37 @@ def test_release_caches_scoped_to_caller(spark, sf_dir):
     from labelmain_spark.functions.text import bm25_topk
 
     bm25_topk(spark, sf_dir)
-    sess.release_caches(spark, clear_shared=False)
-    assert sess._TRACKED_PERSISTS.get(other) == ["sentinel"]
-    del sess._TRACKED_PERSISTS[other]
     sess.release_caches(spark)
+    assert sess._TRACKED_PERSISTS.get(other) == ["sentinel"]
+    assert not sess._TRACKED_PERSISTS.get(spark)
+    del sess._TRACKED_PERSISTS[other]
 
 
-def test_heavy_key_iteration_storage_bounded(spark, sf_dir):
-    """r14 cache-lifetime hygiene (VERDICT #6): a session iterating the
-    HEAVY registry keys — the ones whose internals persist
-    postings/signature/pair-scale intermediates (audit persists,
-    `_exploded_shingles`, the KN pad table) — must return to ZERO
-    cached storage after each `release_caches` call, so a long-lived
-    driver sweeping the registry cannot accumulate postings-sized
-    storage across keys. Ten keys, every one either persisting
-    internally or composing operators that do."""
-    from labelmain_spark import registry
+_CACHE_CALLS = {"persist", "unpersist", "cache"}
 
-    heavy = [
-        "lsh_recall_audit",
-        "containment_dedup",
-        "dedup_minhash",
-        "dedup_clusters",
-        "dedup_incremental_near",
-        "split_leakage_safe",
-        "quality_kn5_nll",
-        "dsir_weights",
-        "corpus_incremental",
-        "ngram_jaccard",
-    ]
-    qs = registry.queries()
-    jsc = spark.sparkContext._jsc.sc()
-    for key in heavy:
-        qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        sess.release_caches(spark)
-        leftover = [
-            str(i.name())
-            for i in jsc.getRDDStorageInfo()
-            if i.memSize() > 0 or i.diskSize() > 0
-        ]
-        assert not leftover, f"{key} left cached storage: {leftover}"
+
+def test_persists_only_in_session_module():
+    """Source pin: outside ``session.py`` no library module calls
+    ``.persist(``, ``.unpersist(`` or ``.cache(``, or imports
+    ``StorageLevel`` — a new site cannot bypass the tracked helpers
+    (one storage level, one release)."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "labelmain_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "session.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', 0)}"
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _CACHE_CALLS
+            ):
+                bad.append(f"{where} .{node.func.attr}(")
+            elif isinstance(node, (ast.Import, ast.ImportFrom)) and any(
+                a.name.split(".")[-1] == "StorageLevel" for a in node.names
+            ):
+                bad.append(f"{where} imports StorageLevel")
+            elif isinstance(node, ast.Attribute) and node.attr == "StorageLevel":
+                bad.append(f"{where} uses StorageLevel")
+    assert not bad, "cache calls outside session.py: " + ", ".join(bad)

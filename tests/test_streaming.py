@@ -276,13 +276,16 @@ def test_stream_decontaminate_matches_batch(spark, sf_dir, tmp_path):
     """Streaming span decontamination == the batch key on the same
     docs: the cleaner is per-document given the static benchmark set,
     so accumulating foreachBatch outputs must reproduce
-    decontaminate_spans row-for-row."""
+    decontaminate_spans row-for-row. Each epoch's persisted token
+    arrays are released with the epoch: after the stream and one
+    release_caches(spark), it has left no RDD storage behind."""
     from labelmain_spark.functions.contamination import (
         CONTAM_EVAL_BP,
         benchmark_ngrams,
         decontaminate_spans,
     )
     from labelmain_spark.functions.sampling import _hash_bp_expr
+    from labelmain_spark.session import release_caches
     from labelmain_spark.sources.readers import load_table
 
     is_eval = F.expr(_hash_bp_expr("doc_id", "spark")) < CONTAM_EVAL_BP
@@ -292,7 +295,20 @@ def test_stream_decontaminate_matches_batch(spark, sf_dir, tmp_path):
         inc.stream_documents(spark, sf_dir).filter(~is_eval).select("doc_id", "text")
     )
     out_path = str(tmp_path / "clean")
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {
+            i.id(): str(i.name())
+            for i in jsc.getRDDStorageInfo()
+            if i.memSize() > 0 or i.diskSize() > 0
+        }
+
+    stored_before = stored()
     inc.run_decontaminate_sink(stream, bench, out_path, str(tmp_path / "ckpt"))
+    release_caches(spark)
+    left = {k: v for k, v in stored().items() if k not in stored_before}
+    assert not left, f"the stream left cached storage: {left}"
     got = {
         (r.doc_id, r.n_tokens, r.n_removed, r.clean_text)
         for r in spark.read.parquet(out_path).collect()
@@ -830,7 +846,7 @@ def test_stream_drift_matches_batch(spark, sf_dir, tmp_path):
     assert all(r.drift_flag == 0 for d, r in flags4.items() if d != 99)
 
 
-def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path, monkeypatch):
     """Streaming shard assignment == batch shard_pack across REAL
     micro-batch boundaries: the corpus lands as three contiguous
     doc_id-range files (mtimes staggered so the file source triggers
@@ -839,10 +855,12 @@ def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path):
     key row-for-row — the one-number-of-state property that makes
     shard packing incremental. A crash-resume re-run on the same
     checkpoint must be a no-op (availableNow replays nothing; the
-    assignment is already committed)."""
+    assignment is already committed). Tracking stays bounded: the
+    stream leaves every session's tracked-persist list as it found it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from labelmain_spark import session as sess
     from labelmain_spark.functions.packing import shard_pack
     from labelmain_spark.sources.readers import load_table
 
@@ -874,7 +892,21 @@ def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path):
         .parquet(str(land))
     )
     out, ckpt = str(tmp_path / "shards"), str(tmp_path / "ckpt")
+    # each micro-batch runs under its own session object; the spy keeps
+    # them alive so their tracked entries can be read after the stream
+    batch_sessions = []
+    real_epoch = inc._shard_assign_epoch
+
+    def spy_epoch(batch, out_path, epoch_id):
+        batch_sessions.append(batch.sparkSession)
+        real_epoch(batch, out_path, epoch_id)
+
+    monkeypatch.setattr(inc, "_shard_assign_epoch", spy_epoch)
+    tracked_before = len(sess._TRACKED_PERSISTS.get(spark, []))
     inc.run_shard_sink(stream, out, ckpt)
+    assert len(sess._TRACKED_PERSISTS.get(spark, [])) == tracked_before
+    assert len(batch_sessions) >= 2, batch_sessions
+    assert not any(sess._TRACKED_PERSISTS.get(s) for s in batch_sessions)
     epochs = os.listdir(os.path.join(out, "assign"))
     assert len([d for d in epochs if d.startswith("epoch=")]) >= 2, epochs
     want = {
