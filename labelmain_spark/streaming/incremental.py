@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from labelmain_spark.operators.merge import upsert
 from labelmain_spark.operators.parity import DEC
-from labelmain_spark.session import release_caches, track_persist, unpersist
+from labelmain_spark.session import release_caches, track_persist
 from labelmain_spark.sources.readers import _enable_nanos_as_long, normalize_events_ts
 from labelmain_spark.sources.writers import commit_version, read_published
 
@@ -248,16 +248,18 @@ def _epoch_sink(
     streaming query every sink here starts. Applies the
     fresh-checkpoint rule of the sink contract (module docstring) to
     ``out_dirs``. What an epoch persisted is released once the epoch
-    is written (classic PySpark hands each micro-batch its own session
-    object, so this drops only the epoch's own caches) — a stream that
-    never ends must not pin one scratch cache per epoch."""
+    is written or has failed (classic PySpark hands each micro-batch its
+    own session object, so this drops only the epoch's own caches) — a
+    stream that never ends must not pin one scratch cache per epoch."""
     if not os.path.exists(os.path.join(checkpoint_path, "offsets")):
         for d in out_dirs:
             shutil.rmtree(d, ignore_errors=True)
 
     def run_epoch(batch: DataFrame, epoch_id: int) -> None:
-        write_epoch(batch, epoch_id)
-        release_caches(batch.sparkSession)
+        try:
+            write_epoch(batch, epoch_id)
+        finally:
+            release_caches(batch.sparkSession)
 
     (
         stream.writeStream.foreachBatch(run_epoch)
@@ -684,10 +686,9 @@ def _shard_assign_epoch(batch: DataFrame, out_path: str, epoch_id: int) -> None:
         "batch_tokens long, epoch int",
     ).filter(F.col("epoch") < epoch_id)
     frontier = prior.agg(F.coalesce(F.sum("batch_tokens"), F.lit(0))).first()[0]
-    # Persist the narrow projection OURSELVES (same plan object
-    # exclusive_cumsum re-persists — a no-op) so the batch's cache
-    # entry can be released after the writes; a long-running
-    # stream must not accumulate one pinned frame per epoch.
+    # Persist the narrow projection: the cumsum and the frontier sum
+    # below both read it (exclusive_cumsum re-persists the same plan
+    # object — a no-op). The epoch sink releases it.
     counts = track_persist(
         batch.select(
             "doc_id",
@@ -724,7 +725,6 @@ def _shard_assign_epoch(batch: DataFrame, out_path: str, epoch_id: int) -> None:
     ).write.mode("overwrite").parquet(
         os.path.join(out_path, "frontier", f"epoch={epoch_id}")
     )
-    unpersist(counts)
 
 
 def finalize_shards(spark: SparkSession, out_path: str) -> DataFrame:

@@ -14,16 +14,22 @@ _QUERIES = entrymod.queries()
 _ORACLE = entrymod.oracle_sql()
 
 
-def _assert_released(spark, key):
-    """``release_caches`` must leave no RDD storage behind: every
-    library persist is session-tracked, so releasing the session drops
-    exactly what the key cached."""
-    release_caches(spark)
-    left = [
-        str(i.name())
+def _stored(spark):
+    """Ids of the RDDs that hold memory or disk storage, with names."""
+    return {
+        i.id(): str(i.name())
         for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
         if i.memSize() > 0 or i.diskSize() > 0
-    ]
+    }
+
+
+def _assert_released(spark, key, stored_before):
+    """``release_caches`` must leave no new RDD storage behind: every
+    library persist is session-tracked, so releasing the session drops
+    exactly what the key cached. Storage held before the key ran (an
+    earlier test's cache) is not the key's to release."""
+    release_caches(spark)
+    left = {k: v for k, v in _stored(spark).items() if k not in stored_before}
     assert not left, f"{key} left cached storage after release_caches: {left}"
 
 
@@ -35,18 +41,20 @@ def test_registry_shape():
 
 @pytest.mark.parametrize("key", sorted(_ORACLE))
 def test_parity(key, spark, duck, sf_dir):
+    stored_before = _stored(spark)
     sdf = _QUERIES[key](spark, sf_dir).toPandas()
-    _assert_released(spark, key)
+    _assert_released(spark, key, stored_before)
     ddf = duck.execute(_ORACLE[key]).fetchdf()
     assert_parity(sdf, ddf, key)
 
 
 @pytest.mark.parametrize("key", sorted(_QUERIES.keys() - _ORACLE.keys()))
 def test_rows_only(key, spark, sf_dir):
+    stored_before = _stored(spark)
     df = _QUERIES[key](spark, sf_dir)
     assert df.count() >= 0
     assert df.schema.fieldNames()
-    _assert_released(spark, key)
+    _assert_released(spark, key, stored_before)
 
 
 def test_entry(spark):

@@ -15,6 +15,15 @@ from labelmain_spark.operators.windows import window_tumbling
 from labelmain_spark.streaming import incremental as inc
 
 
+def _stored(spark) -> dict:
+    """Ids of the RDDs that hold memory or disk storage, with names."""
+    return {
+        i.id(): str(i.name())
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if i.memSize() > 0 or i.diskSize() > 0
+    }
+
+
 def _run_to_memory(df, name: str) -> None:
     q = (
         df.writeStream.outputMode("append")
@@ -295,19 +304,10 @@ def test_stream_decontaminate_matches_batch(spark, sf_dir, tmp_path):
         inc.stream_documents(spark, sf_dir).filter(~is_eval).select("doc_id", "text")
     )
     out_path = str(tmp_path / "clean")
-    jsc = spark.sparkContext._jsc.sc()
-
-    def stored():
-        return {
-            i.id(): str(i.name())
-            for i in jsc.getRDDStorageInfo()
-            if i.memSize() > 0 or i.diskSize() > 0
-        }
-
-    stored_before = stored()
+    stored_before = _stored(spark)
     inc.run_decontaminate_sink(stream, bench, out_path, str(tmp_path / "ckpt"))
     release_caches(spark)
-    left = {k: v for k, v in stored().items() if k not in stored_before}
+    left = {k: v for k, v in _stored(spark).items() if k not in stored_before}
     assert not left, f"the stream left cached storage: {left}"
     got = {
         (r.doc_id, r.n_tokens, r.n_removed, r.clean_text)
@@ -318,6 +318,28 @@ def test_stream_decontaminate_matches_batch(spark, sf_dir, tmp_path):
         for r in decontaminate_spans(spark, sf_dir).collect()
     }
     assert got == want and got, (len(got), len(want))
+
+
+def test_failed_epoch_releases_its_caches(spark, sf_dir, tmp_path):
+    """An epoch that raises still releases what it persisted. Its
+    tracked entries live under the micro-batch's own session object,
+    which the caller's release_caches(spark) cannot reach, so the sink
+    must drop them before the failure propagates."""
+    from labelmain_spark.session import track_persist
+
+    def failing_epoch(batch, epoch_id):
+        track_persist(batch.select("doc_id")).count()
+        raise RuntimeError("epoch failed")
+
+    stored_before = _stored(spark)
+    with pytest.raises(Exception, match="epoch failed"):
+        inc._epoch_sink(
+            inc.stream_documents(spark, sf_dir).select("doc_id"),
+            str(tmp_path / "ckpt"),
+            failing_epoch,
+        )
+    left = {k: v for k, v in _stored(spark).items() if k not in stored_before}
+    assert not left, f"the failed epoch left cached storage: {left}"
 
 
 def test_stream_corpus_increment_matches_batch(spark, sf_dir, tmp_path):
@@ -855,8 +877,9 @@ def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path, monkeypatc
     key row-for-row — the one-number-of-state property that makes
     shard packing incremental. A crash-resume re-run on the same
     checkpoint must be a no-op (availableNow replays nothing; the
-    assignment is already committed). Tracking stays bounded: the
-    stream leaves every session's tracked-persist list as it found it."""
+    assignment is already committed). Tracking stays bounded: each
+    micro-batch session holds no tracked persist once its epoch is
+    written."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -902,9 +925,7 @@ def test_stream_shard_frontier_matches_batch(spark, sf_dir, tmp_path, monkeypatc
         real_epoch(batch, out_path, epoch_id)
 
     monkeypatch.setattr(inc, "_shard_assign_epoch", spy_epoch)
-    tracked_before = len(sess._TRACKED_PERSISTS.get(spark, []))
     inc.run_shard_sink(stream, out, ckpt)
-    assert len(sess._TRACKED_PERSISTS.get(spark, [])) == tracked_before
     assert len(batch_sessions) >= 2, batch_sessions
     assert not any(sess._TRACKED_PERSISTS.get(s) for s in batch_sessions)
     epochs = os.listdir(os.path.join(out, "assign"))
