@@ -641,6 +641,35 @@ def _ngrams_from(base: DataFrame, k: int, names: list[str],
     ).select(*cols, *[F.col(f"g.{names[j]}").alias(names[j]) for j in range(k)])
 
 
+def _score_occurrences(
+    occ: DataFrame, gram: DataFrame, W: list[str], count_alias: str,
+    nll_alias: str,
+) -> DataFrame:
+    """The one scoring tail of every JM and KN rung: the raw
+    top-order occurrence stream ``(doc_id, *W)`` joins the per-gram
+    table ``(*W, micro)`` once on the gram key, then aggregates per
+    doc. There is no per-doc pre-aggregate: ``count(*)`` and
+    ``sum(micro)`` equal Σ m and Σ m·micro over the per-(doc, gram)
+    multiplicities m as exact integers.
+
+    The gram side goes through the ``broadcast_if_bounded`` size gate,
+    so it is the build side whenever its estimate is bounded. Without
+    the hint Catalyst builds the OCCURRENCE stream: its plan-time
+    estimate of an explode is the pre-explode file size (254 KB at
+    sf0.1), below the estimate of the gram table's join tree. Past the
+    gate the join carries no hint, so Catalyst's own threshold decides
+    (a shuffle join on W once the corpus outgrows it)."""
+    scored = occ.join(broadcast_if_bounded(gram), W).select("doc_id", "micro")
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("int").alias(count_alias),
+        stable_round(
+            (F.sum("micro").cast("double") / F.lit(1e6))
+            / F.count(F.lit(1)),
+            4,
+        ).alias(nll_alias),
+    )
+
+
 def _jm_rung(
     spark: SparkSession, sf_dir: str, order: int, count_alias: str,
     nll_alias: str,
@@ -662,21 +691,22 @@ def _jm_rung(
 
     Scale shape: n-gram formation stays inside the token-array
     expression (:func:`_ngrams_from` — slices + arrays_zip, pure JVM,
-    no self-join, no window). The top-order postings pre-aggregate per
-    (doc, gram) first (``dq``, map-side combinable) and the top count
-    table derives from that reduced frame. Each middle order m is ONE
+    no self-join, no window). The per-gram table is the top-order
+    count table, aggregated straight from the raw occurrences; every
+    other statistic joins onto this DISTINCT-gram table, so each
+    gram's micro-NLL is computed once. Each middle order m is ONE
     count table joined twice — as the order-(m+1) context denominator
     on W[order−m−1 : order−1], then as the order-m numerator on
-    W[order−m:] — by shuffle joins on its n-gram key: distinct n-grams
-    grow toward |V|ᵐ at 100 TB, so they never broadcast, and AQE's
-    skew join splits the Zipf-hot keys. The vocabulary-bounded unigram
+    W[order−m:] — by joins on its n-gram key that carry no broadcast
+    hint: distinct n-grams grow toward |V|ᵐ at 100 TB, and AQE's skew
+    join splits the Zipf-hot keys. The vocabulary-bounded unigram
     table joins twice (denominator on W[−2], numerator on W[−1])
-    through the ``broadcast_if_bounded`` size gate, with the
-    shuffle-join fallback at web-scale type counts; the corpus total
-    is a 1-row broadcast. Per-transition NLL is rounded to 6 dp and
-    summed as exact integer micro-units × multiplicity — the
-    quality_unigram_nll discipline, bit-stable on 1000 executors at
-    long-sum speed."""
+    through the ``broadcast_if_bounded`` size gate; the corpus total
+    is a 1-row broadcast. The raw occurrence stream then joins the
+    finished gram table once (:func:`_score_occurrences`, the tail
+    shared with the KN rungs). Per-transition NLL is rounded to 6 dp
+    and summed as exact integer micro-units — the quality_unigram_nll
+    discipline, bit-stable on 1000 executors at long-sum speed."""
     W = [f"w{i}" for i in range(1, order + 1)]
     lam = {2: BIGRAM_LAMBDA, 3: TRIGRAM_LAMBDA, 4: FOURGRAM_LAMBDA, 5: FIVEGRAM_LAMBDA}
     docs = load_table(spark, sf_dir, "documents")
@@ -687,17 +717,8 @@ def _jm_rung(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     tot = cu.agg(F.sum("cnt").alias("total"))
-    # dq feeds BOTH the probe side and the top count table, so the
-    # explode + per-doc agg execute twice — but persisting it was
-    # MEASURED SLOWER at ×100 on the bigram rung (56.6 s vs 44.4 s
-    # idle): materializing ~corpus-token-count string tuples costs more
-    # than recomputing a codegen explode.
-    dq = (
-        _ngrams_from(base, order, W, with_doc=True)
-        .groupBy("doc_id", *W)
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    scored = dq.join(dq.groupBy(*W).agg(F.sum("m").alias(f"num_{order}")), W)
+    occ = _ngrams_from(base, order, W, with_doc=True)
+    gram = occ.groupBy(*W).agg(F.count(F.lit(1)).alias(f"num_{order}"))
     for m in range(order - 1, 1, -1):
         # g-named, so toDF always aliases: a no-op rename onto W[:m]
         # would give the two joins' broadcasts different canonical
@@ -705,7 +726,7 @@ def _jm_rung(
         G = [f"g{i}" for i in range(1, m + 1)]
         cm = _ngrams_from(base, m, G).groupBy(*G).agg(F.count(F.lit(1)).alias("cnt"))
         ctx, tail = W[order - m - 1:order - 1], W[order - m:]
-        scored = scored.join(cm.toDF(*ctx, f"den_{m + 1}"), ctx).join(
+        gram = gram.join(cm.toDF(*ctx, f"den_{m + 1}"), ctx).join(
             cm.toDF(*tail, f"num_{m}"), tail
         )
     p = F.col("num_1").cast("double") / F.col("total")
@@ -714,20 +735,13 @@ def _jm_rung(
             F.col(f"num_{k}").cast("double") / F.col(f"den_{k}")
         ) + F.lit(1.0 - lam[k]) * p
     micro = F.floor(stable_round(-F.log(p), 6) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    scored = (
-        scored.join(broadcast_if_bounded(cu.toDF(W[-2], "den_2")), W[-2])
+    gram = (
+        gram.join(broadcast_if_bounded(cu.toDF(W[-2], "den_2")), W[-2])
         .join(broadcast_if_bounded(cu.toDF(W[-1], "num_1")), W[-1])
         .crossJoin(F.broadcast(tot))
-        .select("doc_id", "m", micro.alias("micro"))
+        .select(*W, micro.alias("micro"))
     )
-    return scored.groupBy("doc_id").agg(
-        F.sum("m").cast("int").alias(count_alias),
-        stable_round(
-            (F.sum(F.col("m") * F.col("micro")).cast("double") / F.lit(1e6))
-            / F.sum("m"),
-            4,
-        ).alias(nll_alias),
-    )
+    return _score_occurrences(occ, gram, W, count_alias, nll_alias)
 
 
 def quality_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,10 +756,10 @@ def quality_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram key misses. Only transitions are scored (the first token
     has no history), so single-token docs are absent from the output.
 
-    Implementation: the shared :func:`_jm_rung` at order 2 — the
-    bigram table rides a shuffle join on (prev, cur) (distinct bigrams
-    grow ~O(corpus^0.7) toward |V|²), both unigram probes broadcast
-    under the size gate."""
+    Implementation: the shared :func:`_jm_rung` at order 2 — the raw
+    transitions join the per-bigram table once on (prev, cur) under
+    the size gate (distinct bigrams grow ~O(corpus^0.7) toward |V|²),
+    and both unigram probes broadcast under the same gate."""
     return _jm_rung(spark, sf_dir, 2, "n_bigrams", "bigram_nll")
 
 
@@ -824,8 +838,9 @@ def _kn_rung(
     a rollup, and the top-order context / predecessor statistics are
     windows over it (changes 1-4 below). There is no per-doc
     pre-aggregate: the raw occurrence stream joins the annotated gram
-    table once on the gram key and aggregates per doc (change 3).
-    Per-transition NLL in exact integer micro-units, the family
+    table once on the gram key and aggregates per doc (change 3,
+    :func:`_score_occurrences`, the gram table the size-gated build
+    side). Per-transition NLL in exact integer micro-units, the family
     discipline.
 
     r13 (guide §2.3 "aggregate before you shuffle" / §2.4): every
@@ -1090,17 +1105,7 @@ def _kn_rung(
         .crossJoin(F.broadcast(types2))
         .select(*W, micro.alias("micro"))
     )
-    # raw occurrences join the annotated gram table ONCE (change 3);
-    # count(*) = Σ m and sum(micro) = Σ m·micro of the r13 pre-agg form.
-    scored = occ.join(gram, W).select("doc_id", "micro")
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias(count_alias),
-        stable_round(
-            (F.sum("micro").cast("double") / F.lit(1e6))
-            / F.count(F.lit(1)),
-            4,
-        ).alias(nll_alias),
-    )
+    return _score_occurrences(occ, gram, W, count_alias, nll_alias)
 
 
 def quality_kn_nll(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -643,15 +643,35 @@ def test_unigram_nll_tiered_plan(spark, sf_dir, monkeypatch):
     spark.catalog.clearCache()
 
 
-@pytest.mark.parametrize(
-    "key,n",
-    [
-        pytest.param("quality_bigram_nll", 2, id="quality_bigram_nll"),
-        pytest.param("quality_trigram_nll", 3, id="quality_trigram_nll"),
-        pytest.param("quality_4gram_nll", 4, id="quality_4gram_nll"),
-        pytest.param("quality_5gram_nll", 5, id="quality_5gram_nll"),
-    ],
-)
+_JM_RUNGS = [
+    pytest.param("quality_bigram_nll", 2, id="quality_bigram_nll"),
+    pytest.param("quality_trigram_nll", 3, id="quality_trigram_nll"),
+    pytest.param("quality_4gram_nll", 4, id="quality_4gram_nll"),
+    pytest.param("quality_5gram_nll", 5, id="quality_5gram_nll"),
+]
+_KN_RUNGS = [
+    pytest.param("quality_kn_nll", 2, id="quality_kn_nll"),
+    pytest.param("quality_kn3_nll", 3, id="quality_kn3_nll"),
+    pytest.param("quality_kn4_nll", 4, id="quality_kn4_nll"),
+    pytest.param("quality_kn5_nll", 5, id="quality_kn5_nll"),
+]
+
+
+def _occurrence_joins(plan: str, n: int) -> list[tuple[str, str]]:
+    """(join node, build side) of every join keyed on the full
+    ``w1..wn`` gram key — in an n-gram rung, only the occurrence
+    stream ⋈ gram table join carries all n gram columns."""
+    import re
+
+    key = ", ".join(rf"w{i}#\d+" for i in range(1, n + 1))
+    return re.findall(
+        rf"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[{key}\], "
+        rf"\[{key}\], Inner(?:, (BuildLeft|BuildRight))?",
+        plan,
+    )
+
+
+@pytest.mark.parametrize("key,n", _JM_RUNGS)
 def test_jm_nll_expression_grams_broadcast_unigrams(spark, sf_dir, key, n):
     """Every Jelinek-Mercer rung must form its n-grams inside the
     token-array expression — no self-join and no per-doc window sort
@@ -661,25 +681,110 @@ def test_jm_nll_expression_grams_broadcast_unigrams(spark, sf_dir, key, n):
     plan may carry shuffle joins, but never a cartesian and never a
     Python node.
 
-    The exchange and scan counts pin the one-count-table-per-order
-    shape of ``_jm_rung`` at fixture scale, where Catalyst broadcasts
-    the tiny count tables: 2n+1 corpus scans (the per-doc top-gram
-    pre-agg under both of its consumers, each middle-order table under
-    both of its joins, the unigram table under its two probes and the
-    total) and 2n+3 hash exchanges (one per scanned aggregate, plus the
-    top count table's and the final per-doc aggregate's). A silent
-    switch to the KN padded-gram cascade (one persisted pad table,
-    windows) changes both counts."""
+    The exchange and scan counts pin the per-gram-table shape of
+    ``_jm_rung`` at fixture scale, where Catalyst broadcasts the tiny
+    count tables: 2n+1 corpus scans (the raw occurrence stream, the
+    top count table, each middle-order table under both of its joins,
+    the unigram table under its two probes and the total) and 2n+1
+    hash exchanges (one per scanned aggregate, plus the final per-doc
+    aggregate's). A per-doc pre-aggregate of the occurrences adds a
+    (doc_id, W) exchange; a switch to the KN padded-gram cascade (one
+    persisted pad table, windows) changes both counts."""
     df = getattr(text, key)(spark, sf_dir)
     plan = checks.physical_plan(df)
     assert "CartesianProduct" not in plan, plan[:1500]
     assert "Window" not in plan, plan[:1500]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:1500]
-    assert plan.count("Exchange hashpartitioning") == 2 * n + 3, plan[:3000]
+    assert plan.count("Exchange hashpartitioning") == 2 * n + 1, plan[:3000]
     assert plan.count("Scan parquet") == 2 * n + 1, plan[:3000]
     checks.assert_no_python_eval(df)
     checks.assert_read_schema(df, {"doc_id", "text"}, table_hint="documents")
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("key,n", _JM_RUNGS + _KN_RUNGS)
+def test_ngram_occurrence_join_builds_gram_table(spark, sf_dir, key, n):
+    """The one join of the raw occurrence stream onto the per-gram
+    table (``_score_occurrences``) builds the GRAM side (the right
+    child), never the occurrence stream. Catalyst's plan-time estimate
+    of an explode is the pre-explode file size, so without the size
+    gate it picks the occurrence stream as the build side — a
+    corpus-sized broadcast at scale."""
+    from labelmain_spark.session import release_caches
+
+    plan = checks.physical_plan(getattr(text, key)(spark, sf_dir))
+    assert _occurrence_joins(plan, n) == [("BroadcastHashJoin", "BuildRight")], plan[:3000]
+    release_caches(spark)
+
+
+def test_ngram_occurrence_join_shuffle_arm(spark, sf_dir, monkeypatch):
+    """The other arm of the occurrence-join gate: with
+    ``BROADCAST_MAX_BYTES`` at 0 and Catalyst auto-broadcast off (the
+    web-scale plan), the occurrence stream ⋈ gram table join is a
+    shuffle join on the gram key, and the rows are identical to the
+    gated broadcast plan — for a JM rung and a KN rung."""
+    from labelmain_spark.session import release_caches
+    from labelmain_spark.sources import readers
+
+    cases = [(text.quality_bigram_nll, 2), (text.quality_kn3_nll, 3)]
+    want = []
+    for fn, _ in cases:
+        want.append(sorted(map(str, fn(spark, sf_dir).collect())))
+        release_caches(spark)
+    monkeypatch.setattr(readers, "BROADCAST_MAX_BYTES", 0)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for (fn, n), rows in zip(cases, want):
+            df = fn(spark, sf_dir)
+            plan = checks.physical_plan(df)
+            joins = _occurrence_joins(plan, n)
+            assert len(joins) == 1, plan[:3000]
+            assert joins[0][0] in ("SortMergeJoin", "ShuffledHashJoin"), plan[:3000]
+            got = sorted(map(str, df.collect()))
+            assert got == rows and got, fn.__name__
+            release_caches(spark)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+# (plan-build jobs, executed jobs of a noop-sink write) per n-gram
+# rung under the test session (local[4], 4 shuffle partitions). The
+# KN build jobs are the padded-table prime and its tier probes.
+_NGRAM_JOBS = {
+    "quality_bigram_nll": (0, 8),
+    "quality_trigram_nll": (0, 10),
+    "quality_4gram_nll": (0, 12),
+    "quality_5gram_nll": (0, 14),
+    "quality_kn_nll": (0, 13),
+    "quality_kn3_nll": (5, 6),
+    "quality_kn4_nll": (5, 11),
+    "quality_kn5_nll": (5, 12),
+}
+
+
+@pytest.mark.parametrize("key", list(_NGRAM_JOBS))
+def test_ngram_rung_job_counts(spark, sf_dir, key):
+    """Plan-build and executed job counts of every JM and KN rung,
+    counted on a second call after ``release_caches`` so the
+    row-count memo is filled and no cache entry is left over. A
+    per-doc pre-aggregate of the occurrences adds an executed job to
+    a JM rung."""
+    from labelmain_spark.session import release_caches
+
+    fn = getattr(text, key)
+    fn(spark, sf_dir)
+    release_caches(spark)
+    built = {}
+    build_jobs, _ = checks.jobs_and_tasks(
+        spark, lambda: built.setdefault("df", fn(spark, sf_dir))
+    )
+    exec_jobs, _ = checks.jobs_and_tasks(
+        spark,
+        lambda: built["df"].write.format("noop").mode("overwrite").save(),
+    )
+    release_caches(spark)
+    assert (build_jobs, exec_jobs) == _NGRAM_JOBS[key], (key, build_jobs, exec_jobs)
 
 
 def test_blocklist_filter_zero_shuffle_narrow_map(spark, sf_dir):
