@@ -183,7 +183,7 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, parallelizing the scan natively in both engines. Final
     ×100: 0.9 s (vs 3.2) — the residual ratio (DuckDB 0.07 s) is the
     multi-job dispatch floor on a sub-second key, the
-    scripts/profile_floor.py class, not a scale term."""
+    dispatch-floor class (PERF.md r7 floor attribution), not a scale term."""
     docs = load_table(spark, sf_dir, "documents")
     n_toks = F.size(F.split(F.col("text"), " "))
     agg = (

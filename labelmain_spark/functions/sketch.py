@@ -22,7 +22,7 @@ md5(seed:key) per (row, seed): d full digest computations per row, and
 the ×200-events tier showed the ratio vs DuckDB RISING (2.4× → 3.3× →
 6.2×) because the wall IS the digest arithmetic — both engines linear,
 Spark's md5-over-UTF8String constant ~6× DuckDB's C md5. Measured at
-×200 (scripts/events_floor_ab.py): 4 md5/row 5.2 s → 1 md5/row 3.3 s.
+×200 (PERF.md, events flat-wall quartet): 4 md5/row 5.2 s → 1 md5/row 3.3 s.
 Two parity-safe spelling choices per engine: Spark computes the digest
 ONCE via a projected column (codegen does NOT common-subexpression a
 repeated md5 — respelling it per digit measured 8.9 s) and slices with

@@ -40,7 +40,7 @@ VOCAB_BROADCAST_MAX_TERMS = 2_000_000
 # self-review): GetMapValue on a create_map literal is a LINEAR key
 # scan — no hash — so the per-token probe cost grows with |V| and the
 # 'no-join' tier inverts well before the 10k analysis-cost bound.
-# Measured (scripts/unigram_tier_ab.py, 6M uniform tokens, best-of-2,
+# Measured (PERF.md "Tier-1 unigram cap"; 6M uniform tokens, best-of-2,
 # tier2 = broadcast join): V=30 1.3 vs 1.4 s; V=400 2.4 vs 1.3 s;
 # V=1000 3.3 vs 1.1 s; V=4000 14.3 vs 1.1 s; V=10000 30.1 vs 1.1 s.
 # The tier-1 win is real only where the vocabulary is tiny (the ×400
@@ -292,8 +292,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     16k-row-group fixture both engines parallelize the scan natively:
     2.5 s vs DuckDB 1.0 s = 2.5× — a ~1.5-s-of-work key spread over
     ~6 AQE stage-jobs (eager stats, cached scoring, two-phase rank)
-    against DuckDB's single fused pipeline; the profile_floor.py
-    dispatch-attribution class, trending to parity as work grows.
+    against DuckDB's single fused pipeline; the dispatch-floor
+    class (PERF.md r7 floor attribution), trending to parity as work grows.
     Exactness unchanged: the literals are the same exact longs
     the broadcast row carried, avgdl the same single IEEE division,
     and Python's math.log vs the JVM's F.log on bit-identical
@@ -860,7 +860,7 @@ def _kn_rung(
     r14 (VERDICT #1, the driver-flat kn5 repayment). The r13 shape
     attached every statistic by a SHUFFLE JOIN onto the per-doc gram
     stream — 7 multi-token-keyed joins for kn5, each measured ~0.5-0.7 s
-    of exchange+dispatch at sf0.1 (scripts/ A/B: dq→+c_top→+ctx steps
+    of exchange+dispatch at sf0.1 (PERF.md r14 A/B: dq→+c_top→+ctx steps
     0.9 → 1.6 → 2.3 s), with the c_top/dq build subtrees duplicated
     under every consumer because differently-projected children defeat
     exchange reuse. Three output-identical structural changes

@@ -18,7 +18,7 @@ Scale design:
   two into IVF-ADC. Every IVF head is built from the same three
   helpers: `_hash_seeds` (centroids), `_ivf_probes` (probe cells) and
   `_ivf_assign` (cell per vector). `ann_lsh_topk` is the didactic
-  single-probe OR-construction baseline (scripts/lsh_sweep.py).
+  single-probe OR-construction baseline (COVERAGE.md, ANN row).
 - Every top-k key is candidate generation followed by one exact
   ranking step, on three shared builders: `_vectors` (the one
   embeddings read), `_query_vec` (the one driver-side query fetch)
@@ -428,7 +428,7 @@ _ANN_LSH_PLANES = _lsh_table_planes()
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DIDACTIC BASELINE (demoted r6 — see scripts/lsh_sweep.py): the
+    """DIDACTIC BASELINE (demoted r6 — see COVERAGE.md, ANN row): the
     textbook multi-table random-hyperplane OR-construction — each
     vector gets ANN_LSH_TABLES independent ANN_LSH_BITS-bit sign
     signatures; candidates are vectors colliding with the query in at
@@ -1302,8 +1302,8 @@ def _centroid_assign_udf(cents: list[list[float]]):
     # Memoize on centroid CONTENT: the registry key passes the frozen
     # module-level list on every call, and rebuilding the pandas_udf
     # (capture + registration) was ~0.2 s of every plan build. The
-    # cache key is the full value tuple, not id() — vec_scale and the
-    # seeded keys pass freshly-built lists that must never alias.
+    # cache key is the full value tuple, not id() — the seeded keys
+    # pass freshly built lists that must never alias.
     cache_key = tuple(tuple(c) for c in cents)
     cached = _ASSIGN_UDF_CACHE.get(cache_key)
     if cached is not None:
@@ -1336,10 +1336,10 @@ def semantic_dedup_plan(
 ) -> DataFrame:
     """The SemDeDup plan over ``e`` = (vec_id, v: array<double>) with an
     arbitrary centroid list — shared by the registry key (frozen
-    SEM_K centroids, oracle-checkable) and scripts/vec_scale.py
-    (k ∝ N, the paper's deployment rule), so the measured scale trend
-    exercises the exact shipped plan. See ``semantic_dedup`` for
-    semantics and scale analysis."""
+    SEM_K centroids, oracle-checkable) and the k ∝ N scale runs
+    (the paper's deployment rule; PERF.md r5/r7 vector rows), so the
+    measured scale trend exercises the exact shipped plan. See
+    ``semantic_dedup`` for semantics and scale analysis."""
     e = e.select("vec_id", "v", _norm(F.col("v")).alias("vn"))
     assign = _centroid_assign_udf(cents)
     assigned = track_persist(
@@ -1452,7 +1452,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot, which admits raw dots down to T − 5e−5, and matmul pairwise
     summation differs from the sequential fold by ~1e−13 relative —
     so T − 6e−5 strictly covers every pair any rounding can accept
-    (a first cut used T − 1e−6 and scripts/vec_scale.py caught 4
+    (a first cut used T − 1e−6 and the k ∝ N scale run caught 4
     missed removals at n=20k: boundary pairs with raw dot in
     [T−5e−5, T−1e−6) round UP into acceptance). The few surviving
     candidates are then re-scored with the sequential JVM fold and
@@ -1463,7 +1463,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes in one Python worker, and cluster size is bounded
     ~N/k BY CONSTRUCTION (k grows with N; the
     ``semantic_dedup_plan`` entry point takes any centroid list, and
-    scripts/vec_scale.py measures it with k ∝ N)."""
+    PERF.md's r5/r7 vector rows measure it with k ∝ N)."""
     return semantic_dedup_plan(spark, _vectors(spark, sf_dir), _SEM_CENTROIDS)
 
 

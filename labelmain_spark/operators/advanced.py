@@ -300,7 +300,7 @@ def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Value sums are EXACT MICRO-UNIT LONGS (r11 re-plan): the per-row
     DECIMAL(28,6) cast was the hot path's heaviest expression — the
-    ×200-events A/B (scripts/events_floor_ab.py) measured the hour agg
+    ×200-events A/B (PERF.md, events flat-wall quartet) measured the hour agg
     at 2.2 s decimal vs 1.2 s long on 20M rows, with the long sum
     matching the unhinted double-sum floor. floor(value·1e6 + 0.5) is
     the repo's stable-round idiom (bit-identical in both engines);

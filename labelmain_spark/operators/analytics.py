@@ -341,7 +341,7 @@ def funnel_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ROWS frame over (ts, event_id) — r11 re-plan. The r4-r10 form
     # used a RANGE frame on microseconds so equal-ts rows were all
-    # in-frame; the ×200 A/B (scripts/events_floor_ab.py) measured the
+    # in-frame; the ×200 A/B (PERF.md, events flat-wall quartet) measured the
     # range evaluator at 1.6× the rows evaluator (2.84 vs 1.77 s for
     # one running min on 12M rows) because it re-resolves the frame
     # boundary per order-value group. The switch is outcome-identical

@@ -63,7 +63,7 @@ def build_session(
         # (Prerequisite, found the same round: splits only parallelize
         # MULTI-ROW-GROUP parquet — the scale fixtures were one giant
         # row group, silently serializing every scan through ONE task
-        # in both engines; scripts/*_scale* now write 16k-row groups.
+        # in both engines; the scripts/scale.py tiers write 16k-row groups.
         # See PERF.md r8.)
         .config("spark.sql.files.openCostInBytes", str(1 << 20))
         # Fixture events.ts is parquet TIMESTAMP(NANOS), which the Spark

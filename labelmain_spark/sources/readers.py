@@ -84,9 +84,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # ~0.20 s plan build, of which ~0.15 s relation creation). A real
 # deployment reads through a metastore catalog whose file index is
 # cached — this memo is the same contract: table paths are immutable
-# landing zones (regenerated fixtures get NEW paths; scale_crossover
-# complies). Keyed by applicationId so a new session never sees a dead
-# session's plans.
+# landing zones (regenerated fixtures get NEW paths; the
+# scripts/scale.py tiers never rewrite one). Keyed by applicationId
+# so a new session never sees a dead session's plans.
 _RELATION_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 

@@ -157,86 +157,6 @@ def incremental_dedup_stream(docs: DataFrame, history_digests: DataFrame) -> Dat
     return d.join(history_digests, "h", "left_anti")
 
 
-def incremental_prefix_stream(docs: DataFrame, history: DataFrame) -> DataFrame:
-    """Streaming twin of ``dedup_prefix``'s truncation probe — the
-    third member of the incremental-dedup family (exact digests, near
-    band-index, now PREFIX): each arriving capture is checked BOTH
-    ways against the static history corpus via the shared
-    first-PREFIX_W-token block index:
-
-    - ``is_prefix_dup`` = 1 when history holds a strictly longer doc
-      starting with the arrival at a token boundary (the arrival is a
-      truncated re-fetch of a page already stored → drop it);
-    - ``supersedes``/``n_superseded`` name the history docs that are
-      strict prefixes OF the arrival (the arrival is the fuller
-      capture of pages stored truncated → replace them). min-doc_id
-      witness, count for the audit.
-
-    Together the two directions reconstruct the batch key exactly: a
-    doc is batch-flagged iff its superstring arrived no later than it
-    (arrival-time flag — pass ``history`` INCLUDING the current batch
-    to make the probe self-inclusive, catching intra-batch pairs;
-    strictness prevents self-matches) or arrived after it (caught by
-    running the SAME function with roles swapped — history as the
-    probe side, arrivals as the reference — whose is_prefix_dup is
-    then the retro/superseded flag). The parity test pins
-    arrival ∪ retro == batch ``prefix_dups`` across three real
-    epochs.
-
-    Scale shape: two stream-static equi-joins keyed on the 16-byte
-    block digest (stateless — no watermark, no stream state); the
-    static side is the history's block index, rebuilt per micro-batch
-    and broadcast or shuffled as its size estimate decides. Same
-    quadratic-per-block exposure and same W lever as the batch key."""
-    from labelmain_spark.functions.dedup import _prefix_keyed
-
-    kb = _prefix_keyed(docs)
-    kh = _prefix_keyed(history)
-    dup = (
-        kb.alias("a")
-        .join(
-            kh.alias("b"),
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("b.n_tokens") > F.col("a.n_tokens"))
-            & (F.expr("substr(b.text, 1, length(a.text) + 1) = concat(a.text, ' ')")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_id"))
-        .agg(F.min(F.col("b.doc_id")).cast("long").alias("dup_of"))
-    )
-    sup = (
-        kb.alias("a")
-        .join(
-            kh.alias("b"),
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("b.n_tokens") < F.col("a.n_tokens"))
-            & (F.expr("substr(a.text, 1, length(b.text) + 1) = concat(b.text, ' ')")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_id"))
-        .agg(
-            F.min(F.col("b.doc_id")).cast("long").alias("supersedes"),
-            F.count(F.lit(1)).cast("long").alias("n_superseded"),
-        )
-    )
-    base = docs.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    return (
-        base.join(dup, "doc_id", "left")
-        .join(sup, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.when(F.col("dup_of").isNotNull(), F.lit(1)).otherwise(F.lit(0)).alias(
-                "is_prefix_dup"
-            ),
-            F.coalesce("dup_of", F.lit(-1)).cast("long").alias("dup_of"),
-            F.coalesce("supersedes", F.lit(-1)).cast("long").alias("supersedes"),
-            F.coalesce("n_superseded", F.lit(0)).cast("long").alias("n_superseded"),
-        )
-    )
-
-
 def _epoch_sink(
     stream: DataFrame,
     checkpoint_path: str,

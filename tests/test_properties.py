@@ -26,7 +26,7 @@ def test_ann_recall_vs_bruteforce(spark, sf_dir):
     # recall 0.6 (sf0.001) / 0.6-0.9 (sf0.01); the floor leaves margin
     # while still failing on any regression toward single-table
     # behavior (which measured 0.03-0.3 on random vectors).
-    # r6: the scripts/lsh_sweep.py study showed no (tables, bits)
+    # r6: the seeded sweep (COVERAGE.md, ANN row) showed no (tables, bits)
     # reaches a 0.8 floor at ≤50% scan on this near-random corpus, so
     # ann_lsh_topk is the labeled didactic baseline; multiprobe/IVF
     # are the named ANN paths (their own recall tests below).
@@ -973,10 +973,10 @@ def test_knn_join_matches_bruteforce_per_query(spark, sf_dir):
 
 
 def test_semantic_candidate_margin_covers_rounding_half_step():
-    """Regression pin for the vec_scale-caught margin bug: the exact
-    filter accepts on the 4-dp HALF-UP rounded dot, so raw dots down
-    to T−5e−5 are accepted — the numpy candidate stage must emit them.
-    A first cut used margin 1e−6 and silently missed such pairs."""
+    """Regression pin for the margin bug the k ∝ N scale run caught:
+    the exact filter accepts on the 4-dp HALF-UP rounded dot, so raw
+    dots down to T−5e−5 are accepted — the numpy candidate stage must
+    emit them. A first cut used margin 1e−6 and silently missed such pairs."""
     import numpy as np
     import pandas as pd
 

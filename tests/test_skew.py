@@ -17,8 +17,8 @@ table — one hot user holding ~85% of all rows — and asserts:
   deliberately performs (its output IS the nested doc).
 
 AQE skew-split applies to JOINS, not windows (a window's key cannot be
-split); the measured skew-join run lives in scripts/skew_demo.py with
-numbers recorded in SCALE.md §Joins.
+split); the measured skew-join run and its numbers are in SCALE.md
+§Joins.
 """
 
 from __future__ import annotations

@@ -1005,49 +1005,3 @@ def test_shard_epoch_replay_is_byte_identical(spark, sf_dir, tmp_path):
         spark, os.path.join(out, "frontier"), "batch_tokens long, epoch int"
     ).collect()
     assert sorted(r.epoch for r in fr) == [0, 1]
-
-
-def test_incremental_prefix_stream_reconstructs_batch(spark, sf_dir):
-    """The epoch-by-epoch prefix probe must reconstruct the batch
-    dedup_prefix flags EXACTLY: a doc whose superstring arrived no
-    later than it is flagged at arrival (self-inclusive history), and
-    one whose fuller capture arrives later is flagged by the
-    roles-swapped retro run at that later epoch. Union over three
-    epochs == prefix_dups over the whole augmented corpus."""
-    from labelmain_spark.functions.dedup import _prefix_corpus, prefix_dups
-
-    aug_rows = sorted(
-        _prefix_corpus(spark, sf_dir).collect(), key=lambda r: r.doc_id
-    )
-    n = len(aug_rows)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    chunks = [aug_rows[cuts[i] : cuts[i + 1]] for i in range(3)]
-
-    def df_of(rows):
-        return spark.createDataFrame(
-            [(r.doc_id, r.text) for r in rows], "doc_id long, text string"
-        )
-
-    flags: dict[int, int] = {r.doc_id: 0 for r in aug_rows}
-    seen: list = []
-    for chunk in chunks:
-        epoch = df_of(chunk)
-        hist_incl = df_of(seen + chunk)
-        for r in inc.incremental_prefix_stream(epoch, hist_incl).collect():
-            flags[r.doc_id] |= r.is_prefix_dup
-        if seen:
-            for r in inc.incremental_prefix_stream(df_of(seen), epoch).collect():
-                flags[r.doc_id] |= r.is_prefix_dup
-        seen += chunk
-
-    want = {
-        r.doc_id: r.is_prefix_dup
-        for r in prefix_dups(_prefix_corpus(spark, sf_dir)).collect()
-    }
-    assert flags == want and sum(want.values()) > 0
-    # the supersedes audit fires: at least one later epoch carried a
-    # fuller capture of an earlier truncated doc OR an intra-epoch twin
-    sup_rows = inc.incremental_prefix_stream(
-        df_of(aug_rows), df_of(aug_rows)
-    ).filter(F.col("n_superseded") > 0)
-    assert sup_rows.count() > 0
