@@ -15,10 +15,12 @@ public tokenizer / tiktoken):
   (count desc, pair lexicographic).
 - ``train_bpe_merges_distributed`` / ``bpe_train`` (r7): the SAME
   algorithm with whole-corpus pair statistics — one corpus-scale
-  word-frequency pass reduces to the vocab-bounded word table, then
-  per-round JVM pair-explode/count/argmax with the segments re-folded
-  by a higher-order ``aggregate`` — asserted EXACTLY equal to the
-  reference fit on the same texts.
+  word-frequency pass reduces to the vocab-bounded word table. A table
+  of at most ``session.SMALL_PLAN_ROWS`` words is collected and runs
+  the fit's own merge rounds (``bpe_merge_rounds``) in the driver; a
+  bigger one runs per-round JVM pair-explode/count/argmax with the
+  segments re-folded by a higher-order ``aggregate``. Both arms are
+  asserted EXACTLY equal to the reference fit on the same texts.
 - ``bpe_token_count``: per-document BPE token count. The merge-rank
   dict rides to executors in the UDF closure (broadcast — it is
   O(n_merges), bounded); counting is an Arrow-batched pandas_udf that
@@ -51,7 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from labelmain_spark.operators.parity import stable_round
-from labelmain_spark.session import persist_counted, unpersist
+from labelmain_spark.session import (
+    collect_if_small,
+    persist_counted,
+    persist_round,
+    track_persist,
+    unpersist,
+)
 from labelmain_spark.sources.readers import load_table
 
 # GPT-2-style pre-tokenizer, simplified to ASCII classes (the fixture
@@ -74,29 +82,40 @@ def fit_bpe_merges(texts: list[str], n_merges: int = N_MERGES) -> list[tuple[str
     table — fine for the bounded sample this is called on."""
     from collections import Counter
 
-    freqs = Counter()
-    for t in texts:
-        for w in pretokenize(t):
-            freqs[tuple(w)] += 1
-    words = dict(freqs)
-    merges: list[tuple[str, str]] = []
+    freqs = Counter(tuple(w) for t in texts for w in pretokenize(t))
+    return [(a, b) for a, b, _ in bpe_merge_rounds(freqs, n_merges)]
+
+
+def bpe_merge_rounds(
+    words: dict[tuple[str, ...], int], n_merges: int
+) -> list[tuple[str, str, int]]:
+    """The BPE merge rounds over a ``{symbols: count}`` word table, in
+    the driver: each round counts adjacent symbol pairs weighted by
+    word count, takes the top pair (count desc, then pair
+    lexicographic asc), and rewrites every word left to right.
+    Returns (left, right, pair count) per round — the one loop both
+    the sample fit and ``train_bpe_merges_distributed``'s driver arm
+    run."""
+    from collections import Counter
+
+    merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         pairs: Counter = Counter()
         for sym, c in words.items():
-            for a, b in zip(sym, sym[1:]):
-                pairs[(a, b)] += c
+            for p in zip(sym, sym[1:]):
+                pairs[p] += c
         if not pairs:
             break
         top = max(pairs.values())
-        best_pair = min(p for p, c in pairs.items() if c == top)
-        merges.append(best_pair)
-        merged = best_pair[0] + best_pair[1]
-        new_words = {}
+        left, right = min(p for p, c in pairs.items() if c == top)
+        merges.append((left, right, top))
+        merged = left + right
+        new_words: dict[tuple[str, ...], int] = {}
         for sym, c in words.items():
             out = []
             i = 0
             while i < len(sym):
-                if i + 1 < len(sym) and sym[i] == best_pair[0] and sym[i + 1] == best_pair[1]:
+                if i + 1 < len(sym) and sym[i] == left and sym[i + 1] == right:
                     out.append(merged)
                     i += 2
                 else:
@@ -280,39 +299,48 @@ def _apply_merge(seg, left: str, right: str):
 def train_bpe_merges_distributed(
     docs: DataFrame, n_merges: int
 ) -> list[tuple[str, str, int]]:
-    """DISTRIBUTED BPE merge learning (Sennrich et al. 2016) — the
-    production path for the fit `fit_bpe_merges` runs on a bounded
-    driver sample: here the pair statistics come from the WHOLE
-    corpus.
+    """BPE merge learning (Sennrich et al. 2016) with whole-corpus pair
+    statistics — the production path for the fit `fit_bpe_merges`
+    runs on a bounded driver sample.
 
     Shape: ONE corpus-scale pass (pre-tokenize via JVM regexp →
     word-frequency aggregation) reduces the problem to the
     vocab-bounded word table (the language caps distinct words, not
-    the corpus — the same bound the unigram-NLL broadcast rides), and
-    every merge round then runs on that bounded table: adjacent-pair
-    explode → map-side-combinable count → argmax collect (ONE bounded
-    driver action per round — the GraphX loop discipline, like
-    connected_components' fixpoint probe; the argmax is inherently
-    sequential across rounds). Segments re-fold JVM-side per round;
-    persist/unpersist truncates lineage exactly as the
-    connected_components loop does. small_plan_conf gates the loop on
-    the MEASURED vocab size so tiny fixtures don't pay AQE's
-    per-stage job fan-out.
+    the corpus — the same bound the unigram-NLL broadcast rides).
+    Every merge round then runs on that table, in one of two arms on
+    the session's one small-input rule (``session.collect_if_small``):
+
+    - at most SMALL_PLAN_ROWS distinct words: the table is collected
+      and :func:`bpe_merge_rounds` runs every round in the driver —
+      the fixture corpora's tables are a few dozen words, where each
+      distributed round is four jobs of pure dispatch;
+    - above the bound: per-round JVM pair-explode → map-side-combinable
+      count → argmax collect (ONE bounded driver action per round —
+      the GraphX loop discipline, like connected_components' fixpoint
+      probe; the argmax is inherently sequential across rounds), with
+      the segments re-folded JVM-side per round and persist/unpersist
+      truncating lineage exactly as the connected_components loop
+      does, under the caller's session conf.
 
     Determinism: counts are exact longs; ties break (count desc, pair
-    lexicographic asc) — identical to the reference; the result is
+    lexicographic asc) — identical to the reference; both arms are
     asserted EQUAL to `fit_bpe_merges` on the same texts in pytest."""
-    from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
-
     toks = docs.select(
         F.explode(
             F.regexp_extract_all(F.col("text"), F.lit(_PRETOKEN_JAVA_RE), 0)
         ).alias("word")
     )
-    words, n_vocab = persist_counted(
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
+    counted = track_persist(
+        toks.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    pdf = collect_if_small(counted)
+    if pdf is not None:
+        unpersist(counted)
+        return bpe_merge_rounds(
+            {tuple(w): int(c) for w, c in zip(pdf["word"], pdf["cnt"])}, n_merges
+        )
+    words, _ = persist_counted(
+        counted.select(
             "cnt",
             F.expr(
                 "transform(sequence(1, length(word)),"
@@ -320,36 +348,36 @@ def train_bpe_merges_distributed(
             ).alias("seg"),
         )
     )
+    unpersist(counted)
     merges: list[tuple[str, str, int]] = []
     pair_structs = (
         "zip_with(slice(seg, 1, size(seg) - 1), slice(seg, 2, size(seg) - 1),"
         " (a, b) -> struct(a AS l, b AS r))"
     )
-    with small_plan_conf(docs.sparkSession, n_vocab <= SMALL_PLAN_ROWS):
-        for _ in range(n_merges):
-            top = (
-                words.select("cnt", F.explode(F.expr(pair_structs)).alias("p"))
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("cnt").alias("pc"))
-                .orderBy(F.col("pc").desc(), F.col("l").asc(), F.col("r").asc())
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            left, right, pc = top[0].l, top[0].r, int(top[0].pc)
-            merges.append((left, right, pc))
-            # materialize the child BEFORE dropping the parent cache
-            # (the connected_components discipline): unpersisting
-            # first leaves nw's lineage rooted at the raw corpus, and
-            # every later round re-pays the full word-frequency pass —
-            # measured 134 s at the ×100 tier vs 17 s after this fix,
-            # the vocab-bounded-loop contract restored
-            nw, _ = persist_counted(
-                words.select("cnt", _apply_merge(F.col("seg"), left, right).alias("seg"))
-            )
-            unpersist(words)
-            words = nw
+    for _ in range(n_merges):
+        top = (
+            words.select("cnt", F.explode(F.expr(pair_structs)).alias("p"))
+            .groupBy("p.l", "p.r")
+            .agg(F.sum("cnt").alias("pc"))
+            .orderBy(F.col("pc").desc(), F.col("l").asc(), F.col("r").asc())
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        left, right, pc = top[0].l, top[0].r, int(top[0].pc)
+        merges.append((left, right, pc))
+        # materialize the child BEFORE dropping the parent cache:
+        # unpersisting first leaves nw's lineage rooted at the raw
+        # corpus, and every later round re-pays the full
+        # word-frequency pass — measured 134 s at the ×100 tier vs
+        # 17 s after this fix, the vocab-bounded-loop contract restored
+        nw = persist_round(
+            words.select("cnt", _apply_merge(F.col("seg"), left, right).alias("seg"))
+        )
+        nw.count()
+        unpersist(words)
+        words = nw
     unpersist(words)
     return merges
 

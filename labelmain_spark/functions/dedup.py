@@ -49,7 +49,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from labelmain_spark.operators.parity import stable_round
-from labelmain_spark.session import persist_counted, track_persist, unpersist
+from labelmain_spark.session import (
+    collect_if_small,
+    persist_counted,
+    track_persist,
+    unpersist,
+)
 from labelmain_spark.sources.readers import load_table, table_row_count
 # one-directional: sampling → text → parity/readers never reaches back
 # into dedup, so this module-level import (the ORACLE literal needs it
@@ -838,27 +843,24 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     this doc is the cluster's canonical survivor."""
     from collections import Counter
 
-    from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+    from pyspark.sql.types import BooleanType, LongType, StructField
 
-    n_pairs, cc, labels = _pair_components(spark, sf_dir)
+    from labelmain_spark.functions.graph import label_frame
+
+    cc, labels = _pair_components(spark, sf_dir)
     if labels is not None:
-        # driver tier (r14): the labels are already in driver memory —
+        # driver arm (r14): the labels are already in driver memory —
         # sizes and canonicals are two dict passes, shipped back as ONE
-        # LocalRelation instead of a groupBy + join + persist + prime
-        # over a few-thousand-row frame (the old small_plan_conf block;
-        # measured ~1.1 s of pure job dispatch at sf0.1).
+        # LocalRelation instead of a groupBy + join over a
+        # few-thousand-row frame (measured ~1.1 s of pure job dispatch
+        # at sf0.1).
         sizes = Counter(labels.values())
-        afield = cc.schema["u"]
-        schema = StructType(
-            [
-                StructField("doc_id", afield.dataType, afield.nullable),
-                StructField("cluster_id", afield.dataType, True),
-                StructField("cluster_size", LongType(), True),
-                StructField("is_canonical", BooleanType(), True),
-            ]
-        )
-        return spark.createDataFrame(
-            [(u, c, sizes[c], u == c) for u, c in labels.items()], schema
+        return label_frame(
+            spark,
+            ((u, c, sizes[c], u == c) for u, c in labels.items()),
+            cc.schema["u"],
+            ("doc_id", "cluster_id"),
+            (StructField("cluster_size", LongType()), StructField("is_canonical", BooleanType())),
         )
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "component").select(
@@ -874,60 +876,44 @@ def _pair_components(spark: SparkSession, sf_dir: str):
     shared closure head of ``dedup_clusters`` and
     ``split_leakage_safe`` (r12 self-review: one construction, one
     maintenance point, so the two keys' cluster labels cannot drift —
-    their equality is pinned in pytest). Returns (n_pairs, cc, labels)
-    where cc = (u, component) with component = min doc_id of the
-    component, and labels = the driver-side {doc_id: component} dict
-    when the pair set fits the driver tier (``n_pairs`` ≤
-    SMALL_PLAN_ROWS — the same bounded-collect constant the tier
-    already gates on), else None.
+    their equality is pinned in pytest). Returns (cc, labels) where
+    cc = (u, component) with component = min doc_id of the component,
+    and labels = the driver-side {doc_id: component} dict when the
+    pair set is at most SMALL_PLAN_ROWS rows, else None.
 
-    Persist + eagerly prime the verified pair set: the bipartite
-    union reads it twice, and without the cache both branches
-    re-evaluate the whole LSH-verify DAG (band join + 3-way jaccard
-    join) concurrently against a cold cache — measured ~3 s of
-    duplicated work at sf0.1. The pair table is tiny (near-dup pairs
-    only), so this is the cheapest possible diamond point; it is
-    RELEASED before returning, so a long driver run does not
-    accumulate dead cached pair tables across keys.
+    Persist the verified pair set: the bipartite union reads it
+    twice, and without the cache both branches re-evaluate the whole
+    LSH-verify DAG (band join + 3-way jaccard join) concurrently
+    against a cold cache — measured ~3 s of duplicated work at sf0.1.
+    The pair table is tiny (near-dup pairs only), so this is the
+    cheapest possible diamond point; it is RELEASED before returning,
+    so a long driver run does not accumulate dead cached pair tables
+    across keys.
 
-    Driver tier: the tier gate and the collect are ONE action, a
-    limit(SMALL_PLAN_ROWS + 1).toPandas() probe of the persisted pair
-    table — ≤ B rows back proves the limit dropped nothing — and
-    ``graph._union_find`` labels the collected pairs directly (no
-    bipartite encoding, no second distinct/persist). The label dict
-    goes to ``dedup_clusters``, whose sizes/canonical tail is then two
-    dict passes. Labels are identical on both tiers: component = min
-    doc_id fixpoint, which is unique. Over the bound, the exact count
-    and the distributed hash-min loop run on the cache the probe
-    started populating."""
-    from pyspark.sql.types import StructField, StructType
-
-    from labelmain_spark.functions.graph import _union_find, connected_components
-    from labelmain_spark.session import SMALL_PLAN_ROWS
+    Driver arm: ``session.collect_if_small`` gates and collects in one
+    action, and ``graph._union_find`` labels the collected pairs
+    directly (no bipartite encoding, no second distinct/persist). The
+    label dict goes to ``dedup_clusters``, whose sizes/canonical tail
+    is then two dict passes. Labels are identical on both arms:
+    component = min doc_id fixpoint, which is unique. Over the bound,
+    the distributed hash-min loop runs on the pair-node encoding,
+    reading the cache the probe started filling."""
+    from labelmain_spark.functions import graph
 
     pairs = track_persist(dedup_minhash(spark, sf_dir).select("doc_a", "doc_b"))
-    pdf = pairs.limit(SMALL_PLAN_ROWS + 1).toPandas()
-    if len(pdf) <= SMALL_PLAN_ROWS:
-        n_pairs = len(pdf)
-        labels = _union_find(zip(pdf["doc_a"], pdf["doc_b"]))
-        afield = pairs.schema["doc_a"]
-        schema = StructType(
-            [
-                StructField("u", afield.dataType, afield.nullable),
-                StructField("component", afield.dataType, True),
-            ]
-        )
-        cc = spark.createDataFrame(list(labels.items()), schema)
+    pdf = collect_if_small(pairs)
+    if pdf is not None:
+        labels = graph._union_find(zip(pdf["doc_a"], pdf["doc_b"]))
+        cc = graph.label_frame(spark, labels.items(), pairs.schema["doc_a"])
         unpersist(pairs)
-        return n_pairs, cc, labels
-    n_pairs = pairs.count()
+        return cc, labels
     pk = F.concat_ws(":", F.col("doc_a"), F.col("doc_b"))
     edges = pairs.select(F.col("doc_a").alias("u"), pk.alias("p")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), pk.alias("p"))
     )
-    cc = connected_components(edges, driver_tier=False)
+    cc = graph._hash_min_loop(track_persist(edges), graph.MAX_ITER, None)
     unpersist(pairs)
-    return n_pairs, cc, None
+    return cc, None
 
 
 VAL_BP = 1000  # lowest 10% of the keyspace → validation
@@ -962,7 +948,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry/partition-stable like every hash sample in
     functions/sampling.py."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    _, cc, _ = _pair_components(spark, sf_dir)
+    cc, _ = _pair_components(spark, sf_dir)
     labeled = docs.join(
         cc.select(F.col("u").alias("doc_id"), F.col("component")), "doc_id", "left"
     )

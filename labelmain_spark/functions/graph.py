@@ -28,8 +28,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from labelmain_spark.session import persist_counted, track_persist, unpersist
+from labelmain_spark.session import (
+    collect_if_small,
+    persist_counted,
+    persist_round,
+    track_persist,
+    unpersist,
+)
 from labelmain_spark.sources.readers import load_table
 
 MAX_ITER = 30
@@ -39,92 +46,76 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = MAX_ITER,
     stats: dict | None = None,
-    driver_tier: bool = True,
 ) -> DataFrame:
     """edges: (u long, p *) bipartite adjacency. Returns (u, component)
     where component = min u in the connected component.
 
-    TIERED on the measured edge count (the heavy_hitters discipline —
-    a runtime statistic picks the plan, and both tiers are
-    output-identical by construction):
+    Two arms on the session's one small-input rule
+    (``session.collect_if_small``), output-identical because the
+    connected-components fixpoint (component = min u) is unique:
 
-    - ``n_edges ≤ SMALL_PLAN_ROWS`` (200k distinct edge rows): DRIVER
-      union-find. The distributed loop costs O(diameter) rounds of
-      2 joins + 2 partial aggs + a fixpoint-probe action EACH — pure
-      dispatch at this size (measured r12: dedup_clusters 7.36 →
-      ~3.4 s at sf0.1, the loop was HALF the key's wall on a graph of
-      a few thousand edges). The collect is bounded by the same
-      constant that already gates small_plan_conf (~200k narrow rows,
-      single-digit MB); path-compressed union-find labels it in one
-      driver pass and ships the labels back as one small frame.
-    - above the bound: the distributed hash-min loop below, unchanged
-      — at 100 TB the LSH-pruned pair graph blows the bound and this
-      is the tier that runs (``driver_tier=False`` forces it; the
-      loop-shape pytests pin it explicitly).
+    - at most ``SMALL_PLAN_ROWS`` (200k) distinct edge rows: DRIVER
+      union-find over the collected edges. The distributed loop costs
+      O(diameter) rounds of 2 joins + 2 partial aggs + a fixpoint-probe
+      action EACH — pure dispatch at this size (measured r12:
+      dedup_clusters 7.36 → ~3.4 s at sf0.1, the loop was HALF the
+      key's wall on a graph of a few thousand edges). Path-compressed
+      union-find labels it in one driver pass and ships the labels
+      back as one small frame.
+    - above the bound: the distributed hash-min loop below, under the
+      caller's own session conf — at 100 TB the LSH-pruned pair graph
+      blows the bound and this is the arm that runs (tests force it by
+      patching ``session.SMALL_PLAN_ROWS`` to 0).
 
-    The distributed tier raises RuntimeError if the fixpoint is not
+    The distributed arm raises RuntimeError if the fixpoint is not
     reached within ``max_iter`` rounds — silently returning
     half-propagated labels would be a WRONG answer for any component
     with diameter beyond the budget (each alternating round
     propagates labels ~2 hops, so max_iter=30 covers diameter ≈ 60;
     real co-occurrence graphs are far shallower). ``stats['rounds']``
-    reports the rounds actually used (0 = driver tier;
-    ``stats['tier']`` names the tier), so tests can pin convergence =
+    reports the rounds actually used (0 = driver arm;
+    ``stats['tier']`` names the arm), so tests can pin convergence =
     O(diameter) — in particular that a giant star component (one hub
     attribute, the 100 TB skew hazard) converges in 2 effective
     rounds, not O(n): both per-round aggregations are Catalyst
     partial-agg (map-side local min, then global min per key), so the
     hub key receives one partial row per upstream partition rather
     than the whole membership."""
-    from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
-
-    edges, n_edges = persist_counted(edges.select("u", "p").distinct())
-    if driver_tier and n_edges <= SMALL_PLAN_ROWS:
-        out = _driver_union_find(edges, stats)
-        unpersist(edges)
-        return out
-    # The node count this prime returns doubles as the runtime
-    # statistic gating the loop's execution conf: a fixpoint loop over
-    # a few hundred cached label rows is scheduling-bound under the
-    # session's AQE conf (each round fans into 7+ near-empty-task
-    # jobs), so small graphs iterate single-partition — see
-    # session.small_plan_conf for the measurement and the
-    # why-this-is-not-hand-scheduling argument.
-    comp, n_nodes = persist_counted(
-        edges.select("u").distinct().select("u", F.col("u").alias("comp"))
-    )
-    if stats is not None:
-        stats["tier"] = "distributed"
-    with small_plan_conf(edges.sparkSession, n_nodes <= SMALL_PLAN_ROWS):
-        return _hash_min_loop(edges, comp, max_iter, stats)
-
-
-def _driver_union_find(edges: DataFrame, stats: dict | None) -> DataFrame:
-    """Union-find over a BOUNDED collected edge list — bit-identical
-    labels to the hash-min loop (component = min u, both are the
-    connected-components fixpoint, which is unique). One collect + one
-    createDataFrame replace O(diameter) × (2 joins + 2 aggs + 1
-    action). Each attribute p links its members through the first u
-    seen with it (pair-nodes are never labeled)."""
-    from pyspark.sql.types import StructField, StructType
-
-    spark = edges.sparkSession
-    pdf = edges.toPandas()
+    edges = track_persist(edges.select("u", "p").distinct())
+    pdf = collect_if_small(edges)
+    if pdf is None:
+        return _hash_min_loop(edges, max_iter, stats)
+    unpersist(edges)
+    # each attribute p links its members through the first u seen
+    # with it (pair-nodes are never labeled)
     anchor: dict = {}
     labels = _union_find(
         (anchor.setdefault(p, u), u) for u, p in zip(pdf["u"], pdf["p"])
     )
     if stats is not None:
-        stats["rounds"] = 0
-        stats["tier"] = "driver"
-    ufield = edges.schema["u"]
+        stats.update(rounds=0, tier="driver")
+    return label_frame(edges.sparkSession, labels.items(), edges.schema["u"])
+
+
+def label_frame(
+    spark: SparkSession,
+    rows,
+    id_field: StructField,
+    names: tuple[str, str] = ("u", "component"),
+    extra: tuple[StructField, ...] = (),
+) -> DataFrame:
+    """A driver arm's labels as one LocalRelation: ``rows`` of
+    (id, label, *extra values), both id columns typed like
+    ``id_field`` (the input frame's id column, so the two arms return
+    the same schema), then the ``extra`` fields."""
     schema = StructType(
         [
-            StructField("u", ufield.dataType, ufield.nullable),
-            StructField("component", ufield.dataType, True),
+            StructField(names[0], id_field.dataType, id_field.nullable),
+            StructField(names[1], id_field.dataType, True),
+            *extra,
         ]
     )
-    return spark.createDataFrame(list(labels.items()), schema)
+    return spark.createDataFrame(list(rows), schema)
 
 
 def _union_find(pairs) -> dict:
@@ -159,9 +150,15 @@ def _py(v):
     return v.item() if hasattr(v, "item") else v
 
 
-def _hash_min_loop(
-    edges: DataFrame, comp: DataFrame, max_iter: int, stats: dict | None
-) -> DataFrame:
+def _hash_min_loop(edges: DataFrame, max_iter: int, stats: dict | None) -> DataFrame:
+    """The distributed arm over a persisted (u, p) edge frame, which it
+    releases: every u starts labeled with itself, then alternating
+    hash-min rounds until no label changes."""
+    comp, _ = persist_counted(
+        edges.select("u").distinct().select("u", F.col("u").alias("comp"))
+    )
+    if stats is not None:
+        stats["tier"] = "distributed"
     rounds = 0
     for _ in range(max_iter):
         comp_p = (
@@ -170,17 +167,16 @@ def _hash_min_loop(
         proposed = (
             edges.join(comp_p, "p").groupBy("u").agg(F.min("pcomp").alias("newcomp"))
         )
-        merged = track_persist(
+        merged = persist_round(
             comp.join(proposed, "u", "left").select(
                 "u",
                 F.least(F.col("comp"), F.coalesce(F.col("newcomp"), F.col("comp"))).alias("comp"),
+                (F.col("newcomp") < F.col("comp")).alias("moved"),
             )
         )
-        changed = (
-            merged.join(comp.withColumnRenamed("comp", "old"), "u")
-            .filter(F.col("comp") != F.col("old"))
-            .count()  # fixpoint probe — one scalar per round, as in GraphX
-        )
+        # fixpoint probe — one scalar per round, as in GraphX; the scan
+        # also fills merged's cache before comp's is dropped
+        changed = merged.filter("moved").count()
         unpersist(comp)
         comp = merged
         rounds += 1
@@ -241,17 +237,9 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back onto the node set. Edges/degrees/node-base persist once
     (the connected_components lineage discipline); five iterations =
     bounded plan depth, no fixpoint probe (the iteration count is
-    fixed by contract, matching the oracle's unrolled CTEs). The
-    corpus-scale passes (edge distinct, node count) run under the
-    session conf; the ITERATIONS run under small_plan_conf gated on
-    the MEASURED node count and materialize once at the end — a tiny
-    cached graph otherwise pays 15 stages of AQE job fan-out (the
-    connected_components measurement), while a big graph keeps AQE.
-    The node-count probe + final materialization are the same
-    eager-bounded-action class as the CC fixpoint probe."""
-    from labelmain_spark.operators.parity import stable_round
-    from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
-
+    fixed by contract, matching the oracle's unrolled CTEs). A graph of
+    at most SMALL_PLAN_ROWS distinct edges runs the same recurrence in
+    the driver (:func:`integer_pagerank`)."""
     ev = load_table(spark, sf_dir, "events")
     e = (
         ev.select(
@@ -264,36 +252,32 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return integer_pagerank(spark, e)
 
 
-def integer_pagerank(
-    spark: SparkSession, edges: DataFrame, driver_tier: bool = True
-) -> DataFrame:
+def integer_pagerank(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """The integer-PageRank core over an arbitrary ``(src, dst)`` edge
     frame (node type free — longs for the event graph, domain strings
     for the web graph): the :func:`pagerank` contract (exact 1e-9-unit
-    longs, fixed PR_ITERS, dangling mass dropped, small-graph
-    iterations under the gated conf) factored out so every graph
-    source shares one verified loop.
+    longs, fixed PR_ITERS, dangling mass dropped) factored out so every
+    graph source shares one verified loop.
 
-    TIERED like connected_components (r12): below SMALL_PLAN_ROWS
-    distinct edges (bounded single-digit-MB collect) the five
-    iterations run as driver-side integer arithmetic — the SAME exact
-    math (floor-div contributions, integer damping ratio; integer
-    sums are order-free, so the result is bit-identical by
-    construction, pinned by a tier-equivalence pytest) — because at
-    this size each distributed iteration is one join + one agg + one
-    left join of pure dispatch. The returned frame still computes
-    ``pr`` with the Spark-side stable_round expression so the one
-    float in the output has a single engine spelling. Above the bound
-    the distributed loop below runs unchanged
-    (``driver_tier=False`` forces it)."""
+    Two arms on the session's one small-input rule, like
+    connected_components (r12): at most SMALL_PLAN_ROWS distinct edges
+    (``session.collect_if_small``) and the five iterations run as
+    driver-side integer arithmetic — the SAME exact math (floor-div
+    contributions, integer damping ratio; integer sums are
+    order-free, so the result is bit-identical by construction,
+    pinned by an arm-equivalence pytest) — because at this size each
+    distributed iteration is one join + one agg + one left join of
+    pure dispatch. The returned frame still computes ``pr`` with the
+    Spark-side stable_round expression so the one float in the
+    output has a single engine spelling. Above the bound the
+    distributed loop below runs under the caller's session conf."""
     from labelmain_spark.operators.parity import stable_round
-    from labelmain_spark.session import SMALL_PLAN_ROWS, small_plan_conf
 
     e = track_persist(edges)
-    if driver_tier and e.count() <= SMALL_PLAN_ROWS:
-        out = _driver_pagerank(spark, e)
+    pdf = collect_if_small(e)
+    if pdf is not None:
         unpersist(e)
-        return out
+        return _driver_pagerank(spark, pdf, e.schema["src"].dataType)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     deg = e.join(outdeg, "src")
     nodes = (
@@ -302,7 +286,7 @@ def integer_pagerank(
         .distinct()
     )
     st = nodes.agg(F.count(F.lit(1)).alias("n"))
-    base_nodes, n_nodes = persist_counted(  # materializes the corpus passes too
+    base_nodes, _ = persist_counted(  # materializes the corpus passes too
         nodes.crossJoin(F.broadcast(st)).select(
             "node",
             F.expr(f"{PR_SCALE} DIV n").alias("units"),
@@ -330,37 +314,29 @@ def integer_pagerank(
                 ).alias("units"),
             )
         )
-    out = track_persist(
-        r.select(
-            "node",
-            F.col("units").alias("rank_units"),
-            stable_round(F.col("units").cast("double") / F.lit(1e9), 9).alias("pr"),
-        )
+    return r.select(
+        "node",
+        F.col("units").alias("rank_units"),
+        stable_round(F.col("units").cast("double") / F.lit(1e9), 9).alias("pr"),
     )
-    with small_plan_conf(spark, n_nodes <= SMALL_PLAN_ROWS):
-        out.count()  # run the cached-graph iterations under the gated conf
-    return out
 
 
-def _driver_pagerank(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """PR_ITERS of the integer-PageRank recurrence on a BOUNDED
-    collected edge list — every operation the distributed loop does
+def _driver_pagerank(spark: SparkSession, pdf, ntype) -> DataFrame:
+    """PR_ITERS of the integer-PageRank recurrence on the collected
+    ``(src, dst)`` edges — every operation the distributed loop does
     (r0 = SCALE DIV N, contribution = units DIV outdeg, damping =
     85·Σ DIV 100, dangling mass dropped) as python ints, which are
     exact and order-free, so the rank_units are bit-identical."""
     from collections import Counter, defaultdict
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
     from labelmain_spark.operators.parity import stable_round
 
-    pdf = e.toPandas()
     src = [_py(v) for v in pdf["src"]]
     dst = [_py(v) for v in pdf["dst"]]
     outdeg = Counter(src)
     nodes = set(src) | set(dst)
     # empty graph → r0 irrelevant (no nodes to seed), empty typed
-    # frame below — matching the distributed tier whose DIV n never
+    # frame below — matching the distributed arm whose DIV n never
     # evaluates on zero rows
     r0 = PR_SCALE // len(nodes) if nodes else 0
     base = (r0 * (PR_D_DEN - PR_D_NUM)) // PR_D_DEN
@@ -370,14 +346,13 @@ def _driver_pagerank(spark: SparkSession, e: DataFrame) -> DataFrame:
         for a, b in zip(src, dst):
             s[b] += units[a] // outdeg[a]
         units = {v: base + (PR_D_NUM * s[v]) // PR_D_DEN for v in nodes}
-    ntype = e.schema["src"].dataType
     frame = spark.createDataFrame(
         list(units.items()),
         StructType(
             [StructField("node", ntype, True), StructField("rank_units", LongType(), True)]
         ),
     )
-    # pr via the SAME Spark expression as the distributed tier — one
+    # pr via the SAME Spark expression as the distributed arm — one
     # engine spelling for the output's only float
     return frame.select(
         "node",

@@ -15,6 +15,9 @@ It also owns the one scratch-cache rule: every operator persist in the
 library goes through :func:`track_persist` / :func:`persist_counted`
 (one storage level, session-tracked) and is dropped by
 :func:`unpersist` or :func:`release_caches`.
+
+And the one small-input rule, :func:`collect_if_small`. No loop
+rewrites the caller's SQL conf.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ from __future__ import annotations
 import os
 import tempfile
 import weakref
-from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -161,6 +163,23 @@ def persist_counted(df: DataFrame) -> tuple[DataFrame, int]:
     return df, df.count()
 
 
+def persist_round(df: DataFrame) -> DataFrame:
+    """:func:`track_persist` of ``df``'s rows behind a one-scan plan,
+    for a loop that builds each round from the last round's cache.
+    Under AQE a cached plan prints its parent's plan twice (initial and
+    final), and Spark renders it to name each cache entry, so chained
+    rounds grow the string as 2^k: the hash-min loop ran out of driver
+    heap within 8 rounds. Run an action over the result before
+    dropping the parent's cache."""
+    flat = DataFrame(
+        df.sparkSession._jsparkSession.createDataFrame(
+            df._jdf.javaRDD(), df._jdf.schema()
+        ),
+        df.sparkSession,
+    )
+    return track_persist(flat)
+
+
 def unpersist(df: DataFrame) -> None:
     """Drop ``df``'s cache now and its tracked entry with it — for
     frames released before their operator returns (loop rounds, driver
@@ -193,39 +212,18 @@ def release_caches(spark: SparkSession) -> None:
 
 
 SMALL_PLAN_ROWS = 200_000
-"""Row-count threshold below which an iterative/driver-coordinated
-plan over an already-MEASURED tiny table runs single-partition with
-AQE off — see ``small_plan_conf``."""
+"""Input rows up to which a driver-coordinated loop (union-find,
+integer PageRank, BPE merges) runs in the driver: ~200k narrow rows
+is single-digit MB. See :func:`collect_if_small`."""
 
 
-@contextmanager
-def small_plan_conf(spark: SparkSession, small: bool):
-    """Run a block of tiny-table actions with 1 shuffle partition and
-    AQE disabled, restoring the session confs afterwards.
-
-    Why this exists: AQE materializes every exchange as its own job to
-    re-plan the next stage. That is exactly right for TB-scale stages
-    and exactly wrong for a driver-coordinated fixpoint loop whose
-    label table is a few hundred cached rows — each loop round became
-    7+ scheduling-bound jobs of 32 near-empty tasks (measured 2-3.7 s
-    per round on 512 rows at sf0.1; 1.3 s with this conf, and the
-    final cluster join dropped 3.2 s → 0.8 s).
-
-    This is NOT hand-scheduling the big-data path: callers gate on a
-    row count they have already measured (the same runtime statistic
-    AQE itself would use), so at 100 TB — where the same tables carry
-    billions of rows — the block runs with the session's normal AQE
-    conf. The decision is per-measurement, not per-SF.
-    """
-    if not small:
-        yield
-        return
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+def collect_if_small(df: DataFrame):
+    """The one small-input rule: ``df`` (already persisted) as pandas
+    when it has at most :data:`SMALL_PLAN_ROWS` rows, else ``None`` and
+    the caller runs its distributed loop under the caller's own conf.
+    One action, ``limit(B + 1).toPandas()``: ≤ B rows back proves the
+    limit dropped nothing. Below the bound each distributed round is
+    pure job dispatch (PERF.md, the driver-tier sections); the bound is
+    a runtime row count, so at 100 TB the same calls run distributed."""
+    pdf = df.limit(SMALL_PLAN_ROWS + 1).toPandas()
+    return pdf if len(pdf) <= SMALL_PLAN_ROWS else None

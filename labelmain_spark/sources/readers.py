@@ -50,7 +50,12 @@ def _enable_nanos_as_long(spark: SparkSession) -> None:
     correctness driver included) hand us arbitrary sessions. The session
     timezone is pinned to UTC for the same reason: timestamp formatting /
     truncation must match the tz-naive DuckDB oracle even on a session
-    built on a non-UTC box."""
+    built on a non-UTC box.
+
+    These two confs are the data contract — how the fixture bytes are
+    read — and the only SQL confs the library sets on a session it
+    was handed; every plan runs under the caller's other settings
+    (pinned by ``tests/test_session_caches.py``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 

@@ -24,8 +24,8 @@ and tasks (``checks.jobs_and_tasks``), the exchange count
 ``release_caches``, and writes the formatted final plan of the timed
 write beside the records. After each tree's sessions exit, the DuckDB
 control runs the keys' oracle SQL in its own process, with a
-``memory_limit`` of half the machine's available memory and a
-``temp_directory`` to spill to.
+``memory_limit`` of half the machine's available memory, a
+``temp_directory`` to spill to, and ``DUCK_TIMEOUT_S`` per query.
 
 Records land in ``.scale_runs/<stamp>/records.jsonl``; a markdown
 summary goes to stdout. Tiers are written once under
@@ -41,6 +41,7 @@ import random
 import statistics
 import subprocess
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -48,6 +49,9 @@ ROOT = Path(__file__).resolve().parent.parent
 FIXTURES = ROOT / ".scale_fixtures"
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROW_GROUP = 16384  # splittable: a one-group file scans as one task
+# Per oracle query: user_components' recursive CTE on events:x4 ran
+# past 17 CPU-minutes and 7.6 GB without finishing.
+DUCK_TIMEOUT_S = 600
 
 WORDS = [
     "spark", "window", "merge", "table", "column", "vector", "stream",
@@ -284,6 +288,8 @@ def duck_connect(sf_dir: str, temp_dir: str):
 
 
 def duck_child(sf_dir: str, keys: list[str], temp_dir: str) -> None:
+    """Each key's oracle query, timed; one that runs past
+    ``DUCK_TIMEOUT_S`` is interrupted and recorded as a timeout."""
     import duckdb
 
     from labelmain_spark import registry
@@ -293,12 +299,18 @@ def duck_child(sf_dir: str, keys: list[str], temp_dir: str) -> None:
     for key in keys:
         if key not in oracle:
             continue
+        timer = threading.Timer(DUCK_TIMEOUT_S, con.interrupt)
         t0 = time.perf_counter()
+        timer.start()
         try:
             rec = {"duck_rows": len(con.execute(oracle[key]).fetchall())}
             rec["duck_s"] = round(time.perf_counter() - t0, 3)
+        except duckdb.InterruptException:
+            rec = {"duck_error": "timeout"}
         except duckdb.Error as exc:
             rec = {"duck_error": f"{type(exc).__name__}: {str(exc)[:200]}"}
+        finally:
+            timer.cancel()
         print(json.dumps({"key": key, **rec}), flush=True)
     con.close()
 

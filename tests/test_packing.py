@@ -254,13 +254,16 @@ def test_pack_sequences_bpe_tiles_exactly(spark, sf_dir):
         assert pos == want[doc_id]
 
 
-def test_bpe_train_distributed_equals_reference(spark, sf_dir):
-    """The distributed trainer must reproduce the pure-Python Sennrich
+def test_bpe_train_distributed_equals_reference(spark, sf_dir, monkeypatch):
+    """The corpus trainer must reproduce the pure-Python Sennrich
     reference EXACTLY on the same corpus: same merges, same order
     (count-desc / lexicographic tie-break), and pair counts matching
-    the reference's stats at each round."""
+    the reference's stats at each round — on both arms: the driver
+    arm (the reference's own merge rounds over the collected word
+    table) and, with the bound at 0, the distributed JVM loop."""
     from collections import Counter
 
+    from labelmain_spark import session
     from labelmain_spark.functions.bpe import (
         BPE_TRAIN_MERGES,
         bpe_train,
@@ -274,9 +277,7 @@ def test_bpe_train_distributed_equals_reference(spark, sf_dir):
         for r in load_table(spark, sf_dir, "documents").select("text").collect()
     ]
     expected = fit_bpe_merges(texts, n_merges=BPE_TRAIN_MERGES)
-    got = sorted(bpe_train(spark, sf_dir).collect(), key=lambda r: r.merge_rank)
-    assert [(r.left, r.right) for r in got] == expected
-    # independently recompute the first round's pair stats and check
+    # independently recompute the first round's pair stats to check
     # the first merge's recorded count
     freqs = Counter()
     for t in texts:
@@ -286,8 +287,15 @@ def test_bpe_train_distributed_equals_reference(spark, sf_dir):
     for sym, c in freqs.items():
         for a, b in zip(sym, sym[1:]):
             pairs[(a, b)] += c
-    assert got[0].pair_count == pairs[(got[0].left, got[0].right)]
-    spark.catalog.clearCache()
+    arms = []
+    for bound in (session.SMALL_PLAN_ROWS, 0):
+        monkeypatch.setattr(session, "SMALL_PLAN_ROWS", bound)
+        got = sorted(bpe_train(spark, sf_dir).collect(), key=lambda r: r.merge_rank)
+        assert [(r.left, r.right) for r in got] == expected
+        assert got[0].pair_count == pairs[(got[0].left, got[0].right)]
+        arms.append(got)
+        session.release_caches(spark)
+    assert arms[0] == arms[1]
 
 
 def test_pack_bins_harmonic_invariants(spark, sf_dir):

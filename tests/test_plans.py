@@ -770,9 +770,35 @@ def test_ngram_rung_job_counts(spark, sf_dir, key):
     row-count memo is filled and no cache entry is left over. A
     per-doc pre-aggregate of the occurrences adds an executed job to
     a JM rung."""
+    got = _build_exec_jobs(spark, getattr(text, key), sf_dir)
+    assert got == _NGRAM_JOBS[key], (key, got)
+
+
+# The same pin for the keys whose loop runs in the driver at this size
+# (``session.collect_if_small``): the build jobs are the input's
+# persist + probe, and, for the dedup pair, the LSH pair set's.
+_DRIVER_ARM_JOBS = {
+    "user_components": (3, 4),
+    "pagerank": (3, 1),
+    "domain_rank": (3, 1),
+    "bpe_train": (3, 1),
+    "dedup_clusters": (19, 1),
+}
+
+
+@pytest.mark.parametrize("key", list(_DRIVER_ARM_JOBS))
+def test_driver_arm_job_counts(spark, sf_dir, key):
+    from labelmain_spark import registry
+
+    got = _build_exec_jobs(spark, registry.queries()[key], sf_dir)
+    assert got == _DRIVER_ARM_JOBS[key], (key, got)
+
+
+def _build_exec_jobs(spark, fn, sf_dir):
+    """(plan-build jobs, noop-sink exec jobs) of ``fn``'s second call,
+    taken after ``release_caches``."""
     from labelmain_spark.session import release_caches
 
-    fn = getattr(text, key)
     fn(spark, sf_dir)
     release_caches(spark)
     built = {}
@@ -784,7 +810,7 @@ def test_ngram_rung_job_counts(spark, sf_dir, key):
         lambda: built["df"].write.format("noop").mode("overwrite").save(),
     )
     release_caches(spark)
-    assert (build_jobs, exec_jobs) == _NGRAM_JOBS[key], (key, build_jobs, exec_jobs)
+    return build_jobs, exec_jobs
 
 
 def test_blocklist_filter_zero_shuffle_narrow_map(spark, sf_dir):

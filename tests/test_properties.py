@@ -69,7 +69,7 @@ def test_neardup_plan_is_banded_equi_join(spark, sf_dir):
     assert "band_val" in plan, plan
 
 
-def test_components_star_skew_converges_in_diameter_rounds(spark):
+def test_components_star_skew_converges_in_diameter_rounds(spark, monkeypatch):
     """10k-node star through ONE hub attribute — the 100 TB skew
     hazard (a hub p key receiving the whole component's membership).
     Hash-min must converge in O(diameter)=1 effective round (+1
@@ -78,14 +78,16 @@ def test_components_star_skew_converges_in_diameter_rounds(spark):
     reaches the hot key, not 10k rows)."""
     from pyspark.sql import functions as F
 
+    from labelmain_spark import session
     from labelmain_spark.functions import graph
 
     edges = spark.range(10_000).select(F.col("id").alias("u"), F.lit(1).alias("p"))
     stats = {}
-    # driver_tier=False: this test pins the DISTRIBUTED loop's
-    # convergence/skew behavior (the 100 TB tier), which the r12
-    # driver union-find tier would otherwise absorb at this size
-    cc = graph.connected_components(edges, stats=stats, driver_tier=False)
+    # bound 0: this test pins the DISTRIBUTED loop's convergence/skew
+    # behavior (the 100 TB arm), which the driver union-find arm
+    # would otherwise absorb at this size
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
+    cc = graph.connected_components(edges, stats=stats)
     assert stats["rounds"] <= 2, stats
     row = cc.agg(
         F.count_distinct("component").alias("nc"),
@@ -101,18 +103,20 @@ def test_components_star_skew_converges_in_diameter_rounds(spark):
     assert plan.lower().count("hashaggregate") >= 2, plan
 
 
-def test_components_raises_without_fixpoint(spark):
+def test_components_raises_without_fixpoint(spark, monkeypatch):
     """A chain needs ~len/2 rounds; with max_iter=1 the loop exhausts
     mid-propagation and MUST raise instead of returning wrong labels."""
     import pytest as _pytest
     from pyspark.sql import functions as F  # noqa: F401
 
+    from labelmain_spark import session
     from labelmain_spark.functions import graph
 
     rows = [(0, "a"), (1, "a"), (1, "b"), (2, "b"), (2, "c"), (3, "c")]
     edges = spark.createDataFrame(rows, "u long, p string")
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
     with _pytest.raises(RuntimeError, match="no fixpoint"):
-        graph.connected_components(edges, max_iter=1, driver_tier=False)
+        graph.connected_components(edges, max_iter=1)
 
 
 def test_range_join_degenerate_interval_matches_nothing(spark):
@@ -1450,20 +1454,19 @@ def test_pair_components_tiers_agree(spark, sf_dir, monkeypatch):
     """`_pair_components` has two arms: the driver union-find over the
     collected pairs, and the distributed hash-min loop once the pair
     set passes SMALL_PLAN_ROWS. Both cluster keys give the same
-    non-empty rows on either arm; a spy on `connected_components`
-    proves the second run took the distributed arm and the first did
-    not."""
+    non-empty rows on either arm; a spy on the hash-min loop proves
+    the second run took the distributed arm and the first did not."""
     from labelmain_spark import session
     from labelmain_spark.functions import graph
 
     calls = []
-    real = graph.connected_components
+    real = graph._hash_min_loop
 
-    def spy(*args, **kwargs):
-        calls.append(kwargs.get("driver_tier"))
-        return real(*args, **kwargs)
+    def spy(edges, *args):
+        calls.append(edges.columns)
+        return real(edges, *args)
 
-    monkeypatch.setattr(graph, "connected_components", spy)
+    monkeypatch.setattr(graph, "_hash_min_loop", spy)
     keys = (dedup.dedup_clusters, dedup.split_leakage_safe)
 
     def rows():
@@ -1473,17 +1476,18 @@ def test_pair_components_tiers_agree(spark, sf_dir, monkeypatch):
     assert calls == []
     monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
     distributed = rows()
-    assert calls == [False, False]
+    assert calls == [["u", "p"], ["u", "p"]]
     assert all(driver) and distributed == driver
 
 
-def test_components_driver_tier_equals_distributed_loop(spark):
+def test_components_driver_tier_equals_distributed_loop(spark, monkeypatch):
     """The r12 driver union-find tier is output-IDENTICAL to the
     distributed hash-min loop (the connected-components fixpoint is
     unique: component = min u), pinned on a seeded random bipartite
     graph with singletons, chains, a star, and multi-p nodes."""
     import random
 
+    from labelmain_spark import session
     from labelmain_spark.functions import graph
 
     rng = random.Random(12)
@@ -1497,11 +1501,10 @@ def test_components_driver_tier_equals_distributed_loop(spark):
         (r.u, r.component)
         for r in graph.connected_components(edges, stats=fast_stats).collect()
     }
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
     slow = {
         (r.u, r.component)
-        for r in graph.connected_components(
-            edges, stats=slow_stats, driver_tier=False
-        ).collect()
+        for r in graph.connected_components(edges, stats=slow_stats).collect()
     }
     assert fast_stats["tier"] == "driver" and fast_stats["rounds"] == 0
     assert slow_stats["tier"] == "distributed" and slow_stats["rounds"] >= 1
@@ -1574,11 +1577,12 @@ def test_sample_token_budget_greedy_prefix(spark, sf_dir):
     assert unpruned == {d: r.cum_before for d, r in out.items()}
 
 
-def test_pagerank_driver_tier_equals_distributed(spark, sf_dir):
+def test_pagerank_driver_tier_equals_distributed(spark, sf_dir, monkeypatch):
     """The r12 integer-PageRank driver tier is bit-identical to the
     distributed loop: integer arithmetic is exact and order-free, so
     rank_units must match to the unit (and pr to the bit) on the real
     event graph."""
+    from labelmain_spark import session
     from labelmain_spark.functions.graph import integer_pagerank
     from labelmain_spark.sources.readers import load_table
 
@@ -1592,10 +1596,8 @@ def test_pagerank_driver_tier_equals_distributed(spark, sf_dir):
         .distinct()
     )
     fast = {(r.node, r.rank_units, r.pr) for r in integer_pagerank(spark, e).collect()}
-    slow = {
-        (r.node, r.rank_units, r.pr)
-        for r in integer_pagerank(spark, e, driver_tier=False).collect()
-    }
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
+    slow = {(r.node, r.rank_units, r.pr) for r in integer_pagerank(spark, e).collect()}
     assert fast == slow and fast
 
 

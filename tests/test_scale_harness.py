@@ -62,3 +62,18 @@ def test_duck_control_runs_under_a_memory_limit(sf_dir, tmp_path, monkeypatch, c
     assert configs and configs[0]["memory_limit"].endswith("MB")
     assert int(configs[0]["memory_limit"][:-2]) > 0
     assert configs[0]["temp_directory"] == str(tmp_path)
+
+
+def test_duck_control_times_out_a_query(sf_dir, tmp_path, monkeypatch, capsys):
+    """A query past ``DUCK_TIMEOUT_S`` is interrupted and recorded as a
+    timeout, and the next key still runs on the same connection."""
+    from labelmain_spark import registry
+
+    oracle = registry.oracle_sql()
+    slow = "SELECT sum(i * i) FROM range(100000000000) t(i)"
+    monkeypatch.setattr(registry, "oracle_sql", lambda: {**oracle, "slow": slow})
+    monkeypatch.setattr(scale, "DUCK_TIMEOUT_S", 0.5)
+    scale.duck_child(sf_dir, ["slow", "join_inner"], str(tmp_path))
+    recs = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
+    assert recs[0] == {"key": "slow", "duck_error": "timeout"}
+    assert recs[1]["key"] == "join_inner" and recs[1]["duck_rows"] > 0

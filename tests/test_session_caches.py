@@ -86,3 +86,33 @@ def test_persists_only_in_session_module():
             elif isinstance(node, ast.Attribute) and node.attr == "StorageLevel":
                 bad.append(f"{where} uses StorageLevel")
     assert not bad, "cache calls outside session.py: " + ", ".join(bad)
+
+
+def test_conf_writes_only_in_the_reader_contract():
+    """Source pin: no library code calls ``.conf.set(`` except
+    ``readers._enable_nanos_as_long``, whose two reader confs are the
+    data contract — a loop never replans the caller's shared session
+    to suit itself."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "labelmain_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "sources/readers.py":
+            fn = next(
+                n
+                for n in ast.walk(tree)
+                if isinstance(n, ast.FunctionDef) and n.name == "_enable_nanos_as_long"
+            )
+            allowed = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+                and id(node) not in allowed
+            ):
+                bad.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not bad, "runtime conf writes: " + ", ".join(bad)
