@@ -318,9 +318,9 @@ def train_bpe_merges_distributed(
       count → argmax collect (ONE bounded driver action per round —
       the GraphX loop discipline, like connected_components' fixpoint
       probe; the argmax is inherently sequential across rounds), with
-      the segments re-folded JVM-side per round and persist/unpersist
-      truncating lineage exactly as the connected_components loop
-      does, under the caller's session conf.
+      the segments re-folded JVM-side per round and each round's table
+      persisted through ``session.persist_round``, as the
+      connected_components loop does, under the caller's session conf.
 
     Determinism: counts are exact longs; ties break (count desc, pair
     lexicographic asc) — identical to the reference; both arms are

@@ -279,7 +279,10 @@ def integer_pagerank(spark: SparkSession, edges: DataFrame) -> DataFrame:
         unpersist(e)
         return _driver_pagerank(spark, pdf, e.schema["src"].dataType)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    deg = e.join(outdeg, "src")
+    # cached: every iteration joins it, and AQE does not reuse the
+    # join's exchanges across iterations (events:x4, local[4]: exec
+    # 4.6 → 2.6 s)
+    deg, _ = persist_counted(e.join(outdeg, "src"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
