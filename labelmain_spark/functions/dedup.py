@@ -55,6 +55,7 @@ from labelmain_spark.session import (
     track_persist,
     unpersist,
 )
+from labelmain_spark.functions import graph
 from labelmain_spark.sources.readers import load_table, table_row_count
 # one-directional: sampling → text → parity/readers never reaches back
 # into dedup, so this module-level import (the ORACLE literal needs it
@@ -845,9 +846,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import BooleanType, LongType, StructField
 
-    from labelmain_spark.functions.graph import label_frame
-
-    cc, labels = _pair_components(spark, sf_dir)
+    cc, labels, id_field = _pair_components(spark, sf_dir)
     if labels is not None:
         # driver arm (r14): the labels are already in driver memory —
         # sizes and canonicals are two dict passes, shipped back as ONE
@@ -855,13 +854,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # few-thousand-row frame (measured ~1.1 s of pure job dispatch
         # at sf0.1).
         sizes = Counter(labels.values())
-        return label_frame(
+        return graph.label_frame(
             spark,
             ((u, c, sizes[c], u == c) for u, c in labels.items()),
-            cc.schema["u"],
-            ("doc_id", "cluster_id"),
-            (StructField("cluster_size", LongType()), StructField("is_canonical", BooleanType())),
-        )
+            id_field,
+            StructField("cluster_size", LongType()),
+            StructField("is_canonical", BooleanType()),
+        ).toDF("doc_id", "cluster_id", "cluster_size", "is_canonical")
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "component").select(
         F.col("u").alias("doc_id"),
@@ -876,10 +875,11 @@ def _pair_components(spark: SparkSession, sf_dir: str):
     shared closure head of ``dedup_clusters`` and
     ``split_leakage_safe`` (r12 self-review: one construction, one
     maintenance point, so the two keys' cluster labels cannot drift —
-    their equality is pinned in pytest). Returns (cc, labels) where
-    cc = (u, component) with component = min doc_id of the component,
-    and labels = the driver-side {doc_id: component} dict when the
-    pair set is at most SMALL_PLAN_ROWS rows, else None.
+    their equality is pinned in pytest). Returns (cc, labels,
+    id_field), component = min doc_id of the component: cc = (u,
+    component) and labels None over SMALL_PLAN_ROWS pairs, else cc None
+    and labels the driver-side {doc_id: component} dict; id_field is
+    the pairs' doc_id field, which types the labels on both arms.
 
     Persist the verified pair set: the bipartite union reads it
     twice, and without the cache both branches re-evaluate the whole
@@ -892,28 +892,26 @@ def _pair_components(spark: SparkSession, sf_dir: str):
 
     Driver arm: ``session.collect_if_small`` gates and collects in one
     action, and ``graph._union_find`` labels the collected pairs
-    directly (no bipartite encoding, no second distinct/persist). The
-    label dict goes to ``dedup_clusters``, whose sizes/canonical tail
+    directly (no bipartite encoding, no second distinct/persist). Each
+    caller ships the label dict back as the one frame it needs
+    (``graph.label_frame``): ``dedup_clusters``' sizes/canonical tail
     is then two dict passes. Labels are identical on both arms:
     component = min doc_id fixpoint, which is unique. Over the bound,
     the distributed hash-min loop runs on the pair-node encoding,
     reading the cache the probe started filling."""
-    from labelmain_spark.functions import graph
-
     pairs = track_persist(dedup_minhash(spark, sf_dir).select("doc_a", "doc_b"))
+    id_field = pairs.schema["doc_a"]
     pdf = collect_if_small(pairs)
     if pdf is not None:
-        labels = graph._union_find(zip(pdf["doc_a"], pdf["doc_b"]))
-        cc = graph.label_frame(spark, labels.items(), pairs.schema["doc_a"])
         unpersist(pairs)
-        return cc, labels
+        return None, graph._union_find(zip(pdf["doc_a"], pdf["doc_b"])), id_field
     pk = F.concat_ws(":", F.col("doc_a"), F.col("doc_b"))
     edges = pairs.select(F.col("doc_a").alias("u"), pk.alias("p")).unionAll(
         pairs.select(F.col("doc_b").alias("u"), pk.alias("p"))
     )
     cc = graph._hash_min_loop(track_persist(edges), graph.MAX_ITER, None)
     unpersist(pairs)
-    return cc, None
+    return cc, None, id_field
 
 
 VAL_BP = 1000  # lowest 10% of the keyspace → validation
@@ -948,7 +946,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry/partition-stable like every hash sample in
     functions/sampling.py."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    cc, _ = _pair_components(spark, sf_dir)
+    cc, labels, id_field = _pair_components(spark, sf_dir)
+    if labels is not None:
+        cc = graph.label_frame(spark, labels.items(), id_field)
     labeled = docs.join(
         cc.select(F.col("u").alias("doc_id"), F.col("component")), "doc_id", "left"
     )

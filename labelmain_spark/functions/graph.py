@@ -98,20 +98,16 @@ def connected_components(
 
 
 def label_frame(
-    spark: SparkSession,
-    rows,
-    id_field: StructField,
-    names: tuple[str, str] = ("u", "component"),
-    extra: tuple[StructField, ...] = (),
+    spark: SparkSession, rows, id_field: StructField, *extra: StructField
 ) -> DataFrame:
-    """A driver arm's labels as one LocalRelation: ``rows`` of
-    (id, label, *extra values), both id columns typed like
-    ``id_field`` (the input frame's id column, so the two arms return
-    the same schema), then the ``extra`` fields."""
+    """A driver arm's labels as one ``(u, component, *extra)``
+    LocalRelation: ``rows`` of (id, label, *extra values), both id
+    columns typed like ``id_field`` (the input frame's id column, so
+    the two arms return the same schema)."""
     schema = StructType(
         [
-            StructField(names[0], id_field.dataType, id_field.nullable),
-            StructField(names[1], id_field.dataType, True),
+            StructField("u", id_field.dataType, id_field.nullable),
+            StructField("component", id_field.dataType, True),
             *extra,
         ]
     )

@@ -170,7 +170,11 @@ def persist_round(df: DataFrame) -> DataFrame:
     final), and Spark renders it to name each cache entry, so chained
     rounds grow the string as 2^k: the hash-min loop ran out of driver
     heap within 8 rounds. Run an action over the result before
-    dropping the parent's cache."""
+    dropping the parent's cache. Under Spark Connect there is no JVM
+    RDD to re-root on: the frame is tracked as it is and keeps the
+    plan-string growth."""
+    if getattr(df, "_jdf", None) is None:
+        return track_persist(df)
     flat = DataFrame(
         df.sparkSession._jsparkSession.createDataFrame(
             df._jdf.javaRDD(), df._jdf.schema()

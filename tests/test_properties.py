@@ -119,6 +119,28 @@ def test_components_raises_without_fixpoint(spark, monkeypatch):
         graph.connected_components(edges, max_iter=1)
 
 
+def test_components_long_chain_converges_under_aqe(spark, monkeypatch):
+    """A 24-node chain on the distributed arm takes one round per hop
+    under the session's AQE conf. Each round persists the last round's
+    labels; without re-rooting every round's plan (session.persist_round)
+    the cached plan string doubles per round and the driver runs out of
+    heap long before the fixpoint."""
+    from labelmain_spark import session
+    from labelmain_spark.functions import graph
+
+    n = 24
+    rows = [(i, i) for i in range(n - 1)] + [(i + 1, i) for i in range(n - 1)]
+    edges = spark.createDataFrame(rows, "u long, p long")
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    monkeypatch.setattr(session, "SMALL_PLAN_ROWS", 0)
+    stats = {}
+    labels = {r.u: r.component for r in graph.connected_components(edges, stats=stats).collect()}
+    assert stats["tier"] == "distributed"
+    assert stats["rounds"] >= 12, stats
+    assert labels == {u: 0 for u in range(n)}
+    session.release_caches(spark)
+
+
 def test_range_join_degenerate_interval_matches_nothing(spark):
     """hi <= lo means an empty [lo, hi) interval. Without the guard,
     sequence(start, end) with end < start runs DESCENDING (default step

@@ -58,6 +58,31 @@ def test_release_caches_scoped_to_caller(spark, sf_dir):
     del sess._TRACKED_PERSISTS[other]
 
 
+def test_persist_round_without_jvm_handle_tracks_the_frame(spark):
+    """A Spark Connect frame has no ``_jdf`` to re-root on:
+    persist_round persists and tracks the frame itself instead of
+    raising, and unpersist drops it again."""
+
+    class _ConnectFrame:
+        sparkSession = spark
+        level = released = None
+
+        def persist(self, level):
+            self.level = level
+            return self
+
+        def unpersist(self):
+            self.released = True
+
+    df = _ConnectFrame()
+    assert sess.persist_round(df) is df
+    assert df.level == sess.STORAGE_LEVEL
+    assert any(h is df for h in sess._TRACKED_PERSISTS[spark])
+    sess.unpersist(df)
+    assert df.released
+    assert not any(h is df for h in sess._TRACKED_PERSISTS.get(spark, []))
+
+
 _CACHE_CALLS = {"persist", "unpersist", "cache"}
 
 
